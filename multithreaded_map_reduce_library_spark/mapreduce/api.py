@@ -8,14 +8,19 @@ Reproduces the reference's API contract (mapreduce.h:44-83) on Spark RDDs:
   (mapreduce.h:5, distwc.c:8-22)  ->  ``mapper(filename, content) ->
   Iterable[(str, str)]`` (emission by yielding, not a side-effect API)
 - ``MR_Partitioner`` DJB2 hash routing (mapreduce.c:154-160)  ->
-  ``partitionFunc=djb2`` in ``repartitionAndSortWithinPartitions``
-- sort-within-partition at shuffle (mapreduce.c:123-141)  ->
-  ``repartitionAndSortWithinPartitions`` (Spark sorts at shuffle read;
-  same observable order, without the reference's O(n²) insertion sort)
+  ``partitionFunc=djb2`` in ``groupByKey``
+- shuffle + sort-within-partition (mapreduce.c:111-144)  ->  ``groupByKey``
+  gathers each map task's values per key in its spill-aware
+  ``ExternalMerger``, so one ``(key, [values])`` record per (task, key)
+  crosses the shuffle instead of the reference's one pair per token; the
+  reduce side sorts its partition's *groups* by key with
+  ``pyspark.shuffle.ExternalSorter`` (strcmp order, quirk Q3; same spill
+  bound as ``repartitionAndSortWithinPartitions``: 0.9 ×
+  ``spark.python.worker.memory``). Values keep map-task fetch order.
 - ``Reducer`` + ``MR_GetNext`` value-iterator contract (mapreduce.h:6,83;
   mapreduce.c:199-213)  ->  ``reducer(key, values_iterator) -> str``,
-  driven by ``itertools.groupby`` over the sorted partition — lazy, one
-  pass, early-exit, exactly the cursor semantics of MR_GetNext.
+  called once per key with a one-pass iterator over its grouped values —
+  the cursor semantics of MR_GetNext.
 - ``num_workers`` (distwc.c:38)  ->  Spark executor cores; accepted and
   ignored (scheduling is Spark's job, SURVEY.md §4).
 
@@ -27,10 +32,12 @@ engine (operators/, plans/).
 
 from __future__ import annotations
 
-import itertools
+from collections import defaultdict
 from collections.abc import Callable, Iterable, Iterator
+from operator import itemgetter
 
 from pyspark import RDD
+from pyspark.shuffle import ExternalSorter
 from pyspark.sql import SparkSession
 
 from multithreaded_map_reduce_library_spark.functions.hashing import djb2
@@ -39,30 +46,28 @@ Mapper = Callable[[str, str], Iterable[tuple[str, str]]]
 Reducer = Callable[[str, Iterator[str]], str]
 
 
-def _reduce_partition(reducer: Reducer):
-    def run(part: Iterator[tuple[str, str]]) -> Iterator[tuple[str, str]]:
-        # Sorted partition -> one reducer call per unique key with a lazy
-        # value iterator (MR_Reduce loop, mapreduce.c:169-188). groupby
-        # consumes exactly the run of equal keys — the MR_GetNext
-        # early-exit (mapreduce.c:206) for free.
-        for key, group in itertools.groupby(part, key=lambda kv: kv[0]):
-            yield key, reducer(key, (v for _, v in group))
+def _reduce_partition(reducer: Reducer, memory_mb: float):
+    def run(part: Iterator[tuple[str, Iterable[str]]]) -> Iterator[tuple[str, str]]:
+        # One reducer call per unique key, in strcmp key order (MR_Reduce
+        # loop, mapreduce.c:169-188); the sorter spills past ``memory_mb``.
+        for key, values in ExternalSorter(memory_mb).sorted(part, key=itemgetter(0)):
+            yield key, reducer(key, iter(values))
 
     return run
 
 
 def _combine_partition(combiner: Reducer):
     def run(part: Iterator[tuple[str, str]]) -> Iterator[tuple[str, str]]:
-        # Map-side combine: sort the map partition and run the combiner per
-        # key BEFORE the shuffle, so only one pair per (task, key) crosses
-        # the wire. The reference has no combiner — every ("w","1") pair is
-        # materialized and shuffled (mapreduce.c:111-144, SURVEY.md §4);
-        # this is the upgrade Catalyst applies automatically as partial
-        # HashAggregate, surfaced in the RDD facade.
-        for key, group in itertools.groupby(
-            sorted(part, key=lambda kv: kv[0]), key=lambda kv: kv[0]
-        ):
-            yield key, combiner(key, (v for _, v in group))
+        # Map-side combine: run the combiner once per key of the map
+        # partition BEFORE the shuffle. Keys need no order here, so a dict
+        # groups them. The reference has no combiner (mapreduce.c:111-144,
+        # SURVEY.md §4); this is the upgrade Catalyst applies automatically
+        # as partial HashAggregate, surfaced in the RDD facade.
+        groups: defaultdict[str, list[str]] = defaultdict(list)
+        for key, value in part:
+            groups[key].append(value)
+        for key, values in groups.items():
+            yield key, combiner(key, iter(values))
 
     return run
 
@@ -75,8 +80,9 @@ def mr_run_pairs(
 ) -> RDD:
     """Shuffle + reduce phases over an already-mapped pair RDD.
 
-    DJB2 partitioning (shard parity with the reference) + byte-order sort
-    within each partition (quirk Q3), then the grouped-iterator reduce.
+    DJB2 partitioning (shard parity with the reference), grouped per map
+    task before the shuffle, then byte-order key sort within each partition
+    (quirk Q3) and the grouped-iterator reduce.
 
     ``combiner``, if given, runs map-side per key first (Hadoop combiner
     contract: same signature as the reducer, output feedable back into the
@@ -85,11 +91,9 @@ def mr_run_pairs(
     """
     if combiner is not None:
         pairs = pairs.mapPartitions(_combine_partition(combiner))
-    parted = pairs.repartitionAndSortWithinPartitions(
-        numPartitions=num_partitions,
-        partitionFunc=lambda k: djb2(k, num_partitions),
-    )
-    return parted.mapPartitions(_reduce_partition(reducer), preservesPartitioning=True)
+    grouped = pairs.groupByKey(num_partitions, partitionFunc=lambda k: djb2(k, num_partitions))
+    reduce = _reduce_partition(reducer, pairs._memory_limit() * 0.9)
+    return grouped.mapPartitions(reduce, preservesPartitioning=True)
 
 
 def mr_run(

@@ -12,16 +12,15 @@ from collections import Counter
 import pytest
 
 from multithreaded_map_reduce_library_spark.__main__ import main
+from multithreaded_map_reduce_library_spark.functions.hashing import djb2
 from tests.conftest import SF_SMALL
-from tests.test_wordcount import REFERENCE_SAMPLES
+from tests.test_wordcount import reference_or_golden_dir
 
 
 @pytest.fixture(scope="module")
-def sample_files():
-    files = sorted(glob.glob(os.path.join(REFERENCE_SAMPLES, "sample*.txt")))
-    if not files:
-        pytest.skip("reference sample_inputs not present")
-    return files
+def sample_files(tmp_path_factory):
+    corpus = reference_or_golden_dir(tmp_path_factory)
+    return sorted(glob.glob(os.path.join(corpus, "sample*.txt")))
 
 
 def _read_shards(outdir: str) -> tuple[Counter, int]:
@@ -46,13 +45,19 @@ def test_cli_wordcount_engines(spark, sample_files, tmp_path, engine):
     )
     assert rc == 0
     if engine == "rdd":
-        # mr facade writes flat part files (one per DJB2 shard)
+        # mr facade writes flat part files: part-0000p holds DJB2 shard p,
+        # keys in strcmp order.
         counts: Counter = Counter()
         for f in glob.glob(os.path.join(out, "part-*")):
+            shard = int(os.path.basename(f).split("-")[1])
             with open(f) as fh:
+                keys = []
                 for line in fh:
                     k, v = line.rstrip("\n").rsplit(": ", 1)
                     counts[k] += int(v)
+                    keys.append(k)
+            assert all(djb2(k, 10) == shard for k in keys), f"shard {shard} has foreign keys"
+            assert keys == sorted(keys)
     else:
         counts, n_shards = _read_shards(out)
         assert n_shards <= 10

@@ -1,12 +1,15 @@
 """MapReduce parity facade: MR_Run contract (mapreduce.h:44-83) — DJB2
 sharding, sort-within-partition (strcmp order), grouped-iterator reducer,
 COUNT(*) semantics — verified against a Python Counter oracle and with
-Hypothesis-generated token streams."""
+Hypothesis-generated token streams, plus sf0.001 oracle parity of the
+registry queries built on the facade."""
 
 from __future__ import annotations
 
+import os
 from collections import Counter
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -17,6 +20,10 @@ from multithreaded_map_reduce_library_spark.mapreduce.api import (
     wordcount_mapper,
     wordcount_reducer,
 )
+from multithreaded_map_reduce_library_spark.plans.registry import all_queries
+
+from .conftest import SF_SMALL
+from .oracle_util import compare_query
 
 TEXT = "the quick brown fox jumps over the lazy dog the fox"
 
@@ -57,15 +64,45 @@ def test_reducer_iterator_is_lazy_and_grouped(spark):
     pairs = spark.sparkContext.parallelize(
         [("k1", "x"), ("k2", "y"), ("k1", "z")] * 10, 3
     )
-    seen = []
 
     def reducer(key, values):
-        n = sum(1 for _ in values)
-        seen.append(key)
-        return str(n)
+        assert iter(values) is values, "reducer gets an iterator, not a list"
+        return str(sum(1 for _ in values))
 
-    got = dict(mr_run_pairs(pairs, reducer, num_partitions=2).collect())
-    assert got == {"k1": "20", "k2": "10"}
+    rows = mr_run_pairs(pairs, reducer, num_partitions=2).collect()
+    # One reducer call per key across all map tasks: exactly one row each.
+    assert sorted(rows) == [("k1", "20"), ("k2", "10")]
+
+
+def test_reducer_sees_every_emitted_value_once(spark, tmp_path):
+    """Keys span files and map tasks; each value names its file and token
+    position, so the reducer must see every emission exactly once and as a
+    plain value, never as a map-side partial group."""
+    texts = {"a.txt": "x y x z", "b.txt": "y x w", "c.txt": "z z x y"}
+    for name, text in texts.items():
+        (tmp_path / name).write_text(text)
+
+    def mapper(path, content):
+        name = os.path.basename(path)
+        for i, tok in enumerate(content.split()):
+            yield tok, f"{name}:{i}"
+
+    def reducer(_key, values):
+        return repr(sorted(values))
+
+    files = [str(tmp_path / n) for n in texts]
+    got = dict(mr_run(spark, files, mapper, reducer, num_partitions=3).collect())
+    want: dict[str, list[str]] = {}
+    for name, text in texts.items():
+        for tok, value in mapper(name, text):
+            want.setdefault(tok, []).append(value)
+    assert got == {k: repr(sorted(v)) for k, v in want.items()}
+
+
+@pytest.mark.parametrize("name", ["mr_api_wordcount", "mr_api_wordcount_combined"])
+def test_mr_api_query_oracle_parity(spark, name):
+    q = all_queries()[name]
+    compare_query(spark, q.fn, q.oracle, SF_SMALL)
 
 
 @given(

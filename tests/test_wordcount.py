@@ -1,7 +1,8 @@
 """Golden-corpus word count (SURVEY.md §5): 21 vocabulary words x exactly
 5000 occurrences across 20 files. The corpus is synthesized per
 FIXTURES.md's recipe; if the reference's own sample_inputs are present we
-run against those too for byte-level provenance."""
+run against those too for byte-level provenance, else the parity tests
+fall back to the synthesized corpus."""
 
 from __future__ import annotations
 
@@ -24,11 +25,9 @@ VOCAB = (
 REFERENCE_SAMPLES = "/root/reference/sample_inputs"
 
 
-@pytest.fixture(scope="module")
-def golden_dir(tmp_path_factory):
+def write_golden_corpus(d) -> str:
     """Deterministic synthesis: 21 words x 5000, shuffled, split into 20
     single-line files with single-space separators, no trailing newline."""
-    d = tmp_path_factory.mktemp("golden")
     rng = random.Random(42)
     words = [w for w in VOCAB for _ in range(5000)]
     rng.shuffle(words)
@@ -39,6 +38,19 @@ def golden_dir(tmp_path_factory):
     return str(d)
 
 
+def reference_or_golden_dir(tmp_path_factory) -> str:
+    """The reference's own sample_inputs when present, else the synthesized
+    corpus, which has the same 21 x 5000 invariant."""
+    if os.path.isdir(REFERENCE_SAMPLES):
+        return REFERENCE_SAMPLES
+    return write_golden_corpus(tmp_path_factory.mktemp("golden"))
+
+
+@pytest.fixture(scope="module")
+def golden_dir(tmp_path_factory):
+    return write_golden_corpus(tmp_path_factory.mktemp("golden"))
+
+
 def test_golden_invariant_synthesized(spark, golden_dir):
     rows = wordcount_files(spark, f"{golden_dir}/*.txt").collect()
     counts = {r["key"]: r["cnt"] for r in rows}
@@ -47,9 +59,9 @@ def test_golden_invariant_synthesized(spark, golden_dir):
     assert all(c == 5000 for c in counts.values())
 
 
-@pytest.mark.skipif(not os.path.isdir(REFERENCE_SAMPLES), reason="reference corpus absent")
-def test_golden_invariant_reference_corpus(spark):
-    rows = wordcount_files(spark, f"{REFERENCE_SAMPLES}/*.txt").collect()
+def test_golden_invariant_reference_corpus(spark, tmp_path_factory):
+    corpus = reference_or_golden_dir(tmp_path_factory)
+    rows = wordcount_files(spark, f"{corpus}/*.txt").collect()
     counts = {r["key"]: r["cnt"] for r in rows}
     assert len(counts) == 21
     assert all(c == 5000 for c in counts.values())
