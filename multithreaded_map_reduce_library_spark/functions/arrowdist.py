@@ -80,13 +80,29 @@ def _rider_from_first_row(batch, name: str):
             f"first-row rider {name!r} missing: partition did not start at "
             "in-partition offset 0 (projection moved across a shuffle?)"
         )
-    return cell.as_py()
+    rider = cell.as_py()
+    if not rider:
+        # pack_rows over an empty bounded relation: no centroid / query
+        # to compare against, so there is no right answer to return
+        raise ValueError(f"empty rider {name!r}: the bounded side has no rows")
+    return rider
 
 
 def _list_col_to_ndarray(batch, name: str, dtype):
+    """A list column as an (n_rows, width) array. Null or ragged rows
+    raise: reshaping the flat values by (n_rows, -1) would otherwise
+    silently shift elements across rows whenever their total still
+    divides evenly (rows [1, 2], [3, 4, 5, 6] -> [[1, 2, 3], [4, 5, 6]])."""
     import numpy as np
 
     col = batch.column(batch.schema.get_field_index(name))
+    lengths = np.diff(np.asarray(col.offsets))
+    if col.null_count or np.any(lengths != lengths[:1]):
+        raise ValueError(
+            f"list column {name!r} has null or ragged rows "
+            f"(lengths {sorted(set(lengths.tolist()))}); every row needs "
+            "the same width"
+        )
     flat = np.asarray(col.flatten(), dtype=dtype)
     return flat.reshape(batch.num_rows, -1)
 

@@ -33,6 +33,18 @@ EOB-run reset, §B.2.1.2/§E.2.4). Out of envelope — raise
 (SOF9+), 12-bit precision, sampling factors >2, lossless/hierarchical
 modes.
 
+Decode path: ONE marker walk (``_walk``) serves every stream. SOF0/
+SOF1/SOF2 fill one frame state, DQT always merges through the
+first-scan latch, and each SOS decodes into per-component grids of
+QUANTIZED coefficients — through ``_dec_seq_scan`` in a sequential
+frame (a baseline frame is simply a one-scan sequential stream) or the
+DC / AC-first / AC-refinement scan decoders in a progressive one. At
+EOI one batched dequantize + IDCT (``_idct_planes``) and the colour
+tail (``_finish_image``) produce the pixels, so every encoding of the
+same coefficients decodes identically. The restart-segment APIs run the
+same walk stopped at the first SOS, and decode a segment with the same
+scan decoder and IDCT tail.
+
 Determinism contract (what makes oracle replay possible):
 
 * the encoder quantizes the DC coefficient from the INTEGER block sum
@@ -287,7 +299,7 @@ _HUFF_FAST_CACHE_CAP = 256
 
 class _BitReader:
     """MSB-first bit reader over entropy-coded data with FF00 unstuffing.
-    Stops (raises _MarkerFound) at any non-stuffing marker."""
+    Raises ValueError at any non-stuffing marker."""
 
     def __init__(self, data: bytes, pos: int) -> None:
         self.data = data
@@ -820,16 +832,6 @@ def is_jpeg(data: bytes) -> bool:
     return len(data) >= 3 and data[:3] == b"\xff\xd8\xff"
 
 
-def _idct_block(coef: np.ndarray) -> np.ndarray:
-    """Inverse DCT with the DC term split out so a DC-only block is exact
-    (qd·q00/8 has denominator 8 — exact in binary floating point)."""
-    dc = float(coef[0, 0])
-    ac = coef.astype(np.float64)
-    ac = ac.copy()
-    ac[0, 0] = 0.0
-    return (_DCT_T.T @ ac @ _DCT_T) + dc / 8.0
-
-
 def _parse_dqt_seg(seg: bytes, qtables: dict[int, np.ndarray]) -> None:
     """One DQT segment — may hold several tables (§B.2.4.1)."""
     p = 0
@@ -918,199 +920,128 @@ def _parse_dht_seg(
         huff[(tclass, tid)] = fast
 
 
-class _MultiScanSequential(NotImplementedError):
-    """A spec-legal §B.2.3 sequential stream whose components split
-    across several scans reached the single-scan parser. ``decode_jpeg``
-    catches this and routes to ``_decode_sequential_multiscan``;
-    subclassing NotImplementedError keeps the envelope contract for
-    direct ``_parse_headers`` callers (``split_restart_segments``) and
-    for the PIL-fallback routing in ``_decode_image_bytes``."""
+def _comp_grid(h: int, w: int, hs: int, vs: int, hmax: int, vmax: int) -> tuple[int, int]:
+    """Block grid of one component in a NON-interleaved scan (§A.2.2):
+    ceil over the component's own sample dimensions, not the padded
+    interleaved MCU coverage."""
+    yi = -(-(h * vs) // vmax)
+    xi = -(-(w * hs) // hmax)
+    return -(-yi // 8), -(-xi // 8)
 
 
-def _parse_headers(data: bytes) -> dict:
-    """Walk the marker stream up to (and including) SOS; return every
-    decode table plus where the entropy-coded data starts. Shared by the
-    whole-file decoder and the restart-segment APIs (one header parse
-    serves any number of independently decodable segments)."""
-    if not is_jpeg(data):
-        raise ValueError("not a JPEG payload (missing SOI)")
-    pos = 2
-    qtables: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    frame = None  # (h, w, [(cid, hs, vs, tq)])
-    restart_interval = 0
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("expected marker")
-        # §B.1.1.2: any number of 0xFF fill bytes may pad before a marker;
-        # skip them so the marker id is never itself read as 0xFF (ADVICE
-        # r5: a foreign JPEG with fill bytes otherwise misparses — 0xFF is
-        # not a marker id and the next two bytes get read as a bogus
-        # segment length).
-        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
-            pos += 1
-        marker = data[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI
-            break
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
-            continue  # standalone markers
-        seglen = struct.unpack(">H", data[pos : pos + 2])[0]
-        seg = data[pos + 2 : pos + seglen]
-        if marker == 0xDB:  # DQT
-            _parse_dqt_seg(seg, qtables)
-        elif marker == 0xC4:  # DHT
-            _parse_dht_seg(seg, huff)
-        elif marker == 0xC0 or marker == 0xC1:  # SOF0 / SOF1
-            prec = seg[0]
-            if prec != 8:
-                raise NotImplementedError(f"{prec}-bit JPEG not supported")
-            h, w = struct.unpack(">HH", seg[1:5])
-            ncomp = seg[5]
-            comps = []
-            for i in range(ncomp):
-                cid, samp, tq = seg[6 + 3 * i : 9 + 3 * i]
-                comps.append((cid, samp >> 4, samp & 0x0F, tq))
-            if any(hs not in (1, 2) or vs not in (1, 2) for _, hs, vs, _ in comps):
-                raise NotImplementedError(
-                    "only sampling factors 1 and 2 (4:4:4 / 4:2:2 / 4:2:0) supported"
-                )
-            if ncomp not in (1, 3):
-                raise NotImplementedError(f"{ncomp}-component JPEG not supported")
-            frame = (h, w, comps)
-        elif marker == 0xC2:
-            # the sequential parser never sees SOF2 via decode_jpeg (it
-            # routes to _decode_progressive first); this guards direct
-            # callers like split_restart_segments
-            raise NotImplementedError(
-                "progressive JPEG is decoded by the multi-scan path; "
-                "the sequential parser handles SOF0/SOF1 only"
-            )
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                "only baseline/extended-sequential/progressive Huffman JPEG "
-                "(SOF0/SOF1/SOF2) is supported"
-            )
-        elif marker == 0xDD:  # DRI
-            restart_interval = struct.unpack(">H", seg[:2])[0]
-        elif marker == 0xDA:  # SOS — entropy data follows
-            if frame is None:
-                raise ValueError("SOS before SOF")
-            ns = seg[0]
-            if ns < len(frame[2]):
-                # A spec-legal sequential JPEG may split its components
-                # across several scans (§B.2.3 allows ns < Nf); THIS
-                # parser handles the interleaved single-scan form only —
-                # decode_jpeg catches the subclassed error and routes to
-                # _decode_sequential_multiscan, while direct callers that
-                # genuinely can't handle it (split_restart_segments) keep
-                # a clean NotImplementedError envelope raise (ADVICE r5).
-                raise _MultiScanSequential(
-                    "multi-scan sequential JPEG is decoded by the "
-                    "multi-scan path; the single-scan parser handles the "
-                    "interleaved form only"
-                )
-            scan_tbl = {}
-            for i in range(ns):
-                cid, tsel = seg[1 + 2 * i : 3 + 2 * i]
-                scan_tbl[cid] = (tsel >> 4, tsel & 0x0F)
-            return {
-                "qtables": qtables,
-                "huff": huff,
-                "frame": frame,
-                "restart_interval": restart_interval,
-                "scan_tbl": scan_tbl,
-                "entropy_start": pos + seglen,
-            }
-        pos += seglen
-    raise ValueError("no SOS marker found (truncated JPEG)")
-
-
-def _decode_block(br: _BitReader, dc_tab, ac_tab, q: np.ndarray, prev_dc: int):
-    """Decode one entropy-coded block: returns (new DC predictor,
-    reconstructed float pixel block before level shift)."""
-    s = br.read_symbol(dc_tab)
-    diff = _extend(br.get(s), s) if s else 0
-    dc = prev_dc + diff
-    zz = None
-    k = 1
-    while k < 64:
-        rs = br.read_symbol(ac_tab)
-        r, s = rs >> 4, rs & 0x0F
-        if s == 0:
-            if r == 15:
-                k += 16  # ZRL
-                continue
-            break  # EOB
-        k += r
-        if k > 63:
-            raise ValueError("AC run overflows block")
-        if zz is None:
-            zz = np.zeros(64, dtype=np.int64)
-        zz[k] = _extend(br.get(s), s)
-        k += 1
-    if zz is None:
-        # DC-only block (immediate EOB — every block of a smooth or
-        # synthesized asset): the IDCT of an all-zero AC matrix is
-        # exactly 0.0 + dc·q00/8, so the constant plane is bit-identical
-        # to the matmul path at a fraction of the cost.
-        return dc, np.full((8, 8), float(dc * q[0, 0]) / 8.0)
-    zz[0] = dc
-    coef = np.zeros((8, 8), dtype=np.int64)
-    coef[_ZZ_ROWS, _ZZ_COLS] = zz * q[_ZZ_ROWS, _ZZ_COLS]
-    return dc, _idct_block(coef)
-
-
-def decode_jpeg(data: bytes) -> tuple[int, int, int, np.ndarray]:
-    """Decode a baseline JPEG to (width, height, channels, uint8 array).
-
-    Grayscale returns (h, w); color returns (h, w, 3) RGB (BT.601
-    inverse, rounded half up, clamped). See module docstring for the
-    supported envelope; anything outside raises NotImplementedError.
-    Progressive (SOF2) streams route to the multi-scan decoder; so do
-    §B.2.3 multi-scan SEQUENTIAL streams (components split across
-    several SOF0/SOF1 scans — common in real crawls, VERDICT r6 item 6)."""
-    if is_jpeg(data) and _sniff_sof(data) == 0xC2:
-        return _decode_progressive(data)
-    try:
-        hdr = _parse_headers(data)
-    except _MultiScanSequential:
-        return _decode_sequential_multiscan(data)
-    qtables, huff = hdr["qtables"], hdr["huff"]
-    h, w, comps = hdr["frame"]
-    scan_tbl = hdr["scan_tbl"]
-    restart_interval = hdr["restart_interval"]
-    ncomp = len(comps)
-    br = _BitReader(data, hdr["entropy_start"])
-    hmax = max(hs for _, hs, _, _ in comps)
-    vmax = max(vs for _, _, vs, _ in comps)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    planes = [
-        np.zeros((mcus_y * 8 * vs, mcus_x * 8 * hs), dtype=np.float64)
-        for _, hs, vs, _ in comps
-    ]
-    prev_dc = [0] * ncomp
-    mcu = 0
-    rst = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                br.expect_rst(rst)
-                rst = (rst + 1) % 8
-                prev_dc = [0] * ncomp
-            mcu += 1
-            for ci, (cid, hs, vs, tq) in enumerate(comps):
-                td, ta = scan_tbl[cid]
+def _scan_order(
+    frame: dict, scan_cids: list[int], cid_to_ci: dict[int, int]
+) -> list[tuple[int, int, int, int]]:
+    """Block order of one scan (§A.2): the component's own raster when
+    the scan is non-interleaved (ns == 1), interleaved MCU order over
+    the scan's components otherwise. The frame-global MCU grid is
+    correct for ANY component subset: ceil(ceil(w*hs/hmax)/(8*hs)) ==
+    ceil(w/(8*hmax)) identically. Returns (ci, cid, by, bx) indexing
+    the padded per-component coefficient grids."""
+    comps = frame["comps"]
+    if len(scan_cids) == 1:
+        cid = scan_cids[0]
+        ci = cid_to_ci[cid]
+        _, hs, vs, _ = comps[ci]
+        nby, nbx = _comp_grid(
+            frame["h"], frame["w"], hs, vs, frame["hmax"], frame["vmax"]
+        )
+        return [(ci, cid, by, bx) for by in range(nby) for bx in range(nbx)]
+    order = []
+    for my in range(frame["mcus_y"]):
+        for mx in range(frame["mcus_x"]):
+            for cid in scan_cids:
+                ci = cid_to_ci[cid]
+                _, hs, vs, _ = comps[ci]
                 for byi in range(vs):
                     for bxi in range(hs):
-                        prev_dc[ci], px = _decode_block(
-                            br, huff[(0, td)], huff[(1, ta)], qtables[tq], prev_dc[ci]
-                        )
-                        r0 = (my * vs + byi) * 8
-                        c0 = (mx * hs + bxi) * 8
-                        planes[ci][r0 : r0 + 8, c0 : c0 + 8] = px
-    return _finish_image(planes, comps, hmax, vmax, h, w)
+                        order.append((ci, cid, my * vs + byi, mx * hs + bxi))
+    return order
+
+
+def _dec_seq_scan(
+    br: _BitReader,
+    order: list[tuple[int, int, int, int]],
+    scan_tbl: dict[int, tuple[int, int]],
+    huff: dict,
+    coefs: list[np.ndarray],
+    restart_interval: int = 0,
+    blocks_per_mcu: int = 1,
+) -> None:
+    """One full-precision sequential scan (§B.2.3: Ss=0, Se=63,
+    Ah=Al=0) — the codec's one sequential entropy decoder. A baseline
+    frame is a single scan of this kind, a multi-scan sequential frame
+    several, and ``decode_segment_pixel_sum`` runs it over one restart
+    segment. Each block decodes DC diff + AC run-lengths in one pass into
+    the quantized-coefficient accumulator shared with the progressive
+    scan decoders, so dequantize + IDCT happen once, in ``_idct_planes``.
+
+    ``restart_interval`` > 0 consumes an RSTm marker (byte-aligned,
+    sequence-checked, m cycling 0..7) every Ri MCUs and resets the DC
+    predictors (§E.2.4). ``blocks_per_mcu`` maps the flat block order to
+    MCU counts: 1 for a non-interleaved scan (one data unit per MCU,
+    §B.2.3), sum(hs*vs over scan components) when interleaved."""
+    tabs = {cid: (huff[(0, td)], huff[(1, ta)]) for cid, (td, ta) in scan_tbl.items()}
+    prev: dict[int, int] = {}
+    rst = 0
+    per_rst = restart_interval * blocks_per_mcu
+    for i, (ci, cid, by, bx) in enumerate(order):
+        if per_rst and i and i % per_rst == 0:
+            br.expect_rst(rst)
+            rst = (rst + 1) % 8
+            prev = {}
+        dc_tab, ac_tab = tabs[cid]
+        blk = coefs[ci][by, bx]
+        s = br.read_symbol(dc_tab)
+        diff = _extend(br.get(s), s) if s else 0
+        prev[ci] = prev.get(ci, 0) + diff
+        blk[0] = prev[ci]
+        k = 1
+        while k <= 63:
+            rs = br.read_symbol(ac_tab)
+            r, s = rs >> 4, rs & 0x0F
+            if s == 0:
+                if r == 15:
+                    k += 16
+                    continue
+                break
+            k += r
+            if k > 63:
+                raise ValueError("AC run overflows block")
+            blk[k] = _extend(br.get(s), s)
+            k += 1
+
+
+def _idct_planes(
+    coefs: list[np.ndarray], comps: list[tuple], qtables: dict[int, np.ndarray]
+) -> list[np.ndarray]:
+    """Dequantize + IDCT every accumulated coefficient block — the one
+    decode tail: every frame (baseline, multi-scan sequential,
+    progressive) and every restart segment ends here.
+
+    Round 10 (guide §4.2, VERDICT r9 item 5): one BATCHED dequantize +
+    IDCT over the whole plane instead of a Python loop over 8x8 blocks.
+    Bit-identical to the per-block form by construction: dequantization
+    is exact int64; ``np.matmul`` with a stacked operand runs the SAME 2D
+    matmul per slice (pinned against the per-block reference by
+    tests/test_jpeg.py::test_idct_planes_batched_matches_per_block), and
+    the split-out DC term is added with the same scalar IEEE add per
+    element as the per-block ``+ dc / 8.0``."""
+    planes = []
+    for ci, (_, _hs, _vs, tq) in enumerate(comps):
+        q = qtables[tq]
+        nby, nbx = coefs[ci].shape[:2]
+        zz = coefs[ci].reshape(nby * nbx, 64)
+        blocks = np.zeros((nby * nbx, 8, 8), dtype=np.int64)
+        blocks[:, _ZZ_ROWS, _ZZ_COLS] = zz * q[_ZZ_ROWS, _ZZ_COLS]
+        dc = blocks[:, 0, 0].astype(np.float64)
+        ac = blocks.astype(np.float64)
+        ac[:, 0, 0] = 0.0
+        out = (_DCT_T.T @ ac @ _DCT_T) + (dc / 8.0)[:, None, None]
+        planes.append(
+            out.reshape(nby, nbx, 8, 8).transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
+        )
+    return planes
 
 
 def _finish_image(
@@ -1121,11 +1052,10 @@ def _finish_image(
     h: int,
     w: int,
 ) -> tuple[int, int, int, np.ndarray]:
-    """Shared decoder tail (baseline and progressive): upsample
-    subsampled components to full resolution by replication (§A.1.1
-    nearest-neighbor — self-consistent with the encoder's box-mean
-    downsample), crop, level-shift, and apply the BT.601 inverse for
-    color (rounded half up, clamped)."""
+    """The decoder's colour tail: upsample subsampled components to full
+    resolution by replication (§A.1.1 nearest-neighbor — self-consistent
+    with the encoder's box-mean downsample), crop, level-shift, and
+    apply the BT.601 inverse for color (rounded half up, clamped)."""
     up = []
     for p, (_, hs, vs, _) in zip(planes, comps):
         if hs != hmax:
@@ -1146,6 +1076,234 @@ def _finish_image(
     return w, h, 3, rgb.astype(np.uint8)
 
 
+def _scan_end(data: bytes, pos: int) -> int:
+    """Find the next non-stuffing marker from ``pos`` (the byte offset
+    the bit reader stopped at after decoding a scan's last symbol)."""
+    while pos + 1 < len(data):
+        if data[pos] == 0xFF and data[pos + 1] != 0x00:
+            return pos
+        pos += 1
+    raise ValueError("scan data ran off the end of the stream")
+
+
+def _parse_sof(seg: bytes, progressive: bool) -> dict:
+    """SOF0/SOF1/SOF2 payload -> the frame state: size, components
+    ``(cid, hs, vs, tq)``, max sampling factors and the interleaved MCU
+    grid (§A.2.3 — sized by the MAX sampling factors)."""
+    prec = seg[0]
+    if prec != 8:
+        raise NotImplementedError(f"{prec}-bit JPEG not supported")
+    h, w = struct.unpack(">HH", seg[1:5])
+    ncomp = seg[5]
+    comps = []
+    for i in range(ncomp):
+        cid, samp, tq = seg[6 + 3 * i : 9 + 3 * i]
+        comps.append((cid, samp >> 4, samp & 0x0F, tq))
+    if any(hs not in (1, 2) or vs not in (1, 2) for _, hs, vs, _ in comps):
+        raise NotImplementedError(
+            "only sampling factors 1 and 2 (4:4:4 / 4:2:2 / 4:2:0) supported"
+        )
+    if ncomp not in (1, 3):
+        raise NotImplementedError(f"{ncomp}-component JPEG not supported")
+    hmax = max(hs for _, hs, _, _ in comps)
+    vmax = max(vs for _, _, vs, _ in comps)
+    return {
+        "h": h,
+        "w": w,
+        "comps": comps,
+        "hmax": hmax,
+        "vmax": vmax,
+        "mcus_x": (w + 8 * hmax - 1) // (8 * hmax),
+        "mcus_y": (h + 8 * vmax - 1) // (8 * vmax),
+        "progressive": progressive,
+    }
+
+
+def _walk(data: bytes, stop_at_sos: bool = False) -> dict:
+    """The codec's one marker walk (T.81 §B.2).
+
+    SOF0/SOF1/SOF2 set the frame state; DQT always merges through the
+    first-scan latch (``_merge_dqt``); DHT and DRI apply to every later
+    scan until redefined (§B.2.4). Each SOS decodes its entropy data into
+    the per-component quantized-coefficient grids, then the walk resumes
+    at the marker after the scan:
+
+    * a sequential frame sends every scan to ``_dec_seq_scan``. Each scan
+      must be full precision (Ss=0, Se=63, Ah=Al=0) and code each of its
+      components for the first time, and every component must be coded
+      by EOI. A baseline frame is the one-scan case; §B.2.3 multi-scan
+      streams split the components across several scans (non-interleaved
+      on the component's own §A.2.2 raster, or interleaved over a subset
+      in MCU order; Ri counts MCUs per scan, VERDICT r7 item 4);
+    * a progressive frame sends DC scans to ``_dec_dc_scan`` and AC scans
+      to ``_dec_ac_first`` / ``_dec_ac_refine`` (Annex G; restart
+      intervals per §E.2.4 in every scan type, VERDICT r8 item 3).
+
+    Returns the frame state plus the tables and coefficient grids at EOI.
+    A stream that ends before EOI or inside a marker segment, or that
+    carries a second SOF, raises ValueError: those coefficients would be
+    incomplete or belong to another frame. With ``stop_at_sos`` the walk
+    returns at the first SOS instead, with the
+    scan's Huffman selectors and where its entropy data starts — the
+    header the restart-segment APIs share. That mode handles a
+    single-scan sequential stream only: a multi-scan or progressive
+    stream raises NotImplementedError (ADVICE r5)."""
+    if not is_jpeg(data):
+        raise ValueError("not a JPEG payload (missing SOI)")
+    pos = 2
+    qtables: dict[int, np.ndarray] = {}
+    latched: dict[int, np.ndarray] = {}
+    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+    frame: dict | None = None
+    coefs: list[np.ndarray] = []
+    coded: set[int] = set()
+    saw_scan = False
+    restart_interval = 0
+    while True:  # ends at EOI, or at the first SOS with stop_at_sos
+        # §B.1.1.2: any number of 0xFF fill bytes may pad before a marker;
+        # skip them so the marker id is never itself read as 0xFF (ADVICE
+        # r5: a foreign JPEG with fill bytes otherwise misparses — 0xFF is
+        # not a marker id and the next two bytes get read as a bogus
+        # segment length).
+        while pos + 1 < len(data) and data[pos] == data[pos + 1] == 0xFF:
+            pos += 1
+        if pos + 2 > len(data):
+            # no EOI: a progressive stream cut between scans would
+            # otherwise decode to partially refined (wrong) pixels
+            raise ValueError("stream ends before EOI (truncated JPEG)")
+        if data[pos] != 0xFF:
+            raise ValueError("expected marker")
+        marker = data[pos + 1]
+        pos += 2
+        if marker == 0xD9:  # EOI
+            break
+        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
+            continue  # standalone markers
+        seglen = int.from_bytes(data[pos : pos + 2], "big")
+        if pos + 2 > len(data) or pos + seglen > len(data):
+            raise ValueError(f"truncated marker segment FF{marker:02X}")
+        seg = data[pos + 2 : pos + seglen]
+        if marker == 0xDB:  # DQT
+            _merge_dqt(seg, qtables, latched)
+        elif marker == 0xC4:  # DHT
+            _parse_dht_seg(seg, huff)
+        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0 / SOF1 / SOF2
+            if frame is not None:
+                raise ValueError("second frame header (SOF) in one stream")
+            frame = _parse_sof(seg, progressive=marker == 0xC2)
+            if not stop_at_sos:
+                coefs = [
+                    np.zeros(
+                        (frame["mcus_y"] * vs, frame["mcus_x"] * hs, 64), dtype=np.int64
+                    )
+                    for _, hs, vs, _ in frame["comps"]
+                ]
+        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
+            raise NotImplementedError(
+                "only baseline/extended-sequential/progressive Huffman JPEG "
+                "(SOF0/SOF1/SOF2) is supported"
+            )
+        elif marker == 0xDD:  # DRI
+            restart_interval = struct.unpack(">H", seg[:2])[0]
+        elif marker == 0xDA:  # SOS — entropy data follows
+            if frame is None:
+                raise ValueError("SOS before SOF")
+            comps = frame["comps"]
+            cid_to_ci = {c[0]: i for i, c in enumerate(comps)}
+            ns = seg[0]
+            scan_cids = []
+            scan_tbl: dict[int, tuple[int, int]] = {}
+            for i in range(ns):
+                cid, tsel = seg[1 + 2 * i : 3 + 2 * i]
+                if cid not in cid_to_ci:
+                    raise ValueError(f"scan references unknown component {cid}")
+                scan_tbl[cid] = (tsel >> 4, tsel & 0x0F)
+                scan_cids.append(cid)
+            ss, se, ahal = seg[1 + 2 * ns : 4 + 2 * ns]
+            ah, al = ahal >> 4, ahal & 0x0F
+            if frame["progressive"]:
+                if ss == 0 and se != 0:
+                    raise ValueError("DC scan with nonzero Se")
+                if ss and ns != 1:
+                    raise ValueError("interleaved AC scan is not spec-legal")
+            else:
+                if (ss, se, ahal) != (0, 63, 0):
+                    raise ValueError(
+                        "sequential frame with progressive scan parameters "
+                        f"(Ss={ss}, Se={se}, AhAl={ahal:#04x})"
+                    )
+                for cid in scan_cids:
+                    if cid_to_ci[cid] in coded:
+                        raise ValueError(f"component {cid} coded in two scans")
+                    coded.add(cid_to_ci[cid])
+            _latch_scan_qtables(scan_cids, cid_to_ci, comps, qtables, latched)
+            if stop_at_sos:
+                if frame["progressive"] or ns < len(comps):
+                    raise NotImplementedError(
+                        "multi-scan and progressive JPEG decode whole-file "
+                        "only; restart segments need a single-scan "
+                        "sequential stream"
+                    )
+                return {
+                    **frame,
+                    "qtables": qtables,
+                    "huff": huff,
+                    "restart_interval": restart_interval,
+                    "scan_tbl": scan_tbl,
+                    "entropy_start": pos + seglen,
+                }
+            order = _scan_order(frame, scan_cids, cid_to_ci)
+            # Ri counts MCUs: one data unit per MCU when the scan is
+            # non-interleaved (ns == 1), sum(hs*vs) blocks per MCU when
+            # interleaved (§B.2.3 / §E.2.4)
+            bpm = 1 if ns == 1 else sum(
+                comps[cid_to_ci[c]][1] * comps[cid_to_ci[c]][2] for c in scan_cids
+            )
+            br = _BitReader(data, pos + seglen)
+            if not frame["progressive"]:
+                _dec_seq_scan(br, order, scan_tbl, huff, coefs, restart_interval, bpm)
+            elif ss == 0:
+                _dec_dc_scan(
+                    br, order, scan_tbl, huff, coefs, ah, al, restart_interval, bpm
+                )
+            else:
+                dec = _dec_ac_refine if ah else _dec_ac_first
+                tab = huff[(1, scan_tbl[scan_cids[0]][1])]
+                dec(br, order, tab, coefs, ss, se, al, restart_interval)
+            saw_scan = True
+            pos = _scan_end(data, br.pos)
+            continue
+        pos += seglen
+    if frame is None or not saw_scan:
+        raise ValueError("no SOS marker found (truncated JPEG)")
+    if not frame["progressive"] and len(coded) < len(frame["comps"]):
+        raise ValueError(
+            f"only {len(coded)} of {len(frame['comps'])} components coded "
+            "(truncated multi-scan stream)"
+        )
+    return {**frame, "qtables": qtables, "coefs": coefs}
+
+
+def decode_jpeg(data: bytes) -> tuple[int, int, int, np.ndarray]:
+    """Decode a JPEG to (width, height, channels, uint8 array).
+
+    Grayscale returns (h, w); color returns (h, w, 3) RGB (BT.601
+    inverse, rounded half up, clamped). See module docstring for the
+    supported envelope; anything outside raises NotImplementedError.
+    Baseline, §B.2.3 multi-scan sequential (components split across
+    several SOF0/SOF1 scans — common in real crawls, VERDICT r6 item 6)
+    and progressive (SOF2) streams all take one path: ``_walk`` gathers
+    every scan's quantized coefficients, then one batched dequantize +
+    IDCT (``_idct_planes``) and the colour tail (``_finish_image``) run
+    once — so every encoding of the same coefficients decodes to exactly
+    the same pixels (the parity invariant the registry oracles hash)."""
+    f = _walk(data)
+    # qtables here equals the first-scan latch for every latched id —
+    # _merge_dqt raises on any later divergent redefinition (ADVICE r6).
+    planes = _idct_planes(f["coefs"], f["comps"], f["qtables"])
+    return _finish_image(planes, f["comps"], f["hmax"], f["vmax"], f["h"], f["w"])
+
+
 # --------------------------------------------------------------------------
 # Restart-segment APIs: the distributed-decode path
 # --------------------------------------------------------------------------
@@ -1161,17 +1319,14 @@ def split_restart_segments(data: bytes) -> tuple[bytes, int, list[tuple[int, byt
     where ``header_bytes`` is the marker stream through SOS (re-parsed
     once per worker, ~350 B) and each segment is raw entropy data with
     its RST markers stripped. Requires DRI > 0."""
-    hdr = _parse_headers(data)
+    hdr = _walk(data, stop_at_sos=True)
     ri = hdr["restart_interval"]
     if ri <= 0:
         raise ValueError("split_restart_segments requires a restart interval")
-    h, w, comps = hdr["frame"]
     # MCU grid is sized by the MAX sampling factors (§A.2.3) — ceil(h/8)
     # *ceil(w/8) is only right for 1x1 sampling and silently miscounted
     # per-segment MCUs for subsampled color streams (ADVICE r5).
-    hmax = max(hs for _, hs, _, _ in comps)
-    vmax = max(vs for _, _, vs, _ in comps)
-    n_mcus = ((h + 8 * vmax - 1) // (8 * vmax)) * ((w + 8 * hmax - 1) // (8 * hmax))
+    n_mcus = hdr["mcus_y"] * hdr["mcus_x"]
     start = hdr["entropy_start"]
     header = data[:start]
     # scan entropy data for unstuffed markers
@@ -1218,24 +1373,21 @@ def decode_segment_pixel_sum(
     transform joined downstream — out of scope, loud raise."""
     hdr = _HEADER_CACHE.get(header)
     if hdr is None:
-        hdr = _parse_headers(header + b"\xff\xd9")
+        hdr = _walk(header, stop_at_sos=True)
         if len(_HEADER_CACHE) > 64:  # bound worker memory
             _HEADER_CACHE.clear()
         _HEADER_CACHE[header] = hdr
-    comps = hdr["frame"][2]
+    comps = hdr["comps"]
     if len(comps) != 1:
         raise NotImplementedError("segment decode supports grayscale only")
-    cid, _, _, tq = comps[0]
-    td, ta = hdr["scan_tbl"][cid]
-    dc_tab, ac_tab = hdr["huff"][(0, td)], hdr["huff"][(1, ta)]
-    q = hdr["qtables"][tq]
+    # the segment's blocks as one (1, n_mcus) grid: same entropy decoder
+    # and IDCT tail as the whole-file path, no restart markers inside
+    coefs = [np.zeros((1, n_mcus, 64), dtype=np.int64)]
+    order = [(0, comps[0][0], 0, i) for i in range(n_mcus)]
     br = _BitReader(segment + b"\xff\xd9", 0)
-    prev_dc = 0
-    total = 0
-    for _ in range(n_mcus):
-        prev_dc, px = _decode_block(br, dc_tab, ac_tab, q, prev_dc)
-        total += int(np.clip(np.floor(px + 0.5) + 128.0, 0, 255).sum())
-    return n_mcus, total
+    _dec_seq_scan(br, order, hdr["scan_tbl"], hdr["huff"], coefs)
+    px = _idct_planes(coefs, comps, hdr["qtables"])[0]
+    return n_mcus, int(np.clip(np.floor(px + 0.5) + 128.0, 0, 255).sum())
 
 
 # --------------------------------------------------------------------------
@@ -1276,266 +1428,6 @@ def _prog_script(ncomp: int) -> list[tuple]:
     for c in range(ncomp):
         script.append(("ac_refine", c, 1, 63, 1, 0))
     return script
-
-
-def _comp_grid(h: int, w: int, hs: int, vs: int, hmax: int, vmax: int) -> tuple[int, int]:
-    """Block grid of one component in a NON-interleaved scan (§A.2.2):
-    ceil over the component's own sample dimensions, not the padded
-    interleaved MCU coverage."""
-    yi = -(-(h * vs) // vmax)
-    xi = -(-(w * hs) // hmax)
-    return -(-yi // 8), -(-xi // 8)
-
-
-def _scan_order(
-    scan_cids: list[int],
-    cid_to_ci: dict[int, int],
-    comps: list[tuple],
-    h: int,
-    w: int,
-    hmax: int,
-    vmax: int,
-    mcus_x: int,
-    mcus_y: int,
-) -> list[tuple[int, int, int, int]]:
-    """Block order of one scan (§A.2): the component's own raster when
-    the scan is non-interleaved (ns == 1), interleaved MCU order over
-    the scan's components otherwise. The frame-global MCU grid is
-    correct for ANY component subset: ceil(ceil(w*hs/hmax)/(8*hs)) ==
-    ceil(w/(8*hmax)) identically. Returns (ci, cid, by, bx) indexing
-    the padded per-component coefficient grids."""
-    if len(scan_cids) == 1:
-        cid = scan_cids[0]
-        ci = cid_to_ci[cid]
-        _, hs, vs, _ = comps[ci]
-        nby, nbx = _comp_grid(h, w, hs, vs, hmax, vmax)
-        return [(ci, cid, by, bx) for by in range(nby) for bx in range(nbx)]
-    order = []
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            for cid in scan_cids:
-                ci = cid_to_ci[cid]
-                _, hs, vs, _ = comps[ci]
-                for byi in range(vs):
-                    for bxi in range(hs):
-                        order.append((ci, cid, my * vs + byi, mx * hs + bxi))
-    return order
-
-
-def _dec_seq_scan(
-    br: _BitReader,
-    order: list[tuple[int, int, int, int]],
-    scan_tbl: dict[int, tuple[int, int]],
-    huff: dict,
-    coefs: list[np.ndarray],
-    restart_interval: int = 0,
-    blocks_per_mcu: int = 1,
-) -> None:
-    """One full-precision sequential scan (§B.2.3: Ss=0, Se=63,
-    Ah=Al=0): each block decodes DC diff + AC run-lengths in one pass —
-    the same symbol grammar as ``_decode_block`` but into the
-    quantized-coefficient accumulator shared with the progressive path,
-    so dequantize + IDCT happen once at EOI.
-
-    ``restart_interval`` > 0 consumes an RSTm marker (byte-aligned,
-    sequence-checked, m cycling 0..7) every Ri MCUs and resets the DC
-    predictors (§E.2.4). ``blocks_per_mcu`` maps the flat block order to
-    MCU counts: 1 for a non-interleaved scan (one data unit per MCU,
-    §B.2.3), sum(hs*vs over scan components) when interleaved."""
-    prev: dict[int, int] = {}
-    rst = 0
-    per_rst = restart_interval * blocks_per_mcu
-    for i, (ci, cid, by, bx) in enumerate(order):
-        if per_rst and i and i % per_rst == 0:
-            br.expect_rst(rst)
-            rst = (rst + 1) % 8
-            prev = {}
-        dc_tab = huff[(0, scan_tbl[cid][0])]
-        ac_tab = huff[(1, scan_tbl[cid][1])]
-        blk = coefs[ci][by, bx]
-        s = br.read_symbol(dc_tab)
-        diff = _extend(br.get(s), s) if s else 0
-        prev[ci] = prev.get(ci, 0) + diff
-        blk[0] = prev[ci]
-        k = 1
-        while k <= 63:
-            rs = br.read_symbol(ac_tab)
-            r, s = rs >> 4, rs & 0x0F
-            if s == 0:
-                if r == 15:
-                    k += 16
-                    continue
-                break
-            k += r
-            if k > 63:
-                raise ValueError("AC run overflows block")
-            blk[k] = _extend(br.get(s), s)
-            k += 1
-
-
-def _idct_planes(
-    coefs: list[np.ndarray], comps: list[tuple], qtables: dict[int, np.ndarray]
-) -> list[np.ndarray]:
-    """Dequantize + IDCT every accumulated coefficient block (the shared
-    tail of the progressive and multi-scan sequential decoders).
-
-    Round 10 (guide §4.2, VERDICT r9 item 5): one BATCHED dequantize +
-    IDCT over the whole plane instead of a Python loop calling
-    ``_idct_block`` per 8x8 block. Bit-identical by construction:
-    dequantization is exact int64; ``np.matmul`` with a stacked operand
-    runs the SAME 2D matmul per slice (pinned by
-    tests/test_jpeg.py::test_idct_planes_batched_matches_per_block), and
-    the split-out DC term is added with the same scalar IEEE add per
-    element as ``_idct_block``'s ``+ dc / 8.0``."""
-    planes = []
-    for ci, (_, _hs, _vs, tq) in enumerate(comps):
-        q = qtables[tq]
-        nby, nbx = coefs[ci].shape[:2]
-        zz = coefs[ci].reshape(nby * nbx, 64)
-        blocks = np.zeros((nby * nbx, 8, 8), dtype=np.int64)
-        blocks[:, _ZZ_ROWS, _ZZ_COLS] = zz * q[_ZZ_ROWS, _ZZ_COLS]
-        dc = blocks[:, 0, 0].astype(np.float64)
-        ac = blocks.astype(np.float64)
-        ac[:, 0, 0] = 0.0
-        out = (_DCT_T.T @ ac @ _DCT_T) + (dc / 8.0)[:, None, None]
-        planes.append(
-            out.reshape(nby, nbx, 8, 8).transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
-        )
-    return planes
-
-
-def _decode_sequential_multiscan(data: bytes) -> tuple[int, int, int, np.ndarray]:
-    """Decode a §B.2.3 multi-scan SEQUENTIAL (SOF0/SOF1) JPEG: the
-    frame's components are split across several scans — each scan either
-    non-interleaved (one component on its own §A.2.2 block raster) or
-    interleaved over a component subset in MCU order — every scan at
-    full precision (Ss=0, Se=63, Ah=Al=0). Coefficients accumulate per
-    component and dequantize + IDCT once at EOI, so the pixels equal the
-    single-scan encoding of the same coefficients exactly (the parity
-    invariant the registry oracle hashes). Envelope: 8-bit, 1-3
-    components, sampling factors 1-2, quant tables latched at each
-    component's first scan (ADVICE r6), restart intervals per §E.2.4
-    (Ri counts MCUs per scan — one data unit per MCU when
-    non-interleaved, VERDICT r7 item 4), each component coded exactly
-    once."""
-    if not is_jpeg(data):
-        raise ValueError("not a JPEG payload (missing SOI)")
-    pos = 2
-    qtables: dict[int, np.ndarray] = {}
-    latched: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    frame = None
-    coefs: list[np.ndarray] = []
-    hmax = vmax = 1
-    mcus_x = mcus_y = 0
-    coded: set[int] = set()
-    ms_restart = 0
-    while pos + 2 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("expected marker")
-        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
-            pos += 1
-        marker = data[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI
-            break
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
-            continue
-        seglen = struct.unpack(">H", data[pos : pos + 2])[0]
-        seg = data[pos + 2 : pos + seglen]
-        if marker == 0xDB:
-            _merge_dqt(seg, qtables, latched)
-        elif marker == 0xC4:
-            _parse_dht_seg(seg, huff)
-        elif marker in (0xC0, 0xC1):
-            prec = seg[0]
-            if prec != 8:
-                raise NotImplementedError(f"{prec}-bit JPEG not supported")
-            h, w = struct.unpack(">HH", seg[1:5])
-            ncomp = seg[5]
-            comps = []
-            for i in range(ncomp):
-                cid, samp_b, tq = seg[6 + 3 * i : 9 + 3 * i]
-                comps.append((cid, samp_b >> 4, samp_b & 0x0F, tq))
-            if any(hs not in (1, 2) or vs not in (1, 2) for _, hs, vs, _ in comps):
-                raise NotImplementedError(
-                    "only sampling factors 1 and 2 (4:4:4 / 4:2:2 / 4:2:0) supported"
-                )
-            if ncomp not in (1, 3):
-                raise NotImplementedError(f"{ncomp}-component JPEG not supported")
-            frame = (h, w, comps)
-            hmax = max(hs for _, hs, _, _ in comps)
-            vmax = max(vs for _, _, vs, _ in comps)
-            mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-            coefs = [
-                np.zeros((mcus_y * vs, mcus_x * hs, 64), dtype=np.int64)
-                for _, hs, vs, _ in comps
-            ]
-        elif marker == 0xC2:
-            raise ValueError(
-                "_decode_sequential_multiscan called on a progressive stream"
-            )
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                "only baseline/extended-sequential/progressive Huffman JPEG "
-                "(SOF0/SOF1/SOF2) is supported"
-            )
-        elif marker == 0xDD:
-            # DRI applies to every following scan until redefined (§B.2.4.4)
-            ms_restart = struct.unpack(">H", seg[:2])[0]
-        elif marker == 0xDA:
-            if frame is None:
-                raise ValueError("SOS before SOF")
-            h, w, comps = frame
-            ns = seg[0]
-            scan_tbl: dict[int, tuple[int, int]] = {}
-            scan_cids = []
-            for i in range(ns):
-                cid, tsel = seg[1 + 2 * i : 3 + 2 * i]
-                scan_tbl[cid] = (tsel >> 4, tsel & 0x0F)
-                scan_cids.append(cid)
-            ss, se, ahal = seg[1 + 2 * ns : 4 + 2 * ns]
-            if (ss, se, ahal) != (0, 63, 0):
-                raise ValueError(
-                    "sequential frame with progressive scan parameters "
-                    f"(Ss={ss}, Se={se}, AhAl={ahal:#04x})"
-                )
-            cid_to_ci = {c[0]: i for i, c in enumerate(comps)}
-            for cid in scan_cids:
-                if cid not in cid_to_ci:
-                    raise ValueError(f"scan references unknown component {cid}")
-                if cid_to_ci[cid] in coded:
-                    raise ValueError(f"component {cid} coded in two scans")
-                coded.add(cid_to_ci[cid])
-            _latch_scan_qtables(scan_cids, cid_to_ci, comps, qtables, latched)
-            order = _scan_order(
-                scan_cids, cid_to_ci, comps, h, w, hmax, vmax, mcus_x, mcus_y
-            )
-            bpm = (
-                1
-                if len(scan_cids) == 1
-                else sum(
-                    comps[cid_to_ci[cid]][1] * comps[cid_to_ci[cid]][2]
-                    for cid in scan_cids
-                )
-            )
-            br = _BitReader(data, pos + seglen)
-            _dec_seq_scan(
-                br, order, scan_tbl, huff, coefs, ms_restart, bpm
-            )
-            pos = _scan_end(data, br.pos)
-            continue
-        pos += seglen
-    if frame is None or not coded:
-        raise ValueError("no SOS marker found (truncated JPEG)")
-    h, w, comps = frame
-    if len(coded) < len(comps):
-        raise ValueError(
-            f"only {len(coded)} of {len(comps)} components coded "
-            "(truncated multi-scan stream)"
-        )
-    return _finish_image(_idct_planes(coefs, comps, qtables), comps, hmax, vmax, h, w)
 
 
 class _OpRecorder:
@@ -1891,40 +1783,6 @@ def encode_jpeg_rgb_progressive(
     )
 
 
-def _sniff_sof(data: bytes) -> int | None:
-    """Return the first SOFn marker byte of the stream (without decoding
-    anything), or None if SOS/EOI arrives first. Used to route SOF2
-    streams to the progressive decoder."""
-    pos = 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("expected marker")
-        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
-            pos += 1
-        marker = data[pos + 1]
-        pos += 2
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD9:
-            if marker == 0xD9:
-                return None
-            continue
-        if marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            return marker
-        if marker == 0xDA:
-            return None
-        pos += struct.unpack(">H", data[pos : pos + 2])[0]
-    return None
-
-
-def _scan_end(data: bytes, pos: int) -> int:
-    """Find the next non-stuffing marker from ``pos`` (the byte offset
-    the bit reader stopped at after decoding a scan's last symbol)."""
-    while pos + 1 < len(data):
-        if data[pos] == 0xFF and data[pos + 1] != 0x00:
-            return pos
-        pos += 1
-    raise ValueError("scan data ran off the end of the stream")
-
-
 def _dec_dc_scan(
     br: _BitReader,
     order,
@@ -1969,9 +1827,9 @@ def _dec_dc_scan(
 
 def _dec_ac_first(
     br: _BitReader,
-    grid,
+    order,
     tab,
-    blkarr,
+    coefs,
     ss: int,
     se: int,
     al: int,
@@ -1988,7 +1846,7 @@ def _dec_ac_first(
     one restart segment, the property restart markers exist for)."""
     eobrun = 0
     rst = 0
-    for i, (by, bx) in enumerate(grid):
+    for i, (ci, _, by, bx) in enumerate(order):
         if restart_interval and i and i % restart_interval == 0:
             br.expect_rst(rst)
             rst = (rst + 1) % 8
@@ -1996,7 +1854,7 @@ def _dec_ac_first(
         if eobrun:
             eobrun -= 1
             continue
-        blk = blkarr[by, bx]
+        blk = coefs[ci][by, bx]
         k = ss
         while k <= se:
             rs = br.read_symbol(tab)
@@ -2018,9 +1876,9 @@ def _dec_ac_first(
 
 def _dec_ac_refine(
     br: _BitReader,
-    grid,
+    order,
     tab,
-    blkarr,
+    coefs,
     ss: int,
     se: int,
     al: int,
@@ -2043,12 +1901,12 @@ def _dec_ac_refine(
         if br.get(1) and (int(blk[k]) & p1) == 0:
             blk[k] += p1 if blk[k] >= 0 else m1
 
-    for i, (by, bx) in enumerate(grid):
+    for i, (ci, _, by, bx) in enumerate(order):
         if restart_interval and i and i % restart_interval == 0:
             br.expect_rst(rst)
             rst = (rst + 1) % 8
             eobrun = 0
-        blk = blkarr[by, bx]
+        blk = coefs[ci][by, bx]
         k = ss
         if eobrun == 0:
             while k <= se:
@@ -2083,136 +1941,3 @@ def _dec_ac_refine(
                     correct(blk, k)
                 k += 1
             eobrun -= 1
-
-
-def _decode_progressive(data: bytes) -> tuple[int, int, int, np.ndarray]:
-    """Decode a progressive (SOF2) Huffman JPEG: walk every scan,
-    accumulate quantized coefficients per component, then dequantize and
-    IDCT once at the end — so a fully-refined stream reproduces the
-    baseline decode of the same coefficients exactly. Envelope: 8-bit,
-    1 or 3 components, sampling factors 1-2, restart intervals per
-    §E.2.4 in every scan type (VERDICT r8 item 3: Ri counts MCUs per
-    scan — interleaved MCUs in a DC scan, one data unit per MCU in the
-    non-interleaved AC scans — with RST0-7 sequence checks, per-SOS
-    marker-number reset, DC-predictor reset, and EOB-run reset at each
-    boundary)."""
-    if not is_jpeg(data):
-        raise ValueError("not a JPEG payload (missing SOI)")
-    pos = 2
-    qtables: dict[int, np.ndarray] = {}
-    latched: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    frame = None
-    coefs: list[np.ndarray] = []
-    hmax = vmax = 1
-    mcus_x = mcus_y = 0
-    saw_scan = False
-    ms_restart = 0
-    while pos + 2 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("expected marker")
-        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
-            pos += 1
-        marker = data[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI
-            break
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
-            continue
-        seglen = struct.unpack(">H", data[pos : pos + 2])[0]
-        seg = data[pos + 2 : pos + seglen]
-        if marker == 0xDB:
-            _merge_dqt(seg, qtables, latched)
-        elif marker == 0xC4:
-            _parse_dht_seg(seg, huff)
-        elif marker == 0xC2:
-            prec = seg[0]
-            if prec != 8:
-                raise NotImplementedError(f"{prec}-bit JPEG not supported")
-            h, w = struct.unpack(">HH", seg[1:5])
-            ncomp = seg[5]
-            comps = []
-            for i in range(ncomp):
-                cid, samp_b, tq = seg[6 + 3 * i : 9 + 3 * i]
-                comps.append((cid, samp_b >> 4, samp_b & 0x0F, tq))
-            if any(hs not in (1, 2) or vs not in (1, 2) for _, hs, vs, _ in comps):
-                raise NotImplementedError(
-                    "only sampling factors 1 and 2 (4:4:4 / 4:2:2 / 4:2:0) supported"
-                )
-            if ncomp not in (1, 3):
-                raise NotImplementedError(f"{ncomp}-component JPEG not supported")
-            frame = (h, w, comps)
-            hmax = max(hs for _, hs, _, _ in comps)
-            vmax = max(vs for _, _, vs, _ in comps)
-            mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-            coefs = [
-                np.zeros((mcus_y * vs, mcus_x * hs, 64), dtype=np.int64)
-                for _, hs, vs, _ in comps
-            ]
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("_decode_progressive called on a non-SOF2 stream")
-        elif marker == 0xDD:
-            # DRI applies to every following scan until redefined
-            # (§B.2.4.4) — same latch as the multi-scan sequential path
-            ms_restart = struct.unpack(">H", seg[:2])[0]
-        elif marker == 0xDA:
-            if frame is None:
-                raise ValueError("SOS before SOF")
-            h, w, comps = frame
-            ns = seg[0]
-            scan_tbl: dict[int, tuple[int, int]] = {}
-            scan_cids = []
-            for i in range(ns):
-                cid, tsel = seg[1 + 2 * i : 3 + 2 * i]
-                scan_tbl[cid] = (tsel >> 4, tsel & 0x0F)
-                scan_cids.append(cid)
-            ss, se, ahal = seg[1 + 2 * ns : 4 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0x0F
-            cid_to_ci = {c[0]: i for i, c in enumerate(comps)}
-            _latch_scan_qtables(scan_cids, cid_to_ci, comps, qtables, latched)
-            br = _BitReader(data, pos + seglen)
-            if ss == 0:
-                if se != 0:
-                    raise ValueError("DC scan with nonzero Se")
-                # scan order: interleaved MCU order for a multi-component
-                # scan, the component's own raster when ns == 1 (§A.2)
-                order = _scan_order(
-                    scan_cids, cid_to_ci, comps, h, w, hmax, vmax, mcus_x, mcus_y
-                )
-                # Ri counts MCUs: one data unit per MCU when the DC scan
-                # is non-interleaved (ns == 1), sum(hs*vs) blocks per
-                # MCU when interleaved (§B.2.3 / §E.2.4)
-                bpm = (
-                    1
-                    if len(scan_cids) == 1
-                    else sum(
-                        comps[cid_to_ci[cid]][1] * comps[cid_to_ci[cid]][2]
-                        for cid in scan_cids
-                    )
-                )
-                _dec_dc_scan(
-                    br, order, scan_tbl, huff, coefs, ah, al, ms_restart, bpm
-                )
-            else:
-                if ns != 1:
-                    raise ValueError("interleaved AC scan is not spec-legal")
-                ci = cid_to_ci[scan_cids[0]]
-                _, hs, vs, _ = comps[ci]
-                nby, nbx = _comp_grid(h, w, hs, vs, hmax, vmax)
-                grid = [(by, bx) for by in range(nby) for bx in range(nbx)]
-                tab = huff[(1, scan_tbl[scan_cids[0]][1])]
-                if ah == 0:
-                    _dec_ac_first(br, grid, tab, coefs[ci], ss, se, al, ms_restart)
-                else:
-                    _dec_ac_refine(br, grid, tab, coefs[ci], ss, se, al, ms_restart)
-            saw_scan = True
-            pos = _scan_end(data, br.pos)
-            continue
-        pos += seglen
-    if frame is None or not saw_scan:
-        raise ValueError("no SOS marker found (truncated JPEG)")
-    h, w, comps = frame
-    # qtables here equals the first-scan latch for every latched id —
-    # _merge_dqt raises on any later divergent redefinition (ADVICE r6).
-    return _finish_image(_idct_planes(coefs, comps, qtables), comps, hmax, vmax, h, w)

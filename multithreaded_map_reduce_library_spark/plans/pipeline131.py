@@ -4,13 +4,13 @@ the last common crawl decode shape the envelope still raised on
 components across several scans: each scan is full precision (Ss=0,
 Se=63, Ah=Al=0) and either NON-interleaved (one component on its own
 §A.2.2 block raster) or interleaved over a component SUBSET in MCU
-order. functions/jpeg.py now decodes this natively
-(``_decode_sequential_multiscan``: per-scan block order via the shared
-``_scan_order``, coefficients accumulated per component, one
-dequantize+IDCT at EOI, quant tables latched at each component's first
-scan per ADVICE r6) and encodes it (``encode_jpeg_rgb_multiscan``:
-Y alone non-interleaved, then Cb+Cr interleaved — exercising BOTH scan
-shapes in one stream).
+order. functions/jpeg.py now decodes this natively (its one marker
+walk, ``_walk``, which also decodes baseline and progressive streams:
+per-scan block order via ``_scan_order``, coefficients accumulated per
+component, one dequantize+IDCT at EOI, quant tables latched at each
+component's first scan per ADVICE r6) and encodes it
+(``encode_jpeg_rgb_multiscan``: Y alone non-interleaved, then Cb+Cr
+interleaved — exercising BOTH scan shapes in one stream).
 
 Reference parity anchor: the reference engine (mapreduce.h:44-83) has no
 image tier; this extends the driver-mandated multimodal superset.

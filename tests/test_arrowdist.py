@@ -167,3 +167,70 @@ def test_rider_reaches_every_partition_and_batch_boundaries():
 
     with pytest.raises(ValueError, match="first-row rider"):
         list(lloyd_argmin_batches(iter([batch([1, 2], False)])))
+
+
+def _cosine_batch(nv_rows, rider):
+    """One pairwise_cosine_batches input batch whose first row carries
+    ``rider`` (the query set)."""
+    q_type = pa.struct(
+        [("q_id", pa.int64()), ("qv", pa.list_(pa.float32())), ("q_lbl", pa.int32())]
+    )
+    n = len(nv_rows)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(range(n), type=pa.int64()),
+            pa.array(nv_rows, type=pa.list_(pa.float32())),
+            pa.array([0] * n, type=pa.int32()),
+            pa.array([rider] + [None] * (n - 1), type=pa.list_(q_type)),
+        ],
+        names=["n_id", "nv", "n_lbl", "_q"],
+    )
+
+
+def _lloyd_batch(v_rows, cents):
+    """One lloyd_argmin_batches input batch whose first row carries
+    ``cents`` (the centroids)."""
+    c_type = pa.struct(
+        [("cluster", pa.int64()), ("s", pa.list_(pa.int64())), ("n", pa.int64())]
+    )
+    n = len(v_rows)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(range(n), type=pa.int64()),
+            pa.array(v_rows, type=pa.list_(pa.int64())),
+            pa.array([cents] + [None] * (n - 1), type=pa.list_(c_type)),
+        ],
+        names=["vec_id", "v", "_cents"],
+    )
+
+
+def test_ragged_vectors_raise_instead_of_misaligning():
+    """Rows of width 2 and 4 hold 6 elements, which reshape evenly to
+    (2, 3): the kernels must refuse the batch, not fold shifted rows."""
+    import pytest
+
+    cents = [{"cluster": 0, "s": [0, 0, 0], "n": 1}]
+    with pytest.raises(ValueError, match="ragged"):
+        list(lloyd_argmin_batches(iter([_lloyd_batch([[1, 2], [3, 4, 5, 6]], cents)])))
+    query = [{"q_id": 0, "qv": [1.0, 0.0, 0.0], "q_lbl": 0}]
+    with pytest.raises(ValueError, match="ragged"):
+        list(
+            pairwise_cosine_batches(
+                iter([_cosine_batch([[1.0, 2.0], [3.0, 4.0, 5.0, 6.0]], query)])
+            )
+        )
+    # equal widths still decode: the check rejects only ragged rows
+    out = list(lloyd_argmin_batches(iter([_lloyd_batch([[1, 2, 3], [4, 5, 6]], cents)])))
+    assert out[0].column(2).to_pylist() == [0, 0]
+
+
+def test_empty_rider_raises():
+    """An empty bounded side (no centroids / no queries) has no right
+    answer, so both kernels raise a clear error instead of failing
+    inside numpy or pyarrow."""
+    import pytest
+
+    with pytest.raises(ValueError, match="empty rider"):
+        list(lloyd_argmin_batches(iter([_lloyd_batch([[1, 2], [3, 4]], [])])))
+    with pytest.raises(ValueError, match="empty rider"):
+        list(pairwise_cosine_batches(iter([_cosine_batch([[1.0, 2.0], [3.0, 4.0]], [])])))

@@ -1,5 +1,5 @@
-"""From-scratch baseline JPEG codec (functions/jpeg.py) + the two
-oracle-hashed queries that feed it (plans/pipeline127.py).
+"""From-scratch JPEG codec (functions/jpeg.py) + the 13 oracle-hashed
+queries that feed it.
 
 Layers tested:
 * closed-form exactness on per-block-constant images (the oracle-replay
@@ -12,8 +12,10 @@ Layers tested:
   chroma decode for real since rounds 5-6 — see the progressive
   section below);
 * the `_decode_image_bytes` routing (JPEG no longer PIL-gated);
-* oracle parity for both registered queries at sf0.001 (sf0.01 is the
-  driver's scale, covered by tools/drive_contract.py).
+* a decoded-bytes pin: sha256 of the output of 98 streams, recorded with
+  the per-block decoder the one-walk decoder replaced;
+* oracle parity for all 13 registered JPEG queries at sf0.001 (sf0.01 is
+  covered by tools/drive_contract.py).
 """
 
 from __future__ import annotations
@@ -415,8 +417,8 @@ def test_multiscan_truncated_stream_raises_value_error():
     hacked = data[:i] + new_sos + data[i + 2 + old_len :]
     with pytest.raises(ValueError, match="components coded"):
         decode_jpeg(hacked)
-    # split_restart_segments has no multi-scan path: its direct
-    # _parse_headers call must keep the clean envelope raise (ADVICE r5).
+    # split_restart_segments has no multi-scan path: the header walk it
+    # stops at the first SOS must keep the clean envelope raise (ADVICE r5).
     from multithreaded_map_reduce_library_spark.functions.jpeg import (
         split_restart_segments,
     )
@@ -698,6 +700,11 @@ def test_jpeg_multiscan_color420_query_oracle_parity(spark):
     compare_query(spark, q.fn, q.oracle, SF_SMALL)
 
 
+def test_jpeg_multiscan_dri_color420_query_oracle_parity(spark):
+    q = all_queries()["multimodal_jpeg_multiscan_dri_color420"]
+    compare_query(spark, q.fn, q.oracle, SF_SMALL)
+
+
 def test_multiscan_dri_equals_baseline_decode():
     """Round 8 (VERDICT r7 item 4): multi-scan sequential WITH restart
     intervals. Restart machinery re-aligns the entropy stream and resets
@@ -894,17 +901,26 @@ def test_jpeg_progressive_dri_color420_query_oracle_parity(spark):
     compare_query(spark, q.fn, q.oracle, SF_SMALL)
 
 
+def _idct_block(coef: np.ndarray) -> np.ndarray:
+    """Per-block reference IDCT (the form ``_idct_planes`` batches): the
+    DC term is split out so a DC-only block is exact (qd·q00/8 has
+    denominator 8 — exact in binary floating point)."""
+    from multithreaded_map_reduce_library_spark.functions.jpeg import _DCT_T
+
+    dc = float(coef[0, 0])
+    ac = coef.astype(np.float64)
+    ac[0, 0] = 0.0
+    return (_DCT_T.T @ ac @ _DCT_T) + dc / 8.0
+
+
 def test_idct_planes_batched_matches_per_block():
     """Round-10 batched _idct_planes equivalence pin: the stacked-matmul
     dequantize+IDCT must be BITWISE equal to the per-block _idct_block
-    loop it replaced (np.matmul runs the same 2D kernel per slice; the
+    reference above (np.matmul runs the same 2D kernel per slice; the
     oracle hashes depend on this)."""
-    import numpy as np
-
     from multithreaded_map_reduce_library_spark.functions.jpeg import (
         QUANT_CHROMA,
         QUANT_LUMA,
-        _idct_block,
         _idct_planes,
         _ZZ_COLS,
         _ZZ_ROWS,
@@ -959,3 +975,134 @@ def test_quantize_plane_matches_per_block():
             for bx in range(7):
                 want = _quantize_block(plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8], q)
                 assert (got[by, bx] == want).all(), (by, bx)
+
+
+# --------------------------------------------------------------------------
+# decoded-bytes pin
+# --------------------------------------------------------------------------
+
+#: sha256 of ``(w, h, c, pixels)`` per (encoder, size, qscale), recorded
+#: with the per-block baseline decoder this codec had before the one-walk
+#: decoder replaced it. Every DRI variant, the multi-scan stream and the
+#: progressive stream decode to the same pixels as their single-scan twin,
+#: so each entry pins several streams.
+_DECODE_DIGESTS = {
+    "gray-17x33-q1": "aeccecec8ddbe021bdaac02a207cf213aa28bc5cdf5c56dbe3a0fb53dda7269e",
+    "gray-17x33-q2": "442393d961d9b1d7e3ca7963df5352ef2388971adca2099f021c9b8b358a9125",
+    "gray-1x1-q1": "90ccae7b483de899eb77ecc86cca7e3ae4ebc841bc4408e6434f3ae43ae1a000",
+    "gray-1x1-q2": "90ccae7b483de899eb77ecc86cca7e3ae4ebc841bc4408e6434f3ae43ae1a000",
+    "gray-50x23-q1": "c473d2a90561d4e2a54f8b01823d9cfee228afe3c7c24deb621add982fef226a",
+    "gray-50x23-q2": "d8b293cbfe2cb5944d55f809ca05bbbac98cf13cabc651dd6302544e7f685d07",
+    "gray-64x64-q1": "e132f11c4b8a00e0cc10d394c5303e912602b351d230ae917fab9eca07a5690f",
+    "gray-64x64-q2": "d9ccb78e11de542e762db702463f7a212292c12359136998a886cec382e0cd6a",
+    "rgb420-17x33-q1": "3baf67eeabb3096500fdcadb9836c16897eecf4b7c9de86822e21e4ce41bc464",
+    "rgb420-17x33-q2": "92584cfbc206ce5ca49f54ab236968a5d52a95f22ebeb56e7d44a31c7d56308c",
+    "rgb420-1x1-q1": "4dde0aac4e2a9c8885dfc4c17908a733aae57a6158bc611b3c3084217a76d94e",
+    "rgb420-1x1-q2": "c001a43f672f4b44388356cbc9698fc0733293cd301a0d71dfcd8436414ca656",
+    "rgb420-50x23-q1": "65a235614020531143db2fb829a315e5feb0bb6b59ae1036806bc6663a01a2f5",
+    "rgb420-50x23-q2": "8cbb7fa3c4d487728b5a5f11ebbce2d7cd5e12832f8d54574bfb04d67b3bb9af",
+    "rgb420-64x64-q1": "bab1095a58b7e277a4e67d9f33d8e5885523488d706959fb26b6ecc7cb2f7cbd",
+    "rgb420-64x64-q2": "9afde17495815e5ed2d7d3db4d4fec913d52680895736d2c87df68913154734e",
+    "rgb422-17x33-q1": "3987490c551f3da7763e028d38b5ee8f51408f6e6c438f046e022c424b06781d",
+    "rgb422-17x33-q2": "dfdec0324aac96377f176db89bbde52dd7497b1cbddacf919acac6bb1fa84db0",
+    "rgb422-1x1-q1": "4dde0aac4e2a9c8885dfc4c17908a733aae57a6158bc611b3c3084217a76d94e",
+    "rgb422-1x1-q2": "c001a43f672f4b44388356cbc9698fc0733293cd301a0d71dfcd8436414ca656",
+    "rgb422-50x23-q1": "263e73cb8da2f239c093c5b1f03081346df97babfb642cbce3574fec88bae6a3",
+    "rgb422-50x23-q2": "f5417bf4745fedda9ab37227c2e8e0a1a524abab70a5cecfe097bfff092898f3",
+    "rgb422-64x64-q1": "42938d70cd321cea0512d6f98c8b0024c067ce0d5d7c976f44e24833512f6de3",
+    "rgb422-64x64-q2": "99fd496a93615b65b020b1bdbad27e027153487a808ce9dd7498679c75bbaa75",
+    "rgb444-17x33-q1": "339bad856410592dfa848cff8505785a3aced041ebcdcf14bc3d39fe1b299ffb",
+    "rgb444-17x33-q2": "2240ee52107c6da06aa04b798eac9f1773e9e0f6b9101ea92d9624aa0dfb4dd8",
+    "rgb444-1x1-q1": "4dde0aac4e2a9c8885dfc4c17908a733aae57a6158bc611b3c3084217a76d94e",
+    "rgb444-1x1-q2": "c001a43f672f4b44388356cbc9698fc0733293cd301a0d71dfcd8436414ca656",
+    "rgb444-50x23-q1": "e2541c17d636162b50210f253efb62bd42ca726d4dcb65927b8fb3cadf9c2c84",
+    "rgb444-50x23-q2": "fae6a60196aa420c315cc1fd588a99babd7aada3b913eefebfb4d150763ee6f5",
+    "rgb444-64x64-q1": "b3e2e162297c7c84679be6853f43b4b643cfb142be47c82ed61404f97107ae76",
+    "rgb444-64x64-q2": "9fad9b9490637c38b807c5efd9fc965895e0c0dde01a17043b368a8c89938e7a",
+}
+
+
+def _digest_streams():
+    """(digest key, stream id, JPEG bytes) over gray / RGB 4:4:4 / 4:2:2 /
+    4:2:0 × DRI {0, 1, 4} × four sizes × qscale {1, 2}, plus one
+    multi-scan and one progressive stream. Each image is seeded noise with
+    a flat top-left quadrant, so DC-only and AC-rich blocks both occur."""
+    from multithreaded_map_reduce_library_spark.functions.jpeg import (
+        encode_jpeg_rgb_multiscan,
+        encode_jpeg_rgb_progressive,
+    )
+
+    rng = np.random.default_rng(20261017)
+    imgs = {}
+    for h, w in [(64, 64), (17, 33), (50, 23), (1, 1)]:
+        img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+        img[: h // 2, : w // 2] = 77
+        imgs[(h, w)] = img
+    for (h, w), img in imgs.items():
+        for qs in (1, 2):
+            key = f"{h}x{w}-q{qs}"
+            for ri in (0, 1, 4):
+                yield f"gray-{key}", f"dri{ri}", encode_jpeg_gray(
+                    img[..., 0], qscale=qs, restart_interval=ri
+                )
+                for sub in ("444", "422", "420"):
+                    yield f"rgb{sub}-{key}", f"dri{ri}", encode_jpeg_rgb(
+                        img, qscale=qs, subsampling=sub, restart_interval=ri
+                    )
+    yield "rgb420-50x23-q1", "multiscan-dri4", encode_jpeg_rgb_multiscan(
+        imgs[(50, 23)], subsampling="420", restart_interval=4
+    )
+    yield "rgb420-17x33-q1", "progressive-dri1", encode_jpeg_rgb_progressive(
+        imgs[(17, 33)], subsampling="420", restart_interval=1
+    )
+
+
+def test_decoded_bytes_match_recorded_digests():
+    """The decoder's output bytes are pinned across 98 streams: deleting
+    or rerouting a decode path must not move a single pixel."""
+    import hashlib
+
+    seen = set()
+    wrong = []
+    for key, variant, data in _digest_streams():
+        w, h, c, arr = decode_jpeg(data)
+        got = hashlib.sha256(f"{w},{h},{c};".encode() + arr.tobytes()).hexdigest()
+        if got != _DECODE_DIGESTS[key]:
+            wrong.append((key, variant))
+        seen.add((key, variant))
+    assert len(seen) == 98
+    assert not wrong, wrong
+
+
+def test_every_truncation_raises_value_error():
+    """A stream cut at ANY byte raises ValueError: never an IndexError or
+    struct error from a half-read marker segment, and never pixels — a
+    progressive stream cut between scans would otherwise decode to
+    partially refined coefficients."""
+    from multithreaded_map_reduce_library_spark.functions.jpeg import (
+        encode_jpeg_rgb_multiscan,
+        encode_jpeg_rgb_progressive,
+    )
+
+    img = np.random.default_rng(4).integers(0, 256, (9, 12, 3), dtype=np.uint8)
+    for data in (
+        encode_jpeg_gray(img[..., 0], restart_interval=1),
+        encode_jpeg_rgb(img, subsampling="420"),
+        encode_jpeg_rgb_multiscan(img, restart_interval=1),
+        encode_jpeg_rgb_progressive(img, subsampling="420"),
+    ):
+        decode_jpeg(data)
+        for n in range(len(data)):
+            with pytest.raises(ValueError):
+                decode_jpeg(data[:n])
+
+
+def test_second_frame_header_raises():
+    """One stream carries one frame: a second SOF after the scan raises
+    rather than restarting the coefficient grids or being ignored."""
+    data = encode_jpeg_gray(np.full((8, 8), 90, dtype=np.uint8))
+    i = data.index(b"\xff\xc0")
+    seglen = int.from_bytes(data[i + 2 : i + 4], "big")
+    sof = data[i : i + 2 + seglen]
+    with pytest.raises(ValueError, match="second frame header"):
+        decode_jpeg(data[:-2] + sof + data[-2:])
