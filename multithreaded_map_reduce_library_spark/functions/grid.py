@@ -112,8 +112,3 @@ def gavg(x: Column, k_item: int, k_extra: int = 2) -> Column:
     ``10^(k_item + k_extra)``. E.g. ``gavg(price, 2, 2)`` shows the mean of
     a 2-decimal column on a 1e-4 grid as BIGINT."""
     return int_ratio(gsum(x, k_item), F.count(x), k_extra)
-
-
-def duck_gavg(expr: str, k_item: int, k_extra: int = 2) -> str:
-    """DuckDB twin of :func:`gavg`."""
-    return duck_int_ratio(duck_gsum(expr, k_item), f"COUNT({expr})", k_extra)

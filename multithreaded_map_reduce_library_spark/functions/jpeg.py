@@ -1323,10 +1323,17 @@ def split_restart_segments(data: bytes) -> tuple[bytes, int, list[tuple[int, byt
     ri = hdr["restart_interval"]
     if ri <= 0:
         raise ValueError("split_restart_segments requires a restart interval")
-    # MCU grid is sized by the MAX sampling factors (§A.2.3) — ceil(h/8)
-    # *ceil(w/8) is only right for 1x1 sampling and silently miscounted
-    # per-segment MCUs for subsampled color streams (ADVICE r5).
-    n_mcus = hdr["mcus_y"] * hdr["mcus_x"]
+    # An interleaved scan's MCU grid is sized by the MAX sampling factors
+    # (§A.2.3) — ceil(h/8)*ceil(w/8) is only right for 1x1 sampling and
+    # silently miscounted per-segment MCUs for subsampled color streams
+    # (ADVICE r5). A one-component scan is non-interleaved (§A.2) whatever
+    # sampling it declares: one block per MCU on its own grid.
+    if len(hdr["comps"]) == 1:
+        _, hs, vs, _ = hdr["comps"][0]
+        nby, nbx = _comp_grid(hdr["h"], hdr["w"], hs, vs, hdr["hmax"], hdr["vmax"])
+        n_mcus = nby * nbx
+    else:
+        n_mcus = hdr["mcus_y"] * hdr["mcus_x"]
     start = hdr["entropy_start"]
     header = data[:start]
     # scan entropy data for unstuffed markers
@@ -1745,40 +1752,14 @@ def encode_jpeg_rgb_progressive(
 ) -> bytes:
     """Encode an (h, w, 3) uint8 RGB array as a progressive (SOF2) YCbCr
     JPEG (same color transform and chroma downsampling as the baseline
-    ``encode_jpeg_rgb``)."""
-    a = np.asarray(img, dtype=np.float64)
-    if a.ndim != 3 or a.shape[2] != 3:
-        raise ValueError("encode_jpeg_rgb_progressive expects an (h, w, 3) array")
-    if subsampling not in ("444", "422", "420"):
-        raise ValueError(f"unsupported subsampling {subsampling!r}")
-    r, g, b = a[..., 0], a[..., 1], a[..., 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    planes = [
-        np.clip(np.floor(p + 0.5), 0, 255).astype(np.uint8) for p in (y, cb, cr)
-    ]
-    if subsampling == "444":
-        return _encode_progressive(
-            planes, qscale, color=True, restart_interval=restart_interval
-        )
-    h, w = planes[0].shape
-    fy = 2 if subsampling == "420" else 1
-    sub = [planes[0]]
-    for p in planes[1:]:
-        q = np.pad(p, ((0, h % fy if fy == 2 else 0), (0, w % 2)), mode="edge").astype(
-            np.int64
-        )
-        hh, ww = q.shape
-        blocks = q.reshape(hh // fy, fy, ww // 2, 2).sum(axis=(1, 3))
-        n = 2 * fy
-        sub.append(((blocks + n // 2) // n).astype(np.uint8))
+    ``encode_jpeg_rgb``, both from ``_rgb_planes``)."""
+    planes, samp, size = _rgb_planes(img, subsampling)
     return _encode_progressive(
-        sub,
+        planes,
         qscale,
         color=True,
-        samp=[(2, fy), (1, 1), (1, 1)],
-        size=(h, w),
+        samp=samp,
+        size=size,
         restart_interval=restart_interval,
     )
 

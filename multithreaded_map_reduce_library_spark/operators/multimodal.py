@@ -5,8 +5,8 @@ Arrow-batched ``mapInPandas`` stages.
 Decode is real, not stubbed: PNG, baseline-DCT JPEG (including 4:2:0 /
 4:2:2 chroma subsampling and restart markers) and WAV payloads are decoded
 by the repo's dependency-free from-scratch codecs (``functions/png.py``,
-``functions/jpeg.py``, the WAV kernels in ``plans/pipeline62-63.py``), so
-every oracle-hashed result is a function of the bytes alone. PIL, when a
+``functions/jpeg.py``, ``functions/wav.py``), so every oracle-hashed
+result is a function of the bytes alone. PIL, when a
 cluster has it, is only a fallback for image variants outside the codec
 envelopes (which otherwise raise ``NotImplementedError``). Only non-image
 payloads (e.g. the synthetic "video" modality, for which the container has
@@ -19,9 +19,10 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd  # module-level so pandas-UDF type hints resolve
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -152,49 +153,6 @@ def extract_features(assets: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA.fields])
 
     return assets.select("asset_id", "modality", "payload").mapInPandas(batches, FEATURE_SCHEMA)
-
-
-def extract_features_arrow(assets: DataFrame) -> DataFrame:
-    """``mapInArrow`` twin of :func:`extract_features`: the UDF receives
-    raw ``pyarrow.RecordBatch``es — no pandas materialization at all —
-    which removes the Arrow->pandas->Arrow conversion when the kernel
-    (like this one) works directly on buffers. Same output, tested
-    equal; prefer this form when the per-batch computation is
-    NumPy/buffer-level and the pandas form when you need DataFrame
-    ergonomics."""
-    import numpy as np
-    import pyarrow as pa
-
-    def batches(it: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in it:
-            ids = batch.column("asset_id").to_pylist()
-            modalities = batch.column("modality").to_pylist()
-            payloads = batch.column("payload").to_pylist()
-            n_bytes, md5s, dims, l2s = [], [], [], []
-            for payload in payloads:
-                raw = bytes(payload) if payload is not None else b""
-                feat = np.asarray(
-                    _decode_image_bytes(raw), dtype=np.float64
-                ).ravel()
-                n_bytes.append(len(raw))
-                md5s.append(hashlib.md5(raw).hexdigest())
-                dims.append(feat.size)
-                l2s.append(f"{float(np.sqrt((feat ** 2).sum())):.6f}")
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(modalities, pa.string()),
-                    pa.array(n_bytes, pa.int64()),
-                    pa.array(md5s, pa.string()),
-                    pa.array(dims, pa.int32()),
-                    pa.array(l2s, pa.string()),
-                ],
-                names=[f.name for f in FEATURE_SCHEMA.fields],
-            )
-
-    return assets.select("asset_id", "modality", "payload").mapInArrow(
-        batches, FEATURE_SCHEMA
-    )
 
 
 def documents_as_assets(docs: DataFrame) -> DataFrame:
@@ -652,11 +610,98 @@ def ahash_assets(assets: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Audio: WAV payloads (RIFF/PCM16) — fabricate, parse, frame energies
+# Audio: WAV payloads — fabricate, parse, frame features. Every kernel
+# decodes with functions/wav.decode_wav and every fabricator encodes with
+# functions/wav.encode_wav; the kernels below do only their own math.
 # --------------------------------------------------------------------------
 
 WAV_SAMPLE_RATE = 16_000
 WAV_FRAME = 16  # samples per analysis frame
+
+
+def _quantized(vec_col: str, scale: float) -> Column:
+    """``floor(clamp(x, -1, 1) * scale + 0.5)`` per element, as an int,
+    JVM-side: exact IEEE ops, so an oracle replays the samples from the
+    embedding column directly."""
+    return F.transform(
+        F.col(vec_col),
+        lambda x: F.floor(
+            F.least(F.greatest(x.cast("double"), F.lit(-1.0)), F.lit(1.0)) * scale
+            + F.lit(0.5)
+        ).cast("int"),
+    )
+
+
+def _wav_assets(
+    emb: DataFrame, id_col: str, samples: Column, fmt: str, channels: int = 1
+) -> DataFrame:
+    """(asset_id, payload) rows: each row's ``samples`` array, interleaved
+    over ``channels``, packed by ``encode_wav`` in an Arrow pandas UDF."""
+    from pyspark.sql.functions import pandas_udf
+
+    from multithreaded_map_reduce_library_spark.functions.wav import encode_wav
+
+    @pandas_udf("binary")
+    def to_wav(col: pd.Series) -> pd.Series:
+        return pd.Series(
+            [encode_wav(np.reshape(s, (-1, channels)), WAV_SAMPLE_RATE, fmt) for s in col]
+        )
+
+    return emb.select(F.col(id_col).alias("asset_id"), samples.alias("_s")).select(
+        "asset_id", to_wav("_s").alias("payload")
+    )
+
+
+def _map_wav(
+    assets: DataFrame, envelope, schema: StructType, kernel, extra: tuple[str, ...] = ()
+) -> DataFrame:
+    """Arrow-batched mapInPandas over WAV assets: decode each payload
+    within ``envelope`` (functions/wav.py), then
+    ``kernel(sample_rate, samples, *extra_values)`` returns the schema's
+    columns after ``asset_id``. A column is either always a scalar (one
+    value for all of the asset's rows) or always an array (one element
+    per row). Columns are collected per batch and joined once; a
+    ValueError names its asset."""
+    from multithreaded_map_reduce_library_spark.functions.wav import decode_wav
+
+    names = [f.name for f in schema.fields]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            ids, counts, cols = [], [], [[] for _ in names[1:]]
+            for asset_id, payload, *rest in zip(
+                *(pdf[c] for c in ("asset_id", "payload", *extra))
+            ):
+                try:
+                    out = kernel(*decode_wav(payload or b"", envelope), *rest)
+                except ValueError as e:
+                    raise ValueError(f"asset {asset_id}: {e}") from e
+                ids.append(asset_id)
+                counts.append(next((len(v) for v in out if hasattr(v, "__len__")), 1))
+                for col, v in zip(cols, out):
+                    col.append(v)
+            if ids:
+                yield pd.DataFrame(
+                    {
+                        n: np.concatenate(c) if hasattr(c[0], "__len__") else np.repeat(c, counts)
+                        for n, c in zip(names, [ids, *cols])
+                    }
+                )
+
+    return assets.select("asset_id", "payload", *extra).mapInPandas(batches, schema)
+
+
+def _frames(s: np.ndarray, frame: int) -> np.ndarray:
+    """(n, ch) samples -> (n_frames, frame, ch) whole frames; trailing
+    samples short of a full frame drop (documented)."""
+    n_frames = len(s) // frame
+    return s[: n_frames * frame].reshape(n_frames, frame, s.shape[1])
+
+
+def _frame_energy(s: np.ndarray, frame: int) -> np.ndarray:
+    """Exact integer Σs² per (frame, channel), int64-accumulated."""
+    w = _frames(s, frame)
+    return (w * w).sum(axis=1)
 
 
 def embeddings_as_wav_assets(emb: DataFrame, id_col: str = "vec_id",
@@ -668,41 +713,7 @@ def embeddings_as_wav_assets(emb: DataFrame, id_col: str = "vec_id",
     header. The audio twin of ``embeddings_as_png_assets``: the payload
     is genuine (any WAV reader opens it) but fully determined by the
     row, so the decode side is value-hashable cross-engine."""
-    import struct
-
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    q = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(
-            F.least(F.greatest(x.cast("double"), F.lit(-1.0)), F.lit(1.0)) * 32767.0
-            + F.lit(0.5)
-        ).cast("int"),
-    )
-
-    @pandas_udf("binary")
-    def to_wav(samples: pd.Series) -> pd.Series:
-        out = []
-        for s in samples:
-            pcm = np.asarray(list(s), dtype="<i2").tobytes()
-            n = len(pcm)
-            hdr = (
-                b"RIFF"
-                + struct.pack("<I", 36 + n)
-                + b"WAVE"
-                + b"fmt "
-                + struct.pack("<IHHIIHH", 16, 1, 1, WAV_SAMPLE_RATE,
-                              WAV_SAMPLE_RATE * 2, 2, 16)
-                + b"data"
-                + struct.pack("<I", n)
-            )
-            out.append(hdr + pcm)
-        return pd.Series(out)
-
-    return emb.select(F.col(id_col).alias("asset_id"), q.alias("_s")).select(
-        "asset_id", to_wav("_s").alias("payload")
-    )
+    return _wav_assets(emb, id_col, _quantized(vec_col, 32767.0), "pcm16")
 
 
 WAV_ENERGY_SCHEMA = StructType(
@@ -726,58 +737,13 @@ def wav_frame_energy(assets: DataFrame, frame: int = WAV_FRAME) -> DataFrame:
 
     Non-WAV payloads raise (fail loud — ADVICE r2 envelope discipline);
     trailing samples short of a full frame are dropped (documented)."""
-    import struct
+    from multithreaded_map_reduce_library_spark.functions.wav import PCM16_MONO
 
-    import numpy as np
+    def energy(sr, s):
+        e = _frame_energy(s, frame)[:, 0]
+        return sr, len(s), np.arange(len(e)), e
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, srs, ns, fidx, en = [], [], [], [], []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                if len(raw) < 44 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-                    raise ValueError(f"asset {asset_id}: not a RIFF/WAVE payload")
-                # walk chunks: fmt then data (robust to extra chunks)
-                pos, sr, bits, channels, data = 12, None, None, None, None
-                while pos + 8 <= len(raw):
-                    tag = raw[pos : pos + 4]
-                    (ln,) = struct.unpack("<I", raw[pos + 4 : pos + 8])
-                    body = raw[pos + 8 : pos + 8 + ln]
-                    pos += 8 + ln + (ln & 1)
-                    if tag == b"fmt ":
-                        fmt, channels, sr, _br, _ba, bits = struct.unpack(
-                            "<HHIIHH", body[:16]
-                        )
-                        if fmt != 1:
-                            raise NotImplementedError(f"WAV fmt {fmt}: PCM only")
-                    elif tag == b"data":
-                        data = body
-                if sr is None or data is None:
-                    raise ValueError(f"asset {asset_id}: missing fmt/data chunk")
-                if bits != 16 or channels != 1:
-                    raise NotImplementedError(
-                        f"WAV bits={bits} channels={channels}: PCM16 mono only"
-                    )
-                s = np.frombuffer(data, dtype="<i2").astype(np.int64)
-                n_frames = len(s) // frame
-                for f in range(n_frames):
-                    w = s[f * frame : (f + 1) * frame]
-                    ids.append(asset_id)
-                    srs.append(sr)
-                    ns.append(len(s))
-                    fidx.append(f)
-                    en.append(int((w * w).sum()))
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "sample_rate": srs,
-                    "n_samples": ns,
-                    "frame_idx": fidx,
-                    "energy": en,
-                }
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(batches, WAV_ENERGY_SCHEMA)
+    return _map_wav(assets, PCM16_MONO, WAV_ENERGY_SCHEMA, energy)
 
 
 WAV_FEATURES_SCHEMA = StructType(
@@ -792,8 +758,9 @@ WAV_FEATURES_SCHEMA = StructType(
 
 
 def wav_frame_features(assets: DataFrame, frame: int = WAV_FRAME) -> DataFrame:
-    """REAL WAV decode + per-frame acoustic front-end features: the same
-    RIFF/PCM16 chunk walk as :func:`wav_frame_energy`, emitting per frame
+    """REAL WAV decode + per-frame acoustic front-end features: the
+    PCM16-mono envelope of :func:`wav_frame_energy` (decode_wav), emitting
+    per frame
 
     * ``energy`` — exact integer Σs²,
     * ``zcr``    — zero crossings: adjacent within-frame pairs whose signs
@@ -808,48 +775,15 @@ def wav_frame_features(assets: DataFrame, frame: int = WAV_FRAME) -> DataFrame:
 
     Non-WAV payloads raise; trailing samples short of a frame drop
     (same documented envelope as :func:`wav_frame_energy`)."""
-    import struct
+    from multithreaded_map_reduce_library_spark.functions.wav import PCM16_MONO
 
-    import numpy as np
+    def features(sr, s):
+        w = _frames(s, frame)[..., 0]
+        neg = w < 0
+        zcr = (neg[:, :-1] != neg[:, 1:]).sum(axis=1)
+        return np.arange(len(w)), (w * w).sum(axis=1), zcr, np.abs(w).max(axis=1)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, fidx, en, zc, pk = [], [], [], [], []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                if len(raw) < 44 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-                    raise ValueError(f"asset {asset_id}: not a RIFF/WAVE payload")
-                pos, bits, channels, data = 12, None, None, None
-                while pos + 8 <= len(raw):
-                    tag = raw[pos : pos + 4]
-                    (ln,) = struct.unpack("<I", raw[pos + 4 : pos + 8])
-                    body = raw[pos + 8 : pos + 8 + ln]
-                    pos += 8 + ln + (ln & 1)
-                    if tag == b"fmt ":
-                        fmt, channels, _sr, _br, _ba, bits = struct.unpack(
-                            "<HHIIHH", body[:16]
-                        )
-                        if fmt != 1:
-                            raise NotImplementedError(f"WAV fmt {fmt}: PCM only")
-                    elif tag == b"data":
-                        data = body
-                if data is None or bits != 16 or channels != 1:
-                    raise NotImplementedError("WAV PCM16 mono only")
-                s = np.frombuffer(data, dtype="<i2").astype(np.int64)
-                for f in range(len(s) // frame):
-                    w = s[f * frame : (f + 1) * frame]
-                    neg = w < 0
-                    ids.append(asset_id)
-                    fidx.append(f)
-                    en.append(int((w * w).sum()))
-                    zc.append(int((neg[:-1] != neg[1:]).sum()))
-                    pk.append(int(np.abs(w).max()))
-            yield pd.DataFrame(
-                {"asset_id": ids, "frame_idx": fidx, "energy": en,
-                 "zcr": zc, "peak": pk}
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(batches, WAV_FEATURES_SCHEMA)
+    return _map_wav(assets, PCM16_MONO, WAV_FEATURES_SCHEMA, features)
 
 
 # --------------------------------------------------------------------------
@@ -868,44 +802,9 @@ def embeddings_as_wav_stereo24_assets(emb: DataFrame, id_col: str = "vec_id",
     the embedding by an oracle), packed as interleaved little-endian
     3-byte two's-complement frames (block align 6). Any WAV reader that
     supports 24-bit PCM opens the result."""
-    import struct
-
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    q = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(
-            F.least(F.greatest(x.cast("double"), F.lit(-1.0)), F.lit(1.0))
-            * float(INT24_FULL_SCALE)
-            + F.lit(0.5)
-        ).cast("int"),
-    )
-
-    @pandas_udf("binary")
-    def to_wav24(samples: pd.Series) -> pd.Series:
-        out = []
-        for s in samples:
-            # already channel-interleaved: index order IS (sample, channel)
-            arr = np.asarray(list(s), dtype="<i4")
-            # int32 LE -> drop the high byte of each: little-endian int24
-            pcm = arr.view(np.uint8).reshape(-1, 4)[:, :3].tobytes()
-            n = len(pcm)
-            hdr = (
-                b"RIFF"
-                + struct.pack("<I", 36 + n)
-                + b"WAVE"
-                + b"fmt "
-                + struct.pack("<IHHIIHH", 16, 1, 2, WAV_SAMPLE_RATE,
-                              WAV_SAMPLE_RATE * 6, 6, 24)
-                + b"data"
-                + struct.pack("<I", n)
-            )
-            out.append(hdr + pcm)
-        return pd.Series(out)
-
-    return emb.select(F.col(id_col).alias("asset_id"), q.alias("_s")).select(
-        "asset_id", to_wav24("_s").alias("payload")
+    # already channel-interleaved: index order IS (sample, channel)
+    return _wav_assets(
+        emb, id_col, _quantized(vec_col, float(INT24_FULL_SCALE)), "pcm24", channels=2
     )
 
 
@@ -923,11 +822,11 @@ WAV_PCM_ENERGY_SCHEMA = StructType(
 
 def wav_pcm_frame_energy(assets: DataFrame, frame: int = WAV_FRAME) -> DataFrame:
     """Generalized REAL WAV decode + per-channel per-frame exact integer
-    energy Σs²: the same RIFF chunk walk as :func:`wav_frame_energy`, but
-    accepting the widened PCM envelope **bits ∈ {16, 24} × channels ∈
-    {1, 2}** (24-bit samples are 3-byte little-endian two's complement,
-    sign-extended exactly; stereo de-interleaves by block align before
-    framing). ``n_samples`` is per channel; frames are per channel.
+    energy Σs²: the widened PCM envelope of decode_wav, **bits ∈ {16, 24}
+    × channels ∈ {1, 2}** (24-bit samples are 3-byte little-endian two's
+    complement, sign-extended exactly; stereo de-interleaves by block
+    align before framing). ``n_samples`` is per channel; frames are per
+    channel.
 
     Envelope discipline (ADVICE r2): anything outside raises —
     non-RIFF/missing chunks ``ValueError``, non-PCM fmt / other
@@ -938,77 +837,14 @@ def wav_pcm_frame_energy(assets: DataFrame, frame: int = WAV_FRAME) -> DataFrame
 
     Scale: map-side Arrow decode, skinny integer rows out, zero
     shuffles; at 100 TB only frames-per-asset grows."""
-    import struct
+    from multithreaded_map_reduce_library_spark.functions.wav import PCM_16_24
 
-    import numpy as np
+    def energy(sr, s):
+        e = _frame_energy(s, frame).T  # (channel, frame)
+        ch, f = np.indices(e.shape)
+        return sr, ch.ravel(), len(s), f.ravel(), e.ravel()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, srs, chs, ns, fidx, en = [], [], [], [], [], []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                if len(raw) < 44 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-                    raise ValueError(f"asset {asset_id}: not a RIFF/WAVE payload")
-                pos, sr, bits, channels, data = 12, None, None, None, None
-                while pos + 8 <= len(raw):
-                    tag = raw[pos : pos + 4]
-                    (ln,) = struct.unpack("<I", raw[pos + 4 : pos + 8])
-                    body = raw[pos + 8 : pos + 8 + ln]
-                    pos += 8 + ln + (ln & 1)
-                    if tag == b"fmt ":
-                        fmt, channels, sr, _br, _ba, bits = struct.unpack(
-                            "<HHIIHH", body[:16]
-                        )
-                        if fmt != 1:
-                            raise NotImplementedError(f"WAV fmt {fmt}: PCM only")
-                    elif tag == b"data":
-                        data = body
-                if sr is None or data is None:
-                    raise ValueError(f"asset {asset_id}: missing fmt/data chunk")
-                if bits not in (16, 24) or channels not in (1, 2):
-                    raise NotImplementedError(
-                        f"WAV bits={bits} channels={channels}: "
-                        "PCM 16/24-bit, mono/stereo only"
-                    )
-                block = channels * bits // 8
-                if len(data) % block:
-                    raise ValueError(
-                        f"asset {asset_id}: data chunk {len(data)} bytes not a "
-                        f"multiple of block align {block} (truncated?)"
-                    )
-                if bits == 16:
-                    s = np.frombuffer(data, dtype="<i2").astype(np.int64)
-                else:
-                    b3 = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3)
-                    v = (
-                        b3[:, 0].astype(np.int64)
-                        | (b3[:, 1].astype(np.int64) << 8)
-                        | (b3[:, 2].astype(np.int64) << 16)
-                    )
-                    s = v - ((v & 0x800000) << 1)  # sign-extend int24
-                per_ch = len(s) // channels
-                for ch in range(channels):
-                    w_ch = s[ch::channels]
-                    for f in range(per_ch // frame):
-                        w = w_ch[f * frame : (f + 1) * frame]
-                        ids.append(asset_id)
-                        srs.append(sr)
-                        chs.append(ch)
-                        ns.append(per_ch)
-                        fidx.append(f)
-                        en.append(int((w * w).sum()))
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "sample_rate": srs,
-                    "channel": chs,
-                    "n_samples": ns,
-                    "frame_idx": fidx,
-                    "energy": en,
-                }
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(batches, WAV_PCM_ENERGY_SCHEMA)
+    return _map_wav(assets, PCM_16_24, WAV_PCM_ENERGY_SCHEMA, energy)
 
 
 def embeddings_as_wav_float32_assets(emb: DataFrame, id_col: str = "vec_id",
@@ -1019,34 +855,7 @@ def embeddings_as_wav_float32_assets(emb: DataFrame, id_col: str = "vec_id",
     fmt-3 header any DAW/loader recognizes. The zero-quantization-loss
     member of the WAV family: the decode side recovers the exact stored
     floats, so oracles replay samples straight from the column."""
-    import struct
-
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def to_wav_f32(samples: pd.Series) -> pd.Series:
-        out = []
-        for s in samples:
-            pcm = np.asarray(list(s), dtype="<f4").tobytes()
-            n = len(pcm)
-            hdr = (
-                b"RIFF"
-                + struct.pack("<I", 36 + n)
-                + b"WAVE"
-                + b"fmt "
-                + struct.pack("<IHHIIHH", 16, 3, 1, WAV_SAMPLE_RATE,
-                              WAV_SAMPLE_RATE * 4, 4, 32)
-                + b"data"
-                + struct.pack("<I", n)
-            )
-            out.append(hdr + pcm)
-        return pd.Series(out)
-
-    return emb.select(F.col(id_col).alias("asset_id"),
-                      F.col(vec_col).alias("_s")).select(
-        "asset_id", to_wav_f32("_s").alias("payload")
-    )
+    return _wav_assets(emb, id_col, F.col(vec_col), "float32")
 
 
 WAV_F32_ENERGY_SCHEMA = StructType(
@@ -1071,67 +880,13 @@ def wav_float32_frame_energy(assets: DataFrame, frame: int = WAV_FRAME) -> DataF
     Envelope: fmt 3 requires bits=32 and mono here; everything else
     raises (fmt-1 PCM belongs to :func:`wav_pcm_frame_energy`). A data
     chunk not divisible by 4 raises (truncated payload)."""
-    import struct
+    from multithreaded_map_reduce_library_spark.functions.wav import FLOAT32_MONO
 
-    import numpy as np
+    def energy(sr, v):
+        e = _frame_energy(np.floor(v * 1e6 + 0.5).astype(np.int64), frame)[:, 0]
+        return sr, len(v), np.arange(len(e)), e
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, srs, ns, fidx, en = [], [], [], [], []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                if len(raw) < 44 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-                    raise ValueError(f"asset {asset_id}: not a RIFF/WAVE payload")
-                pos, sr, bits, channels, fmt, data = 12, None, None, None, None, None
-                while pos + 8 <= len(raw):
-                    tag = raw[pos : pos + 4]
-                    (ln,) = struct.unpack("<I", raw[pos + 4 : pos + 8])
-                    body = raw[pos + 8 : pos + 8 + ln]
-                    pos += 8 + ln + (ln & 1)
-                    if tag == b"fmt ":
-                        fmt, channels, sr, _br, _ba, bits = struct.unpack(
-                            "<HHIIHH", body[:16]
-                        )
-                    elif tag == b"data":
-                        data = body
-                if sr is None or data is None:
-                    raise ValueError(f"asset {asset_id}: missing fmt/data chunk")
-                if fmt != 3:
-                    raise NotImplementedError(
-                        f"WAV fmt {fmt}: IEEE-float decoder takes fmt 3 only"
-                    )
-                if bits != 32 or channels != 1:
-                    raise NotImplementedError(
-                        f"WAV float bits={bits} channels={channels}: "
-                        "float32 mono only"
-                    )
-                if len(data) % 4:
-                    raise ValueError(
-                        f"asset {asset_id}: data chunk {len(data)} bytes not a "
-                        "multiple of 4 (truncated?)"
-                    )
-                v = np.frombuffer(data, dtype="<f4").astype(np.float64)
-                q = np.floor(v * 1e6 + 0.5).astype(np.int64)
-                for f in range(len(q) // frame):
-                    w = q[f * frame : (f + 1) * frame]
-                    ids.append(asset_id)
-                    srs.append(sr)
-                    ns.append(len(q))
-                    fidx.append(f)
-                    en.append(int((w * w).sum()))
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "sample_rate": srs,
-                    "n_samples": ns,
-                    "frame_idx": fidx,
-                    "energy_q": en,
-                }
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        batches, WAV_F32_ENERGY_SCHEMA
-    )
+    return _map_wav(assets, FLOAT32_MONO, WAV_F32_ENERGY_SCHEMA, energy)
 
 
 # --------------------------------------------------------------------------
@@ -1151,16 +906,9 @@ def embeddings_as_video_assets(emb: DataFrame, id_col: str = "vec_id",
     pixel an oracle can replay from the embedding column."""
     import struct
 
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    q = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(
-            F.least(F.greatest(x.cast("double"), F.lit(-1.0)), F.lit(1.0)) * 32767.0
-            + F.lit(0.5)
-        ).cast("int"),
-    )
+    q = _quantized(vec_col, 32767.0)
 
     @pandas_udf("binary")
     def to_video(samples: pd.Series) -> pd.Series:
@@ -1313,55 +1061,17 @@ def wav_quadrature_energy(assets: DataFrame) -> DataFrame:
     without a single float so the oracle can replay it from the
     fabricated samples bit-for-bit.
 
-    Scale shape: RIFF chunk-walk parse + numpy strided slices inside
+    Scale shape: decode_wav (PCM16 mono) + numpy strided slices inside
     Arrow batches; map-side, one skinny row per asset, no shuffle."""
-    import struct
+    from multithreaded_map_reduce_library_spark.functions.wav import PCM16_MONO
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def bin_power(sr, s):
+        s = s[:, 0]
+        re = int(s[0::4].sum() - s[2::4].sum())
+        im = int(s[3::4].sum() - s[1::4].sum())
+        return len(s), re, im, re * re + im * im, (s * s).sum()
 
-        for pdf in it:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                if len(raw) < 44 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-                    raise ValueError(f"asset {asset_id}: not a RIFF/WAVE payload")
-                pos, sr, bits, channels, data = 12, None, None, None, None
-                while pos + 8 <= len(raw):
-                    tag = raw[pos : pos + 4]
-                    (ln,) = struct.unpack("<I", raw[pos + 4 : pos + 8])
-                    body = raw[pos + 8 : pos + 8 + ln]
-                    pos += 8 + ln + (ln & 1)
-                    if tag == b"fmt ":
-                        fmt, channels, sr, _br, _ba, bits = struct.unpack(
-                            "<HHIIHH", body[:16]
-                        )
-                        if fmt != 1:
-                            raise NotImplementedError(f"WAV fmt {fmt}: PCM only")
-                    elif tag == b"data":
-                        data = body
-                if sr is None or data is None:
-                    raise ValueError(f"asset {asset_id}: missing fmt/data chunk")
-                if bits != 16 or channels != 1:
-                    raise NotImplementedError(
-                        f"WAV bits={bits} channels={channels}: PCM16 mono only"
-                    )
-                s = np.frombuffer(data, dtype="<i2").astype(np.int64)
-                re = int(s[0::4].sum() - s[2::4].sum())
-                im = int(s[3::4].sum() - s[1::4].sum())
-                rows.append(
-                    {
-                        "asset_id": asset_id,
-                        "n_samples": len(s),
-                        "re_q": re,
-                        "im_q": im,
-                        "power_q": re * re + im * im,
-                        "energy": int((s * s).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in QUADRATURE_SCHEMA.fields])
-
-    return assets.select("asset_id", "payload").mapInPandas(batches, QUADRATURE_SCHEMA)
+    return _map_wav(assets, PCM16_MONO, QUADRATURE_SCHEMA, bin_power)
 
 
 # --------------------------------------------------------------------------
@@ -1462,56 +1172,18 @@ def wav_autocorrelation(assets: DataFrame) -> DataFrame:
     (max ACF, smallest-lag tie-break). All-integer, replayable by a SQL
     oracle from the fabricated samples.
 
-    Scale shape: RIFF chunk-walk + numpy shifted dot products inside
-    Arrow batches; map-side, |lags| skinny rows per asset, no shuffle."""
-    import struct
+    Scale shape: decode_wav (PCM16 mono) + numpy shifted dot products
+    inside Arrow batches; map-side, |lags| skinny rows per asset, no
+    shuffle."""
+    from multithreaded_map_reduce_library_spark.functions.wav import PCM16_MONO
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def acf(sr, s):
+        s = s[:, 0]
+        v = np.array([(s[lag:] * s[:-lag]).sum() for lag in AUTOCORR_LAGS])
+        # lags ascend, so argmax's first maximum is the smallest-lag tie-break
+        return AUTOCORR_LAGS, v, (s * s).sum(), np.arange(len(v)) == v.argmax()
 
-        for pdf in it:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                if len(raw) < 44 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-                    raise ValueError(f"asset {asset_id}: not a RIFF/WAVE payload")
-                pos, sr, bits, channels, data = 12, None, None, None, None
-                while pos + 8 <= len(raw):
-                    tag = raw[pos : pos + 4]
-                    (ln,) = struct.unpack("<I", raw[pos + 4 : pos + 8])
-                    body = raw[pos + 8 : pos + 8 + ln]
-                    pos += 8 + ln + (ln & 1)
-                    if tag == b"fmt ":
-                        fmt, channels, sr, _br, _ba, bits = struct.unpack(
-                            "<HHIIHH", body[:16]
-                        )
-                        if fmt != 1:
-                            raise NotImplementedError(f"WAV fmt {fmt}: PCM only")
-                    elif tag == b"data":
-                        data = body
-                if sr is None or data is None:
-                    raise ValueError(f"asset {asset_id}: missing fmt/data chunk")
-                if bits != 16 or channels != 1:
-                    raise NotImplementedError(
-                        f"WAV bits={bits} channels={channels}: PCM16 mono only"
-                    )
-                s = np.frombuffer(data, dtype="<i2").astype(np.int64)
-                energy = int((s * s).sum())
-                acfs = [(lag, int((s[lag:] * s[:-lag]).sum())) for lag in AUTOCORR_LAGS]
-                best = max(acfs, key=lambda t: (t[1], -t[0]))
-                for lag, v in acfs:
-                    rows.append(
-                        {
-                            "asset_id": asset_id,
-                            "lag": lag,
-                            "acf_raw": v,
-                            "energy": energy,
-                            "is_dominant": (lag, v) == best,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in AUTOCORR_SCHEMA.fields])
-
-    return assets.select("asset_id", "payload").mapInPandas(batches, AUTOCORR_SCHEMA)
+    return _map_wav(assets, PCM16_MONO, AUTOCORR_SCHEMA, acf)
 
 
 # --------------------------------------------------------------------------
@@ -1581,10 +1253,6 @@ def image_downscale2(assets: DataFrame) -> DataFrame:
 # mu-law (G.711) WAV: fabrication (encode) + real decode kernel
 # --------------------------------------------------------------------------
 
-_ULAW_BIAS = 132  # 0x84
-_ULAW_CLIP = 32635
-
-
 def embeddings_as_ulaw_wav_assets(
     emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
@@ -1596,49 +1264,7 @@ def embeddings_as_ulaw_wav_assets(
     mant = (m >> (e+3)) & 15. Container: fmt code 7, 8 bits, mono.
     Integer-only companding, so an oracle can replay the decoded
     samples from the embedding column directly."""
-    import struct
-
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    q = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(
-            F.least(F.greatest(x.cast("double"), F.lit(-1.0)), F.lit(1.0)) * 32767.0
-            + F.lit(0.5)
-        ).cast("int"),
-    )
-
-    @pandas_udf("binary")
-    def to_ulaw_wav(samples: pd.Series) -> pd.Series:
-        out = []
-        for s in samples:
-            s16 = np.asarray(list(s), dtype=np.int64)
-            sign = np.where(s16 < 0, 0x80, 0)
-            m = np.minimum(np.abs(s16), _ULAW_CLIP) + _ULAW_BIAS
-            # exact msb via frexp (ints << 2^53 are exact doubles)
-            e = np.frexp(m.astype(np.float64))[1] - 1 - 7
-            mant = (m >> (e + 3)) & 0x0F
-            enc = (~(sign | (e << 4) | mant)) & 0xFF
-            pcm = enc.astype(np.uint8).tobytes()
-            n = len(pcm)
-            hdr = (
-                b"RIFF"
-                + struct.pack("<I", 36 + n)
-                + b"WAVE"
-                + b"fmt "
-                + struct.pack(
-                    "<IHHIIHH", 16, 7, 1, WAV_SAMPLE_RATE, WAV_SAMPLE_RATE, 1, 8
-                )
-                + b"data"
-                + struct.pack("<I", n)
-            )
-            out.append(hdr + pcm)
-        return pd.Series(out)
-
-    return emb.select(F.col(id_col).alias("asset_id"), q.alias("_s")).select(
-        "asset_id", to_ulaw_wav("_s").alias("payload")
-    )
+    return _wav_assets(emb, id_col, _quantized(vec_col, 32767.0), "ulaw")
 
 
 ULAW_ROUNDTRIP_SCHEMA = StructType(
@@ -1664,63 +1290,15 @@ def wav_ulaw_roundtrip_energy(
 
     ``originals``: (asset_id, s16 array<int>) — the pre-companding
     samples, carried alongside so the error is exact, not estimated."""
-    import struct
+    from multithreaded_map_reduce_library_spark.functions.wav import ULAW_MONO
 
-    import numpy as np
+    def roundtrip(sr, dec, orig):
+        o = np.asarray(orig, dtype=np.int64).reshape(-1, 1)
+        if len(o) != len(dec):
+            raise ValueError("sample count mismatch")
+        err = o - dec
+        e = _frame_energy(dec, frame)[:, 0]
+        return np.arange(len(e)), e, _frame_energy(err, frame)[:, 0]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, fidx, en, err = [], [], [], []
-            for asset_id, payload, orig in zip(
-                pdf["asset_id"], pdf["payload"], pdf["s16"]
-            ):
-                raw = bytes(payload) if payload is not None else b""
-                if len(raw) < 44 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-                    raise ValueError(f"asset {asset_id}: not a RIFF/WAVE payload")
-                pos, fmt, bits, channels, data = 12, None, None, None, None
-                while pos + 8 <= len(raw):
-                    tag = raw[pos : pos + 4]
-                    (ln,) = struct.unpack("<I", raw[pos + 4 : pos + 8])
-                    body = raw[pos + 8 : pos + 8 + ln]
-                    pos += 8 + ln + (ln & 1)
-                    if tag == b"fmt ":
-                        fmt, channels, _sr, _br, _ba, bits = struct.unpack(
-                            "<HHIIHH", body[:16]
-                        )
-                    elif tag == b"data":
-                        data = body
-                if fmt != 7 or bits != 8 or channels != 1:
-                    raise NotImplementedError(
-                        f"ulaw kernel: fmt={fmt} bits={bits} ch={channels};"
-                        " G.711 mu-law 8-bit mono only"
-                    )
-                if data is None:
-                    raise ValueError(f"asset {asset_id}: missing data chunk")
-                b = (~np.frombuffer(data, dtype=np.uint8).astype(np.int64)) & 0xFF
-                sign = (b >> 7) & 1
-                e = (b >> 4) & 7
-                mant = b & 0x0F
-                mag = (((mant << 3) + _ULAW_BIAS) << e) - _ULAW_BIAS
-                dec = np.where(sign == 1, -mag, mag)
-                s16 = np.asarray(list(orig), dtype=np.int64)
-                if len(s16) != len(dec):
-                    raise ValueError(f"asset {asset_id}: sample count mismatch")
-                n_frames = len(dec) // frame
-                for f in range(n_frames):
-                    d = dec[f * frame : (f + 1) * frame]
-                    o = s16[f * frame : (f + 1) * frame]
-                    ids.append(asset_id)
-                    fidx.append(f)
-                    en.append(int((d * d).sum()))
-                    err.append(int(((o - d) * (o - d)).sum()))
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "frame_idx": fidx,
-                    "energy": en,
-                    "err_energy": err,
-                }
-            )
-
-    joined = assets.join(originals, "asset_id").select("asset_id", "payload", "s16")
-    return joined.mapInPandas(batches, ULAW_ROUNDTRIP_SCHEMA)
+    joined = assets.join(originals, "asset_id")
+    return _map_wav(joined, ULAW_MONO, ULAW_ROUNDTRIP_SCHEMA, roundtrip, extra=("s16",))

@@ -160,9 +160,10 @@ def kmeans_lloyd_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment join each iteration — the corpus never shuffles for
     assignment; the only wide movement is the skinny per-cluster
     component-sum aggregate (map-side partial sums over 64 columns).
-    This is exactly how MLlib's k-means iterates at cluster scale;
-    expressing it in the engine keeps the whole loop in Tungsten codegen
-    with no Python. Driver never collects anything.
+    This is exactly how MLlib's k-means iterates at cluster scale. The
+    assignment step is a ``mapInArrow`` numpy argmin
+    (:func:`lloyd_assignments`); the centroid sums stay in Tungsten
+    codegen. Driver never collects anything.
 
     Exactness: see module docstring — integer-grid vectors, exact
     integer centroid sums, fold-ordered double distances, deterministic

@@ -1106,3 +1106,83 @@ def test_second_frame_header_raises():
     sof = data[i : i + 2 + seglen]
     with pytest.raises(ValueError, match="second frame header"):
         decode_jpeg(data[:-2] + sof + data[-2:])
+
+
+# --------------------------------------------------------------------------
+# progressive-encoder bytes pin
+# --------------------------------------------------------------------------
+
+#: sha256 of ``encode_jpeg_rgb_progressive`` output per (subsampling,
+#: size), each over qscale {1, 2} × DRI {0, 1, 4} in that order; recorded
+#: before the encoder took its colour transform and chroma downsample
+#: from ``_rgb_planes``.
+_PROGRESSIVE_ENCODE_DIGESTS = {
+    "rgb444-64x64": "c6578635d6a1e53965e5fd8006e787e971070052ed7a4b972e27981efbad3dbf",
+    "rgb422-64x64": "94331a072053bcf25ee10eaa8c14eafbb1730792a3d4264ba653b137f3f71689",
+    "rgb420-64x64": "db94ef5e86686f2fa085ec674896ae70ff59e86b1c766bb86f16b1e091a40d04",
+    "rgb444-17x33": "2c57ae4c6eb96998532c5a321146946824f7d57d2dafb224ab68145f88340818",
+    "rgb422-17x33": "e3c105e525efd721329e6c86bb8ef99aa8082c6e3f737b63d625dcd1aa7c3477",
+    "rgb420-17x33": "97e8447871861d80155c607b3a1f99cdcfc56ce75e1faa86a21f4374e2d3f008",
+    "rgb444-1x1": "47092bdf0cf123eb1030144d61fbcfff9ed99c797c77c22cdd3025194e8d14a6",
+    "rgb422-1x1": "045fc58d41f20669f85610a3aaf86c9bc119cf3f5de2f521c85c6c8c6b92e677",
+    "rgb420-1x1": "53b91c43dca3750b0c869dcd8418a980b6953850ea3e6e879f7e3a58370d2aea",
+}
+
+
+def test_progressive_encoder_bytes_match_recorded_digests():
+    """The progressive RGB encoder's output bytes are pinned over
+    4:4:4 / 4:2:2 / 4:2:0 × three sizes × qscale {1, 2} × DRI {0, 1, 4}
+    (54 streams): sharing or rewriting an encoder stage must not move a
+    single byte."""
+    import hashlib
+
+    from multithreaded_map_reduce_library_spark.functions.jpeg import (
+        encode_jpeg_rgb_progressive,
+    )
+
+    rng = np.random.default_rng(20261018)
+    got = {}
+    for h, w in [(64, 64), (17, 33), (1, 1)]:
+        img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+        img[: h // 2, : w // 2] = 77
+        for sub in ("444", "422", "420"):
+            d = hashlib.sha256()
+            for qs in (1, 2):
+                for ri in (0, 1, 4):
+                    d.update(
+                        encode_jpeg_rgb_progressive(
+                            img, qscale=qs, subsampling=sub, restart_interval=ri
+                        )
+                    )
+            got[f"rgb{sub}-{h}x{w}"] = d.hexdigest()
+    assert got == _PROGRESSIVE_ENCODE_DIGESTS
+
+
+def test_split_restart_segments_one_component_sampled_2x2():
+    """A one-component frame's scan is non-interleaved (§A.2) whatever
+    sampling factors it declares: one block per MCU on the component's
+    own grid. A 24×40 gray stream with DRI 2 whose SOF declares 2×2
+    sampling holds 15 blocks in 8 restart segments, and the segment
+    pixel sums add up to the whole-file decode."""
+    from multithreaded_map_reduce_library_spark.functions.jpeg import (
+        decode_segment_pixel_sum,
+        split_restart_segments,
+    )
+
+    img = np.random.default_rng(9).integers(0, 256, (24, 40), dtype=np.uint8)
+    data = bytearray(encode_jpeg_gray(img, restart_interval=2))
+    i = data.index(b"\xff\xc0")
+    assert data[i + 11] == 0x11  # component 1's sampling byte
+    data[i + 11] = 0x22
+    data = bytes(data)
+    header, n_mcus, segs = split_restart_segments(data)
+    assert n_mcus == 15
+    assert [s[0] for s in segs] == [0, 2, 4, 6, 8, 10, 12, 14]
+    ends = [s[0] for s in segs[1:]] + [n_mcus]
+    parts = [
+        decode_segment_pixel_sum(header, seg, end - start)
+        for (start, seg), end in zip(segs, ends)
+    ]
+    assert sum(nb for nb, _ in parts) == 15
+    _w, _h, _c, arr = decode_jpeg(data)
+    assert sum(s for _, s in parts) == int(arr.astype(np.int64).sum())

@@ -4,8 +4,8 @@ sf0.001 tables for a quick loop). The CORRECTNESS gate
 (CORRECTNESS_rNN.json) checks only a fixed sample of 50 of these queries
 at sf0.01, none of them a JPEG query; outside that sample, this replay
 and the default-run parity tests some modules carry for their own
-queries (all 13 JPEG queries, at sf0.001, in tests/test_jpeg.py) are
-the only oracle checks."""
+queries (all 13 JPEG queries and all 10 WAV queries, at sf0.001, in
+tests/test_jpeg.py and tests/test_wav.py) are the only oracle checks."""
 
 from __future__ import annotations
 

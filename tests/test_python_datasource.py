@@ -1,16 +1,9 @@
-"""Python DataSource (`mr_result` format) + mapInArrow surface tests."""
+"""Python DataSource (`mr_result` format) tests."""
 
 from __future__ import annotations
 
 from multithreaded_map_reduce_library_spark.functions.hashing import djb2
-from multithreaded_map_reduce_library_spark.operators.multimodal import (
-    documents_as_assets,
-    extract_features,
-    extract_features_arrow,
-)
-from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 from multithreaded_map_reduce_library_spark.sources.python_ds import register
-from tests.conftest import SF_SMALL
 
 
 def _write_reference_shards(d, counts: dict[str, int], parts: int = 4):
@@ -44,14 +37,6 @@ def test_mr_result_single_file_and_sep(spark, tmp_path):
     df = spark.read.format("mr_result").load(str(f))
     rows = {(r["key"], r["value"], r["shard"]) for r in df.collect()}
     assert rows == {("x", "1", 7), ("y", "2", 7)}
-
-
-def test_map_in_arrow_equals_map_in_pandas(spark):
-    assets = documents_as_assets(load_table(spark, SF_SMALL, "documents")).limit(50)
-    a = {tuple(r) for r in extract_features_arrow(assets).collect()}
-    p = {tuple(r) for r in extract_features(assets).collect()}
-    assert a == p
-    assert len(a) == 50
 
 
 def test_mr_result_streaming_incremental(spark, tmp_path):
