@@ -96,12 +96,11 @@ def _repin():
 
 
 def _warmup(spark, bench_queries, sf_dir: str) -> None:
-    """Boot Python UDF workers (one per core) and compile each query's
-    whole-stage-codegen classes by running every bench plan once at the
-    smallest scale factor. Codegen compilation is plan-structure keyed, so
-    the sf0.001 run populates the compile cache for the timed sf run —
-    timings then measure execution, not janino compilation (the 64-wide
-    cosine folds alone cost seconds to compile)."""
+    """Boot Python UDF workers (one per core), then run every bench plan
+    once at sf0.001 (at ``sf_dir`` with ``limit(1)`` if that fails). The
+    timed pass can still recompile generated classes: Spark's codegen
+    cache keeps 100 entries by default, fewer than the bench plans
+    generate."""
     from pyspark.sql.functions import col, pandas_udf
 
     @pandas_udf("long")

@@ -7,7 +7,8 @@ per-row nearest-centroid / all-pairs-cosine work:
   element per row and grow linearly with the corpus (kmeans map-only
   argmin: 1.13-1.20x SLOWER at sf1);
 - statically unrolled expression trees shift the cost into analysis/
-  codegen (~3x on the warmed IVF query at sf0.1 — functions/vectors.py).
+  codegen (~3x on the warmed IVF query at sf0.1); that spelling is gone,
+  and functions/vectors.py keeps only the fold.
 
 This module is the third option the round-9 verdict asked for: hand whole
 Arrow batches to numpy (C speed) via ``mapInArrow`` — no crossJoin row

@@ -1,28 +1,13 @@
 """Vector math over ``array<float/double>`` columns — pure JVM expressions.
 
-Two spellings of the same left-associated float chain:
-
-- **Generic dimension** (``dim=None``, the DEFAULT used by every
-  shipped operator): ``zip_with`` + ``aggregate`` fold. The HOF lambda
-  is interpreted per element, but the expression tree is tiny.
-- **Fixed dimension** (``dim=N``): an expanded
-  ``a[0]*b[0] + a[1]*b[1] + ...`` tree with no higher-order functions.
-  MEASURED SLOWER here (~3x on the warmed IVF query at sf0.1,
-  local[32]): the ~4*N-node tree per dot product inflates analysis/
-  optimization/codegen cost, which dominates at benchmark scale and
-  per-query planning. Kept because the trade can flip for long-lived
-  reused plans on very large inputs, where per-row interpretation cost
-  outweighs one-time planning — measure before switching.
-
-Both produce bit-identical doubles: the fold computes
-``0.0 + t0 + t1 + ...`` and IEEE-754 guarantees ``0.0 + t0 == t0`` (for
-nonzero t0), so the expanded chain ``t0 + t1 + ...`` — which is also how
-the DuckDB oracles spell it (plans/similarity_q.py::_dot) — evaluates to
-the same bits. Either way there is no Python crossing and no UDF
-serialization; at 100 TB this is the difference between a scan-bound job
-and a pickle-bound one. (A vectorized pandas-UDF variant exists in
-operators/similarity.py for very high dimensions where per-element
-codegen loses to BLAS.)
+:func:`dot` is the package's one JVM dot product: a ``zip_with`` +
+``aggregate`` fold computing ``0.0 + t0 + t1 + ...`` left to right in
+double precision, with ``t_i = double(a_i) * double(b_i)``. Every norm,
+cosine and similarity operator calls it. The DuckDB oracles spell the
+chain ``t0 + t1 + ...`` (plans/similarity_q.py::_dot), and IEEE-754 gives
+the same bits, because ``0.0 + t0 == t0`` — except for signed zero: when
+every product is ``-0.0`` the fold returns ``+0.0``, the bare chain
+``-0.0``. ``tests/test_similarity.py`` pins the raw doubles.
 """
 
 from __future__ import annotations
@@ -35,21 +20,15 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
+def dot(a: Column | str, b: Column | str) -> Column:
     """Sum of element-wise products, computed in double precision."""
-    ca, cb = _c(a), _c(b)
-    if dim is None:
-        prods = F.zip_with(ca, cb, lambda x, y: x.cast("double") * y.cast("double"))
-        return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
-    out = ca[0].cast("double") * cb[0].cast("double")
-    for i in range(1, dim):
-        out = out + ca[i].cast("double") * cb[i].cast("double")
-    return out
+    prods = F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double"))
+    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
 
 
-def l2_norm(a: Column | str, dim: int | None = None) -> Column:
-    return F.sqrt(dot(a, a, dim))
+def l2_norm(a: Column | str) -> Column:
+    return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
-    return dot(a, b, dim) / (l2_norm(a, dim) * l2_norm(b, dim))
+def cosine(a: Column | str, b: Column | str) -> Column:
+    return dot(a, b) / (l2_norm(a) * l2_norm(b))

@@ -953,9 +953,9 @@ def video_frame_deltas(assets: DataFrame) -> DataFrame:
                 if len(raw) < 12 or raw[:4] != b"RAWV":
                     raise ValueError(f"asset {asset_id}: not a RAWV payload")
                 w, h, n = struct.unpack("<HHI", raw[4:12])
-                px = np.frombuffer(raw[12:], dtype="<i2").astype(np.int64)
-                if len(px) != w * h * n:
+                if len(raw) - 12 != 2 * w * h * n:
                     raise ValueError(f"asset {asset_id}: truncated RAWV body")
+                px = np.frombuffer(raw[12:], dtype="<i2").astype(np.int64)
                 frames = px.reshape(n, w * h)
                 for f in range(1, n):
                     ids.append(asset_id)

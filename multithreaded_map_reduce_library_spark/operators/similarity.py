@@ -3,7 +3,7 @@
 Two paths per the driver contract:
 
 - **Brute-force top-k** (:func:`knn_bruteforce`): broadcast the query set,
-  JVM-side cosine (zip_with/aggregate — no Python), per-query ROW_NUMBER
+  JVM-side cosine (functions/vectors.py — no Python), per-query ROW_NUMBER
   top-k. Exact; scales as |Q| x |corpus| with the corpus never shuffled
   (query side broadcast), so it's the right baseline whenever |Q| is small.
 - **LSH-bucketed ANN** (:func:`random_hyperplane_bucket`,
@@ -14,33 +14,37 @@ Two paths per the driver contract:
   you'd add multi-probe / repetitions for recall; the plan shape is the
   scale path.
 
-A vectorized pandas-UDF cosine (:func:`cosine_pandas_udf`) is provided for
-high dimensions where NumPy BLAS beats per-element codegen.
+Every dot product, norm and cosine here is :func:`functions.vectors.dot`.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-import pandas as pd  # module-level so pandas-UDF type hints resolve
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from multithreaded_map_reduce_library_spark.functions.vectors import cosine, dot, l2_norm
+from multithreaded_map_reduce_library_spark.functions.vectors import dot, l2_norm
 
 
-def _cos_pre(va, vb, na, nb, dim: int | None = None) -> Column:
+def _cos_pre(va, vb, na, nb) -> Column:
     """Cosine from a fresh dot product and per-side PRE-COMPUTED norms.
 
     Norms must be materialized in a projection *below* the join that forms
     the pairs: recomputing both norms per pair triples the per-pair work
     (measured ~2.5x on the IVF assignment at sf0.1). Values are
     bit-identical to cosine() — the same chains over the same arrays,
-    just evaluated once per row. Pass ``dim`` so the dot product takes
-    the expanded codegen-able form (see functions/vectors.py).
+    just evaluated once per row.
     """
-    return dot(va, vb, dim) / (F.col(na) * F.col(nb))
+    return dot(va, vb) / (F.col(na) * F.col(nb))
+
+
+def _top_k(sims: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k by (sim desc, n_id asc), ranked from 1."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
+    return sims.withColumn("rank", F.row_number().over(w).cast("bigint")).filter(
+        F.col("rank") <= k
+    )
 
 
 def hyperplane_signs(plane: int, dim: int) -> list[int]:
@@ -54,17 +58,42 @@ def hyperplane_signs(plane: int, dim: int) -> list[int]:
 
 def random_hyperplane_bucket(vec: Column | str, dim: int, num_planes: int = 8) -> Column:
     """Bucket id: concatenated signs of <vec, plane_p> for p in 0..P-1."""
-    v = F.col(vec) if isinstance(vec, str) else vec
     bits = []
     for p in range(num_planes):
         signs = F.array(*[F.lit(float(s)) for s in hyperplane_signs(p, dim)])
-        dot = F.aggregate(
-            F.zip_with(v, signs, lambda x, s: x.cast("double") * s),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
+        bits.append(F.when(dot(vec, signs) >= 0, F.lit("1")).otherwise(F.lit("0")))
     return F.concat(*bits)
+
+
+def _lsh_bucketed(
+    emb: DataFrame, dim: int, num_planes: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, vec, norm, bucket): the projection every LSH operator joins on."""
+    return emb.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("vec"),
+        l2_norm(vec_col).alias("norm"),
+        random_hyperplane_bucket(vec_col, dim, num_planes).alias("bucket"),
+    )
+
+
+def _same_bucket_pairs(bucketed: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, sim) for same-bucket pairs id_a < id_b with sim >=
+    ``threshold``, over an (id, vec, norm, bucket) relation."""
+    a = bucketed.select(
+        F.col("id").alias("id_a"), F.col("vec").alias("va"),
+        F.col("norm").alias("na"), "bucket",
+    )
+    b = bucketed.select(
+        F.col("id").alias("id_b"), F.col("vec").alias("vb"),
+        F.col("norm").alias("nb"), "bucket",
+    )
+    return (
+        a.join(b, ["bucket"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", _cos_pre("va", "vb", "na", "nb").alias("sim"))
+        .filter(F.col("sim") >= threshold)
+    )
 
 
 def knn_bruteforce(
@@ -73,34 +102,27 @@ def knn_bruteforce(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     ``query_ids`` defaults to the whole table (all-pairs kNN — use only at
     small scale); pass a small query set for the broadcast plan.
     """
-    from pyspark.sql import Window
-
     corpus = emb.select(
         F.col(id_col).alias("n_id"),
         F.col(vec_col).alias("n_vec"),
-        l2_norm(vec_col, dim).alias("n_norm"),
+        l2_norm(vec_col).alias("n_norm"),
     )
     queries = (query_ids or emb).select(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("q_vec"),
-        l2_norm(vec_col, dim).alias("q_norm"),
+        l2_norm(vec_col).alias("q_norm"),
     )
     pairs = corpus.crossJoin(F.broadcast(queries)).filter(F.col("q_id") != F.col("n_id"))
     sims = pairs.select(
-        "q_id", "n_id", _cos_pre("q_vec", "n_vec", "q_norm", "n_norm", dim).alias("sim")
+        "q_id", "n_id", _cos_pre("q_vec", "n_vec", "q_norm", "n_norm").alias("sim")
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(sims, k)
 
 
 def knn_lsh(
@@ -113,14 +135,7 @@ def knn_lsh(
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the same hyperplane
     bucket, exact cosine re-rank within bucket. One shuffle on bucket id."""
-    from pyspark.sql import Window
-
-    bucketed = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        l2_norm(vec_col, dim).alias("norm"),
-        random_hyperplane_bucket(vec_col, dim, num_planes).alias("bucket"),
-    )
+    bucketed = _lsh_bucketed(emb, dim, num_planes, id_col, vec_col)
     a = bucketed.select(
         F.col("id").alias("q_id"), F.col("vec").alias("q_vec"),
         F.col("norm").alias("q_norm"), F.col("bucket"),
@@ -131,10 +146,24 @@ def knn_lsh(
     )
     pairs = a.join(b, (F.col("bucket") == F.col("bucket_b")) & (F.col("q_id") != F.col("n_id")))
     sims = pairs.select(
-        "q_id", "n_id", "bucket", _cos_pre("q_vec", "n_vec", "q_norm", "n_norm", dim).alias("sim")
+        "q_id", "n_id", "bucket", _cos_pre("q_vec", "n_vec", "q_norm", "n_norm").alias("sim")
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-    return sims.withColumn("rank", F.row_number().over(w).cast("bigint")).filter(F.col("rank") <= k)
+    return _top_k(sims, k)
+
+
+def _ivf_centroids(
+    emb: DataFrame, stride: int, max_centroids: int | None, id_col: str, vec_col: str
+) -> DataFrame:
+    """(c_id, c_vec, c_norm): every ``stride``-th vector by id, capped at
+    the first ``max_centroids`` ids."""
+    centroids = emb.filter((F.col(id_col) % stride) == 0)
+    if max_centroids is not None:
+        centroids = centroids.orderBy(id_col).limit(max_centroids)
+    return centroids.select(
+        F.col(id_col).alias("c_id"),
+        F.col(vec_col).alias("c_vec"),
+        l2_norm(vec_col).alias("c_norm"),
+    )
 
 
 def assign_ivf_cells(
@@ -142,7 +171,6 @@ def assign_ivf_cells(
     stride: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
     max_centroids: int | None = None,
 ) -> DataFrame:
     """IVF coarse quantization with deterministic centroids (every
@@ -168,20 +196,13 @@ def assign_ivf_cells(
     before the cap). Callers that prefer sqrt-N centroid growth use
     ``stride_for_corpus`` instead.
     """
-    centroids = emb.filter((F.col(id_col) % stride) == 0)
-    if max_centroids is not None:
-        centroids = centroids.orderBy(id_col).limit(max_centroids)
-    centroids = centroids.select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(vec_col, dim).alias("c_norm"),
-    )
+    centroids = _ivf_centroids(emb, stride, max_centroids, id_col, vec_col)
     scored = emb.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
-        l2_norm(vec_col, dim).alias("v_norm"),
+        l2_norm(vec_col).alias("v_norm"),
     ).crossJoin(F.broadcast(centroids))
-    negsim = -_cos_pre("vec", "c_vec", "v_norm", "c_norm", dim)
+    negsim = -_cos_pre("vec", "c_vec", "v_norm", "c_norm")
     return (
         scored.groupBy("id")
         .agg(
@@ -200,16 +221,13 @@ def knn_ivf(
     num_queries: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
     max_centroids: int | None = None,
 ) -> DataFrame:
     """IVF-style ANN: queries search only their own cell (nprobe=1), exact
     cosine re-rank inside it. The scale path of the two ANN variants — at
     100 TB the per-cell candidate lists are the only join fan-out, and the
     cell index is a plain equi-join key (bucketable/bucketed at rest)."""
-    from pyspark.sql import Window
-
-    cells = assign_ivf_cells(emb, stride, id_col, vec_col, dim, max_centroids)
+    cells = assign_ivf_cells(emb, stride, id_col, vec_col, max_centroids)
     queries = cells.filter(F.col("id") < num_queries).select(
         F.col("id").alias("q_id"),
         F.col("vec").alias("q_vec"),
@@ -223,12 +241,9 @@ def knn_ivf(
         "cell",
     ).filter(F.col("n_id") != F.col("q_id"))
     sims = cand.select(
-        "q_id", "n_id", "cell", _cos_pre("q_vec", "n_vec", "q_norm", "n_norm", dim).alias("sim")
+        "q_id", "n_id", "cell", _cos_pre("q_vec", "n_vec", "q_norm", "n_norm").alias("sim")
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-    return sims.withColumn("rank", F.row_number().over(w).cast("bigint")).filter(
-        F.col("rank") <= k
-    )
+    return _top_k(sims, k)
 
 
 def stride_for_corpus(n_rows: int, min_stride: int = 16) -> int:
@@ -252,7 +267,6 @@ def knn_ivf_multiprobe(
     num_queries: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
     max_centroids: int | None = None,
 ) -> DataFrame:
     """IVF ANN with ``nprobe`` > 1: each query searches its ``nprobe``
@@ -263,28 +277,19 @@ def knn_ivf_multiprobe(
     query set fans out, to nprobe cells each, and joins the cell index
     by plain equi-key. At 100 TB the posting lists are bucketed by cell
     at rest and a probe touches nprobe buckets."""
-    from pyspark.sql import Window
-
-    cells = assign_ivf_cells(emb, stride, id_col, vec_col, dim, max_centroids)
-    centroids = emb.filter((F.col(id_col) % stride) == 0)
-    if max_centroids is not None:
-        centroids = centroids.orderBy(id_col).limit(max_centroids)
-    centroids = centroids.select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(vec_col, dim).alias("c_norm"),
-    )
+    cells = assign_ivf_cells(emb, stride, id_col, vec_col, max_centroids)
+    centroids = _ivf_centroids(emb, stride, max_centroids, id_col, vec_col)
     q_scored = (
         emb.filter(F.col(id_col) < num_queries)
         .select(
             F.col(id_col).alias("q_id"),
             F.col(vec_col).alias("q_vec"),
-            l2_norm(vec_col, dim).alias("q_norm"),
+            l2_norm(vec_col).alias("q_norm"),
         )
         .crossJoin(F.broadcast(centroids))
     )
     wq = Window.partitionBy("q_id").orderBy(
-        F.desc(_cos_pre("q_vec", "c_vec", "q_norm", "c_norm", dim)), F.asc("c_id")
+        F.desc(_cos_pre("q_vec", "c_vec", "q_norm", "c_norm")), F.asc("c_id")
     )
     probes = (
         q_scored.withColumn("rn", F.row_number().over(wq))
@@ -298,12 +303,9 @@ def knn_ivf_multiprobe(
         "cell",
     ).filter(F.col("n_id") != F.col("q_id"))
     sims = cand.select(
-        "q_id", "n_id", _cos_pre("q_vec", "n_vec", "q_norm", "n_norm", dim).alias("sim")
+        "q_id", "n_id", _cos_pre("q_vec", "n_vec", "q_norm", "n_norm").alias("sim")
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-    return sims.withColumn("rank", F.row_number().over(w).cast("bigint")).filter(
-        F.col("rank") <= k
-    )
+    return _top_k(sims, k)
 
 
 def embedding_neardup_pairs(
@@ -319,54 +321,7 @@ def embedding_neardup_pairs(
     bucketing is part of the operator's definition (deterministic md5
     hyperplanes), so results are exactly reproducible — and the all-pairs
     join never exists at any scale."""
-    bucketed = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        l2_norm(vec_col, dim).alias("norm"),
-        random_hyperplane_bucket(vec_col, dim, num_planes).alias("bucket"),
-    )
-    a = bucketed.select(
-        F.col("id").alias("id_a"), F.col("vec").alias("va"),
-        F.col("norm").alias("na"), "bucket",
-    )
-    b = bucketed.select(
-        F.col("id").alias("id_b"), F.col("vec").alias("vb"),
-        F.col("norm").alias("nb"), "bucket",
-    )
-    return (
-        a.join(b, ["bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", _cos_pre("va", "vb", "na", "nb", dim).alias("sim"))
-        .filter(F.col("sim") >= threshold)
-    )
-
-
-def cosine_pandas_udf():
-    """Arrow-batched cosine — the high-dimension alternative to the
-    zip_with expression. Fully vectorized: the batch's vectors are stacked
-    into one (n, dim) matrix each side and the whole batch is three BLAS
-    calls (row-wise dot + two norms) — no per-row Python loop (the
-    round-1 version iterated rows inside the UDF; flagged by the judge).
-
-    Note: np.einsum sums in a different association order than the
-    expression form's left fold, so results agree to ~1e-15 relative, not
-    bit-exactly — use the expression form wherever an oracle hashes the
-    value (tests assert closeness, not equality).
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series(np.empty(0))
-        x = np.stack([np.asarray(v, dtype=np.float64) for v in a])
-        y = np.stack([np.asarray(v, dtype=np.float64) for v in b])
-        dots = np.einsum("ij,ij->i", x, y)
-        return pd.Series(dots / (np.linalg.norm(x, axis=1) * np.linalg.norm(y, axis=1)))
-
-    return cos
+    return _same_bucket_pairs(_lsh_bucketed(emb, dim, num_planes, id_col, vec_col), threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -423,7 +378,7 @@ def adaptive_hyperplane_buckets(
     b = emb.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
-        l2_norm(vec_col, dim).alias("norm"),
+        l2_norm(vec_col).alias("norm"),
         random_hyperplane_bucket(vec_col, dim, base_planes).alias("b0"),
         random_hyperplane_bucket(vec_col, dim, ext_planes).alias("b1"),
     )
@@ -456,20 +411,7 @@ def embedding_neardup_adaptive(
     bucketed = adaptive_hyperplane_buckets(
         emb, dim, base_planes, ext_planes, cap, id_col, vec_col
     )
-    a = bucketed.select(
-        F.col("id").alias("id_a"), F.col("vec").alias("va"),
-        F.col("norm").alias("na"), "bucket",
-    )
-    b = bucketed.select(
-        F.col("id").alias("id_b"), F.col("vec").alias("vb"),
-        F.col("norm").alias("nb"), "bucket",
-    )
-    return (
-        a.join(b, ["bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", _cos_pre("va", "vb", "na", "nb", dim).alias("sim"))
-        .filter(F.col("sim") >= threshold)
-    )
+    return _same_bucket_pairs(bucketed, threshold)
 
 
 def probe_buckets(bucket: Column, num_planes: int) -> Column:
@@ -501,14 +443,7 @@ def knn_lsh_multiprobe(
     through a bucket-key equi-join (queries exploded+broadcast, the corpus
     is never shuffled). A neighbor's bucket matches at most one probe key,
     so no candidate dedup pass is needed."""
-    from pyspark.sql import Window
-
-    bucketed = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        l2_norm(vec_col, dim).alias("norm"),
-        random_hyperplane_bucket(vec_col, dim, num_planes).alias("bucket"),
-    )
+    bucketed = _lsh_bucketed(emb, dim, num_planes, id_col, vec_col)
     queries = (
         bucketed.filter(F.col("id") < num_queries)
         .select(
@@ -526,9 +461,6 @@ def knn_lsh_multiprobe(
         F.col("q_id") != F.col("n_id")
     )
     sims = pairs.select(
-        "q_id", "n_id", _cos_pre("q_vec", "n_vec", "q_norm", "n_norm", dim).alias("sim")
+        "q_id", "n_id", _cos_pre("q_vec", "n_vec", "q_norm", "n_norm").alias("sim")
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-    return sims.withColumn("rank", F.row_number().over(w).cast("bigint")).filter(
-        F.col("rank") <= k
-    )
+    return _top_k(sims, k)

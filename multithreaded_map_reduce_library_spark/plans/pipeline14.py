@@ -25,6 +25,7 @@ from multithreaded_map_reduce_library_spark.plans.pipeline13 import (
     quantized_vectors,
 )
 from multithreaded_map_reduce_library_spark.functions.grid import grid
+from multithreaded_map_reduce_library_spark.functions.vectors import cosine
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -90,19 +91,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = lloyd_assignments(quantized_vectors(emb)).select(
         "vec_id", F.col("cluster").alias("cell")
     )
-    ev = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("ev"),
-    )
-    cells = assigned.join(ev, "vec_id")
-
-    def dot(a, b):
-        return F.aggregate(
-            F.sequence(F.lit(1), F.lit(_DIM)),
-            F.lit(0.0),
-            lambda acc, i: acc + F.element_at(a, i) * F.element_at(b, i),
-        )
-
+    cells = assigned.join(emb.select("vec_id", F.col("embedding").alias("ev")), "vec_id")
     qs = cells.filter(F.col("vec_id") < _Q_N).select(
         F.col("vec_id").alias("q_id"), F.col("ev").alias("qv"), "cell"
     )
@@ -114,10 +103,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             F.col("vec_id").alias("n_id"),
             "cell",
-            (
-                dot(F.col("qv"), F.col("ev"))
-                / (F.sqrt(dot(F.col("qv"), F.col("qv"))) * F.sqrt(dot(F.col("ev"), F.col("ev"))))
-            ).alias("sim"),
+            cosine("qv", "ev").alias("sim"),
         )
     )
     w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id").asc())

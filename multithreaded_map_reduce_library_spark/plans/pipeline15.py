@@ -25,6 +25,7 @@ from multithreaded_map_reduce_library_spark.plans.pipeline13 import (
     quantized_vectors,
 )
 from multithreaded_map_reduce_library_spark.functions.grid import grid
+from multithreaded_map_reduce_library_spark.functions.vectors import cosine
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -560,30 +561,12 @@ def ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Stage 2: exact cosine on the shortlist only.
-    ev = emb.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-
-    def dot(a, b):
-        return F.aggregate(
-            F.sequence(F.lit(1), F.lit(64)),
-            F.lit(0.0),
-            lambda acc, i: acc + F.element_at(a, i) * F.element_at(b, i),
-        )
-
-    qe = ev.select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
-    ne = ev.select(F.col("vec_id").alias("n_id"), F.col("v").alias("nv"))
+    qe = emb.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"))
+    ne = emb.select(F.col("vec_id").alias("n_id"), F.col("embedding").alias("nv"))
     exact = (
         shortlist.join(qe, "q_id")
         .join(ne, "n_id")
-        .select(
-            "q_id",
-            "n_id",
-            (
-                dot(F.col("qv"), F.col("nv"))
-                / (F.sqrt(dot(F.col("qv"), F.col("qv"))) * F.sqrt(dot(F.col("nv"), F.col("nv"))))
-            ).alias("sim"),
-        )
+        .select("q_id", "n_id", cosine("qv", "nv").alias("sim"))
     )
     w2 = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id").asc())
     return (

@@ -199,7 +199,7 @@ def cluster_topic_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
-    cells = assign_ivf_cells(emb, stride=_CT_STRIDE, dim=_CT_DIM).select(
+    cells = assign_ivf_cells(emb, stride=_CT_STRIDE).select(
         F.col("id").alias("vec_id"), "cell"
     )
     toks_arr = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from multithreaded_map_reduce_library_spark.functions.grid import grid
+from multithreaded_map_reduce_library_spark.functions.vectors import l2_norm
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -66,18 +67,9 @@ def embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard profile-query shape, corpus touched once.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"),
-            F.col("embedding").cast("array<double>"),
-            lambda x, y: x * y,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     nq = emb.select(
         "vec_id",
-        F.floor(F.sqrt(dot) * 10000.0 + 0.5).cast("bigint").alias("norm_q"),
+        F.floor(l2_norm("embedding") * 10000.0 + 0.5).cast("bigint").alias("norm_q"),
     )
     g = nq.agg(
         F.count("*").alias("n"),

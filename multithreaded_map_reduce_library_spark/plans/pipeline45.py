@@ -82,7 +82,7 @@ def cluster_lang_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
-    cells = assign_ivf_cells(emb, stride=_CP_STRIDE, dim=_CP_DIM).select(
+    cells = assign_ivf_cells(emb, stride=_CP_STRIDE).select(
         F.col("id").alias("vec_id"), "cell"
     )
     j = docs.join(cells, docs["doc_id"] == cells["vec_id"]).select("cell", "lang")

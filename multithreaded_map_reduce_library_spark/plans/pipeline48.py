@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from multithreaded_map_reduce_library_spark.functions.grid import grid
+from multithreaded_map_reduce_library_spark.functions.vectors import dot
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -81,7 +82,7 @@ def mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cells = assign_ivf_cells(emb, stride=_MN_STRIDE, dim=_MN_DIM)
+    cells = assign_ivf_cells(emb, stride=_MN_STRIDE)
     a = cells.select(
         F.col("id").alias("src"), F.col("vec").alias("va"),
         F.col("norm").alias("na"), "cell",
@@ -90,20 +91,11 @@ def mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("dst"), F.col("vec").alias("vb"),
         F.col("norm").alias("nb"), "cell",
     )
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("va").cast("array<double>"),
-            F.col("vb").cast("array<double>"),
-            lambda x, y: x * y,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     sims = (
         a.join(b, "cell")
         .where(F.col("src") != F.col("dst"))
         .select(
-            "src", "dst", (dot / (F.col("na") * F.col("nb"))).alias("sim")
+            "src", "dst", (dot("va", "vb") / (F.col("na") * F.col("nb"))).alias("sim")
         )
     )
     w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))

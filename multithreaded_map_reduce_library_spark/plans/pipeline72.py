@@ -82,7 +82,7 @@ def semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = emb.select(
         "vec_id",
         F.col("embedding").alias("vec"),
-        l2_norm("embedding", _DIM).alias("norm"),
+        l2_norm("embedding").alias("norm"),
         random_hyperplane_bucket("embedding", _DIM, _PLANES).alias("bucket"),
         is_eval.alias("is_eval"),
     )
@@ -95,7 +95,7 @@ def semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = (
         ev.join(tr, "bucket")
-        .select("vec_id", _cos_pre("ev_v", "tr_v", "ev_n", "tr_n", _DIM).alias("sim"))
+        .select("vec_id", _cos_pre("ev_v", "tr_v", "ev_n", "tr_n").alias("sim"))
         .groupBy("vec_id")
         .agg(F.count("*").alias("n_candidates"), F.max("sim").alias("max_sim"))
     )

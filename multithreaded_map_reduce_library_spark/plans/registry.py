@@ -13,6 +13,9 @@ names must match exactly.
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -117,160 +120,19 @@ def register(
     return deco
 
 
+def _natural_key(name: str) -> list:
+    """Digit runs compare as integers: pipeline9 < pipeline10."""
+    return [int(part) if part.isdigit() else part for part in re.split(r"(\d+)", name)]
+
+
 def _load_all() -> None:
-    """Import every module that registers queries (idempotent)."""
-    from multithreaded_map_reduce_library_spark.plans import (  # noqa: F401
-        analytics,
-        cogroup_q,
-        corpus,
-        evaluation,
-        events_q,
-        mapreduce_q,
-        modern,
-        pipeline,
-        pipeline2,
-        pipeline3,
-        pipeline4,
-        pipeline5,
-        pipeline6,
-        pipeline7,
-        pipeline8,
-        pipeline9,
-        pipeline10,
-        pipeline11,
-        pipeline12,
-        pipeline13,
-        pipeline14,
-        pipeline15,
-        pipeline16,
-        pipeline17,
-        pipeline18,
-        pipeline19,
-        pipeline20,
-        pipeline21,
-        pipeline22,
-        pipeline23,
-        pipeline24,
-        pipeline25,
-        pipeline26,
-        pipeline27,
-        pipeline28,
-        pipeline29,
-        pipeline30,
-        pipeline31,
-        pipeline32,
-        pipeline33,
-        pipeline34,
-        pipeline35,
-        pipeline36,
-        pipeline37,
-        pipeline38,
-        pipeline39,
-        pipeline40,
-        pipeline41,
-        pipeline42,
-        pipeline43,
-        pipeline44,
-        pipeline45,
-        pipeline46,
-        pipeline47,
-        pipeline48,
-        pipeline49,
-        pipeline50,
-        pipeline51,
-        pipeline52,
-        pipeline53,
-        pipeline54,
-        pipeline55,
-        pipeline56,
-        pipeline57,
-        pipeline58,
-        pipeline59,
-        pipeline60,
-        pipeline61,
-        pipeline62,
-        pipeline63,
-        pipeline64,
-        pipeline65,
-        pipeline66,
-        pipeline67,
-        pipeline68,
-        pipeline69,
-        pipeline70,
-        pipeline71,
-        pipeline72,
-        pipeline73,
-        pipeline74,
-        pipeline75,
-        pipeline76,
-        pipeline77,
-        pipeline78,
-        pipeline79,
-        pipeline80,
-        pipeline81,
-        pipeline82,
-        pipeline83,
-        pipeline84,
-        pipeline85,
-        pipeline86,
-        pipeline87,
-        pipeline88,
-        pipeline89,
-        pipeline90,
-        pipeline91,
-        pipeline92,
-        pipeline93,
-        pipeline94,
-        pipeline95,
-        pipeline96,
-        pipeline97,
-        pipeline98,
-        pipeline99,
-        pipeline100,
-        pipeline101,
-        pipeline102,
-        pipeline103,
-        pipeline104,
-        pipeline105,
-        pipeline106,
-        pipeline107,
-        pipeline108,
-        pipeline109,
-        pipeline110,
-        pipeline111,
-        pipeline112,
-        pipeline113,
-        pipeline114,
-        pipeline115,
-        pipeline116,
-        pipeline117,
-        pipeline118,
-        pipeline119,
-        pipeline120,
-        pipeline121,
-        pipeline122,
-        pipeline123,
-        pipeline124,
-        pipeline125,
-        pipeline126,
-        pipeline127,
-        pipeline128,
-        pipeline129,
-        pipeline130,
-        pipeline131,
-        pipeline132,
-        pipeline133,
-        relational,
-        relational2,
-        relational3,
-        relational4,
-        relational5,
-        relational6,
-        relational7,
-        similarity_q,
-        tpch_more,
-        tpch_rest,
-    )
+    """Import every module under plans/ that registers queries, in natural
+    order, which fixes registration (and so bench and test) order."""
+    import multithreaded_map_reduce_library_spark.plans as plans
+
+    names = [m.name for m in pkgutil.iter_modules(plans.__path__) if m.name != "registry"]
+    for name in sorted(names, key=_natural_key):
+        importlib.import_module(f"{plans.__name__}.{name}")
 
 
 def all_queries() -> dict[str, Query]:

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import hashlib
+
 import __spark_entry__ as entrymod
 
 
@@ -17,3 +19,11 @@ def test_registry_contract():
     assert set(oracles) <= set(qs)
     # the vast majority of queries must be oracle-checked
     assert len(oracles) >= len(qs) - 2
+
+
+def test_registry_order_pinned():
+    """Bench order and test parametrization follow registration order."""
+    names = list(entrymod.queries())
+    assert len(names) == 452
+    digest = hashlib.sha256("\n".join(names).encode()).hexdigest()
+    assert digest == "4a9b801f32d3572cfa1edf4959c8adf082ffdf8c461831325982dd41aa5fc907"

@@ -81,6 +81,17 @@ def test_video_kernel_rejects_garbage(spark):
         video_frame_deltas(df).collect()
 
 
+def test_video_kernel_odd_body_names_asset(spark):
+    """A 4x4x4 header needs 128 body bytes; 127 is truncated, not a
+    numpy buffer-size error."""
+    import struct
+
+    raw = b"RAWV" + struct.pack("<HHI", 4, 4, 4) + bytes(127)
+    df = spark.createDataFrame([(7, bytearray(raw))], "asset_id long, payload binary")
+    with pytest.raises(Exception, match="asset 7: truncated RAWV body"):
+        video_frame_deltas(df).collect()
+
+
 def test_unimax_budget_conservation_and_caps(spark):
     rows = _Q["unimax_corpus_allocation"].fn(spark, SF_SMALL).collect()
     total = sum(r["n_tokens"] for r in rows)
