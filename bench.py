@@ -378,7 +378,15 @@ def ab_main(control: str, sf_dir: str, sf) -> dict | None:
 _TAIL_BUDGET = 1900
 
 
-def _driver_line(result: dict) -> str:
+#: the line keeps at most this many outliers (the worst) before it would
+#: drop the per-query map
+_OUTLIERS_SHOWN = 5
+
+#: more outliers than this means the pass, not the code, is suspect
+_SUSPECT_OUTLIERS = 8
+
+
+def _driver_line(result: dict, ncpu: int | None = None) -> str:
     """Build the one printed JSON line (VERDICT r9 item 2): every legacy
     aggregate field PLUS the per-query seconds map, so the driver's
     PERF/scaling per-query tables can populate. Constraint, proven by
@@ -386,21 +394,36 @@ def _driver_line(result: dict) -> str:
     those rounds' oversized lines made its parse FAIL (BENCH_r03..r06
     tails start mid-line, parsed=null). So the line uses compact
     separators and degrades in steps until it fits the budget:
-    3-decimal queries -> 2-decimal queries -> no queries (the round-7..9
+    3-decimal queries -> 2-decimal queries -> the same two with
+    ``ab_outliers`` cut to its worst five -> no queries (the round-7..9
     shape). The control per-query map (~1.5k chars more) cannot fit
-    alongside 47 query names; it stays in BENCH_HISTORY.jsonl."""
+    alongside 47 query names; it stays in BENCH_HISTORY.jsonl.
+
+    ``"suspect": true`` marks a measurement not to trust: more than eight
+    A/B outliers, or a pass that started with ``load1`` above half of
+    ``ncpu`` (default ``os.cpu_count()``)."""
     compact = {
         k: v
         for k, v in result.items()
         if k not in ("queries", "spread", "control_queries")
     }
     compact["n_queries"] = len(result["queries"])
-    for ndigits in (3, 2):
-        cand = dict(compact)
-        cand["queries"] = {n: round(v, ndigits) for n, v in result["queries"].items()}
-        s = json.dumps(cand, separators=(",", ":"))
-        if len(s) <= _TAIL_BUDGET:
-            return s
+    outliers = result.get("ab_outliers") or {}
+    ncpu = ncpu or os.cpu_count() or 32
+    if len(outliers) > _SUSPECT_OUTLIERS or max(result.get("ab_load1") or [0]) > ncpu / 2:
+        compact["suspect"] = True
+    worst = dict(sorted(outliers.items(), key=lambda kv: -kv[1])[:_OUTLIERS_SHOWN])
+    for shown in (outliers, worst):
+        for ndigits in (3, 2):
+            cand = dict(compact)
+            if "ab_outliers" in cand:
+                cand["ab_outliers"] = shown
+            cand["queries"] = {n: round(v, ndigits) for n, v in result["queries"].items()}
+            s = json.dumps(cand, separators=(",", ":"))
+            if len(s) <= _TAIL_BUDGET:
+                return s
+    if "ab_outliers" in compact:
+        compact["ab_outliers"] = worst
     return json.dumps(compact, separators=(",", ":"))
 
 

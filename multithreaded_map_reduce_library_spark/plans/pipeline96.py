@@ -12,14 +12,15 @@ shortest path over the word's character positions (Viterbi).
 2. Cost of a piece = -ln(count / total_char_count), e6-quantized — the
    integer-grid form of the unigram LM negative log-likelihood.
 3. For the top-40 most frequent words (length ≤ 16) run the exact DP:
-   dist(pos) = min over pieces ending at pos of dist(start) + cost.
-   16 unrolled relaxation rounds (a length-16 word uses ≤ 16 pieces);
+   dist(pos) = min over pieces ending at pos of dist(start) + cost,
+   one left-to-right ``F.aggregate`` fold over each word's positions;
    costs are packed as cost_e6*32 + n_pieces, so the argmin also
    tie-breaks deterministically toward fewer pieces.
 
-Everything after the e6 cost grid is integer arithmetic, and the DP is
-plain joins — no recursion, no UDF, both engines run the identical
-unrolled program.
+Everything after the e6 cost grid is integer arithmetic, with no UDF.
+The DuckDB oracle replays the DP as 16 unrolled relaxation rounds (a
+length-16 word uses ≤ 16 pieces); rounds past the topological pass are
+no-ops, so both give the same minimum.
 
 Reference parity anchor: the reference engine (mapreduce.h:44-83) has no
 tokenizer tier; this extends the driver-mandated superset.
@@ -157,18 +158,17 @@ def unigram_lm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigrams + top-32 trigrams of the token stream, piece cost =
     e6-quantized -ln(count/total_chars), and per word the exact minimal
     total cost over all segmentations plus the piece count of that
-    optimum (fewest-pieces tie-break via cost*32+pieces packing) — a
-    16-round unrolled Bellman-Ford over the word's positions, where 16
-    relaxations are exact because a length-16 word has at most 16
-    pieces.
+    optimum (fewest-pieces tie-break via cost*32+pieces packing) — one
+    left-to-right fold over the word's positions (:func:`run_optimal_dp`).
 
-    Scale design: the corpus-sized work is the three n-gram counting
-    shuffles (map-side combined, the wordcount shape) and the word
-    frequency rollup; the top-k cuts are tiny global windows on gram
-    rollups; the DP itself runs on a 40-word × 17-position relation —
-    metadata, regardless of corpus size. This is the plan shape a real
-    tokenizer trainer uses at 100 TB: corpus passes for counts, DP on
-    the (bounded) vocabulary."""
+    Scale design: the corpus-sized work is the word frequency rollup and
+    one gram-count shuffle over all three orders (map-side combined, the
+    wordcount shape); both top-k cuts are one window partitioned by gram
+    order, one task per order; the DP itself runs on a 40-word × 17-position
+    relation — metadata, regardless of corpus size. This is the plan
+    shape a real tokenizer trainer uses at 100 TB: corpus passes for
+    counts, DP on the (bounded) vocabulary. Building the plan runs no
+    Spark job."""
     words, eg = build_piece_graph(spark, sf_dir)
     dp = run_optimal_dp(words, eg)
     pk = F.lit(_PACK).cast("bigint")
@@ -190,7 +190,13 @@ def unigram_lm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def build_piece_graph(spark: SparkSession, sf_dir: str):
     """(words, eg): the top-40 word set with frequencies, and the piece
     edge list (word, pos_from, pos_to, w32 = cost_e6*32 + 1). Shared with
-    the WordPiece-greedy regret query (pipeline97)."""
+    the WordPiece-greedy regret query (pipeline97).
+
+    Building it launches no Spark job: the plan has two corpus-sized
+    shuffles (the word-frequency rollup and one gram count over all three
+    orders), one window partitioned by gram order for both top cuts, and
+    one global window for the top words; everything else is
+    vocabulary-sized."""
     from multithreaded_map_reduce_library_spark.functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -201,29 +207,25 @@ def build_piece_graph(spark: SparkSession, sf_dir: str):
         docs.select(F.explode(tokens("text")).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").cast("bigint").alias("freq"))
-        .localCheckpoint()
     )
-
-    def grams(n: int) -> DataFrame:
-        pos = F.explode(F.sequence(F.lit(1), F.length("tok") - F.lit(n - 1))).alias("p")
-        return (
-            wf.where(F.length("tok") >= n)
-            .select("tok", "freq", pos)
-            .select(F.expr(f"substring(tok, p, {n})").alias("gram"), "freq")
-            .groupBy("gram")
-            .agg(F.sum("freq").cast("bigint").alias("cnt"))
-        )
-
-    g1 = grams(1).localCheckpoint()
-    tot = g1.agg(F.sum("cnt").cast("bigint").alias("total"))
-
-    def topcut(df: DataFrame, k: int) -> DataFrame:
-        rn = F.row_number().over(Window.orderBy(F.desc("cnt"), F.asc("gram")))
-        return df.withColumn("rn", rn).where(F.col("rn") <= k).select("gram", "cnt")
-
-    pieces = g1.unionAll(topcut(grams(2), _TOP_BIGRAMS)).unionAll(
-        topcut(grams(3), _TOP_TRIGRAMS)
+    # every gram order n in one explode and one aggregate; grams of
+    # different orders differ in length, so (n, gram) keys never collide
+    pos = F.explode(F.sequence(F.lit(1), F.length("tok") - F.col("n") + 1)).alias("p")
+    grams = (
+        wf.select("tok", "freq", F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("n"))
+        .where(F.length("tok") >= F.col("n"))
+        .select("tok", "freq", "n", pos)
+        .select("n", F.expr("substring(tok, p, n)").alias("gram"), "freq")
+        .groupBy("n", "gram")
+        .agg(F.sum("freq").cast("bigint").alias("cnt"))
     )
+    # every character, the top-64 bigrams and the top-32 trigrams, each cut
+    # (cnt DESC, gram ASC) inside its own order
+    rn = F.row_number().over(Window.partitionBy("n").orderBy(F.desc("cnt"), F.asc("gram")))
+    cut = F.when(F.col("n") == 2, _TOP_BIGRAMS).otherwise(_TOP_TRIGRAMS)
+    pieces = grams.withColumn("rn", rn).where((F.col("n") == 1) | (F.col("rn") <= cut))
+    # Σ freq·length(tok) counts every character occurrence: Σ of the n=1 counts
+    tot = wf.agg(F.sum(F.col("freq") * F.length("tok")).cast("bigint").alias("total"))
     costs = pieces.crossJoin(F.broadcast(tot)).select(
         "gram",
         F.floor(
@@ -241,7 +243,6 @@ def build_piece_graph(spark: SparkSession, sf_dir: str):
         .withColumn("rn", wrn)
         .where(F.col("rn") <= _TOP_WORDS)
         .select("word", "freq")
-        .localCheckpoint()
     )
     span = words.select(
         "word",
@@ -259,7 +260,6 @@ def build_piece_graph(spark: SparkSession, sf_dir: str):
         .select(
             "word", "pos_from", "pos_to", (F.col("cost_e6") * _PACK + 1).alias("w32")
         )
-        .localCheckpoint()
     )
     return words, eg
 

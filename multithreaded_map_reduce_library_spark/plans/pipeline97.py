@@ -101,9 +101,10 @@ def wordpiece_greedy_regret(spark: SparkSession, sf_dir: str) -> DataFrame:
     impossible: one candidate per length); regret = greedy − optimal is
     ≥ 0 by construction and 0 exactly where greedy finds an optimum.
 
-    Scale design: shares the piece-graph build with pipeline96 (the
-    corpus-sized counting shuffles); both the greedy walk (one state row
-    per word per round) and the DP run on metadata-sized relations."""
+    Scale design: shares the piece-graph build with pipeline96 (the word
+    rollup and one gram-count shuffle; building it runs no Spark job);
+    both the greedy walk and the DP are one fold per word on
+    metadata-sized relations."""
     words, eg = build_piece_graph(spark, sf_dir)
     dp = run_optimal_dp(words, eg)
     # Greedy longest-match as ONE fold expression over the per-word edge

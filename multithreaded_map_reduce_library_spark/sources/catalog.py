@@ -16,6 +16,7 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Tables the driver generates under /root/testdata/sf*/ (TESTDATA.md).
 TABLES: tuple[str, ...] = (
@@ -35,9 +36,12 @@ TABLES: tuple[str, ...] = (
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one star-schema table.
 
-    Plain ``spark.read.parquet`` so Catalyst keeps predicate pushdown and
-    column pruning: callers filter/select on the returned DataFrame and the
-    parquet scan only reads the referenced columns / row groups.
+    A plain parquet read (:func:`read_parquet`) so Catalyst keeps predicate
+    pushdown and column pruning: callers filter/select on the returned
+    DataFrame and the parquet scan only reads the referenced columns / row
+    groups. Only the first read of a file state infers the schema (a
+    ~0.1 s footer Spark job); later calls read with the memoized schema
+    and launch no job, and a rewritten file is inferred again.
 
     ``events.parquet`` stores TIMESTAMP(NANOS) which Spark's parquet reader
     rejects; we read nanos as long (legacy conf) and rebuild a
@@ -51,9 +55,59 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from multithreaded_map_reduce_library_spark.session import tune_existing
 
         tune_existing(spark)
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir.rstrip('/')}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"))
+    return df
+
+
+#: Inferred parquet schemas: (path, nanosAsLong) -> (file stamp, schema),
+#: the stamp being (name, size, mtime_ns) of every file.
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+
+
+def _raise(exc: OSError) -> None:
+    raise exc
+
+
+def _file_stamp(path: str) -> tuple | None:
+    """(name, size, mtime_ns) of every file under ``path`` (or of ``path``
+    itself), or None when any of them cannot be stat'ed."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((path, st.st_size, st.st_mtime_ns),)
+        stamp = []
+        for root, dirs, files in os.walk(path, onerror=_raise):
+            dirs.sort()
+            for f in sorted(files):
+                st = os.stat(os.path.join(root, f))
+                stamp.append((os.path.join(root, f), st.st_size, st.st_mtime_ns))
+        return tuple(stamp)
+    except OSError:
+        return None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file
+    state: the package's only parquet schema inference.
+
+    A hit reads with the memoized schema (``spark.read.schema(s)``), which
+    skips the footer-inference job but still builds a fresh relation with
+    fresh attribute ids. The key holds ``nanosAsLong`` because it changes
+    the inferred type of ``events.ts``; a changed file stamp replaces the
+    entry. A path that cannot be stat'ed (missing, or not on the local
+    file system) is never memoized: it is inferred on every call, as a
+    plain read would be."""
+    stamp = _file_stamp(path)
+    if stamp is None:
+        return spark.read.parquet(path)
+    key = (path, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
     return df
 
 

@@ -25,6 +25,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multithreaded_map_reduce_library_spark.sources.catalog import read_parquet
+
 #: Temp dirs a returned DataFrame still lazily depends on (stream sink
 #: output, staged source symlink dirs). They cannot be removed when the
 #: creating function returns — the caller has not materialized yet — so
@@ -135,8 +137,9 @@ def _as_stream_dir(path: str) -> str:
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over events.parquet. Parquet streaming needs an explicit
-    schema; we take it from a static read (nanos ts arrives as long — same
-    legacy-conf handling as sources/catalog.py) and rebuild timestamps.
+    schema; we take it from ``catalog.read_parquet`` (memoized inference;
+    nanos ts arrives as long — same legacy-conf handling as
+    ``load_table``) and rebuild timestamps.
 
     Session confs (UTC tz — watermarks require TIMESTAMP ltz, and the
     ntz->ltz cast must be value-preserving to match the oracle's naive
@@ -146,7 +149,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tune_existing(spark)
     path = f"{sf_dir.rstrip('/')}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     reader = spark.readStream.schema(schema).format("parquet")
     # Test-only stressor (tools/stability_sweep.py): cap files per
     # micro-batch so AvailableNow drains a multi-file source in MULTIPLE
@@ -173,7 +176,7 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus for streaming dedup/quality gating (a production pipeline
     deduplicates at ingest, not in nightly batch)."""
     path = f"{sf_dir.rstrip('/')}/documents.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     return spark.readStream.schema(schema).format("parquet").load(_as_stream_dir(path))
 
 
@@ -183,7 +186,7 @@ def embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     a production pipeline decodes and features assets as they land, not
     in nightly batch)."""
     path = f"{sf_dir.rstrip('/')}/embeddings.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     reader = spark.readStream.schema(schema).format("parquet")
     max_files = os.environ.get("SPARK_GRAFT_STREAM_MAXFILES")
     if max_files:

@@ -88,3 +88,33 @@ def test_line_prefers_three_decimals_when_they_fit():
     result["queries"] = {f"q{i}": 1.2345 for i in range(10)}
     parsed = json.loads(bench._driver_line(result))
     assert parsed["queries"]["q0"] == 1.234  # round(1.2345, 3) banker's
+
+
+def test_outliers_cut_to_worst_five_before_queries_drop():
+    # every query an outlier: the full map and the per-query map cannot
+    # fit together, so the line keeps the per-query map and the worst five
+    # (here the five shortest names, which fit beside it)
+    e = _history_entry()
+    result = dict(_R9_BASE)
+    result["queries"] = e["queries"]
+    by_len = sorted(e["queries"], key=lambda n: (len(n), n))
+    result["ab_outliers"] = {n: round(2.0 - i / 100, 3) for i, n in enumerate(by_len)}
+    assert len(json.dumps(result, separators=(",", ":"))) > 2000
+    parsed = json.loads(bench._driver_line(result, ncpu=32))
+    assert set(parsed["queries"]) == set(e["queries"])
+    worst = sorted(result["ab_outliers"].items(), key=lambda kv: -kv[1])[:5]
+    assert parsed["ab_outliers"] == dict(worst)
+
+
+def test_suspect_flags_outlier_explosion_and_load():
+    calm = dict(_R9_BASE, queries={"q0": 1.0}, ab_load1=[1.0, 2.0])
+    assert "suspect" not in json.loads(bench._driver_line(calm, ncpu=4))
+    # more than 8 outliers
+    many = dict(calm, ab_outliers={f"q{i}": 1.5 for i in range(9)})
+    assert json.loads(bench._driver_line(many, ncpu=4))["suspect"] is True
+    eight = dict(calm, ab_outliers={f"q{i}": 1.5 for i in range(8)})
+    assert "suspect" not in json.loads(bench._driver_line(eight, ncpu=4))
+    # a pass that started above half the CPUs
+    busy = dict(calm, ab_load1=[1.0, 2.1])
+    assert json.loads(bench._driver_line(busy, ncpu=4))["suspect"] is True
+    assert "suspect" not in json.loads(bench._driver_line(busy, ncpu=8))

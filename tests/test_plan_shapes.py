@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import time
 
 import pytest
 
@@ -393,3 +394,51 @@ def test_prefix_sum_fact_window_is_partitioned(spark, queries):
     assert plan.count("SinglePartition") == 1
     # offsets relation ships back as a broadcast, not a shuffle join
     assert "BroadcastHashJoin" in plan
+
+
+def _build_jobs(spark, fn) -> int:
+    """Spark jobs launched while ``fn`` builds its plan at sf0.001."""
+    sc = spark.sparkContext
+    group = f"build-{fn.__name__}-{time.monotonic_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn(spark, SF_SMALL)
+        # the status store fills from the listener bus in order: once a
+        # job run after the build shows, every build job shows too
+        sc.setJobGroup(group + "-fence", group)
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(group + "-fence"):
+        assert time.monotonic() < deadline, "fence job never reached the status store"
+        time.sleep(0.05)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "sequence_pack_docs",
+        "knn_bruteforce_cosine",
+        "unigram_lm_segmentation",
+        "wordpiece_greedy_regret",
+    ],
+)
+def test_plan_build_launches_no_job(spark, queries, name):
+    """Building a plan runs no Spark job once its tables' schemas are
+    memoized (sources/catalog.py::read_parquet): no footer-inference job
+    per read and no checkpoint in the piece-graph builder."""
+    _build_jobs(spark, queries[name].fn)
+    assert _build_jobs(spark, queries[name].fn) == 0
+
+
+def test_unigram_piece_graph_one_gram_shuffle(spark, queries):
+    """The piece graph counts all three gram orders in one aggregate and
+    cuts both top-k lists in one window partitioned by order: exactly one
+    exchange keyed on the gram, and no checkpointed relation in the plan."""
+    plan = plan_str(_df(queries, spark, "unigram_lm_segmentation"))
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
+    args = [ln for ln in plan.splitlines() if ln.startswith("Arguments: hashpartitioning(")]
+    assert sum("gram#" in ln for ln in args) == 1, plan
+    assert "windowspecdefinition(n#" in plan, plan

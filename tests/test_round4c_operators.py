@@ -9,12 +9,14 @@ from __future__ import annotations
 import hashlib
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from multithreaded_map_reduce_library_spark.plans.registry import all_queries
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
 from .conftest import SF_SMALL
+from .oracle_util import compare_query
 
 
 def _docs_scored(spark):
@@ -370,6 +372,23 @@ def test_harmonic_centrality_exact_replay(spark):
 # --------------------------------------------------------------------------
 # unigram_lm_segmentation (pipeline96)
 # --------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "unigram_lm_segmentation",
+        "wordpiece_greedy_regret",
+        "psi_value_drift",
+        "hash_partition_balance_audit",
+    ],
+)
+def test_pipeline96_97_oracle_parity(spark, name):
+    """DuckDB oracle parity at sf0.001 for the tokenizer queries (one
+    gram shuffle, no checkpoints) and the two ``events`` readers, which
+    read through the memoized ``nanosAsLong`` schema."""
+    q = all_queries()[name]
+    compare_query(spark, q.fn, q.oracle, SF_SMALL)
 
 
 def test_unigram_segmentation_exact_replay(spark):
@@ -774,8 +793,6 @@ def test_png_downscale2_small_grid_through_real_codec(spark):
     assets_odd = spark.createDataFrame(
         pd.DataFrame({"asset_id": [2], "payload": [odd]})
     )
-    import pytest
-
     with pytest.raises(Exception, match="even dimensions"):
         image_downscale2(assets_odd).collect()
 

@@ -39,6 +39,15 @@ from .conftest import SF_SMALL
 from .oracle_util import compare_query
 
 
+_EMB_SCHEMA = "vec_id bigint, embedding array<double>"
+
+
+def _emb_frame(spark, rows):
+    """Tiny embedding table from pandas (Arrow): the same types as a
+    Python-list ``createDataFrame``, without its per-action cost."""
+    return spark.createDataFrame(pd.DataFrame(rows, columns=["vec_id", "embedding"]), _EMB_SCHEMA)
+
+
 @pytest.fixture(scope="module")
 def emb(spark):
     rows = [
@@ -48,7 +57,7 @@ def emb(spark):
         (3, [-1.0, 0.0, 0.0, 0.0]),  # opposite of 0
         (4, [0.5, 0.5, 0.0, 0.0]),
     ]
-    return spark.createDataFrame(rows, ["vec_id", "embedding"])
+    return _emb_frame(spark, rows)
 
 
 def test_cosine_expression_values(spark, emb):
@@ -189,7 +198,7 @@ def test_hyperplane_signs_deterministic():
 
 
 def test_lsh_buckets_and_knn(spark, emb):
-    twin = emb.union(spark.createDataFrame([(5, [1.0, 0.0, 0.0, 0.0])], emb.schema))
+    twin = emb.union(_emb_frame(spark, [(5, [1.0, 0.0, 0.0, 0.0])]))
 
     def buckets(planes):
         b = twin.select("vec_id", random_hyperplane_bucket("embedding", 4, planes).alias("b"))

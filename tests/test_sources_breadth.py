@@ -1,7 +1,8 @@
 """Source/sink breadth beyond the csv/jsonl/parquet round-trips in
-test_sinks.py: ORC, and date-partitioned parquet layout with verified
+test_sinks.py: ORC, date-partitioned parquet layout with verified
 partition pruning (the at-rest layout that lets a 100 TB table serve a
-one-day query by touching one directory).
+one-day query by touching one directory), and the parquet schema memo
+behind ``load_table``.
 """
 
 from __future__ import annotations
@@ -10,9 +11,14 @@ import contextlib
 import io
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from multithreaded_map_reduce_library_spark.sources.catalog import load_table
+from multithreaded_map_reduce_library_spark.sources.catalog import (
+    TABLES,
+    load_table,
+    read_parquet,
+)
 
 from .conftest import SF_SMALL
 
@@ -91,3 +97,44 @@ def test_parquet_merge_schema_evolution(spark, tmp_path):
     assert set(back.columns) == {"id", "name", "score", "p"}
     rows = {(r.id, r.name, r.score) for r in back.collect()}
     assert rows == {(1, "a", None), (2, "b", 9.5)}
+
+
+@pytest.mark.parametrize("name", TABLES)
+def test_schema_memo_hit_equals_fresh_inference(spark, name):
+    path = f"{SF_SMALL}/{name}.parquet"
+    read_parquet(spark, path)  # fills the memo
+    assert read_parquet(spark, path).schema == spark.read.parquet(path).schema
+
+
+def test_schema_memo_keys_on_nanos_as_long(spark, tmp_path):
+    """A TIMESTAMP(NANOS) column infers as bigint under ``nanosAsLong`` and
+    cannot be read without it; the memoized bigint schema must not paper
+    over that when the conf is off."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "nanos.parquet")
+    ts = pa.array([1_700_000_000_123_456_789], type=pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), path)
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    assert spark.conf.get(key) == "true"
+    assert read_parquet(spark, path).dtypes == [("ts", "bigint")]
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(Exception, match="(?i)nanos"):
+            read_parquet(spark, path)
+    finally:
+        spark.conf.set(key, "true")
+    assert read_parquet(spark, path).dtypes == [("ts", "bigint")]
+
+
+def test_rewritten_table_shows_new_column(spark, tmp_path):
+    out = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1, "a")], ["id", "name"]).write.parquet(out)
+    assert load_table(spark, str(tmp_path), "t").columns == ["id", "name"]
+    spark.createDataFrame([(2, "b", 9.5)], ["id", "name", "score"]).write.mode(
+        "overwrite"
+    ).parquet(out)
+    back = load_table(spark, str(tmp_path), "t")
+    assert back.columns == ["id", "name", "score"]
+    assert [tuple(r) for r in back.collect()] == [(2, "b", 9.5)]
