@@ -2,11 +2,10 @@
 
 The container ships no image libraries, but PNG itself is just zlib over
 filtered scanlines — so the engine carries a real decoder for the common
-cases and a matching encoder used by tests and the
-``multimodal_png_roundtrip`` query to fabricate genuine PNG payloads.
-``operators/multimodal._decode_image_bytes`` prefers PIL when available
-and falls back to this decoder, replacing the round-1
-``NotImplementedError`` stub with a working decode path.
+cases and one matching encoder (``encode_png``) that tests and the PNG
+queries use to fabricate genuine payloads.
+``operators/multimodal._decode_image_bytes`` decodes every PNG payload
+with this codec, so hashed decode output depends on the bytes alone.
 
 Decode envelope (round 3 widened it from "8-bit gray/RGB/RGBA only",
 closing the VERDICT r2 item-6 honest edge; round 4 added Adam7):
@@ -23,7 +22,9 @@ closing the VERDICT r2 item-6 honest edge; round 4 added Adam7):
   the pass grid.
 
 Still out of envelope (raise ``NotImplementedError``, never a wrong
-pixel): 1/2/4-bit grayscale, tRNS transparency.
+pixel): 1/2/4-bit grayscale, tRNS transparency. A malformed stream —
+cut at any byte, a chunk running past the payload, a CRC mismatch, no
+IEND, a corrupt zlib stream — raises ``ValueError``.
 
 Spec: https://www.w3.org/TR/png-3/ (chunk layout §5, interlace §8,
 filters §9).
@@ -75,111 +76,40 @@ def _chunk(tag: bytes, body: bytes) -> bytes:
     )
 
 
-def encode_png(pixels: "list[list[int]] | object", channels: int = 1) -> bytes:
-    """Encode 8-bit pixels to PNG. ``pixels`` is rows x (width*channels)
-    ints 0-255 (or a NumPy array of shape (h, w) / (h, w, c)). Scanlines
-    use filter 0 — a valid (if uncompressed-friendly) choice any decoder
-    must accept."""
+def encode_png(
+    pixels: "object",
+    depth: int = 8,
+    palette: "list[tuple[int, int, int]] | None" = None,
+    interlace: bool = False,
+) -> bytes:
+    """Encode ``pixels`` — (h, w) or (h, w, c) with c in {1, 3, 4} — as a
+    PNG: gray/RGB/RGBA at ``depth`` 8 or 16 (big-endian samples), or,
+    with an RGB ``palette``, (h, w) indices at ``depth`` 1, 2, 4 or 8
+    (MSB-first bit packing). ``interlace`` emits the seven Adam7 reduced
+    images in pass order. Every scanline uses filter 0, which any
+    decoder must accept."""
     import numpy as np
 
-    arr = np.asarray(pixels, dtype=np.uint8)
-    if arr.ndim == 3:
-        h, w, channels = arr.shape
-        flat = arr.reshape(h, w * channels)
-    elif arr.ndim == 2 and channels == 1:
-        h, w = arr.shape
-        flat = arr
-    else:
-        h = arr.shape[0]
-        w = arr.shape[1] // channels
-        flat = arr
-    color_type = {1: 0, 3: 2, 4: 6}[channels]
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    raw = b"".join(b"\x00" + flat[y].tobytes() for y in range(h))
-    return (
-        _MAGIC
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(raw))
-        + _chunk(b"IEND", b"")
-    )
-
-
-def encode_png16_gray(pixels: "object") -> bytes:
-    """Encode a (h, w) uint16 array as a 16-bit grayscale PNG (filter 0,
-    big-endian samples per spec) — fixture generator for the 16-bit
-    decode path."""
-    import numpy as np
-
-    arr = np.asarray(pixels, dtype=np.uint16)
-    h, w = arr.shape
-    ihdr = struct.pack(">IIBBBBB", w, h, 16, 0, 0, 0, 0)
-    raw = b"".join(b"\x00" + arr[y].astype(">u2").tobytes() for y in range(h))
-    return (
-        _MAGIC
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(raw))
-        + _chunk(b"IEND", b"")
-    )
-
-
-def encode_png_palette(indices: "object", palette: "list[tuple[int, int, int]]",
-                       depth: int = 8) -> bytes:
-    """Encode a (h, w) index array + RGB palette as a color-type-3 PNG at
-    ``depth`` in {1, 2, 4, 8} (filter 0, MSB-first bit packing per spec)
-    — fixture generator for the palette decode path."""
-    import numpy as np
-
-    arr = np.asarray(indices, dtype=np.uint8)
-    h, w = arr.shape
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, 3, 0, 0, 0)
-    plte = b"".join(bytes(rgb) for rgb in palette)
-    rows = []
-    for y in range(h):
-        if depth == 8:
-            rows.append(b"\x00" + arr[y].tobytes())
-        else:
-            per_byte = 8 // depth
-            bits = np.unpackbits(arr[y][:, None], axis=1, count=8)[:, 8 - depth :]
-            packed = np.packbits(bits.reshape(-1))
-            n_bytes = -(-w // per_byte)
-            rows.append(b"\x00" + packed[:n_bytes].tobytes())
-    raw = b"".join(rows)
-    return (
-        _MAGIC
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"PLTE", plte)
-        + _chunk(b"IDAT", zlib.compress(raw))
-        + _chunk(b"IEND", b"")
-    )
-
-
-def encode_png_adam7(pixels: "list[list[int]] | object", channels: int = 1) -> bytes:
-    """Encode 8-bit pixels as an **Adam7-interlaced** PNG (interlace
-    method 1, filter 0 scanlines): the seven reduced images are emitted
-    in pass order, each scanline carrying only that pass's pixels —
-    fixture generator for the interlaced decode path."""
-    import numpy as np
-
-    arr = np.asarray(pixels, dtype=np.uint8)
-    if arr.ndim == 3:
-        h, w, channels = arr.shape
-    elif arr.ndim == 2 and channels == 1:
-        h, w = arr.shape
+    arr = np.asarray(pixels, dtype=np.uint16 if depth == 16 else np.uint8)
+    if arr.ndim == 2:
         arr = arr[:, :, None]
-    else:
-        h = arr.shape[0]
-        w = arr.shape[1] // channels
-        arr = arr.reshape(h, w, channels)
-    color_type = {1: 0, 3: 2, 4: 6}[channels]
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 1)
+    h, w, c = arr.shape
+    color_type = 3 if palette is not None else {1: 0, 3: 2, 4: 6}[c]
+    ihdr = struct.pack(">IIBBBBB", w, h, depth, color_type, 0, 0, int(interlace))
     raw = bytearray()
-    for x0, y0, dx, dy, _wp, hp in _passes(w, h, 1):
-        sub = arr[y0::dy, x0::dx]
-        for y in range(hp):
-            raw += b"\x00" + sub[y].tobytes()
+    for x0, y0, dx, dy, _wp, hp in _passes(w, h, interlace):
+        sub = arr[y0::dy, x0::dx].reshape(hp, -1)
+        if depth == 16:
+            sub = sub.astype(">u2").view(np.uint8)
+        elif depth < 8:
+            bits = np.unpackbits(sub[:, :, None], axis=2)[:, :, 8 - depth :]
+            sub = np.packbits(bits.reshape(hp, -1), axis=1)
+        raw += np.hstack([np.zeros((hp, 1), np.uint8), sub]).tobytes()
+    plte = b"" if palette is None else _chunk(b"PLTE", b"".join(map(bytes, palette)))
     return (
         _MAGIC
         + _chunk(b"IHDR", ihdr)
+        + plte
         + _chunk(b"IDAT", zlib.compress(bytes(raw)))
         + _chunk(b"IEND", b"")
     )
@@ -201,36 +131,28 @@ def _unfilter(raw: bytes, height: int, stride: int, bpp: int):
 
     if len(raw) != height * (stride + 1):
         raise ValueError("PNG scanline payload has wrong length")
-    out = np.zeros((height, stride), dtype=np.uint8)
+    rows = np.frombuffer(raw, dtype=np.uint8).reshape(height, stride + 1)
+    out = rows[:, 1:].copy()
     prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(height):
-        ftype = raw[y * (stride + 1)]
-        line = np.frombuffer(
-            raw, dtype=np.uint8, count=stride, offset=y * (stride + 1) + 1
-        ).copy()
-        if ftype == 0:  # None
-            cur = line
-        elif ftype == 1:  # Sub
-            cur = line
+    for y, ftype in enumerate(rows[:, 0].tolist()):
+        cur = out[y]  # a view: the filters below reconstruct it in place
+        if ftype == 1:  # Sub
             for x in range(bpp, stride):
                 cur[x] = (int(cur[x]) + int(cur[x - bpp])) & 0xFF
         elif ftype == 2:  # Up
-            cur = (line.astype(np.int32) + prev).astype(np.uint8)
+            cur += prev  # uint8 arithmetic wraps mod 256
         elif ftype == 3:  # Average
-            cur = line
             for x in range(stride):
                 left = int(cur[x - bpp]) if x >= bpp else 0
                 cur[x] = (int(cur[x]) + (left + int(prev[x])) // 2) & 0xFF
         elif ftype == 4:  # Paeth
-            cur = line
             for x in range(stride):
                 left = int(cur[x - bpp]) if x >= bpp else 0
                 up_left = int(prev[x - bpp]) if x >= bpp else 0
                 cur[x] = (int(cur[x]) + _paeth(left, int(prev[x]), up_left)) & 0xFF
-        else:
+        elif ftype != 0:  # 0 is None
             raise ValueError(f"bad PNG filter type {ftype}")
-        out[y] = cur
-        prev = out[y]
+        prev = cur
     return out
 
 
@@ -242,7 +164,9 @@ def decode_png(payload: bytes) -> "tuple[int, int, int, object]":
     expanded to RGB uint8, each sequential or Adam7-interlaced (the
     passes unfilter independently and scatter back by the pass grid).
     Anything outside the envelope raises ``NotImplementedError`` (never
-    a wrong pixel); malformed streams raise ``ValueError``.
+    a wrong pixel); a malformed stream — truncated anywhere, a chunk
+    running past the payload, a CRC mismatch, no IEND, a corrupt zlib
+    stream — raises ``ValueError``.
     """
     import numpy as np
 
@@ -253,12 +177,20 @@ def decode_png(payload: bytes) -> "tuple[int, int, int, object]":
     depth = color_type = interlace = 0
     plte = None
     idat = bytearray()
-    while pos + 8 <= len(payload):
-        (length,) = struct.unpack(">I", payload[pos : pos + 4])
-        tag = payload[pos + 4 : pos + 8]
-        body = payload[pos + 8 : pos + 8 + length]
-        pos += 12 + length
+    while True:
+        if pos + 12 > len(payload):
+            raise ValueError("truncated PNG: missing IEND")
+        (length,) = struct.unpack_from(">I", payload, pos)
+        end = pos + 12 + length
+        if end > len(payload):
+            raise ValueError("PNG chunk runs past the payload")
+        tag, body = payload[pos + 4 : pos + 8], payload[pos + 8 : end - 4]
+        if struct.unpack_from(">I", payload, end - 4)[0] != zlib.crc32(tag + body):
+            raise ValueError(f"PNG {tag!r} chunk CRC mismatch")
+        pos = end
         if tag == b"IHDR":
+            if length != 13:
+                raise ValueError("PNG IHDR chunk is not 13 bytes")
             width, height, depth, color_type, _comp, _filt, interlace = struct.unpack(
                 ">IIBBBBB", body
             )
@@ -271,7 +203,7 @@ def decode_png(payload: bytes) -> "tuple[int, int, int, object]":
                     f"interlace={interlace}"
                 )
         elif tag == b"PLTE":
-            if len(body) % 3:
+            if length % 3:
                 raise ValueError("PLTE length not a multiple of 3")
             plte = np.frombuffer(body, dtype=np.uint8).reshape(-1, 3)
         elif tag == b"IDAT":
@@ -280,53 +212,37 @@ def decode_png(payload: bytes) -> "tuple[int, int, int, object]":
             break
     if width is None or not idat:
         raise ValueError("truncated PNG: missing IHDR/IDAT")
-    raw = zlib.decompress(bytes(idat))
+    if color_type == 3 and plte is None:
+        raise ValueError("palette PNG missing PLTE chunk")
+    try:
+        raw = zlib.decompress(bytes(idat))
+    except zlib.error as exc:
+        raise ValueError(f"PNG IDAT is not a valid zlib stream: {exc}") from exc
 
-    if color_type == 3:
-        if plte is None:
-            raise ValueError("palette PNG missing PLTE chunk")
-        idx = np.zeros((height, width), dtype=np.uint8)
-        off = 0
-        for x0, y0, dx, dy, wp, hp in _passes(width, height, interlace):
-            stride = -(-wp * depth // 8)
-            nb = hp * (stride + 1)
-            rows = _unfilter(raw[off : off + nb], hp, stride, 1)
-            off += nb
-            if depth == 8:
-                sub = rows[:, :wp]
-            else:
-                bits = np.unpackbits(rows, axis=1)
-                sub = np.zeros((hp, wp), dtype=np.uint8)
-                for b in range(depth):
-                    sub = (sub << 1) | bits[:, b::depth][:, :wp]
-            idx[y0::dy, x0::dx] = sub
-        if off != len(raw):
-            raise ValueError("PNG IDAT length does not match pass layout")
-        if int(idx.max(initial=0)) >= len(plte):
-            raise ValueError("palette index out of range")
-        return width, height, 3, plte[idx]
-
-    channels = _CHANNELS[color_type]
-    nbytes = depth // 8
+    channels = _CHANNELS.get(color_type, 1)
+    bits = depth * channels  # per pixel
     out = np.zeros(
         (height, width, channels), dtype=np.uint16 if depth == 16 else np.uint8
     )
     off = 0
     for x0, y0, dx, dy, wp, hp in _passes(width, height, interlace):
-        stride = wp * channels * nbytes
+        stride = -(-wp * bits // 8)
         nb = hp * (stride + 1)
-        rows = _unfilter(raw[off : off + nb], hp, stride, channels * nbytes)
+        rows = _unfilter(raw[off : off + nb], hp, stride, max(1, bits // 8))
         off += nb
-        if depth == 8:
-            sub = rows.reshape(hp, wp, channels)
-        else:
-            sub = (
-                rows.reshape(hp, stride)
-                .view(">u2")
-                .astype(np.uint16)
-                .reshape(hp, wp, channels)
-            )
-        out[y0::dy, x0::dx] = sub
+        if depth == 16:
+            rows = rows.view(">u2").astype(np.uint16)
+        elif depth < 8:
+            unpacked = np.unpackbits(rows, axis=1)
+            rows = np.zeros((hp, wp), dtype=np.uint8)
+            for b in range(depth):
+                rows = (rows << 1) | unpacked[:, b::depth][:, :wp]
+        out[y0::dy, x0::dx] = rows.reshape(hp, wp, channels)
     if off != len(raw):
         raise ValueError("PNG IDAT length does not match pass layout")
-    return width, height, channels, out
+    if color_type != 3:
+        return width, height, channels, out
+    idx = out[:, :, 0]
+    if int(idx.max(initial=0)) >= len(plte):
+        raise ValueError("palette index out of range")
+    return width, height, 3, plte[idx]

@@ -5,19 +5,24 @@ Arrow-batched ``mapInPandas`` stages.
 Decode is real, not stubbed: PNG, baseline-DCT JPEG (including 4:2:0 /
 4:2:2 chroma subsampling and restart markers) and WAV payloads are decoded
 by the repo's dependency-free from-scratch codecs (``functions/png.py``,
-``functions/jpeg.py``, ``functions/wav.py``), so every oracle-hashed
-result is a function of the bytes alone. PIL, when a
-cluster has it, is only a fallback for image variants outside the codec
-envelopes (which otherwise raise ``NotImplementedError``). Only non-image
-payloads (e.g. the synthetic "video" modality, for which the container has
-no codec) fall back to a deterministic md5-seeded fake grid that keeps the
-feature plumbing exercised on opaque bytes.
+``functions/jpeg.py``, ``functions/wav.py``) in every environment, so
+every oracle-hashed result is a function of the bytes alone; image
+variants outside the codec envelopes raise ``NotImplementedError``. Only
+non-image payloads (e.g. document bytes read as assets) fall back to a
+deterministic md5-seeded fake grid that keeps the feature plumbing
+exercised on opaque bytes.
+
+Every per-asset kernel runs through one mapInPandas loop,
+:func:`_map_assets`, and every fabricator through one pandas-UDF helper,
+:func:`_fabricate`.
 """
 
 from __future__ import annotations
 
 import hashlib
+import struct
 from collections.abc import Iterator
+from itertools import chain
 
 import numpy as np
 import pandas as pd  # module-level so pandas-UDF type hints resolve
@@ -32,6 +37,30 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+)
+
+from multithreaded_map_reduce_library_spark.functions.jpeg import (
+    decode_jpeg,
+    decode_segment_pixel_sum,
+    encode_jpeg_gray,
+    encode_jpeg_gray_progressive,
+    encode_jpeg_rgb,
+    encode_jpeg_rgb_multiscan,
+    encode_jpeg_rgb_progressive,
+    split_restart_segments,
+)
+from multithreaded_map_reduce_library_spark.functions.png import (
+    decode_png,
+    encode_png,
+    is_png,
+)
+from multithreaded_map_reduce_library_spark.functions.wav import (
+    FLOAT32_MONO,
+    PCM16_MONO,
+    PCM_16_24,
+    ULAW_MONO,
+    decode_wav,
+    encode_wav,
 )
 
 #: Canonical multimodal asset schema: opaque payload + typed metadata.
@@ -58,101 +87,159 @@ FEATURE_SCHEMA = StructType(
     ]
 )
 
-try:  # pragma: no cover - container has no PIL; branch kept for clusters that do
-    import PIL.Image  # noqa: F401
 
-    HAVE_PIL = True
-except ImportError:
-    HAVE_PIL = False
-
-#: True decode exists for PNG always (stdlib codec); PIL widens it to
-#: every format PIL knows.
-HAVE_REAL_CODECS = True
+# --------------------------------------------------------------------------
+# The one per-asset mapInPandas loop and the one fabricator helper
+# --------------------------------------------------------------------------
 
 
-def _decode_image_bytes(payload: bytes) -> "object":
-    """Decode an image payload to an (h, w, c) or (h, w) float array.
+#: What a kernel returns for a column with one element per output row.
+_ARRAYS = (np.ndarray, list, tuple)
 
-    PNG and JPEG payloads are ALWAYS decoded by the dependency-free
-    from-scratch codecs (functions/png.py, functions/jpeg.py): every
-    registered query that feeds this kernel is oracle-hashed, so the
-    decode result must be a function of the bytes alone, never of which
-    packages the runtime happens to have installed (VERDICT r2 item 2 —
-    the round-2 prefer-PIL-for-PNG branch made `multimodal_png_roundtrip`
-    output depend on the driver environment and burned a hash row).
-    Round-5 (VERDICT r4 item 7a): the JPEG branch is no longer PIL-gated
-    — functions/jpeg.py carries a real DCT decoder covering baseline
-    SOF0/SOF1 (with 4:2:0/4:2:2 chroma subsampling and restart markers),
-    progressive SOF2 (spectral selection + successive approximation,
-    round 6), and multi-scan sequential §B.2.3 (round 7); PIL, when
-    installed, is only the fallback for JPEG variants outside that
-    envelope (arithmetic coding, 12-bit — NotImplementedError
-    otherwise, a path no oracle-hashed fixture exercises).
+
+def _column(values: list, counts: list[int]):
+    """Join one output column's per-asset values: arrays concatenate,
+    anything else — numbers, ``str``, ``bytes`` — is a scalar repeated
+    over the asset's rows. pandas keeps ``bytes`` as objects (a numpy
+    ``S`` array would drop trailing NUL bytes)."""
+    if isinstance(values[0], np.ndarray):
+        return np.concatenate(values)
+    if isinstance(values[0], _ARRAYS):
+        return list(chain.from_iterable(values))
+    return pd.Series(values).repeat(counts).to_numpy()
+
+
+def _map_assets(
+    assets: DataFrame, schema: StructType, kernel, inputs: tuple[str, ...] = ("payload",)
+) -> DataFrame:
+    """Arrow-batched mapInPandas over assets: ``kernel(*inputs)`` per row
+    returns the schema's columns after ``asset_id``, each either always a
+    scalar (one value for all of the asset's rows) or always an array
+    (ndarray/list/tuple, one element per row). The first input is the
+    binary payload (a null reads as ``b""``). Columns are collected per
+    batch and joined once; a ValueError names its asset."""
+    names = [f.name for f in schema.fields]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            ids, counts, cols = [], [], [[] for _ in names[1:]]
+            for asset_id, payload, *rest in zip(*(pdf[c] for c in ("asset_id", *inputs))):
+                try:
+                    out = kernel(payload or b"", *rest)
+                except ValueError as e:
+                    raise ValueError(f"asset {asset_id}: {e}") from e
+                ids.append(asset_id)
+                counts.append(next((len(v) for v in out if isinstance(v, _ARRAYS)), 1))
+                for col, v in zip(cols, out):
+                    col.append(v)
+            if ids:
+                yield pd.DataFrame(
+                    {n: _column(c, counts) for n, c in zip(names, [ids, *cols])}
+                )
+
+    return assets.select("asset_id", *inputs).mapInPandas(batches, schema)
+
+
+def _fabricate(
+    emb: DataFrame, id_col: str, samples: Column, encode, spread: bool = False
+) -> DataFrame:
+    """(asset_id, payload) rows: ``encode(ndarray)`` of each row's
+    ``samples`` array, in an Arrow pandas UDF. ``spread`` first
+    repartitions the skinny rows by ``asset_id`` over the default
+    parallelism."""
+
+    @F.pandas_udf("binary")
+    def to_payload(col: pd.Series) -> pd.Series:
+        return pd.Series([encode(np.asarray(s)) for s in col])
+
+    sel = emb.select(F.col(id_col).alias("asset_id"), samples.alias("_s"))
+    if spread:
+        sel = sel.repartition(emb.sparkSession.sparkContext.defaultParallelism, "asset_id")
+    return sel.select("asset_id", to_payload("_s").alias("payload"))
+
+
+def _quantized(vec_col: str, scale: float, offset: float = 0.5) -> Column:
+    """``floor(clamp(x, -1, 1) * scale + offset)`` per element, as an
+    int, JVM-side: exact IEEE ops, so an oracle replays the samples from
+    the embedding column directly."""
+    return F.transform(
+        F.col(vec_col),
+        lambda x: F.floor(
+            F.least(F.greatest(x.cast("double"), F.lit(-1.0)), F.lit(1.0)) * scale
+            + F.lit(offset)
+        ).cast("int"),
+    )
+
+
+def _gray8(vec_col: str) -> Column:
+    """``floor(clip((x + 1) / 2, 0, 1) * 255)`` per element, as an int:
+    the 8-bit gray quantization of every image fabricator, in plain SQL
+    double math a DuckDB oracle reproduces bit-for-bit."""
+    return F.transform(
+        F.col(vec_col),
+        lambda x: F.floor(
+            F.least(F.greatest((x.cast("double") + 1.0) / 2.0, F.lit(0.0)), F.lit(1.0))
+            * 255.0
+        ).cast("int"),
+    )
+
+
+def _gray_png(what: str, payload: bytes) -> tuple[int, int, np.ndarray]:
+    """``(width, height, int64 (h, w) pixels)`` of a grayscale PNG; any
+    other color type raises ``NotImplementedError("<what>: grayscale
+    images only")``."""
+    w, h, c, arr = decode_png(payload)
+    if c != 1:
+        raise NotImplementedError(f"{what}: grayscale images only")
+    return w, h, arr.astype(np.int64).reshape(h, w)
+
+
+def _wsum(flat: np.ndarray) -> int:
+    """Position-weighted checksum ``Σ flat[k] * (k + 1)``."""
+    return int((flat * np.arange(1, len(flat) + 1)).sum())
+
+
+def _decode_image_bytes(payload: bytes) -> np.ndarray:
+    """Decode an image payload to an (h, w, c) float array — (8, 8) for
+    the fake grid.
+
+    PNG and JPEG payloads are decoded by the dependency-free from-scratch
+    codecs (functions/png.py, functions/jpeg.py) in every environment:
+    every registered query that feeds this kernel is oracle-hashed, so
+    the decode result must be a function of the bytes alone, never of
+    which packages the runtime happens to have installed. functions/jpeg.py
+    covers baseline SOF0/SOF1 (with 4:2:0/4:2:2 chroma subsampling and
+    restart markers), progressive SOF2 and multi-scan sequential streams;
+    JPEG variants outside that envelope (arithmetic coding, 12-bit) raise
+    ``NotImplementedError``. JPEG is identified by its SOI marker alone,
+    so valid streams whose first segment is not APP0/APP1 still decode.
 
     Non-image payloads fall back to the deterministic md5-seeded fake
     8x8 grid, which keeps the feature plumbing exercised on opaque bytes.
     """
-    import numpy as np
-
-    from multithreaded_map_reduce_library_spark.functions.jpeg import decode_jpeg
-    from multithreaded_map_reduce_library_spark.functions.png import (
-        decode_png,
-        is_png,
-    )
-
-    raw = payload or b""
-    if is_png(raw):
-        _w, _h, _c, arr = decode_png(raw)
-        return arr.astype(np.float64)
-    # JPEG is identified by the 2-byte SOI marker alone — enumerating
-    # APP0/APP1 would silently misroute valid \xff\xd8\xff\xdb / \xe2 files
-    # to the fake-grid fallback (ADVICE r3).
-    if raw[:3] == b"\xff\xd8\xff":
-        try:
-            _w, _h, _c, arr = decode_jpeg(raw)
-            return arr.astype(np.float64)
-        except NotImplementedError:
-            if not HAVE_PIL:
-                raise
-            import io  # pragma: no cover
-
-            return np.asarray(PIL.Image.open(io.BytesIO(raw)), dtype=np.float64)
-    seed = hashlib.md5(raw).digest()
-    rng = np.frombuffer((seed * 4)[:64], dtype=np.uint8)
-    return rng.reshape(8, 8).astype("float64")
+    if is_png(payload):
+        return decode_png(payload)[3].astype(np.float64)
+    if payload[:3] == b"\xff\xd8\xff":
+        return decode_jpeg(payload)[3].astype(np.float64)
+    seed = hashlib.md5(payload).digest()
+    return np.frombuffer((seed * 4)[:64], dtype=np.uint8).reshape(8, 8).astype(np.float64)
 
 
 def extract_features(assets: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
-    Arrow moves the binary column in columnar batches; each batch is decoded
-    (stub) and reduced to a small feature row. This is the plan shape for
+    Arrow moves the binary column in columnar batches; each payload is
+    decoded and reduced to a small feature row. This is the plan shape for
     100 TB of images: scan parquet -> mapInPandas -> columnar features, no
     driver involvement, no per-row Python UDF.
     """
-    import numpy as np
-    import pandas as pd
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for asset_id, modality, payload in zip(pdf["asset_id"], pdf["modality"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                img = _decode_image_bytes(raw)
-                feat = np.asarray(img, dtype=np.float64).ravel()
-                rows.append(
-                    {
-                        "asset_id": asset_id,
-                        "modality": modality,
-                        "n_bytes": len(raw),
-                        "payload_md5": hashlib.md5(raw).hexdigest(),
-                        "feat_dim": feat.size,
-                        "feat_l2": f"{float(np.sqrt((feat ** 2).sum())):.6f}",
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA.fields])
+    def features(payload, modality):
+        feat = _decode_image_bytes(payload).ravel()
+        l2 = f"{float(np.sqrt((feat ** 2).sum())):.6f}"
+        return modality, len(payload), hashlib.md5(payload).hexdigest(), feat.size, l2
 
-    return assets.select("asset_id", "modality", "payload").mapInPandas(batches, FEATURE_SCHEMA)
+    return _map_assets(assets, FEATURE_SCHEMA, features, ("payload", "modality"))
 
 
 def documents_as_assets(docs: DataFrame) -> DataFrame:
@@ -174,40 +261,16 @@ def embeddings_as_png_assets(
     interlaced: bool = False,
 ) -> DataFrame:
     """Fabricate REAL image payloads from driver data: each embedding is
-    quantized to 8-bit grey JVM-side (floor(clip((x+1)/2)*255) — plain SQL
-    double math a DuckDB oracle reproduces bit-for-bit), then an
+    quantized to 8-bit grey JVM-side (:func:`_gray8`), then an
     Arrow-batched pandas UDF encodes the grid as an actual PNG byte
-    stream (functions/png.py). Gives the decode path genuine bytes to
-    chew on without any external image fixture."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from multithreaded_map_reduce_library_spark.functions.png import (
-        encode_png,
-        encode_png_adam7,
-    )
-
-    enc = encode_png_adam7 if interlaced else encode_png
-
-    q = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(
-            F.least(F.greatest((x.cast("double") + 1.0) / 2.0, F.lit(0.0)), F.lit(1.0))
-            * 255.0
-        ).cast("int"),
-    )
-
-    @pandas_udf("binary")
-    def to_png(pxs: pd.Series) -> pd.Series:
-        out = []
-        for p in pxs:
-            a = np.asarray(list(p), dtype=np.uint8)
-            out.append(enc(a.reshape(len(a) // width, width)))
-        return pd.Series(out)
-
-    return emb.select(F.col(id_col).alias("asset_id"), q.alias("_px")).select(
-        "asset_id", to_png("_px").alias("payload")
+    stream (functions/png.py), Adam7-interlaced when ``interlaced``.
+    Gives the decode path genuine bytes to chew on without any external
+    image fixture."""
+    return _fabricate(
+        emb,
+        id_col,
+        _gray8(vec_col),
+        lambda s: encode_png(s.astype(np.uint8).reshape(-1, width), interlace=interlaced),
     )
 
 
@@ -222,59 +285,30 @@ def embeddings_as_jpeg_assets(
 ) -> DataFrame:
     """Fabricate REAL baseline-JPEG payloads from driver data: each
     embedding element is quantized to 8-bit grey JVM-side (the same
-    floor(clip((x+1)/2)*255) rule as the PNG twin) and painted as a
-    CONSTANT 8×8 block — 64 elements → a 64×64 image, 8 blocks per row —
-    then encoded by the from-scratch baseline encoder (functions/jpeg.py)
-    in an Arrow pandas UDF. Per-block-constant content makes the lossy
-    DC-only reconstruction closed-form computable by a SQL oracle (see
+    :func:`_gray8` rule as the PNG twin) and painted as a CONSTANT 8×8
+    block — 64 elements → a 64×64 image, 8 blocks per row — then encoded
+    by the from-scratch baseline encoder (functions/jpeg.py) in an Arrow
+    pandas UDF. Per-block-constant content makes the lossy DC-only
+    reconstruction closed-form computable by a SQL oracle (see
     functions/jpeg.py determinism contract), while the bitstream still
-    exercises the full marker/Huffman/entropy path."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    exercises the full marker/Huffman/entropy path.
 
-    from multithreaded_map_reduce_library_spark.functions.jpeg import (
-        encode_jpeg_gray,
-        encode_jpeg_gray_progressive,
-    )
+    The encode/decode kernels are compute-bound while the input is a
+    handful of parquet splits (one, at test SFs): ``spread`` moves the
+    skinny (id, 64 quantized ints) rows across the cluster BEFORE the
+    expensive per-asset work — the shuffle moves ~260 B/row, the kernel
+    costs ~3 ms/asset. Same pattern as a real 100 TB image pipeline:
+    repartition metadata, not pixels. ``spread=False`` for streaming
+    plans, where parallelism comes from the file source and the ingest
+    tier stays shuffle-free."""
+    enc = encode_jpeg_gray_progressive if progressive else encode_jpeg_gray
 
-    q = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(
-            F.least(F.greatest((x.cast("double") + 1.0) / 2.0, F.lit(0.0)), F.lit(1.0))
-            * 255.0
-        ).cast("int"),
-    )
+    def to_jpeg(s):
+        blocks = s.astype(np.uint8).reshape(-1, 8)
+        img = np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1)
+        return enc(img, qscale=qscale, restart_interval=restart_interval)
 
-    @pandas_udf("binary")
-    def to_jpeg(pxs: pd.Series) -> pd.Series:
-        out = []
-        for p in pxs:
-            vals = np.asarray(list(p), dtype=np.uint8)
-            blocks_per_row = 8
-            n_rows = len(vals) // blocks_per_row
-            img = np.repeat(
-                np.repeat(vals.reshape(n_rows, blocks_per_row), 8, axis=0), 8, axis=1
-            )
-            enc = encode_jpeg_gray_progressive if progressive else encode_jpeg_gray
-            out.append(
-                enc(img, qscale=qscale, restart_interval=restart_interval)
-            )
-        return pd.Series(out)
-
-    # The encode/decode kernels are compute-bound while the input is a
-    # handful of parquet splits (one, at test SFs): spread the skinny
-    # (id, 64 quantized ints) rows across the cluster BEFORE the
-    # expensive per-asset work — the shuffle moves ~260 B/row, the
-    # kernel costs ~3 ms/asset. Same pattern as a real 100 TB image
-    # pipeline: repartition metadata, not pixels. ``spread=False`` for
-    # streaming plans, where parallelism comes from the file source and
-    # the ingest tier stays shuffle-free.
-    sel = emb.select(F.col(id_col).alias("asset_id"), q.alias("_px"))
-    if spread:
-        par = emb.sparkSession.sparkContext.defaultParallelism
-        sel = sel.repartition(par, "asset_id")
-    return sel.select("asset_id", to_jpeg("_px").alias("payload"))
+    return _fabricate(emb, id_col, _gray8(vec_col), to_jpeg, spread=spread)
 
 
 def embeddings_as_jpeg420_assets(
@@ -294,57 +328,23 @@ def embeddings_as_jpeg420_assets(
     DC-only THROUGH the chroma box-mean downsample, so the full color
     chain — BT.601 forward, two quant tables, subsample, DCT, entropy,
     upsample, BT.601 inverse — reconstructs in closed form a SQL oracle
-    replays (identical double expressions both engines)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from multithreaded_map_reduce_library_spark.functions.jpeg import (
-        encode_jpeg_rgb,
-        encode_jpeg_rgb_multiscan,
-        encode_jpeg_rgb_progressive,
-    )
-
+    replays (identical double expressions both engines). Spread across
+    the cluster like :func:`embeddings_as_jpeg_assets`."""
     if progressive and multiscan:
         raise ValueError("pick one of progressive / multiscan")
+    if progressive:
+        enc = encode_jpeg_rgb_progressive
+    else:
+        enc = encode_jpeg_rgb_multiscan if multiscan else encode_jpeg_rgb
 
-    q = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(
-            F.least(F.greatest((x.cast("double") + 1.0) / 2.0, F.lit(0.0)), F.lit(1.0))
-            * 255.0
-        ).cast("int"),
-    )
+    def to_jpeg420(s):
+        grid = s[:48].astype(np.uint8).reshape(4, 4, 3)
+        img = np.repeat(np.repeat(grid, 16, axis=0), 16, axis=1)
+        return enc(
+            img, qscale=qscale, subsampling=subsampling, restart_interval=restart_interval
+        )
 
-    @pandas_udf("binary")
-    def to_jpeg420(pxs: pd.Series) -> pd.Series:
-        if progressive:
-            base = encode_jpeg_rgb_progressive
-        else:
-            base = encode_jpeg_rgb_multiscan if multiscan else encode_jpeg_rgb
-
-        def enc(img, qscale, subsampling):
-            return base(
-                img,
-                qscale=qscale,
-                subsampling=subsampling,
-                restart_interval=restart_interval,
-            )
-
-        out = []
-        for p in pxs:
-            vals = np.asarray(list(p)[:48], dtype=np.uint8).reshape(16, 3)
-            grid = vals.reshape(4, 4, 3)
-            img = np.repeat(np.repeat(grid, 16, axis=0), 16, axis=1)
-            out.append(enc(img, qscale=qscale, subsampling=subsampling))
-        return pd.Series(out)
-
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    return (
-        emb.select(F.col(id_col).alias("asset_id"), q.alias("_px"))
-        .repartition(par, "asset_id")
-        .select("asset_id", to_jpeg420("_px").alias("payload"))
-    )
+    return _fabricate(emb, id_col, _gray8(vec_col), to_jpeg420, spread=True)
 
 
 SEGMENT_SCHEMA = StructType(
@@ -376,33 +376,14 @@ def split_jpeg_segments(assets: DataFrame) -> DataFrame:
     image spreads across executors: the SPLIT is a cheap marker scan;
     the expensive DCT work lands on whichever tasks receive the
     segments after the repartition."""
-    import pandas as pd
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from multithreaded_map_reduce_library_spark.functions.jpeg import (
-            split_restart_segments,
-        )
+    def split(payload):
+        header, n_total, segs = split_restart_segments(payload)
+        starts = [start for start, _ in segs]
+        n_mcus = np.diff(np.asarray(starts + [n_total], dtype=np.int64))
+        return np.arange(len(segs)), n_mcus, header, [seg for _, seg in segs]
 
-        for pdf in it:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                header, n_total, segs = split_restart_segments(
-                    bytes(payload) if payload is not None else b""
-                )
-                for i, (mcu_start, seg) in enumerate(segs):
-                    next_start = segs[i + 1][0] if i + 1 < len(segs) else n_total
-                    rows.append(
-                        {
-                            "asset_id": asset_id,
-                            "seg_idx": i,
-                            "n_mcus": next_start - mcu_start,
-                            "header": header,
-                            "segment": seg,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in SEGMENT_SCHEMA.fields])
-
-    return assets.select("asset_id", "payload").mapInPandas(batches, SEGMENT_SCHEMA)
+    return _map_assets(assets, SEGMENT_SCHEMA, split)
 
 
 def decode_jpeg_segments(segments: DataFrame) -> DataFrame:
@@ -411,34 +392,13 @@ def decode_jpeg_segments(segments: DataFrame) -> DataFrame:
     repartitions between the stages so one asset's segments fan out
     across the cluster — the groupBy that reassembles per-asset totals
     moves 2 ints per segment, never pixels."""
-    import pandas as pd
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from multithreaded_map_reduce_library_spark.functions.jpeg import (
-            decode_segment_pixel_sum,
-        )
+    def decode(segment, header, n_mcus, seg_idx):
+        return (seg_idx, *decode_segment_pixel_sum(header, segment, int(n_mcus)))
 
-        for pdf in it:
-            rows = []
-            for asset_id, seg_idx, n_mcus, header, segment in zip(
-                pdf["asset_id"], pdf["seg_idx"], pdf["n_mcus"], pdf["header"], pdf["segment"]
-            ):
-                nb, s = decode_segment_pixel_sum(
-                    bytes(header), bytes(segment), int(n_mcus)
-                )
-                rows.append(
-                    {
-                        "asset_id": asset_id,
-                        "seg_idx": seg_idx,
-                        "n_blocks": nb,
-                        "sum_px_part": s,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in SEGMENT_SUM_SCHEMA.fields]
-            )
-
-    return segments.mapInPandas(batches, SEGMENT_SUM_SCHEMA)
+    return _map_assets(
+        segments, SEGMENT_SUM_SCHEMA, decode, ("segment", "header", "n_mcus", "seg_idx")
+    )
 
 
 DECODE_META_SCHEMA = StructType(
@@ -453,38 +413,19 @@ DECODE_META_SCHEMA = StructType(
 
 
 def decode_image_meta(assets: DataFrame) -> DataFrame:
-    """mapInPandas REAL image decode: each payload is parsed as PNG
-    (stdlib codec / PIL) and reduced to its decoded geometry plus the
+    """mapInPandas REAL image decode: each payload is parsed by the
+    stdlib PNG or JPEG codec and reduced to its decoded geometry plus the
     exact integer pixel sum — pure-int outputs, so an oracle that knows
     how the pixels were produced can value-hash the result. The 100 TB
     plan shape: parquet scan of binary column -> Arrow batches ->
     per-batch decode -> tiny typed rows out; no driver involvement."""
-    import pandas as pd
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def meta(payload):
+        a = _decode_image_bytes(payload)
+        c = a.shape[2] if a.ndim == 3 else 1
+        return a.shape[1], a.shape[0], c, int(a.sum())
 
-        for pdf in it:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                arr = _decode_image_bytes(bytes(payload) if payload is not None else b"")
-                a = np.asarray(arr)
-                if a.ndim == 2:
-                    h, w, c = a.shape[0], a.shape[1], 1
-                else:
-                    h, w, c = a.shape
-                rows.append(
-                    {
-                        "asset_id": asset_id,
-                        "width": w,
-                        "height": h,
-                        "channels": c,
-                        "sum_px": int(a.sum()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in DECODE_META_SCHEMA.fields])
-
-    return assets.select("asset_id", "payload").mapInPandas(batches, DECODE_META_SCHEMA)
+    return _map_assets(assets, DECODE_META_SCHEMA, meta)
 
 
 CHECKSUM_SCHEMA = StructType(
@@ -507,33 +448,13 @@ def decode_image_checksum(assets: DataFrame) -> DataFrame:
     de-interlace scatter) breaks the hash even though the plain sum
     survives. Same Arrow mapInPandas plan shape, stdlib codec only in
     the hashed path."""
-    import pandas as pd
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def checksum(payload):
+        w, h, c, arr = decode_png(payload)
+        flat = arr.astype(np.int64).reshape(-1)
+        return w, h, c, int(flat.sum()), _wsum(flat)
 
-        from multithreaded_map_reduce_library_spark.functions.png import decode_png
-
-        for pdf in it:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, c, arr = decode_png(
-                    bytes(payload) if payload is not None else b""
-                )
-                flat = np.asarray(arr, dtype=np.int64).reshape(-1)
-                rows.append(
-                    {
-                        "asset_id": asset_id,
-                        "width": w,
-                        "height": h,
-                        "channels": c,
-                        "sum_px": int(flat.sum()),
-                        "wsum_px": int((flat * np.arange(1, len(flat) + 1)).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in CHECKSUM_SCHEMA.fields])
-
-    return assets.select("asset_id", "payload").mapInPandas(batches, CHECKSUM_SCHEMA)
+    return _map_assets(assets, CHECKSUM_SCHEMA, checksum)
 
 
 def frame_sample(assets: DataFrame, every_n_bytes: int = 1024) -> DataFrame:
@@ -571,42 +492,30 @@ def ahash_assets(assets: DataFrame) -> DataFrame:
     deterministic fallback decoder makes the hash oracle-replayable
     (pipeline26) while a real codec drops in without changing the plan.
     """
-    import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, hashes = [], []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                img = np.asarray(_decode_image_bytes(raw), dtype=np.float64)
-                if img.ndim == 3:  # RGB(A) -> luma-free mean collapse
-                    img = img.mean(axis=2)
-                # downsample to 8x8 by block mean when larger (real codec
-                # path); the fake decoder is already 8x8. Images with either
-                # dimension < 8 can't block-mean (h - h%8 == 0 would yield an
-                # all-NaN grid and collapse every tiny image to one hash) —
-                # replicate edges up to 8 first, which keeps the hash a pure
-                # function of the pixels.
-                if img.shape != (8, 8):
-                    h, w = img.shape
-                    if h < 8:
-                        img = np.repeat(img, -(-8 // h), axis=0)[:8]
-                        h = 8
-                    if w < 8:
-                        img = np.repeat(img, -(-8 // w), axis=1)[:8]
-                        w = 8
-                    img = img[: h - h % 8, : w - w % 8]
-                    img = img.reshape(8, h // 8, 8, w // 8).mean(axis=(1, 3))
-                flat = img.ravel()
-                bits = flat > flat.mean()
-                val = 0
-                for b in bits:
-                    val = (val << 1) | int(b)
-                ids.append(asset_id)
-                hashes.append(f"{val:016x}")
-            yield pd.DataFrame({"asset_id": ids, "ahash": hashes})
+    def ahash(payload):
+        img = _decode_image_bytes(payload)
+        if img.ndim == 3:  # RGB(A) -> luma-free mean collapse
+            img = img.mean(axis=2)
+        # downsample to 8x8 by block mean when larger (real codec path);
+        # the fake decoder is already 8x8. Images with either dimension
+        # < 8 can't block-mean (h - h%8 == 0 would yield an all-NaN grid
+        # and collapse every tiny image to one hash) — replicate edges up
+        # to 8 first, which keeps the hash a pure function of the pixels.
+        if img.shape != (8, 8):
+            h, w = img.shape
+            if h < 8:
+                img = np.repeat(img, -(-8 // h), axis=0)[:8]
+                h = 8
+            if w < 8:
+                img = np.repeat(img, -(-8 // w), axis=1)[:8]
+                w = 8
+            img = img[: h - h % 8, : w - w % 8]
+            img = img.reshape(8, h // 8, 8, w // 8).mean(axis=(1, 3))
+        flat = img.ravel()
+        return (np.packbits(flat > flat.mean()).tobytes().hex(),)
 
-    return assets.mapInPandas(batches, AHASH_SCHEMA)
+    return _map_assets(assets, AHASH_SCHEMA, ahash)
 
 
 # --------------------------------------------------------------------------
@@ -619,76 +528,24 @@ WAV_SAMPLE_RATE = 16_000
 WAV_FRAME = 16  # samples per analysis frame
 
 
-def _quantized(vec_col: str, scale: float) -> Column:
-    """``floor(clamp(x, -1, 1) * scale + 0.5)`` per element, as an int,
-    JVM-side: exact IEEE ops, so an oracle replays the samples from the
-    embedding column directly."""
-    return F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(
-            F.least(F.greatest(x.cast("double"), F.lit(-1.0)), F.lit(1.0)) * scale
-            + F.lit(0.5)
-        ).cast("int"),
-    )
+def _wav(envelope, kernel):
+    """A :func:`_map_assets` kernel that first decodes the payload within
+    ``envelope`` (functions/wav.py), then calls
+    ``kernel(sample_rate, samples, *other_inputs)``."""
+    return lambda payload, *rest: kernel(*decode_wav(payload, envelope), *rest)
 
 
 def _wav_assets(
     emb: DataFrame, id_col: str, samples: Column, fmt: str, channels: int = 1
 ) -> DataFrame:
     """(asset_id, payload) rows: each row's ``samples`` array, interleaved
-    over ``channels``, packed by ``encode_wav`` in an Arrow pandas UDF."""
-    from pyspark.sql.functions import pandas_udf
-
-    from multithreaded_map_reduce_library_spark.functions.wav import encode_wav
-
-    @pandas_udf("binary")
-    def to_wav(col: pd.Series) -> pd.Series:
-        return pd.Series(
-            [encode_wav(np.reshape(s, (-1, channels)), WAV_SAMPLE_RATE, fmt) for s in col]
-        )
-
-    return emb.select(F.col(id_col).alias("asset_id"), samples.alias("_s")).select(
-        "asset_id", to_wav("_s").alias("payload")
+    over ``channels``, packed by ``encode_wav``."""
+    return _fabricate(
+        emb,
+        id_col,
+        samples,
+        lambda s: encode_wav(np.reshape(s, (-1, channels)), WAV_SAMPLE_RATE, fmt),
     )
-
-
-def _map_wav(
-    assets: DataFrame, envelope, schema: StructType, kernel, extra: tuple[str, ...] = ()
-) -> DataFrame:
-    """Arrow-batched mapInPandas over WAV assets: decode each payload
-    within ``envelope`` (functions/wav.py), then
-    ``kernel(sample_rate, samples, *extra_values)`` returns the schema's
-    columns after ``asset_id``. A column is either always a scalar (one
-    value for all of the asset's rows) or always an array (one element
-    per row). Columns are collected per batch and joined once; a
-    ValueError names its asset."""
-    from multithreaded_map_reduce_library_spark.functions.wav import decode_wav
-
-    names = [f.name for f in schema.fields]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, counts, cols = [], [], [[] for _ in names[1:]]
-            for asset_id, payload, *rest in zip(
-                *(pdf[c] for c in ("asset_id", "payload", *extra))
-            ):
-                try:
-                    out = kernel(*decode_wav(payload or b"", envelope), *rest)
-                except ValueError as e:
-                    raise ValueError(f"asset {asset_id}: {e}") from e
-                ids.append(asset_id)
-                counts.append(next((len(v) for v in out if hasattr(v, "__len__")), 1))
-                for col, v in zip(cols, out):
-                    col.append(v)
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        n: np.concatenate(c) if hasattr(c[0], "__len__") else np.repeat(c, counts)
-                        for n, c in zip(names, [ids, *cols])
-                    }
-                )
-
-    return assets.select("asset_id", "payload", *extra).mapInPandas(batches, schema)
 
 
 def _frames(s: np.ndarray, frame: int) -> np.ndarray:
@@ -737,13 +594,12 @@ def wav_frame_energy(assets: DataFrame, frame: int = WAV_FRAME) -> DataFrame:
 
     Non-WAV payloads raise (fail loud — ADVICE r2 envelope discipline);
     trailing samples short of a full frame are dropped (documented)."""
-    from multithreaded_map_reduce_library_spark.functions.wav import PCM16_MONO
 
     def energy(sr, s):
         e = _frame_energy(s, frame)[:, 0]
         return sr, len(s), np.arange(len(e)), e
 
-    return _map_wav(assets, PCM16_MONO, WAV_ENERGY_SCHEMA, energy)
+    return _map_assets(assets, WAV_ENERGY_SCHEMA, _wav(PCM16_MONO, energy))
 
 
 WAV_FEATURES_SCHEMA = StructType(
@@ -775,7 +631,6 @@ def wav_frame_features(assets: DataFrame, frame: int = WAV_FRAME) -> DataFrame:
 
     Non-WAV payloads raise; trailing samples short of a frame drop
     (same documented envelope as :func:`wav_frame_energy`)."""
-    from multithreaded_map_reduce_library_spark.functions.wav import PCM16_MONO
 
     def features(sr, s):
         w = _frames(s, frame)[..., 0]
@@ -783,7 +638,7 @@ def wav_frame_features(assets: DataFrame, frame: int = WAV_FRAME) -> DataFrame:
         zcr = (neg[:, :-1] != neg[:, 1:]).sum(axis=1)
         return np.arange(len(w)), (w * w).sum(axis=1), zcr, np.abs(w).max(axis=1)
 
-    return _map_wav(assets, PCM16_MONO, WAV_FEATURES_SCHEMA, features)
+    return _map_assets(assets, WAV_FEATURES_SCHEMA, _wav(PCM16_MONO, features))
 
 
 # --------------------------------------------------------------------------
@@ -837,14 +692,13 @@ def wav_pcm_frame_energy(assets: DataFrame, frame: int = WAV_FRAME) -> DataFrame
 
     Scale: map-side Arrow decode, skinny integer rows out, zero
     shuffles; at 100 TB only frames-per-asset grows."""
-    from multithreaded_map_reduce_library_spark.functions.wav import PCM_16_24
 
     def energy(sr, s):
         e = _frame_energy(s, frame).T  # (channel, frame)
         ch, f = np.indices(e.shape)
         return sr, ch.ravel(), len(s), f.ravel(), e.ravel()
 
-    return _map_wav(assets, PCM_16_24, WAV_PCM_ENERGY_SCHEMA, energy)
+    return _map_assets(assets, WAV_PCM_ENERGY_SCHEMA, _wav(PCM_16_24, energy))
 
 
 def embeddings_as_wav_float32_assets(emb: DataFrame, id_col: str = "vec_id",
@@ -880,13 +734,12 @@ def wav_float32_frame_energy(assets: DataFrame, frame: int = WAV_FRAME) -> DataF
     Envelope: fmt 3 requires bits=32 and mono here; everything else
     raises (fmt-1 PCM belongs to :func:`wav_pcm_frame_energy`). A data
     chunk not divisible by 4 raises (truncated payload)."""
-    from multithreaded_map_reduce_library_spark.functions.wav import FLOAT32_MONO
 
     def energy(sr, v):
         e = _frame_energy(np.floor(v * 1e6 + 0.5).astype(np.int64), frame)[:, 0]
         return sr, len(v), np.arange(len(e)), e
 
-    return _map_wav(assets, FLOAT32_MONO, WAV_F32_ENERGY_SCHEMA, energy)
+    return _map_assets(assets, WAV_F32_ENERGY_SCHEMA, _wav(FLOAT32_MONO, energy))
 
 
 # --------------------------------------------------------------------------
@@ -904,23 +757,9 @@ def embeddings_as_video_assets(emb: DataFrame, id_col: str = "vec_id",
     (magic, w, h, n_frames). The video twin of
     :func:`embeddings_as_wav_assets`: a byte-real container whose every
     pixel an oracle can replay from the embedding column."""
-    import struct
-
-    from pyspark.sql.functions import pandas_udf
-
-    q = _quantized(vec_col, 32767.0)
-
-    @pandas_udf("binary")
-    def to_video(samples: pd.Series) -> pd.Series:
-        out = []
-        for s in samples:
-            px = np.asarray(list(s), dtype="<i2").tobytes()
-            hdr = b"RAWV" + struct.pack("<HHI", VIDEO_W, VIDEO_H, VIDEO_FRAMES)
-            out.append(hdr + px)
-        return pd.Series(out)
-
-    return emb.select(F.col(id_col).alias("asset_id"), q.alias("_s")).select(
-        "asset_id", to_video("_s").alias("payload")
+    hdr = b"RAWV" + struct.pack("<HHI", VIDEO_W, VIDEO_H, VIDEO_FRAMES)
+    return _fabricate(
+        emb, id_col, _quantized(vec_col, 32767.0), lambda s: hdr + s.astype("<i2").tobytes()
     )
 
 
@@ -941,29 +780,17 @@ def video_frame_deltas(assets: DataFrame) -> DataFrame:
     thresholds on. Arrow-batched mapInPandas; same 100 TB shape as the
     image/audio decode paths (map-side, skinny integer rows, no
     driver). Non-RAWV payloads raise (fail-loud envelope)."""
-    import struct
 
-    import numpy as np
+    def deltas(raw):
+        if len(raw) < 12 or raw[:4] != b"RAWV":
+            raise ValueError("not a RAWV payload")
+        w, h, n = struct.unpack("<HHI", raw[4:12])
+        if len(raw) - 12 != 2 * w * h * n:
+            raise ValueError("truncated RAWV body")
+        frames = np.frombuffer(raw, dtype="<i2", offset=12).astype(np.int64)
+        return np.arange(1, n), np.abs(np.diff(frames.reshape(n, w * h), axis=0)).sum(axis=1)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, fidx, dl = [], [], []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                if len(raw) < 12 or raw[:4] != b"RAWV":
-                    raise ValueError(f"asset {asset_id}: not a RAWV payload")
-                w, h, n = struct.unpack("<HHI", raw[4:12])
-                if len(raw) - 12 != 2 * w * h * n:
-                    raise ValueError(f"asset {asset_id}: truncated RAWV body")
-                px = np.frombuffer(raw[12:], dtype="<i2").astype(np.int64)
-                frames = px.reshape(n, w * h)
-                for f in range(1, n):
-                    ids.append(asset_id)
-                    fidx.append(f)
-                    dl.append(int(np.abs(frames[f] - frames[f - 1]).sum()))
-            yield pd.DataFrame({"asset_id": ids, "frame_idx": fidx, "l1_delta": dl})
-
-    return assets.select("asset_id", "payload").mapInPandas(batches, VIDEO_DELTA_SCHEMA)
+    return _map_assets(assets, VIDEO_DELTA_SCHEMA, deltas)
 
 
 # --------------------------------------------------------------------------
@@ -995,43 +822,22 @@ def image_sobel_energy(assets: DataFrame) -> DataFrame:
     Arrow batches → per-asset numpy kernel → skinny typed rows; map-side
     only, no shuffle, no driver."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def sobel(payload):
+        w, h, a = _gray_png("sobel", payload)
+        # interior gradients via shifted slices (no scipy needed)
+        gx = (
+            -a[:-2, :-2] + a[:-2, 2:]
+            - 2 * a[1:-1, :-2] + 2 * a[1:-1, 2:]
+            - a[2:, :-2] + a[2:, 2:]
+        )
+        gy = (
+            -a[:-2, :-2] - 2 * a[:-2, 1:-1] - a[:-2, 2:]
+            + a[2:, :-2] + 2 * a[2:, 1:-1] + a[2:, 2:]
+        )
+        g = np.abs(gx) + np.abs(gy)
+        return w, h, int(g.sum()), int(g.max()) if g.size else 0
 
-        from multithreaded_map_reduce_library_spark.functions.png import decode_png
-
-        for pdf in it:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, c, arr = decode_png(
-                    bytes(payload) if payload is not None else b""
-                )
-                if c != 1:
-                    raise NotImplementedError("sobel: grayscale images only")
-                a = np.asarray(arr, dtype=np.int64).reshape(h, w)
-                # interior gradients via shifted slices (no scipy needed)
-                gx = (
-                    -a[:-2, :-2] + a[:-2, 2:]
-                    - 2 * a[1:-1, :-2] + 2 * a[1:-1, 2:]
-                    - a[2:, :-2] + a[2:, 2:]
-                )
-                gy = (
-                    -a[:-2, :-2] - 2 * a[:-2, 1:-1] - a[:-2, 2:]
-                    + a[2:, :-2] + 2 * a[2:, 1:-1] + a[2:, 2:]
-                )
-                g = np.abs(gx) + np.abs(gy)
-                rows.append(
-                    {
-                        "asset_id": asset_id,
-                        "width": w,
-                        "height": h,
-                        "edge_energy": int(g.sum()),
-                        "edge_max": int(g.max()) if g.size else 0,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in SOBEL_SCHEMA.fields])
-
-    return assets.select("asset_id", "payload").mapInPandas(batches, SOBEL_SCHEMA)
+    return _map_assets(assets, SOBEL_SCHEMA, sobel)
 
 
 # --------------------------------------------------------------------------
@@ -1063,7 +869,6 @@ def wav_quadrature_energy(assets: DataFrame) -> DataFrame:
 
     Scale shape: decode_wav (PCM16 mono) + numpy strided slices inside
     Arrow batches; map-side, one skinny row per asset, no shuffle."""
-    from multithreaded_map_reduce_library_spark.functions.wav import PCM16_MONO
 
     def bin_power(sr, s):
         s = s[:, 0]
@@ -1071,7 +876,7 @@ def wav_quadrature_energy(assets: DataFrame) -> DataFrame:
         im = int(s[3::4].sum() - s[1::4].sum())
         return len(s), re, im, re * re + im * im, (s * s).sum()
 
-    return _map_wav(assets, PCM16_MONO, QUADRATURE_SCHEMA, bin_power)
+    return _map_assets(assets, QUADRATURE_SCHEMA, _wav(PCM16_MONO, bin_power))
 
 
 # --------------------------------------------------------------------------
@@ -1105,45 +910,22 @@ def image_hist_equalization(assets: DataFrame) -> DataFrame:
     Scale shape: per-asset Arrow kernel (mapInPandas) over the binary
     scan — map-side only, one skinny row per asset, no shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def histeq(payload):
+        bucket = _gray_png("histeq", payload)[2].reshape(-1) >> 4  # 256 levels -> 16
+        hist = np.bincount(bucket, minlength=_HISTEQ_BUCKETS)
+        cdf = np.cumsum(hist)
+        nonzero = np.nonzero(hist)[0]
+        cdf_min = int(cdf[nonzero[0]]) if len(nonzero) else 0
+        den = len(bucket) - cdf_min
+        if den == 0:
+            mapped = np.zeros(_HISTEQ_BUCKETS, dtype=np.int64)
+        else:
+            num = (cdf - cdf_min) * (_HISTEQ_BUCKETS - 1)
+            mapped = (num + den // 2) // den  # half-up, num >= 0
+        eq = mapped[bucket]
+        return len(bucket), len(nonzero), int(eq.sum()), _wsum(eq)
 
-        from multithreaded_map_reduce_library_spark.functions.png import decode_png
-
-        for pdf in it:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, c, arr = decode_png(
-                    bytes(payload) if payload is not None else b""
-                )
-                if c != 1:
-                    raise NotImplementedError("histeq: grayscale images only")
-                flat = np.asarray(arr, dtype=np.int64).reshape(-1)
-                n = len(flat)
-                bucket = flat >> 4  # 256 levels -> 16 buckets
-                hist = np.bincount(bucket, minlength=_HISTEQ_BUCKETS)
-                cdf = np.cumsum(hist)
-                nonzero = np.nonzero(hist)[0]
-                cdf_min = int(cdf[nonzero[0]]) if len(nonzero) else 0
-                den = n - cdf_min
-                if den == 0:
-                    mapped = np.zeros(_HISTEQ_BUCKETS, dtype=np.int64)
-                else:
-                    num = (cdf - cdf_min) * (_HISTEQ_BUCKETS - 1)
-                    mapped = (num + den // 2) // den  # half-up, num >= 0
-                eq = mapped[bucket]
-                rows.append(
-                    {
-                        "asset_id": asset_id,
-                        "n_px": n,
-                        "n_buckets_used": int(len(nonzero)),
-                        "eq_sum": int(eq.sum()),
-                        "eq_wsum": int((eq * np.arange(1, n + 1)).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in HISTEQ_SCHEMA.fields])
-
-    return assets.select("asset_id", "payload").mapInPandas(batches, HISTEQ_SCHEMA)
+    return _map_assets(assets, HISTEQ_SCHEMA, histeq)
 
 
 # --------------------------------------------------------------------------
@@ -1175,7 +957,6 @@ def wav_autocorrelation(assets: DataFrame) -> DataFrame:
     Scale shape: decode_wav (PCM16 mono) + numpy shifted dot products
     inside Arrow batches; map-side, |lags| skinny rows per asset, no
     shuffle."""
-    from multithreaded_map_reduce_library_spark.functions.wav import PCM16_MONO
 
     def acf(sr, s):
         s = s[:, 0]
@@ -1183,7 +964,7 @@ def wav_autocorrelation(assets: DataFrame) -> DataFrame:
         # lags ascend, so argmax's first maximum is the smallest-lag tie-break
         return AUTOCORR_LAGS, v, (s * s).sum(), np.arange(len(v)) == v.argmax()
 
-    return _map_wav(assets, PCM16_MONO, AUTOCORR_SCHEMA, acf)
+    return _map_assets(assets, AUTOCORR_SCHEMA, _wav(PCM16_MONO, acf))
 
 
 # --------------------------------------------------------------------------
@@ -1214,39 +995,15 @@ def image_downscale2(assets: DataFrame) -> DataFrame:
     Scale shape: per-asset Arrow kernel (mapInPandas) over the binary
     scan — map-side only, one skinny row per asset, no shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def downscale(payload):
+        w, h, img = _gray_png("downscale2", payload)
+        if w % 2 or h % 2:
+            raise NotImplementedError("downscale2: even dimensions only")
+        blk = img[0::2, 0::2] + img[0::2, 1::2] + img[1::2, 0::2] + img[1::2, 1::2]
+        flat = ((blk + 2) // 4).reshape(-1)  # half-up, operands nonnegative
+        return w // 2, h // 2, int(flat.sum()), _wsum(flat)
 
-        from multithreaded_map_reduce_library_spark.functions.png import decode_png
-
-        for pdf in it:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, c, arr = decode_png(
-                    bytes(payload) if payload is not None else b""
-                )
-                if c != 1:
-                    raise NotImplementedError("downscale2: grayscale images only")
-                if w % 2 or h % 2:
-                    raise NotImplementedError("downscale2: even dimensions only")
-                img = np.asarray(arr, dtype=np.int64).reshape(h, w)
-                blk = (
-                    img[0::2, 0::2] + img[0::2, 1::2] + img[1::2, 0::2] + img[1::2, 1::2]
-                )
-                ds = (blk + 2) // 4  # half-up, operands nonnegative
-                flat = ds.reshape(-1)
-                rows.append(
-                    {
-                        "asset_id": asset_id,
-                        "out_w": w // 2,
-                        "out_h": h // 2,
-                        "ds_sum": int(flat.sum()),
-                        "ds_wsum": int((flat * np.arange(1, len(flat) + 1)).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in DOWNSCALE_SCHEMA.fields])
-
-    return assets.select("asset_id", "payload").mapInPandas(batches, DOWNSCALE_SCHEMA)
+    return _map_assets(assets, DOWNSCALE_SCHEMA, downscale)
 
 
 # --------------------------------------------------------------------------
@@ -1290,7 +1047,6 @@ def wav_ulaw_roundtrip_energy(
 
     ``originals``: (asset_id, s16 array<int>) — the pre-companding
     samples, carried alongside so the error is exact, not estimated."""
-    from multithreaded_map_reduce_library_spark.functions.wav import ULAW_MONO
 
     def roundtrip(sr, dec, orig):
         o = np.asarray(orig, dtype=np.int64).reshape(-1, 1)
@@ -1301,4 +1057,6 @@ def wav_ulaw_roundtrip_energy(
         return np.arange(len(e)), e, _frame_energy(err, frame)[:, 0]
 
     joined = assets.join(originals, "asset_id")
-    return _map_wav(joined, ULAW_MONO, ULAW_ROUNDTRIP_SCHEMA, roundtrip, extra=("s16",))
+    return _map_assets(
+        joined, ULAW_ROUNDTRIP_SCHEMA, _wav(ULAW_MONO, roundtrip), ("payload", "s16")
+    )

@@ -857,8 +857,8 @@ def multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode, end to end: embeddings are quantized to 8-bit
     grey JVM-side, encoded to genuine PNG byte streams in an Arrow pandas
     UDF (functions/png.py), then DECODED back by the mapInPandas decode
-    stage (operators/multimodal.decode_image_meta — stdlib zlib codec, or
-    PIL where installed). Output is the decoded geometry plus the exact
+    stage (operators/multimodal.decode_image_meta — stdlib zlib codec).
+    Output is the decoded geometry plus the exact
     integer pixel sum; the oracle computes the same quantization directly
     from the embedding, so any codec bug breaks the value hash. Replaces
     the round-1 NotImplementedError decode stub with a tested path."""

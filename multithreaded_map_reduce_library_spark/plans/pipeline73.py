@@ -10,11 +10,18 @@ the embedding column — any codec bug breaks the value hash.
 
 from __future__ import annotations
 
-import pandas as pd  # module-level so pandas-UDF type hints resolve
+import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
+from multithreaded_map_reduce_library_spark.functions.png import decode_png, encode_png
+from multithreaded_map_reduce_library_spark.operators.multimodal import (
+    _fabricate,
+    _gray_png,
+    _map_assets,
+    _quantized,
+)
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -25,6 +32,16 @@ _PAL = [((i * 5) % 256, (i * 11) % 256, (i * 23) % 256) for i in range(16)]
 _IDX = (
     "CAST(FLOOR(LEAST(GREATEST(CAST(list_extract(embedding, i) AS DOUBLE), -1.0), 1.0)"
     " * 7.0 + 7.5) AS BIGINT)"
+)
+
+_PALETTE_SCHEMA = StructType(
+    [
+        StructField("asset_id", LongType(), False),
+        StructField("width", IntegerType(), True),
+        StructField("height", IntegerType(), True),
+        StructField("channels", IntegerType(), True),
+        StructField("px_sum", LongType(), True),
+    ]
 )
 
 
@@ -59,72 +76,18 @@ def multimodal_png_palette_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     Scale design: identical to the other decode paths — Arrow-batched
     encode and decode kernels over the binary column, one skinny row
     per asset, zero shuffles."""
-    from pyspark.sql.functions import pandas_udf
-
-    from multithreaded_map_reduce_library_spark.functions.png import (
-        decode_png,
-        encode_png_palette,
+    assets = _fabricate(
+        load_table(spark, sf_dir, "embeddings"),
+        "vec_id",
+        _quantized("embedding", 7.0, 7.5),
+        lambda s: encode_png(s.astype(np.uint8).reshape(8, 8), depth=4, palette=_PAL),
     )
 
-    q = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(
-            F.least(F.greatest(x.cast("double"), F.lit(-1.0)), F.lit(1.0)) * 7.0
-            + F.lit(7.5)
-        ).cast("int"),
-    )
+    def px_sum(payload):
+        w, h, c, arr = decode_png(payload)
+        return w, h, c, int(arr.astype(np.int64).sum())
 
-    @pandas_udf("binary")
-    def to_png(idx: pd.Series) -> pd.Series:
-        import numpy as np
-
-        return pd.Series(
-            [
-                encode_png_palette(
-                    np.asarray(list(v), dtype=np.uint8).reshape(8, 8), _PAL, depth=4
-                )
-                for v in idx
-            ]
-        )
-
-    assets = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("asset_id"), to_png(q).alias("payload")
-    )
-
-    def decode_batches(it):
-        import numpy as np  # noqa: F401
-
-        for pdf in it:
-            ids, ws, hs, cs, sums = [], [], [], [], []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, c, arr = decode_png(bytes(payload))
-                ids.append(asset_id)
-                ws.append(w)
-                hs.append(h)
-                cs.append(c)
-                sums.append(int(arr.astype("int64").sum()))
-            yield pd.DataFrame(
-                {"asset_id": ids, "width": ws, "height": hs,
-                 "channels": cs, "px_sum": sums}
-            )
-
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("asset_id", LongType(), False),
-            StructField("width", IntegerType(), True),
-            StructField("height", IntegerType(), True),
-            StructField("channels", IntegerType(), True),
-            StructField("px_sum", LongType(), True),
-        ]
-    )
-    return assets.mapInPandas(decode_batches, schema)
+    return _map_assets(assets, _PALETTE_SCHEMA, px_sum)
 
 
 #: 16-bit sample: floor(clamp(x,-1,1)*32767 + 32768) in [1, 65535] — the
@@ -132,6 +95,16 @@ def multimodal_png_palette_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
 _S16 = (
     "CAST(FLOOR(LEAST(GREATEST(CAST(list_extract(embedding, i) AS DOUBLE), -1.0), 1.0)"
     " * 32767.0 + 32768.0) AS BIGINT)"
+)
+
+_PNG16_SCHEMA = StructType(
+    [
+        StructField("asset_id", LongType(), False),
+        StructField("width", IntegerType(), True),
+        StructField("height", IntegerType(), True),
+        StructField("px_sum", LongType(), True),
+        StructField("px_max", LongType(), True),
+    ]
 )
 
 
@@ -163,69 +136,15 @@ def multimodal_png16_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale design: same map-side Arrow encode/decode pair, one skinny
     row per asset, zero shuffles."""
-    from pyspark.sql.functions import pandas_udf
-
-    from multithreaded_map_reduce_library_spark.functions.png import (
-        decode_png,
-        encode_png16_gray,
+    assets = _fabricate(
+        load_table(spark, sf_dir, "embeddings"),
+        "vec_id",
+        _quantized("embedding", 32767.0, 32768.0),
+        lambda s: encode_png(s.astype(np.uint16).reshape(8, 8), depth=16),
     )
 
-    q16 = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(
-            F.least(F.greatest(x.cast("double"), F.lit(-1.0)), F.lit(1.0)) * 32767.0
-            + F.lit(32768.0)
-        ).cast("int"),
-    )
+    def px_sum_max(payload):
+        w, h, a = _gray_png("png16", payload)
+        return w, h, int(a.sum()), int(a.max())
 
-    @pandas_udf("binary")
-    def to_png16(vals: pd.Series) -> pd.Series:
-        import numpy as np
-
-        return pd.Series(
-            [
-                encode_png16_gray(
-                    np.asarray(list(v), dtype=np.uint16).reshape(8, 8)
-                )
-                for v in vals
-            ]
-        )
-
-    assets = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("asset_id"), to_png16(q16).alias("payload")
-    )
-
-    def decode_batches(it):
-        for pdf in it:
-            ids, ws, hs, sums, maxs = [], [], [], [], []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, c, arr = decode_png(bytes(payload))
-                assert c == 1
-                a64 = arr.astype("int64")
-                ids.append(asset_id)
-                ws.append(w)
-                hs.append(h)
-                sums.append(int(a64.sum()))
-                maxs.append(int(a64.max()))
-            yield pd.DataFrame(
-                {"asset_id": ids, "width": ws, "height": hs,
-                 "px_sum": sums, "px_max": maxs}
-            )
-
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("asset_id", LongType(), False),
-            StructField("width", IntegerType(), True),
-            StructField("height", IntegerType(), True),
-            StructField("px_sum", LongType(), True),
-            StructField("px_max", LongType(), True),
-        ]
-    )
-    return assets.mapInPandas(decode_batches, schema)
+    return _map_assets(assets, _PNG16_SCHEMA, px_sum_max)

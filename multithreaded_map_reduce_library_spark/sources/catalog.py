@@ -115,53 +115,39 @@ def load_tables(spark: SparkSession, sf_dir: str, names: Iterable[str] = TABLES)
     return {n: load_table(spark, sf_dir, n) for n in names}
 
 
-#: On-disk size cache for the broadcast guard (pure function of the path,
-#: same idempotence argument as session._DIR_BYTES).
-_TABLE_BYTES: dict[str, int] = {}
-
-
 #: Paths already warned about as unmeasurable (one stderr line per path
 #: per process, not one per call).
 _UNMEASURABLE_WARNED: set[str] = set()
 
 
 def _parquet_bytes(path: str) -> int:
-    """On-disk size, FAILING CLOSED (code-review r8): a missing path or
-    an OSError returns a sentinel larger than any cap, so a guard that
-    cannot measure the table never force-broadcasts it — AQE decides
-    from runtime sizes instead. (The old fail-open 0 silently re-enabled
-    the unbounded hint the guard exists to prevent.)
+    """On-disk size of the table's data files (``*.parquet``/``part-*``
+    under a directory), summed from a fresh :func:`_file_stamp` on every
+    call, so a table rewritten in-process reads its new size.
 
-    The sentinel is NOT cached (ADVICE r8): a transient OSError — or a
-    non-local sf_dir where ``os.path`` calls always fail — would
-    otherwise disable broadcast hints for that table for the whole
-    process with no diagnostic. Instead the next call re-measures, and
-    a one-time stderr warning makes the silent hint-drop visible."""
-    total = _TABLE_BYTES.get(path)
-    if total is None:
-        try:
-            if os.path.isdir(path):
-                total = 0
-                for root, _dirs, files in os.walk(path):
-                    total += sum(
-                        os.path.getsize(os.path.join(root, f))
-                        for f in files
-                        if f.endswith(".parquet") or f.startswith("part-")
-                    )
-            else:
-                total = os.path.getsize(path)
-            _TABLE_BYTES[path] = total
-        except OSError as exc:
-            if path not in _UNMEASURABLE_WARNED:
-                _UNMEASURABLE_WARNED.add(path)
-                print(
-                    f"scaled_broadcast: cannot measure {path!r} ({exc}); "
-                    "broadcast hint disabled for this call (fail-closed, "
-                    "re-measured next call)",
-                    file=sys.stderr,
-                )
-            return 1 << 62  # unmeasurable -> over any cap -> no hint
-    return total
+    FAILS CLOSED (code-review r8): a missing path or an OSError returns a
+    sentinel larger than any cap, so a guard that cannot measure the
+    table never force-broadcasts it — AQE decides from runtime sizes
+    instead. (The old fail-open 0 silently re-enabled the unbounded hint
+    the guard exists to prevent.) The next call re-measures, and a
+    one-time stderr warning makes the silent hint-drop visible."""
+    stamp = _file_stamp(path)
+    if stamp is None:
+        if path not in _UNMEASURABLE_WARNED:
+            _UNMEASURABLE_WARNED.add(path)
+            print(
+                f"scaled_broadcast: cannot measure {path!r}; broadcast hint "
+                "disabled for this call (fail-closed, re-measured next call)",
+                file=sys.stderr,
+            )
+        return 1 << 62  # unmeasurable -> over any cap -> no hint
+    return sum(
+        size
+        for name, size, _mtime in stamp
+        if name == path
+        or os.path.basename(name).endswith(".parquet")
+        or os.path.basename(name).startswith("part-")
+    )
 
 
 def scaled_broadcast(df: DataFrame, sf_dir: str, name: str) -> DataFrame:

@@ -42,13 +42,32 @@ def test_unmeasurable_table_not_cached_and_warned_once(capsys):
     from multithreaded_map_reduce_library_spark.sources import catalog
 
     path = "/nonexistent/sf_dir/customer.parquet"
-    catalog._TABLE_BYTES.pop(path, None)
     catalog._UNMEASURABLE_WARNED.discard(path)
     assert catalog._parquet_bytes(path) == 1 << 62
-    assert path not in catalog._TABLE_BYTES  # sentinel not cached
     assert catalog._parquet_bytes(path) == 1 << 62  # re-measured, same
     err = capsys.readouterr().err
     assert err.count("cannot measure") == 1  # warned exactly once
+
+
+def test_rewritten_table_reads_new_size(tmp_path):
+    """A table rewritten in-process is re-measured: a dimension that grows
+    past the cap loses its forced broadcast hint."""
+    from multithreaded_map_reduce_library_spark.sources import catalog
+
+    single = tmp_path / "customer.parquet"
+    single.write_bytes(b"x" * 100)
+    assert catalog._parquet_bytes(str(single)) == 100
+    single.write_bytes(b"x" * 5000)
+    assert catalog._parquet_bytes(str(single)) == 5000
+
+    parts = tmp_path / "part.parquet"
+    parts.mkdir()
+    (parts / "part-00000.snappy.parquet").write_bytes(b"x" * 100)
+    (parts / "_SUCCESS").write_bytes(b"")
+    (parts / ".part-00000.snappy.parquet.crc").write_bytes(b"x" * 7)
+    assert catalog._parquet_bytes(str(parts)) == 100  # no _SUCCESS, no .crc
+    (parts / "part-00001.snappy.parquet").write_bytes(b"x" * 900)
+    assert catalog._parquet_bytes(str(parts)) == 1000
 
 
 def test_q3_result_invariant_to_broadcast_guard(spark):

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import pytest
+
 from multithreaded_map_reduce_library_spark.operators.multimodal import (
     FEATURE_SCHEMA,
     documents_as_assets,
@@ -181,8 +183,7 @@ def test_png_decoder_palette_and_16bit_decode_exactly():
         _MAGIC,
         _chunk,
         decode_png,
-        encode_png16_gray,
-        encode_png_palette,
+        encode_png,
     )
 
     rng = np.random.RandomState(7)
@@ -192,14 +193,14 @@ def test_png_decoder_palette_and_16bit_decode_exactly():
         for depth in (1, 2, 4, 8):
             hi = min(2 ** depth, len(palette))
             idx = rng.randint(0, hi, size=(h, w)).astype(np.uint8)
-            png = encode_png_palette(idx, palette, depth)
+            png = encode_png(idx, depth=depth, palette=palette)
             dw, dh, dc, arr = decode_png(png)
             assert (dw, dh, dc) == (w, h, 3)
             expect = np.array([[palette[v] for v in row] for row in idx], dtype=np.uint8)
             assert (arr == expect).all(), (depth, w, h)
         # 16-bit gray: values exercise both bytes
         px = rng.randint(0, 65536, size=(h, w)).astype(np.uint16)
-        png16 = encode_png16_gray(px)
+        png16 = encode_png(px, depth=16)
         dw, dh, dc, arr = decode_png(png16)
         assert (dw, dh, dc) == (w, h, 1)
         assert arr.dtype == np.uint16
@@ -258,32 +259,6 @@ def test_stdlib_decode_matches_pil_when_present():
             theirs = np.asarray(PILImage.open(io.BytesIO(payload)))
             assert ours.reshape(theirs.shape).tolist() == theirs.tolist()
             assert int(ours.sum()) == int(theirs.astype(np.int64).sum())
-
-
-def test_hashed_decode_path_never_uses_pil_for_png(monkeypatch):
-    """The oracle-hashed decode kernel must be a function of the bytes
-    alone: even with a (fake) PIL present, PNG payloads decode via the
-    stdlib codec (the round-2 prefer-PIL branch made hashed output
-    depend on installed packages and burned a driver row)."""
-    import numpy as np
-
-    from multithreaded_map_reduce_library_spark.functions.png import encode_png
-    from multithreaded_map_reduce_library_spark.operators import multimodal as M
-
-    calls = {"pil": 0}
-
-    class _FakePILImage:
-        @staticmethod
-        def open(_buf):
-            calls["pil"] += 1
-            raise AssertionError("PIL consulted for a PNG payload")
-
-    monkeypatch.setattr(M, "HAVE_PIL", True)
-    monkeypatch.setattr(M, "PIL", type("P", (), {"Image": _FakePILImage}), raising=False)
-    px = np.arange(64, dtype=np.uint8).reshape(8, 8)
-    decoded = np.asarray(M._decode_image_bytes(encode_png(px)))
-    assert (decoded.reshape(8, 8) == px).all()
-    assert calls["pil"] == 0
 
 
 def test_ahash_tiny_images_do_not_collapse():
@@ -358,3 +333,135 @@ def test_wav_roundtrip_and_envelope(spark):
     with _pytest.raises(Exception) as ei2:
         wav_frame_energy(stereo).collect()
     assert "channels" in str(ei2.value) or "NotImplementedError" in str(ei2.value)
+
+
+# --- default-run oracle parity and fabricator byte pins -------------------
+
+MEDIA_QUERIES = [
+    "multimodal_features",
+    "multimodal_ahash_dedup",
+    "multimodal_keyframe_select",
+    "multimodal_png_adam7_roundtrip",
+    "multimodal_sobel_edge_energy",
+    "multimodal_hist_equalization",
+    "multimodal_png_downscale2",
+    "multimodal_png_palette_roundtrip",
+    "multimodal_png16_roundtrip",
+]
+
+
+@pytest.mark.parametrize("name", MEDIA_QUERIES)
+def test_media_query_oracle_parity(spark, name):
+    from multithreaded_map_reduce_library_spark.plans.registry import all_queries
+    from tests.oracle_util import compare_query
+
+    q = all_queries()[name]
+    compare_query(spark, q.fn, q.oracle, SF_SMALL)
+
+
+def _query_assets(spark, name, monkeypatch):
+    """The (asset_id, payload) frame a roundtrip query hands to its
+    decode kernel: the query runs with ``mapInPandas`` stubbed out."""
+    from multithreaded_map_reduce_library_spark.plans.registry import all_queries
+
+    monkeypatch.setattr(type(spark.range(1)), "mapInPandas", lambda df, fn, schema: df)
+    return all_queries()[name].fn(spark, SF_SMALL)
+
+
+#: sha256 over the payloads in asset_id order, per fabricator, over all
+#: 500 sf0.001 embeddings.
+_FABRICATOR_DIGESTS = {
+    "png-gray": "130bad3445c83640dfaa7678baedc4cf473900ca3560d7c1393763a45dde2abc",
+    "png-adam7": "302a6ba20701bb23b8af1240c483bd6b082e4b752b12535c61574c3e400ef56a",
+    "png-palette4": "a9f6285cb32fca926775f202319d04fa833c56ee411384ba30cb9557730e9364",
+    "png16": "3859228d2751621d017776ba74d458aa7190c828f1851ff7adab3ca9da80da87",
+    "jpeg-gray": "1e8274fbdbbd0f172a94be503fe78b89bbba1d3faf8a5f8cfa0fd3d858140c92",
+    "jpeg-restart": "e331e0407127fce1b44eee61713988b6df93f257264ef745f1377bea1ba7cb5b",
+    "jpeg-progressive": "d6b272ad4b585f3f1f99c8363a82d62ddb1e2a710b93082ba602741381629d65",
+    "jpeg420": "c16f601582af4e11a0a6c865e2ae77670a5337db0e13b93e13e442c85fda6553",
+    "jpeg420-multiscan": "03747773157e56637c97db663b2dc42ea78564255aeb286871ecea3c228b04f8",
+    "jpeg420-progressive": "bf5ba62134955723a965fbc16337d724ec1c76289d41afdf9036c3a34915cb00",
+    "rawv": "1c715ea457ebe7f46a296be13c7f94c0d33bcffbca9ba146910c107686fab904",
+}
+
+
+def test_fabricator_bytes_match_recorded_digests(spark, monkeypatch):
+    """Every byte the image and video fabricators write is pinned:
+    sharing one encoder and one fabricator helper must not move any."""
+    import hashlib
+
+    from multithreaded_map_reduce_library_spark.operators import multimodal as mm
+
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    fabs = {
+        "png-gray": mm.embeddings_as_png_assets(emb),
+        "png-adam7": mm.embeddings_as_png_assets(emb, interlaced=True),
+        "jpeg-gray": mm.embeddings_as_jpeg_assets(emb),
+        "jpeg-restart": mm.embeddings_as_jpeg_assets(emb, restart_interval=4),
+        "jpeg-progressive": mm.embeddings_as_jpeg_assets(emb, progressive=True),
+        "jpeg420": mm.embeddings_as_jpeg420_assets(emb),
+        "jpeg420-multiscan": mm.embeddings_as_jpeg420_assets(emb, multiscan=True),
+        "jpeg420-progressive": mm.embeddings_as_jpeg420_assets(emb, progressive=True),
+        "rawv": mm.embeddings_as_video_assets(emb),
+    }
+    got = {}
+    for name, df in fabs.items():
+        rows = sorted((r["asset_id"], bytes(r["payload"])) for r in df.collect())
+        assert len(rows) == 500, name
+        got[name] = hashlib.sha256(b"".join(p for _, p in rows)).hexdigest()
+    for name, query in [
+        ("png-palette4", "multimodal_png_palette_roundtrip"),
+        ("png16", "multimodal_png16_roundtrip"),
+    ]:
+        rows = sorted(
+            (r["asset_id"], bytes(r["payload"]))
+            for r in _query_assets(spark, query, monkeypatch).collect()
+        )
+        assert len(rows) == 500, name
+        got[name] = hashlib.sha256(b"".join(p for _, p in rows)).hexdigest()
+    assert got == _FABRICATOR_DIGESTS
+
+
+def test_map_assets_joins_scalars_and_arrays(spark):
+    """The one per-asset mapInPandas loop: ``str``/``bytes`` scalars repeat whole
+    over the asset's rows (never split by ``len``), bytes keep trailing
+    NULs, a null payload reads as b"", and a ValueError names its asset."""
+    import numpy as np
+    from pyspark.sql.types import (
+        BinaryType,
+        IntegerType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from multithreaded_map_reduce_library_spark.operators.multimodal import _map_assets
+
+    schema = StructType(
+        [
+            StructField("asset_id", LongType(), False),
+            StructField("tag", StringType(), True),
+            StructField("blob", BinaryType(), True),
+            StructField("k", IntegerType(), True),
+        ]
+    )
+
+    def kernel(payload):
+        if payload == b"bad":
+            raise ValueError("bad payload")
+        return f"<{payload.hex()}>", [payload, payload + b"\x00"], np.arange(2)
+
+    df = spark.createDataFrame(
+        [(1, b"\x00ab"), (2, None)], "asset_id long, payload binary"
+    )
+    rows = sorted(tuple(r) for r in _map_assets(df, schema, kernel).collect())
+    assert rows == [
+        (1, "<006162>", b"\x00ab", 0),
+        (1, "<006162>", b"\x00ab\x00", 1),
+        (2, "<>", b"", 0),
+        (2, "<>", b"\x00", 1),
+    ]
+    bad = spark.createDataFrame([(7, b"bad")], "asset_id long, payload binary")
+    with pytest.raises(Exception, match="asset 7: bad payload"):
+        _map_assets(bad, schema, kernel).collect()

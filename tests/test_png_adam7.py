@@ -22,7 +22,6 @@ from multithreaded_map_reduce_library_spark.functions.png import (
     _passes,
     decode_png,
     encode_png,
-    encode_png_adam7,
 )
 
 
@@ -47,8 +46,8 @@ def test_adam7_roundtrip_equals_sequential(h, w, channels, seed):
     shape = (h, w) if channels == 1 else (h, w, channels)
     img = rng.integers(0, 256, size=shape, dtype=np.uint8)
     ref = img if img.ndim == 3 else img[:, :, None]
-    seq = decode_png(encode_png(img, channels=channels))[3]
-    adam = decode_png(encode_png_adam7(img, channels=channels))[3]
+    seq = decode_png(encode_png(img))[3]
+    adam = decode_png(encode_png(img, interlace=True))[3]
     assert np.array_equal(seq, ref)
     assert np.array_equal(adam, ref)
 
@@ -84,7 +83,7 @@ def test_sequential_payload_with_interlaced_header_raises():
 
 def test_truncated_interlaced_payload_raises():
     img = np.arange(64, dtype=np.uint8).reshape(8, 8)
-    full = encode_png_adam7(img)
+    full = encode_png(img, interlace=True)
     # rebuild with the last pass's bytes chopped from the zlib stream
     raw = bytearray()
     for x0, y0, dx, dy, _wp, hp in _passes(8, 8, 1):
@@ -106,7 +105,7 @@ def test_truncated_interlaced_payload_raises():
 
 def test_adam7_16bit_and_palette_decode_exactly():
     rng = np.random.default_rng(11)
-    # 16-bit gray, interlaced (hand-built: encoder helper is 8-bit only)
+    # 16-bit gray, interlaced (hand-built, independent of encode_png)
     a16 = rng.integers(0, 65536, size=(9, 7), dtype=np.uint16)
     ihdr = struct.pack(">IIBBBBB", 7, 9, 16, 0, 0, 0, 1)
     raw = bytearray()
