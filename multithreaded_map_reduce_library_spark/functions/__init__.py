@@ -6,7 +6,6 @@ from multithreaded_map_reduce_library_spark.functions.hashing import (  # noqa: 
 from multithreaded_map_reduce_library_spark.functions.text import (  # noqa: F401
     char_shingles,
     tokens,
-    word_shingles,
 )
 from multithreaded_map_reduce_library_spark.functions.vectors import (  # noqa: F401
     cosine,

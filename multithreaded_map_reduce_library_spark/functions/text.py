@@ -1,4 +1,8 @@
-"""Text primitives: tokenization and shingling, all JVM-side expressions.
+"""Text primitives: tokenization and shingling.
+
+The JVM side is :func:`tokens` and :func:`char_shingles`; the Python side is
+one tokenizer (:func:`split_tokens`) and one word-shingle hasher
+(:func:`shingle_h32`) behind every dedup sketch kernel.
 
 Tokenization mirrors the reference mapper's ``strsep(line, " \\t\\n\\r")``
 (distwc.c:15-18). Quirk Q1 (SURVEY.md §2): strsep yields empty tokens for
@@ -9,6 +13,9 @@ on pathological inputs.
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
 import pandas as pd  # module-level so pandas-UDF type hints resolve
 
 from pyspark.sql import Column
@@ -27,77 +34,47 @@ def tokens(col: Column | str, pattern: str = DELIMS_RE, keep_empty: bool = False
     return arr
 
 
-def word_shingles(col: Column | str, n: int = 5, pattern: str = DELIMS_RE) -> Column:
-    """Array of word n-grams ("shingles") for near-dup detection.
-
-    Pure expression: slice the token array at each start offset and join
-    with a single space. Short documents (< n tokens) yield one shingle of
-    the whole document so they still participate in dedup.
+def split_tokens(text: str | None) -> list[str]:
+    """The package's one Python tokenizer: the Python twin of :func:`tokens`
+    (split on :data:`DELIMS_RE`, drop empty pieces) that every sketch kernel
+    calls. A null text has no tokens, like an empty or whitespace-only one.
     """
-    toks = tokens(col, pattern)
-    joined_all = F.array_join(toks, " ")
-    starts = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    grams = F.transform(starts, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
-    return F.when(F.size(toks) < n, F.array(joined_all)).otherwise(grams)
+    if not text:
+        return []
+    return [t for t in text.replace("\t", " ").replace("\r", " ").replace("\n", " ").split(" ") if t]
 
 
-def word_shingle_hash32(toks: Column, n: int = 3) -> Column:
-    """32-bit hashes of word n-gram shingles in ONE pass: array<long> where
-    element j = int(md5(shingle_j)[:8], 16), shingle_j being the same
-    space-joined n-gram :func:`word_shingles` would build.
+def shingle_h32(text: str | None, n: int) -> np.ndarray:
+    """32-bit hashes of the word n-gram shingles of ``text``, in order:
+    element j is ``int(md5(shingle_j)[:8], 16)``, shingle_j being tokens
+    j..j+n-1 of :func:`split_tokens` joined by one space.
 
-    Why fused: Spark's higher-order functions run *interpreted* (no
-    whole-stage codegen), so each transform pass over a shingle array has
-    real per-element overhead — building string shingles and hashing them
-    in separate passes measured 2.5s+ at sf0.1 vs fusing construction and
-    hashing into this single transform. Downstream dedup only ever needs
-    the hash, never the shingle string.
-
-    ``toks`` MUST be a materialized token-array column (not an inline
-    ``tokens(...)`` expression): the lambda references it per element and
-    Catalyst re-evaluates inlined expressions inside lambdas.
+    This is the shingle decision every dedup sketch and DuckDB oracle
+    shares (``plans/pipeline.py::_duck_shingles`` / ``_duck_h32``): a text
+    with 1..n-1 tokens is one shingle, the whole token list; a text with no
+    tokens (empty, whitespace-only or null) has no hash — the oracles give
+    it a single NULL shingle, which yields no signature and no index row.
     """
-    whole = F.conv(F.substring(F.md5(F.array_join(toks, " ")), 1, 8), 16, 10).cast("long")
-    starts = F.sequence(F.lit(1), F.greatest(F.size(toks) - n + 1, F.lit(1)))
-
-    def gram_hash(i: Column) -> Column:
-        parts = [F.element_at(toks, (i + j).cast("int")) for j in range(n)]
-        return F.conv(F.substring(F.md5(F.concat_ws(" ", *parts)), 1, 8), 16, 10).cast("long")
-
-    return F.when(F.size(toks) < n, F.array(whole)).otherwise(
-        F.transform(starts, gram_hash)
+    toks = split_tokens(text)
+    if len(toks) < n:
+        grams = [" ".join(toks)] if toks else []
+    else:
+        grams = [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+    return np.fromiter(
+        (int.from_bytes(hashlib.md5(g.encode("utf-8")).digest()[:4], "big") for g in grams),
+        dtype=np.int64,
+        count=len(grams),
     )
 
 
 def shingle_hash32_pandas_udf(n: int = 3):
-    """Arrow-batched twin of :func:`word_shingle_hash32`: same tokens, same
-    space-joined n-grams, same int(md5[:8], 16) values — but hashlib's C
-    md5 instead of ~270k interpreted expression evaluations (the dedup
-    pipeline's hot loop; measured >2x on the banding stage at sf0.1).
-    Bit-exact: integer outputs, no float path, so oracle hashes are
-    unaffected. Tests assert equality with the expression form.
-    """
-    import hashlib
-
+    """Arrow-batched :func:`shingle_h32` as an ``array<bigint>`` column —
+    the (doc, shingle) index the exact-Jaccard and coverage queries explode."""
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("array<long>")
+    @pandas_udf("array<bigint>")
     def hashes(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            toks = [
-                t
-                for t in text.replace("\t", " ").replace("\r", " ").replace("\n", " ").split(" ")
-                if t
-            ]
-            if len(toks) < n:
-                grams = [" ".join(toks)]
-            else:
-                grams = [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
-            out.append(
-                [int(hashlib.md5(g.encode("utf-8")).hexdigest()[:8], 16) for g in grams]
-            )
-        return pd.Series(out)
+        return pd.Series([shingle_h32(text, n) for text in texts])
 
     return hashes
 

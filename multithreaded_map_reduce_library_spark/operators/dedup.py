@@ -1,21 +1,23 @@
 """Deduplication operators for a 100 TB training-data pipeline.
 
-Four tiers, all shuffle-minimal:
+Every sketch kernel here is an Arrow-batched pandas UDF over one shingle
+definition: :func:`~multithreaded_map_reduce_library_spark.functions.text.split_tokens`
+tokenizes and :func:`~multithreaded_map_reduce_library_spark.functions.text.shingle_h32`
+hashes word n-grams to ``int(md5[:8], 16)``. Hashes are md5 and the rest is
+integer arithmetic, so the DuckDB oracles replay each sketch exactly.
 
 - **Exact** (:func:`exact_dedup_groups`): hash-groupBy on md5(text). One
   shuffle, map-side partial agg; the standard first pass.
-- **MinHash signature + LSH banding** (:func:`minhash_signature`,
-  :func:`lsh_band_keys`): the sketch is a *pure map-side expression* —
-  no shuffle to build signatures; only candidate-pair generation shuffles,
-  keyed on band hash. Hash family is ``md5(salt|shingle)`` whose
-  fixed-width hex compares like the 128-bit integer (so MIN over strings
-  is a valid permutation min-hash) and is reproducible in any engine with
-  md5 — which is what makes the sketch oracle-checkable in DuckDB.
-- **SimHash** (:func:`simhash_bits`): 64-bit near-dup fingerprint as a
-  bitstring; per-bit majority over the document's distinct-token md5 bits.
-  Pure expression (no shuffle); a vectorized pandas-UDF variant
-  (:func:`simhash_pandas_udf`) is provided for when 64 aggregate
-  expressions per row lose to NumPy at very high token counts.
+- **MinHash + LSH banding** (Broder 1997; :func:`minhash_signature`,
+  :func:`lsh_band_keys`, :func:`minhash_lsh_pairs`): the signature is
+  ``MIN over shingles of (a_i*h + b_i) mod P`` for the public
+  :func:`mh_params` family; building it is map-side, only candidate-pair
+  generation shuffles, keyed on the JVM band hash.
+- **SimHash** (:func:`simhash_pandas_udf`): 64-bit near-dup fingerprint;
+  per-bit majority over the document's distinct-token md5 bits.
+- **Winnowing** (Schleimer et al., SIGMOD 2003;
+  :func:`winnowing_stats_pandas_udf`): sliding-window minima over the
+  shingle hashes.
 - **N-gram Jaccard** (plans/pipeline.py): exact pairwise verification over
   shingle joins — used to confirm LSH candidates.
 
@@ -25,15 +27,17 @@ pipeline extensions.
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
 import pandas as pd  # module-level so pandas-UDF type hints resolve
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from multithreaded_map_reduce_library_spark.functions.text import (
-    tokens,
-    word_shingle_hash32,
-    word_shingles,
+    shingle_h32,
+    split_tokens,
 )
 
 
@@ -57,41 +61,33 @@ def mh_params(i: int) -> tuple[int, int]:
     public md5 so any engine reproduces them. a is capped at 2^30 so
     a*h + b < 2^63 (h < 2^32): no 64-bit overflow in Spark OR DuckDB
     (whose BIGINT errors on overflow instead of wrapping)."""
-    import hashlib
-
     a = int(hashlib.md5(f"a{i}".encode()).hexdigest()[:8], 16) % (2**30) + 1
     b = int(hashlib.md5(f"b{i}".encode()).hexdigest()[:8], 16) % MH_PRIME
     return a, b
 
 
-def shingle_hashes(shingles: Column) -> Column:
-    """Each shingle hashed ONCE to a 32-bit int (first 8 hex digits of its
-    md5). The expensive md5 pass happens here a single time; the hash
-    family in :func:`minhash_signature` is cheap integer arithmetic over
-    this array. Callers must materialize the result through its own
-    projection before fanning out (see :func:`minhash_banded`)."""
-    return F.transform(
-        shingles, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
-    )
-
-
-def minhash_signature(hashes: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature as array<bigint> of length ``num_hashes`` over a
-    pre-hashed shingle array (:func:`shingle_hashes`):
-    ``sig[i] = MIN over shingles of (a_i * h + b_i) mod P``.
-
-    One md5 per shingle total (vs one per shingle *per hash* in the naive
-    form — measured 6s -> sub-second for the signature stage at sf0.1);
-    the 16 min-reductions are integer codegen.
+def minhash_signature(shingle_n: int = 3, num_hashes: int = 16):
+    """pandas UDF: text -> MinHash signature as ``array<bigint>`` of length
+    ``num_hashes``, ``sig[i] = MIN over shingles of (a_i * h + b_i) mod P``
+    over the :func:`shingle_h32` hashes — one md5 per shingle, then one
+    vectorized NumPy min-reduction per batch row. A text with no tokens has
+    no shingle hash and gets a null signature (the oracles' NULL minima).
     """
+    from pyspark.sql.functions import pandas_udf
 
-    def member(i: int):
-        a, b = mh_params(i)
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MH_PRIME)
+    ab = [mh_params(i) for i in range(num_hashes)]
+    a_arr = np.array([a for a, _ in ab], dtype=np.int64)[:, None]
+    b_arr = np.array([b for _, b in ab], dtype=np.int64)[:, None]
 
-    return F.array(
-        *[F.array_min(F.transform(hashes, member(i))) for i in range(num_hashes)]
-    )
+    @pandas_udf("array<bigint>")
+    def signature(texts: pd.Series) -> pd.Series:
+        out = []
+        for text in texts:
+            h = shingle_h32(text, shingle_n)
+            out.append(((a_arr * h + b_arr) % MH_PRIME).min(axis=1) if h.size else None)
+        return pd.Series(out)
+
+    return signature
 
 
 def lsh_band_keys(sig: Column, bands: int = 4, rows: int = 4) -> Column:
@@ -116,61 +112,6 @@ def lsh_band_keys(sig: Column, bands: int = 4, rows: int = 4) -> Column:
     )
 
 
-def minhash_band_keys_pandas_udf(
-    shingle_n: int = 3, num_hashes: int = 16, bands: int = 4
-):
-    """Arrow-batched end-to-end sketch: text -> shingle hashes -> minhash
-    signature -> LSH band keys, all inside one pandas UDF (hashlib md5 +
-    vectorized NumPy modular arithmetic). Byte-identical to the expression
-    pipeline (shingle_hash32 -> minhash_signature -> lsh_band_keys), which
-    tests assert — the hash family constants and band-key rendering are
-    shared. This is the fast path for the banding stage; the expression
-    forms remain the definition the DuckDB oracles mirror."""
-    import hashlib
-
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    rows = num_hashes // bands
-    ab = [mh_params(i) for i in range(num_hashes)]
-    a_arr = np.array([a for a, _ in ab], dtype=np.int64)[:, None]
-    b_arr = np.array([b for _, b in ab], dtype=np.int64)[:, None]
-
-    @pandas_udf("array<string>")
-    def band_keys(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            toks = [
-                t
-                for t in text.replace("\t", " ").replace("\r", " ").replace("\n", " ").split(" ")
-                if t
-            ]
-            if len(toks) < shingle_n:
-                grams = [" ".join(toks)]
-            else:
-                grams = [
-                    " ".join(toks[i : i + shingle_n])
-                    for i in range(len(toks) - shingle_n + 1)
-                ]
-            h = np.array(
-                [int(hashlib.md5(g.encode("utf-8")).hexdigest()[:8], 16) for g in grams],
-                dtype=np.int64,
-            )
-            sig = ((a_arr * h + b_arr) % MH_PRIME).min(axis=1)
-            keys = [
-                hashlib.md5(
-                    (
-                        f"band{b}|" + ",".join(str(m) for m in sig[b * rows : (b + 1) * rows])
-                    ).encode("utf-8")
-                ).hexdigest()
-                for b in range(bands)
-            ]
-            out.append(keys)
-        return pd.Series(out)
-
-    return band_keys
-
-
 def minhash_banded(
     df: DataFrame,
     text_col: str = "text",
@@ -179,16 +120,14 @@ def minhash_banded(
     bands: int = 4,
     shingle_n: int = 5,
 ) -> DataFrame:
-    """(doc, band_key) rows: one row per document per LSH band.
-
-    The shingle array and signature are materialized through *separate
-    projection boundaries* — inlining ``word_shingles`` into each of the
-    ``num_hashes`` transform lambdas makes Catalyst re-evaluate the full
-    tokenize+shingle expression per hash (measured 6x slowdown at sf0.01).
-    """
-    keys_udf = minhash_band_keys_pandas_udf(shingle_n, num_hashes, bands)
-    return df.select(
-        F.col(id_col).alias("doc"), F.explode(keys_udf(text_col)).alias("band_key")
+    """(doc, band_key) rows: one row per document per LSH band — the
+    :func:`minhash_signature` UDF, then the JVM :func:`lsh_band_keys`, then
+    explode. The signature goes through its own projection so the four band
+    slices read one materialized array."""
+    sig = minhash_signature(shingle_n, num_hashes)
+    signed = df.select(F.col(id_col).alias("doc"), sig(text_col).alias("_sig"))
+    return signed.select(
+        "doc", F.explode(lsh_band_keys(F.col("_sig"), bands, num_hashes // bands)).alias("band_key")
     ).distinct()
 
 
@@ -373,70 +312,24 @@ def connected_components_star(edges: DataFrame, max_iter: int = 20) -> DataFrame
     )
 
 
-def _hex_digit_value(h: Column, pos: int) -> Column:
-    """Value 0-15 of the hex digit at 1-based ``pos`` of md5-hex ``h``."""
-    return F.conv(F.substring(h, pos, 1), 16, 10).cast("int")
-
-
-def simhash_bit_exprs(token_hash: Column, nbits: int = 64) -> list[Column]:
-    """Bit b (0/1) of the first ``nbits`` bits of an md5-hex token hash."""
-    out = []
-    for b in range(nbits):
-        v = _hex_digit_value(token_hash, b // 4 + 1)
-        shift = 3 - (b % 4)
-        out.append((F.floor(v / F.lit(2**shift)).cast("int") % 2))
-    return out
-
-
-def simhash_bits(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", nbits: int = 64) -> DataFrame:
-    """64-bit SimHash per document as a bitstring column ``simhash``.
-
-    Majority vote per bit over the document's *distinct* tokens (weight 1
-    per token; documented divergence from tf-weighted variants). Computed
-    as one explode -> groupBy with 64 SUM aggregates — a single shuffle
-    with partial aggregation; bit-extraction arithmetic stays in codegen.
-    """
-    toks = df.select(
-        F.col(id_col).alias("doc"), F.explode(F.array_distinct(tokens(text_col))).alias("tok")
-    )
-    h = F.md5(F.col("tok"))
-    aggs = [F.sum(e).alias(f"b{i}") for i, e in enumerate(simhash_bit_exprs(h, nbits))]
-    per_doc = toks.groupBy("doc").agg(F.count("*").alias("n_tokens"), *aggs)
-    bit_chars = [
-        F.when(F.col(f"b{i}") * 2 >= F.col("n_tokens"), F.lit("1")).otherwise(F.lit("0"))
-        for i in range(nbits)
-    ]
-    return per_doc.select(
-        F.col("doc").alias(id_col),
-        F.concat(*bit_chars).alias("simhash"),
-        F.col("n_tokens").alias("n_distinct_tokens"),
-    )
-
-
 def simhash_pandas_udf(nbits: int = 64):
-    """Vectorized SimHash for very high token counts: Arrow-batched pandas
-    UDF computing the same md5-based fingerprint with NumPy bit unpacking.
-    Provably equal to :func:`simhash_bits` (tests/test_dedup.py)."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
+    """pandas UDF: text -> ``nbits``-bit SimHash as a '0'/'1' string. Bit b
+    is 1 when at least half of the document's distinct tokens have bit b of
+    their md5 set (weight 1 per token; a documented divergence from
+    tf-weighted variants). A text with no tokens gets null."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")
     def simhash(texts: pd.Series) -> pd.Series:
         out = []
         for text in texts:
-            toks = {t for t in text.replace("\t", " ").replace("\r", " ").replace("\n", " ").split(" ") if t}
+            toks = set(split_tokens(text))
             if not toks:
-                out.append("0" * nbits)
+                out.append(None)
                 continue
-            acc = np.zeros(nbits, dtype=np.int64)
-            for t in toks:
-                digest = hashlib.md5(t.encode("utf-8")).digest()
-                bits = np.unpackbits(np.frombuffer(digest, dtype=np.uint8))[:nbits]
-                acc += bits
-            maj = (acc * 2 >= len(toks)).astype(np.uint8)
+            digests = b"".join(hashlib.md5(t.encode("utf-8")).digest() for t in toks)
+            bits = np.unpackbits(np.frombuffer(digests, dtype=np.uint8).reshape(-1, 16), axis=1)
+            maj = bits[:, :nbits].sum(axis=0, dtype=np.int64) * 2 >= len(toks)
             out.append("".join("1" if x else "0" for x in maj))
         return pd.Series(out)
 
@@ -444,47 +337,27 @@ def simhash_pandas_udf(nbits: int = 64):
 
 
 def winnowing_stats_pandas_udf(shingle_n: int = 3, window: int = 4):
-    """Arrow-batched winnowing (MOSS, SIGMOD 2003) kernel: text ->
-    shingle hashes (hashlib md5, byte-identical to
-    :func:`shingle_hashes`) -> sliding-window minima via vectorized
-    ``np.minimum.reduce`` over ``window`` shifted views -> distinct
-    fingerprint count. Returns struct<m, nf> = (shingle count,
-    fingerprint count). The expression form stays the definition the
-    DuckDB oracle mirrors; this is the fast path (the interpreted
-    higher-order md5 transform alone measured ~8 s at sf0.1 vs ~1 s for
-    this kernel), same split as the MinHash band-keys UDF above."""
-    import hashlib
+    """pandas UDF: text -> struct<m, nf>, the shingle count and the number of
+    distinct winnowing fingerprints (the minimum :func:`shingle_h32` hash of
+    each run of ``window`` consecutive shingles; 0 when m < window). The
+    minima are one ``np.minimum.reduce`` over ``window`` shifted views.
 
-    import numpy as np
+    m follows the oracle's shingle list: a text with no tokens still counts
+    its one NULL shingle (m = 1), and a null text has a null count."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("struct<m: bigint, nf: bigint>")
     def stats(texts: pd.Series) -> pd.DataFrame:
         ms, nfs = [], []
         for text in texts:
-            toks = [
-                t
-                for t in text.replace("\t", " ").replace("\r", " ").replace("\n", " ").split(" ")
-                if t
-            ]
-            if len(toks) < shingle_n:
-                grams = [" ".join(toks)]
-            else:
-                grams = [
-                    " ".join(toks[i : i + shingle_n])
-                    for i in range(len(toks) - shingle_n + 1)
-                ]
-            m = len(grams)
-            ms.append(m)
+            h = shingle_h32(text, shingle_n)
+            m = h.size
+            ms.append(None if text is None else max(m, 1))
             if m < window:
                 nfs.append(0)
                 continue
-            h = np.array(
-                [int(hashlib.md5(g.encode("utf-8")).hexdigest()[:8], 16) for g in grams],
-                dtype=np.int64,
-            )
             mins = np.minimum.reduce([h[k : m - window + 1 + k] for k in range(window)])
             nfs.append(int(np.unique(mins).size))
-        return pd.DataFrame({"m": ms, "nf": nfs})
+        return pd.DataFrame({"m": pd.Series(ms, dtype="Int64"), "nf": nfs})
 
     return stats

@@ -508,7 +508,7 @@ def ahash_assets(assets: DataFrame) -> DataFrame:
                 img = np.repeat(img, -(-8 // h), axis=0)[:8]
                 h = 8
             if w < 8:
-                img = np.repeat(img, -(-8 // w), axis=1)[:8]
+                img = np.repeat(img, -(-8 // w), axis=1)[:, :8]
                 w = 8
             img = img[: h - h % 8, : w - w % 8]
             img = img.reshape(8, h // 8, 8, w // 8).mean(axis=(1, 3))

@@ -167,21 +167,12 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     production MinHash-LSH path (map-side sketch, band-key shuffle); the
     exact-Jaccard verification join is restricted to candidates — this
     audit costs the same as ``minhash_lsh_candidates``, not all-pairs."""
-    from multithreaded_map_reduce_library_spark.functions.text import (
-        tokens,
-        word_shingle_hash32,
-    )
     from multithreaded_map_reduce_library_spark.plans.pipeline import (
         _shingle_hash_index,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    with_h = docs.select(
-        "doc_id", word_shingle_hash32(tokens("text"), 3).alias("_h")
-    )
-    sigs = with_h.select(
-        "doc_id", D.minhash_signature(F.col("_h"), 16).alias("sig")
-    )
+    sigs = docs.select("doc_id", D.minhash_signature(3, 16)("text").alias("sig"))
     cand = D.minhash_lsh_pairs(docs, num_hashes=16, bands=4, shingle_n=3)
     sa = sigs.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))

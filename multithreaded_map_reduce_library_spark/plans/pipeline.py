@@ -31,7 +31,8 @@ _TOKS = r"list_filter(string_split_regex(text, '[ \t\r\n]'), t -> t <> '')"
 
 
 def _duck_shingles(n: int) -> str:
-    """Word n-gram shingles — DuckDB twin of functions/text.py::word_shingles."""
+    """Word n-gram shingles — the DuckDB side of functions/text.py::shingle_h32
+    (a text with no tokens gives one NULL shingle)."""
     t = _TOKS
     return (
         f"CASE WHEN len({t}) < {n} THEN [array_to_string({t}, ' ')] "
@@ -65,8 +66,8 @@ _SHINGLE_N = 3
 
 
 def _duck_h32(var: str = "x") -> str:
-    """First 8 hex digits of md5 as a BIGINT — DuckDB twin of
-    operators/dedup.py::shingle_hashes."""
+    """First 8 hex digits of md5 as a BIGINT — the DuckDB side of
+    functions/text.py::shingle_h32's hash."""
     terms = " + ".join(
         f"(strpos('0123456789abcdef', substr(md5({var}), {p}, 1)) - 1) * {16 ** (8 - p)}"
         for p in range(1, 9)
@@ -102,22 +103,14 @@ def _duck_minhash_sig_cte(n: int = _SHINGLE_N, k: int = _MINHASH_K) -> str:
     tags=("dedup", "minhash", "sketch"),
 )
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document MinHash signature (k=16, word 3-gram shingles) as a
-    map-side-only expression — zero shuffles to build the sketch."""
-    from multithreaded_map_reduce_library_spark.functions.text import (
-        tokens,
-        word_shingle_hash32,
-    )
-
+    """Per-document MinHash signature (k=16, word 3-gram shingles) from the
+    map-side signature UDF — zero shuffles to build the sketch."""
     docs = load_table(spark, sf_dir, "documents")
-    with_t = docs.select("doc_id", tokens("text").alias("_t"))
-    with_h = with_t.select(
-        "doc_id", word_shingle_hash32(F.col("_t"), _SHINGLE_N).alias("_h")
-    )
-    sig = D.minhash_signature(F.col("_h"), _MINHASH_K)
-    return with_h.select(
+    sig = D.minhash_signature(_SHINGLE_N, _MINHASH_K)
+    with_sig = docs.select("doc_id", sig("text").alias("_sig"))
+    return with_sig.select(
         "doc_id",
-        F.concat_ws(",", F.transform(sig, lambda x: x.cast("string"))).alias("sig"),
+        F.concat_ws(",", F.transform("_sig", lambda x: x.cast("string"))).alias("sig"),
     )
 
 
@@ -319,10 +312,10 @@ def minhash_lsh_candidates_capped(spark: SparkSession, sf_dir: str) -> DataFrame
 
 def _shingle_hash_index(docs: DataFrame) -> DataFrame:
     """(doc, shingle) inverted index over 32-bit shingle *hashes*: Arrow
-    pandas-UDF hashing (hashlib md5 — bit-exact twin of the expression
-    form), per-doc array_distinct (map-side — no shuffle to dedup), then
-    explode. Ints, not shingle strings, cross the shuffle: ~8 bytes/row
-    instead of the n-gram text."""
+    pandas-UDF hashing (functions/text.py::shingle_h32), per-doc
+    array_distinct (map-side — no shuffle to dedup), then explode. Ints,
+    not shingle strings, cross the shuffle: ~8 bytes/row instead of the
+    n-gram text."""
     from multithreaded_map_reduce_library_spark.functions.text import (
         shingle_hash32_pandas_udf,
     )
@@ -472,11 +465,9 @@ def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits), emitted as a bitstring. Near-dup distance = Hamming distance.
 
     Physical choice: the Arrow-batched pandas UDF (NumPy unpackbits over
-    hashlib.md5 — integer math, bit-identical to the pure-expression form
-    in operators/dedup.py::simhash_bits, which tests assert) measured 2.6x
-    faster than 64 SUM aggregates at sf0.1; token counting stays JVM-side.
-    Docs with no tokens are excluded, matching the explode-based form and
-    the oracle's unnest."""
+    hashlib.md5 — integer math) measured 2.6x faster than an explode and
+    64 SUM aggregates at sf0.1; token counting stays JVM-side. Docs with no
+    tokens are excluded, matching the oracle's unnest."""
     docs = load_table(spark, sf_dir, "documents")
     udf = D.simhash_pandas_udf(64)
     n_distinct = F.size(F.array_distinct(tokens("text"))).cast("bigint")

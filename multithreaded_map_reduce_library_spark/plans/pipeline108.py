@@ -16,8 +16,9 @@ sketch, and the classic "does the corpus memorize itself" text audit:
   aggregated to a histogram of documents by memorization level. The
   screen dedup pipelines run before training (long intra-doc repeats
   inflate memorization; cf. the dedup literature's repeated-substring
-  analyses), with shingle semantics identical to `word_shingles`
-  (functions/text.py) — the oracle replays that expression form.
+  analyses), over the tokens of functions/text.py::split_tokens and the
+  word n-grams the dedup tier hashes — the oracle replays them with
+  pipeline.py::_duck_shingles.
 
 Reference parity anchor: the reference engine (mapreduce.h:44-83) has no
 streaming or text-audit tier; these extend the driver-mandated superset.
@@ -206,33 +207,33 @@ def repeated_ngram_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiset at size n exceeds its distinct count contains an intra-doc
     repeat of length ≥ n (monotone in n — a repeated 16-gram implies a
     repeated 8-gram — so the descending CASE is the argmax). The
-    memorization-risk screen run before training data ships; shares
-    `word_shingles` with the MinHash dedup tier so the audit and the
-    dedup act on identical shingle semantics.
+    memorization-risk screen run before training data ships; tokenizes
+    with functions/text.py::split_tokens, like every dedup sketch.
 
     Scale design: per-document Arrow-kernel work only (tokenize once,
-    one set-based pass per ladder size over token-id tuples — adopted
-    after the expression form's four concat_ws/array_distinct shingle
-    arrays measured 21 s at sf0.1 vs 0.4 s for the kernel; the
-    expression pipeline survives as the oracle's definition), then a
-    5-row histogram aggregate — no shuffle carries text."""
-    import re as _re
-
+    one set-based pass per ladder size over token tuples — adopted
+    after an expression form's four concat_ws/array_distinct shingle
+    arrays measured 21 s at sf0.1 vs 0.4 s for the kernel), then a
+    5-row histogram aggregate — no shuffle carries text. Shingles are
+    compared as exact token tuples, not as 32-bit shingle hashes, so a
+    hash collision cannot report a repeat the string-comparing oracle
+    does not."""
     import pandas as pd
+
+    from multithreaded_map_reduce_library_spark.functions.text import split_tokens
 
     docs = load_table(spark, sf_dir, "documents")
 
     def kernel(it):
-        split = _re.compile(r"[ \t\r\n]").split
         for pdf in it:
             out = []
             for text in pdf["text"]:
-                toks = [t for t in split(text or "") if t]
+                toks = split_tokens(text)
                 level = 0
                 for n in (2, 4, 8, 16):
                     if len(toks) < n:
-                        # word_shingles' short-doc fallback: one whole-doc
-                        # shingle, which cannot repeat
+                        # the short-doc fallback: one whole-doc shingle,
+                        # which cannot repeat
                         continue
                     seen = set()
                     rep = False

@@ -76,24 +76,14 @@ def bbit_minhash_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair is exactly the measurement that justifies shipping 1-bit
     sketches (64x smaller sketch state) at corpus scale.
 
-    Scale design: signatures are the same map-side expression as
+    Scale design: signatures come from the same map-side UDF as
     `minhash_signatures`; candidates come from the banded LSH shuffle
     (never all-pairs); the agreement computation is a candidate-sized
     join of two 16-int arrays — integer codegen, no Python. The b-bit
     representation itself would ship as 16 BITS per doc where the
     full sketch ships 16 int64s."""
-    from multithreaded_map_reduce_library_spark.functions.text import (
-        tokens,
-        word_shingle_hash32,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    sigs = docs.select(
-        "doc_id",
-        D.minhash_signature(
-            word_shingle_hash32(tokens("text"), 3), _K
-        ).alias("sig"),
-    )
+    sigs = docs.select("doc_id", D.minhash_signature(3, _K)("text").alias("sig"))
     cand = D.minhash_lsh_pairs(docs, num_hashes=_K, bands=4, shingle_n=3)
     sa = sigs.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))

@@ -145,14 +145,14 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     shorter than one window report zero windows.
 
     Scale design: the ENTIRE computation is per-document — one
-    Arrow-batched kernel (hashlib md5 + vectorized sliding minima,
-    operators/dedup.py::winnowing_stats_pandas_udf, the same
-    fast-path/definition split as the MinHash band-keys UDF) — so the
-    operator is pure map-side with ZERO shuffles. Measured at sf0.1:
-    the first explode+window+countDistinct version took 15.9 s (three
-    shuffles), the higher-order expression form 8-9 s (interpreted md5
-    transform), this kernel ~1 s. The fingerprint index it feeds joins
-    documents by fp like the LSH band-key join, never all-pairs."""
+    Arrow-batched kernel (operators/dedup.py::winnowing_stats_pandas_udf:
+    the shared functions/text.py::shingle_h32 hashes plus vectorized
+    sliding minima) — so the operator is pure map-side with ZERO
+    shuffles. Measured at sf0.1: the first explode+window+countDistinct
+    version took 15.9 s (three shuffles), a higher-order expression form
+    8-9 s (interpreted md5 transform), this kernel ~1 s. The fingerprint
+    index it feeds joins documents by fp like the LSH band-key join,
+    never all-pairs."""
     from multithreaded_map_reduce_library_spark.operators.dedup import (
         winnowing_stats_pandas_udf,
     )

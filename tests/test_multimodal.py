@@ -286,6 +286,25 @@ def test_ahash_tiny_images_do_not_collapse():
     assert rows[1] != rows[2]  # different tiny images -> different hashes
 
 
+def test_ahash_tall_narrow_image_replicates_columns(spark):
+    """A 16x3 image is widened by repeating each column (3 -> 9, keep 8),
+    then block-meaned 2x1 down to the 8x8 grid; the hash is that grid's."""
+    import numpy as np
+    import pandas as pd
+
+    from multithreaded_map_reduce_library_spark.functions.png import encode_png
+    from multithreaded_map_reduce_library_spark.operators.multimodal import (
+        ahash_assets,
+    )
+
+    px = (np.arange(48).reshape(16, 3) * 5 % 251).astype(np.uint8)
+    grid = np.repeat(px.astype(np.float64), 3, axis=1)[:, :8]
+    grid = grid.reshape(8, 2, 8, 1).mean(axis=(1, 3)).ravel()
+    want = np.packbits(grid > grid.mean()).tobytes().hex()
+    df = spark.createDataFrame(pd.DataFrame({"asset_id": [1], "payload": [encode_png(px)]}))
+    assert [r["ahash"] for r in ahash_assets(df).collect()] == [want]
+
+
 def test_wav_roundtrip_and_envelope(spark):
     """WAV kernel: fabricated RIFF payloads decode to the exact PCM16
     energies; malformed / out-of-envelope payloads raise loudly."""

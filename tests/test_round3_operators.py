@@ -145,14 +145,14 @@ def test_winnowing_shared_run_guarantee(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
 
     from multithreaded_map_reduce_library_spark.functions.text import (
-        tokens,
-        word_shingle_hash32,
+        shingle_hash32_pandas_udf,
     )
     from pyspark.sql.window import Window
 
     docs = spark.read.parquet(f"{tmp_path}/documents.parquet")
-    pos = docs.select(
-        "doc_id", F.posexplode(word_shingle_hash32(tokens("text"), 3)).alias("p0", "h")
+    hashed = docs.select("doc_id", shingle_hash32_pandas_udf(3)("text").alias("_h"))
+    pos = hashed.select(
+        "doc_id", F.posexplode("_h").alias("p0", "h")
     ).select("doc_id", (F.col("p0") + 1).alias("p"), "h")
     n = pos.groupBy("doc_id").agg(F.count("*").alias("n_pos"))
     w = Window.partitionBy("doc_id").orderBy("p").rowsBetween(Window.currentRow, 3)
@@ -275,11 +275,11 @@ def test_blocklist_whole_word_only(spark, tmp_path):
 
 
 def test_winnowing_kernel_matches_expression_definition(spark):
-    """The Arrow kernel (hashlib + np sliding minima) must equal the
-    higher-order expression definition the oracle mirrors, per doc."""
+    """The kernel's NumPy sliding minima must equal a higher-order
+    expression over the same shingle hashes (the windows the oracle's
+    list_slice/list_aggregate replays), per doc."""
     from multithreaded_map_reduce_library_spark.functions.text import (
-        tokens,
-        word_shingle_hash32,
+        shingle_hash32_pandas_udf,
     )
     from multithreaded_map_reduce_library_spark.operators.dedup import (
         winnowing_stats_pandas_udf,
@@ -289,7 +289,7 @@ def test_winnowing_kernel_matches_expression_definition(spark):
     stats = winnowing_stats_pandas_udf(3, 4)
     got = {r["doc_id"]: (r["s"]["m"], r["s"]["nf"])
            for r in docs.select("doc_id", stats("text").alias("s")).collect()}
-    hv = docs.select("doc_id", word_shingle_hash32(tokens("text"), 3).alias("h"),
+    hv = docs.select("doc_id", shingle_hash32_pandas_udf(3)("text").alias("h"),
                      ).select("doc_id", "h", F.size("h").alias("m"))
     fps_arr = F.array_distinct(F.transform(
         F.sequence(F.lit(1), F.col("m") - F.lit(3)),

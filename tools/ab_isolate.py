@@ -2,10 +2,13 @@
 
 bench.py's in-pass per-query mins can carry daemon-heap/order effects;
 before treating a head/control ratio as a code property, re-measure the
-named queries ALONE: one fresh-JVM session per side (HEAD, then the
-BENCH_CONTROL commit in a temp worktree), warmup at sf0.001, then N warm
-runs at the target sf_dir, min per query. Prints head s, control s, and
-the isolated ratio.
+named queries ALONE: four fresh-JVM sessions in H,C,C,H order (HEAD, the
+BENCH_CONTROL commit, the control again, HEAD again — as bench.py
+alternates sides, so the box's first-session penalty does not land on one
+side), each a warmup at sf0.001 then N warm runs at the target sf_dir;
+min per query per side over both its sessions. The control commit is
+copied with ``git archive`` into a temp directory, leaving the repo's
+worktree list untouched. Prints head s, control s, and the isolated ratio.
 
 Usage:
   python tools/ab_isolate.py knn_shapley_valuation,winnowing_fingerprints \
@@ -77,17 +80,16 @@ def main() -> int:
     control = _control_commit()
     wt = tempfile.mkdtemp(prefix="mtmrl_ab_iso_")
     try:
-        r = subprocess.run(
-            ["git", "-C", HERE, "worktree", "add", "--detach", "--force", wt, control],
-            capture_output=True,
-            text=True,
-        )
-        if r.returncode != 0:
-            print(r.stderr, file=sys.stderr)
+        git = subprocess.Popen(["git", "-C", HERE, "archive", control], stdout=subprocess.PIPE)
+        tar = subprocess.run(["tar", "-x", "-C", wt], stdin=git.stdout)
+        git.stdout.close()
+        if git.wait() != 0 or tar.returncode != 0:
+            print(f"cannot export control commit {control}", file=sys.stderr)
             return 1
         sides = {"head": HERE, "control": wt}
         out: dict[str, dict[str, float]] = {}
-        for side, code_dir in sides.items():
+        for side in ("head", "control", "control", "head"):
+            code_dir = sides[side]
             with tempfile.NamedTemporaryFile("r", suffix=".json") as tf:
                 env = dict(os.environ)
                 env["PYTHONPATH"] = code_dir
@@ -96,7 +98,10 @@ def main() -> int:
                     check=True,
                     env=env,
                 )
-                out[side] = json.load(open(tf.name))
+                res = json.load(open(tf.name))
+            prev = out.setdefault(side, res)
+            for n, t in res.items():
+                prev[n] = min(prev[n], t)
         print("| query | head s | control s | isolated ratio |")
         print("|---|---|---|---|")
         for n in names.split(","):
@@ -104,10 +109,6 @@ def main() -> int:
             print(f"| `{n}` | {h:.3f} | {c:.3f} | {h / c:.2f}x |")
         return 0
     finally:
-        subprocess.run(
-            ["git", "-C", HERE, "worktree", "remove", "--force", wt],
-            capture_output=True,
-        )
         shutil.rmtree(wt, ignore_errors=True)
 
 
