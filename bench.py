@@ -386,6 +386,14 @@ _OUTLIERS_SHOWN = 5
 _SUSPECT_OUTLIERS = 8
 
 
+def _is_suspect(result: dict, ncpu: int | None = None) -> bool:
+    """More than eight A/B outliers, or a pass that started with ``load1``
+    above half of ``ncpu`` (default ``os.cpu_count()``)."""
+    ncpu = ncpu or os.cpu_count() or 32
+    outliers = result.get("ab_outliers") or {}
+    return len(outliers) > _SUSPECT_OUTLIERS or max(result.get("ab_load1") or [0]) > ncpu / 2
+
+
 def _driver_line(result: dict, ncpu: int | None = None) -> str:
     """Build the one printed JSON line (VERDICT r9 item 2): every legacy
     aggregate field PLUS the per-query seconds map, so the driver's
@@ -399,9 +407,8 @@ def _driver_line(result: dict, ncpu: int | None = None) -> str:
     shape). The control per-query map (~1.5k chars more) cannot fit
     alongside 47 query names; it stays in BENCH_HISTORY.jsonl.
 
-    ``"suspect": true`` marks a measurement not to trust: more than eight
-    A/B outliers, or a pass that started with ``load1`` above half of
-    ``ncpu`` (default ``os.cpu_count()``)."""
+    ``"suspect": true`` marks a measurement not to trust
+    (:func:`_is_suspect`)."""
     compact = {
         k: v
         for k, v in result.items()
@@ -409,8 +416,7 @@ def _driver_line(result: dict, ncpu: int | None = None) -> str:
     }
     compact["n_queries"] = len(result["queries"])
     outliers = result.get("ab_outliers") or {}
-    ncpu = ncpu or os.cpu_count() or 32
-    if len(outliers) > _SUSPECT_OUTLIERS or max(result.get("ab_load1") or [0]) > ncpu / 2:
+    if _is_suspect(result, ncpu):
         compact["suspect"] = True
     worst = dict(sorted(outliers.items(), key=lambda kv: -kv[1])[:_OUTLIERS_SHOWN])
     for shown in (outliers, worst):
@@ -460,6 +466,7 @@ def main() -> None:
                             timespec="seconds"
                         ),
                         **result,
+                        **({"suspect": True} if _is_suspect(result) else {}),
                     }
                 )
                 + "\n"

@@ -21,4 +21,6 @@ Design principles (see SURVEY.md §4, §7):
 
 __version__ = "0.1.0"
 
-from multithreaded_map_reduce_library_spark.session import get_spark  # noqa: F401
+from multithreaded_map_reduce_library_spark.session import get_spark, tune_python_worker  # noqa: F401
+
+tune_python_worker()

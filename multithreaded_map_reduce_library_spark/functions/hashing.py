@@ -4,8 +4,13 @@
 ``h = 5381; h = h*33 + c`` over the key bytes, mod num_partitions) for
 byte-exact output-shard parity (SURVEY.md Q3 / risk #1). It exists in two
 forms: a plain Python function (parity layer / tests) and a pure Column
-expression built from ``aggregate`` over the key's characters — JVM-side,
-no Python UDF, so the parity sink stays inside whole-stage codegen.
+expression built from ``aggregate`` over the key's bytes — JVM-side, no
+Python UDF, so the parity sink stays inside whole-stage codegen. Both
+forms hash the key's UTF-8 bytes as UNSIGNED values 0-255, so they agree
+on every string key. The C reference adds each byte as a ``char``, whose
+signedness the platform decides: where ``char`` is signed (x86-64), a
+non-ASCII byte adds a negative value, so its shards match ours only on
+ASCII keys (all of the reference's fixtures).
 
 Everything else in the engine uses Spark's built-in Murmur3
 ``HashPartitioning`` (the scale-correct default); djb2 is opt-in.
@@ -28,16 +33,17 @@ def djb2(key: str, num_partitions: int | None = None) -> int:
 
 
 def djb2_expr(col: Column | str, num_partitions: int | None = None) -> Column:
-    """djb2 as a JVM-side Column expression (no Python UDF).
+    """djb2 as a JVM-side Column expression (no Python UDF), equal to
+    :func:`djb2` on every key.
 
-    ``aggregate(split(key,''), 5381, (acc,c) -> (acc*33 + ascii(c)) % 2^32)``.
-    Matches :func:`djb2` for ASCII keys (the reference's fixtures are ASCII;
-    ``ascii()`` returns the first code point, so multi-byte UTF-8 diverges —
-    documented, and irrelevant for parity with the C library which hashes
-    raw bytes).
+    Decoding the key's UTF-8 bytes as ISO-8859-1 maps each byte to the
+    character of the same code point, so ``ascii()`` of each character is
+    the unsigned byte: ``aggregate(split(decode(encode(key,'UTF-8'),
+    'ISO-8859-1'),''), 5381, (acc,c) -> (acc*33 + ascii(c)) % 2^32)``.
     """
     c = F.col(col) if isinstance(col, str) else col
-    chars = F.filter(F.split(c, ""), lambda ch: ch != F.lit(""))
+    latin1 = F.decode(F.encode(c, "UTF-8"), "ISO-8859-1")
+    chars = F.filter(F.split(latin1, ""), lambda ch: ch != F.lit(""))
     h = F.aggregate(
         chars,
         F.lit(5381).cast("long"),

@@ -8,15 +8,17 @@ Reproduces the reference's API contract (mapreduce.h:44-83) on Spark RDDs:
   (mapreduce.h:5, distwc.c:8-22)  ->  ``mapper(filename, content) ->
   Iterable[(str, str)]`` (emission by yielding, not a side-effect API)
 - ``MR_Partitioner`` DJB2 hash routing (mapreduce.c:154-160)  ->
-  ``partitionFunc=djb2`` in ``groupByKey``
-- shuffle + sort-within-partition (mapreduce.c:111-144)  ->  ``groupByKey``
-  gathers each map task's values per key in its spill-aware
-  ``ExternalMerger``, so one ``(key, [values])`` record per (task, key)
-  crosses the shuffle instead of the reference's one pair per token; the
-  reduce side sorts its partition's *groups* by key with
-  ``pyspark.shuffle.ExternalSorter`` (strcmp order, quirk Q3; same spill
-  bound as ``repartitionAndSortWithinPartitions``: 0.9 ×
-  ``spark.python.worker.memory``). Values keep map-task fetch order.
+  ``partitionBy(num_partitions, djb2)``
+- shuffle + sort-within-partition (mapreduce.c:111-144)  ->  each map task
+  groups its pairs by key in one dict pass, so one ``(key, [values])``
+  record per (task, key) crosses the shuffle instead of the reference's one
+  pair per token. Past 0.9 × ``spark.python.worker.memory`` the task
+  yields its partial groups into the shuffle and starts new ones, instead
+  of spilling. The reduce side sorts its partition's partial groups by key
+  with ``pyspark.shuffle.ExternalSorter`` (strcmp order, quirk Q3; it
+  spills past the same bound) and chains each key's partial groups into
+  one value iterator. Values keep emission order within a map task and
+  map-task fetch order across tasks.
 - ``Reducer`` + ``MR_GetNext`` value-iterator contract (mapreduce.h:6,83;
   mapreduce.c:199-213)  ->  ``reducer(key, values_iterator) -> str``,
   called once per key with a one-pass iterator over its grouped values —
@@ -34,10 +36,11 @@ from __future__ import annotations
 
 from collections import defaultdict
 from collections.abc import Callable, Iterable, Iterator
+from itertools import chain, groupby, islice
 from operator import itemgetter
 
 from pyspark import RDD
-from pyspark.shuffle import ExternalSorter
+from pyspark.shuffle import ExternalSorter, get_used_memory
 from pyspark.sql import SparkSession
 
 from multithreaded_map_reduce_library_spark.functions.hashing import djb2
@@ -45,29 +48,44 @@ from multithreaded_map_reduce_library_spark.functions.hashing import djb2
 Mapper = Callable[[str, str], Iterable[tuple[str, str]]]
 Reducer = Callable[[str, Iterator[str]], str]
 
+#: pairs grouped between two checks of the worker's memory
+_CHECK_EVERY = 10_000
+
+
+def _group_by_key(
+    pairs: Iterable[tuple[str, str]], memory_mb: float, combiner: Reducer | None = None
+) -> Iterator[tuple[str, list[str]]]:
+    """Group a map task's pairs by key in one dict pass, values in emission
+    order. When the worker's memory passes ``memory_mb`` the partial groups
+    so far are yielded and grouping starts afresh; the reduce side merges
+    partial groups. With a ``combiner`` each group is reduced to the
+    one-element list ``[combiner(key, values)]`` first."""
+    it = iter(pairs)
+    done = False
+    while not done:
+        groups: defaultdict[str, list[str]] = defaultdict(list)
+        while True:
+            n = 0
+            for n, (key, value) in enumerate(islice(it, _CHECK_EVERY), 1):
+                groups[key].append(value)
+            done = n < _CHECK_EVERY
+            if done or get_used_memory() > memory_mb:
+                break
+        if combiner is None:
+            yield from groups.items()
+        else:
+            for key, values in groups.items():
+                yield key, [combiner(key, iter(values))]
+
 
 def _reduce_partition(reducer: Reducer, memory_mb: float):
-    def run(part: Iterator[tuple[str, Iterable[str]]]) -> Iterator[tuple[str, str]]:
+    def run(part: Iterator[tuple[str, list[str]]]) -> Iterator[tuple[str, str]]:
         # One reducer call per unique key, in strcmp key order (MR_Reduce
-        # loop, mapreduce.c:169-188); the sorter spills past ``memory_mb``.
-        for key, values in ExternalSorter(memory_mb).sorted(part, key=itemgetter(0)):
-            yield key, reducer(key, iter(values))
-
-    return run
-
-
-def _combine_partition(combiner: Reducer):
-    def run(part: Iterator[tuple[str, str]]) -> Iterator[tuple[str, str]]:
-        # Map-side combine: run the combiner once per key of the map
-        # partition BEFORE the shuffle. Keys need no order here, so a dict
-        # groups them. The reference has no combiner (mapreduce.c:111-144,
-        # SURVEY.md §4); this is the upgrade Catalyst applies automatically
-        # as partial HashAggregate, surfaced in the RDD facade.
-        groups: defaultdict[str, list[str]] = defaultdict(list)
-        for key, value in part:
-            groups[key].append(value)
-        for key, values in groups.items():
-            yield key, combiner(key, iter(values))
+        # loop, mapreduce.c:169-188), over the key's partial groups from
+        # every map task; the sorter spills past ``memory_mb``.
+        groups = ExternalSorter(memory_mb).sorted(part, key=itemgetter(0))
+        for key, partials in groupby(groups, key=itemgetter(0)):
+            yield key, reducer(key, chain.from_iterable(values for _, values in partials))
 
     return run
 
@@ -80,20 +98,24 @@ def mr_run_pairs(
 ) -> RDD:
     """Shuffle + reduce phases over an already-mapped pair RDD.
 
-    DJB2 partitioning (shard parity with the reference), grouped per map
-    task before the shuffle, then byte-order key sort within each partition
-    (quirk Q3) and the grouped-iterator reduce.
+    Grouped per map task by :func:`_group_by_key`, DJB2-partitioned (shard
+    parity with the reference), then byte-order key sort within each
+    partition (quirk Q3) and the grouped-iterator reduce.
 
-    ``combiner``, if given, runs map-side per key first (Hadoop combiner
-    contract: same signature as the reducer, output feedable back into the
-    reducer — requires an associative reduction, e.g. SUM of partials
-    rather than the reference's COUNT-of-occurrences quirk Q2).
+    ``combiner``, if given, runs map-side once per key and map task on the
+    same grouping (Hadoop combiner contract: same signature as the
+    reducer, output feedable back into the reducer — requires an
+    associative reduction, e.g. SUM of partials rather than the
+    reference's COUNT-of-occurrences quirk Q2). The reference has no
+    combiner (mapreduce.c:111-144, SURVEY.md §4); this is the upgrade
+    Catalyst applies automatically as partial HashAggregate.
     """
-    if combiner is not None:
-        pairs = pairs.mapPartitions(_combine_partition(combiner))
-    grouped = pairs.groupByKey(num_partitions, partitionFunc=lambda k: djb2(k, num_partitions))
-    reduce = _reduce_partition(reducer, pairs._memory_limit() * 0.9)
-    return grouped.mapPartitions(reduce, preservesPartitioning=True)
+    memory_mb = pairs._memory_limit() * 0.9
+    grouped = pairs.mapPartitions(lambda part: _group_by_key(part, memory_mb, combiner))
+    shuffled = grouped.partitionBy(num_partitions, djb2)
+    return shuffled.mapPartitions(
+        _reduce_partition(reducer, memory_mb), preservesPartitioning=True
+    )
 
 
 def mr_run(

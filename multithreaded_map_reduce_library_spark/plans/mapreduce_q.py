@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multithreaded_map_reduce_library_spark.functions.text import split_tokens
 from multithreaded_map_reduce_library_spark.mapreduce.api import (
     mr_run_pairs,
     wordcount_reducer,
@@ -97,13 +98,14 @@ def q_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_mr_api_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The RDD MapReduce parity facade (mapreduce/api.py) producing the same
-    counts: flatMap mapper -> DJB2 ``groupByKey`` (one (key, values) record
-    per map task and key crosses the shuffle) -> key sort within each shard
-    -> grouped-iterator reducer (mapreduce.h:44-83 contract). Values are the
-    reducer's string outputs, matching the reference's typeless strings
-    (mapreduce.h:8-12)."""
+    counts: flatMap mapper (``split_tokens``; a null text has no tokens) ->
+    one dict grouping per map task -> DJB2 ``partitionBy`` (one (key,
+    values) record per map task and key crosses the shuffle) -> key sort
+    of the partial groups within each shard -> grouped-iterator reducer
+    (mapreduce.h:44-83 contract). Values are the reducer's string outputs,
+    matching the reference's typeless strings (mapreduce.h:8-12)."""
     docs = load_table(spark, sf_dir, "documents").select("text")
-    pairs = docs.rdd.flatMap(lambda row: [(t, "1") for t in row[0].replace("\t", " ").replace("\r", " ").replace("\n", " ").split(" ") if t])
+    pairs = docs.rdd.flatMap(lambda row: [(t, "1") for t in split_tokens(row[0])])
     reduced = mr_run_pairs(pairs, wordcount_reducer, num_partitions=10)
     return reduced.toDF(["key", "cnt_str"])
 
@@ -129,7 +131,7 @@ def q_mr_api_wordcount_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's COUNT semantics (quirk Q2) — same oracle as
     ``mr_api_wordcount``."""
     docs = load_table(spark, sf_dir, "documents").select("text")
-    pairs = docs.rdd.flatMap(lambda row: [(t, "1") for t in row[0].replace("\t", " ").replace("\r", " ").replace("\n", " ").split(" ") if t])
+    pairs = docs.rdd.flatMap(lambda row: [(t, "1") for t in split_tokens(row[0])])
     reduced = mr_run_pairs(
         pairs, wordcount_sum_reducer, num_partitions=10, combiner=wordcount_sum_reducer
     )

@@ -288,11 +288,14 @@ def no_token_dir(tmp_path_factory):
         "dedup_clusters",
         "ngram_jaccard_pairs",
         "winnowing_fingerprints",
+        "mr_api_wordcount",
+        "mr_api_wordcount_combined",
     ],
 )
 def test_no_token_documents_follow_oracles(spark, no_token_dir, name):
     """Documents without tokens get no shingle hash: no signature (their
     band keys are the empty-slice keys, so they band-collide with each
-    other exactly as in the oracles), no shingle-index row, no SimHash."""
+    other exactly as in the oracles), no shingle-index row, no SimHash;
+    and no word-count pair in the MapReduce facade's mappers."""
     q = all_queries()[name]
     compare_query(spark, q.fn, q.oracle, no_token_dir)

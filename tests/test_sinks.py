@@ -10,10 +10,16 @@ from pyspark.sql import functions as F
 
 def test_djb2_expr_matches_python(spark):
     words = ["This", "is", "a", "test", "five-thousand", "x", "mapreduce"]
+    words += ["", "é", "naïve", "日本語", "🙂ok", "\x7f\x80ÿ", "ab" * 2500]
     df = spark.createDataFrame([(w,) for w in words], ["key"])
     rows = df.select("key", djb2_expr("key", 10).alias("pid")).collect()
     for r in rows:
         assert r["pid"] == djb2(r["key"], 10), r["key"]
+    # the full 32-bit hash, not only its shard: both forms fold the
+    # unsigned UTF-8 bytes
+    hashes = df.select("key", djb2_expr("key").alias("h")).collect()
+    assert {r["key"]: r["h"] for r in hashes} == {w: djb2(w) for w in words}
+    assert djb2("é") == (5381 * 33 + 0xC3) * 33 + 0xA9
 
 
 def test_csv_jsonl_parquet_roundtrip(spark, tmp_path):
