@@ -38,14 +38,14 @@ def djb2_expr(col: Column | str, num_partitions: int | None = None) -> Column:
 
     Decoding the key's UTF-8 bytes as ISO-8859-1 maps each byte to the
     character of the same code point, so ``ascii()`` of each character is
-    the unsigned byte: ``aggregate(split(decode(encode(key,'UTF-8'),
-    'ISO-8859-1'),''), 5381, (acc,c) -> (acc*33 + ascii(c)) % 2^32)``.
+    the unsigned byte: ``aggregate(array_remove(split(latin1, ''), ''),
+    5381, (acc,c) -> (acc*33 + ascii(c)) % 2^32)``. ``split`` gives the
+    empty key one empty piece, which ``array_remove`` drops.
     """
     c = F.col(col) if isinstance(col, str) else col
     latin1 = F.decode(F.encode(c, "UTF-8"), "ISO-8859-1")
-    chars = F.filter(F.split(latin1, ""), lambda ch: ch != F.lit(""))
     h = F.aggregate(
-        chars,
+        F.array_remove(F.split(latin1, ""), ""),
         F.lit(5381).cast("long"),
         lambda acc, ch: (acc * F.lit(33) + F.ascii(ch)) % F.lit(_U32),
     )

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.pipeline import (
     _SHINGLE_N,
     _duck_h32,
@@ -142,9 +143,7 @@ def token_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         (F.col("lang") == "en").alias("is_en"),
-        F.explode(
-            F.filter(F.split("text", "[ \t\r\n]"), lambda x: x != F.lit(""))
-        ).alias("tok"),
+        F.explode(tokens("text")).alias("tok"),
     )
     c = t.groupBy("tok").agg(
         F.sum(F.when(F.col("is_en"), 1).otherwise(0)).alias("c_en"),

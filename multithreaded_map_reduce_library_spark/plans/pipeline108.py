@@ -217,7 +217,12 @@ def repeated_ngram_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-row histogram aggregate — no shuffle carries text. Shingles are
     compared as exact token tuples, not as 32-bit shingle hashes, so a
     hash collision cannot report a repeat the string-comparing oracle
-    does not."""
+    does not.
+
+    Documents without tokens get level 0 here but 16 in the DuckDB
+    oracle: their one ``_duck_shingles(16)`` shingle is NULL, and
+    ``len([NULL]) = 1 > len(list_distinct([NULL])) = 0`` reads as a
+    repeat. The corpus tables hold no such document."""
     import pandas as pd
 
     from multithreaded_map_reduce_library_spark.functions.text import split_tokens

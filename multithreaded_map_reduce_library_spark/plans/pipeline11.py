@@ -130,9 +130,7 @@ def text_normalization_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("text").alias("raw_len"),
         F.length("norm").alias("norm_len"),
         (F.length("text") - F.length("norm")).cast("bigint").alias("chars_removed"),
-        F.size(F.filter(F.split("norm", " "), lambda t: t != F.lit(""))).alias(
-            "n_tokens_norm"
-        ),
+        F.size(tokens("norm", " ")).alias("n_tokens_norm"),
     )
 
 

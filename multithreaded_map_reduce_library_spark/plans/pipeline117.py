@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from multithreaded_map_reduce_library_spark.functions.grid import duck_int_ratio, int_ratio
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -118,9 +119,7 @@ def rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.posexplode(
-            F.filter(F.split(F.col("text"), "[ \t\r\n]"), lambda t: t != F.lit(""))
-        ).alias("pos0", "tok0"),
+        F.posexplode(tokens("text")).alias("pos0", "tok0"),
     ).select(
         "doc_id",
         (F.col("pos0") + 1).alias("pos"),
@@ -236,11 +235,7 @@ def pps_systematic_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = docs.select(
         "doc_id",
         F.col("n_chars").alias("sz"),
-        F.size(
-            F.filter(F.split(F.col("text"), "[ \t\r\n]"), lambda t: t != F.lit(""))
-        )
-        .cast("bigint")
-        .alias("n_toks"),
+        F.size(tokens("text")).cast("bigint").alias("n_toks"),
         F.sum("n_chars").over(wcum).cast("bigint").alias("cum"),
     )
     tot = sized.agg(

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from multithreaded_map_reduce_library_spark.functions.grid import grid
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -93,9 +94,7 @@ def prefix_completion_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
         load_table(spark, sf_dir, "documents")
         .select(
-            F.explode(
-                F.filter(F.split(F.col("text"), "[ \t\r\n]"), lambda t: t != F.lit(""))
-            ).alias("tok0")
+            F.explode(tokens("text")).alias("tok0")
         )
         .select(F.lower(F.col("tok0")).alias("tok"))
         .where(F.length("tok") >= 3)

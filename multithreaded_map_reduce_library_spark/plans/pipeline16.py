@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.evaluation import (
     _mh_est_oracle,
     minhash_estimate_error,
@@ -77,8 +78,7 @@ def corpus_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     allocation itself is driver-free, window-over-5-rows work. The one
     libm pow per language is grid-quantized (module docstring)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
-    l = docs.groupBy("lang").agg(F.sum(F.size(toks)).alias("n_toks"))
+    l = docs.groupBy("lang").agg(F.sum(F.size(tokens("text"))).alias("n_toks"))
     w = l.select(
         "lang",
         "n_toks",

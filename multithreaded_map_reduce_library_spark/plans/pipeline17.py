@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -52,8 +53,7 @@ _DUCK_KN_PROB = (
 
 def _spark_kn_tables(docs: DataFrame):
     """(cab, ca, cont, types) count relations mirroring _DUCK_KN_BASE."""
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda x: x != F.lit(""))
-    t = docs.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= 2)
+    t = docs.select("doc_id", tokens("text").alias("toks")).filter(F.size("toks") >= 2)
     pairs = F.transform(
         F.sequence(F.lit(1), F.size("toks") - 1),
         lambda i: F.struct(

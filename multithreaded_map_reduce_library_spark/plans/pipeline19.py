@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from multithreaded_map_reduce_library_spark.functions.grid import grid
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.functions.vectors import l2_norm
 from multithreaded_map_reduce_library_spark.operators.similarity import (
     _cos_pre,
@@ -83,9 +84,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the score exact, so the cross-engine hash cannot drift.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower("text"), "[^a-z0-9]+"), lambda t: t != F.lit("")
-    )
+    toks = tokens(F.lower("text"), "[^a-z0-9]+")
     weight = lambda t: (  # noqa: E731 — md5-derived milli-weight
         F.conv(F.substring(F.md5(F.concat(F.lit("w|"), t)), 1, 8), 16, 10).cast(
             "bigint"

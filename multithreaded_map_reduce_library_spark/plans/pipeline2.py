@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from multithreaded_map_reduce_library_spark.functions.grid import int_ratio
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -248,11 +249,7 @@ def doc_clean_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     into one declarative plan — Catalyst pushes the n_chars filter to
     the scan and the md5 window is the only wide stage."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") >= 100)
-    tok = F.size(
-        F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda x: x != F.lit("")
-        )
-    ).cast("long")
+    tok = F.size(tokens(F.lower(F.col("text")), "[^a-z0-9]+")).cast("long")
     toked = d.select("lang", "source", "doc_id", F.md5("text").alias("h"), tok.alias("tok"))
     w = Window.partitionBy("h").orderBy("doc_id")
     deduped = toked.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)

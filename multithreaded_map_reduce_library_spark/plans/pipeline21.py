@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.pipeline import _TOKS
 from multithreaded_map_reduce_library_spark.functions.grid import grid
 from multithreaded_map_reduce_library_spark.plans.registry import register
@@ -176,11 +177,10 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     per document.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
     b = docs.select(
         "doc_id",
         "lang",
-        F.explode(toks).alias("tok"),
+        F.explode(tokens("text")).alias("tok"),
     ).select(
         "doc_id",
         "lang",

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from multithreaded_map_reduce_library_spark.functions.grid import grid
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -122,9 +123,8 @@ def _bpe_learn(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[DataFr
     """Spark twin of _bpe_chain_sql: returns (final vocab with merged
     reps, the per-round 1-row merge DataFrames)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
     wf = (
-        docs.select(F.explode(toks).alias("w"))
+        docs.select(F.explode(tokens("text")).alias("w"))
         .select(F.lower("w").alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
@@ -326,12 +326,11 @@ def _logreg_train(spark: SparkSession, sf_dir: str):
     all lazy DataFrames; w is the 1-row weight vector after the unrolled
     GD iterations."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
     feat = docs.select(
         "doc_id",
         F.when(F.col("lang") == "en", 1.0).otherwise(0.0).alias("y"),
         (F.col("n_chars").cast("double") / 1024).alias("x1"),
-        (F.size(toks).cast("double") / 64).alias("x2"),
+        (F.size(tokens("text")).cast("double") / 64).alias("x2"),
         (F.size(F.regexp_extract_all("text", F.lit("[aeiou]"), 0)).cast("double") / 256).alias(
             "x3"
         ),

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.pipeline22 import (
     _bpe_chain_sql,
     _bpe_learn,
@@ -62,8 +63,7 @@ def bpe_tokenize_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     vocab, _ = _bpe_learn(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
-    dw = docs.select("doc_id", F.explode(toks).alias("w")).select(
+    dw = docs.select("doc_id", F.explode(tokens("text")).alias("w")).select(
         "doc_id", F.lower("w").alias("word")
     )
     rep = vocab.select(

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.pipeline import _TOKS
 from multithreaded_map_reduce_library_spark.functions.grid import grid
 from multithreaded_map_reduce_library_spark.plans.registry import register
@@ -55,10 +56,7 @@ def skipgram_training_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation is vocab^2-bounded, not corpus-bounded.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.transform(
-        F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit("")),
-        lambda t: F.lower(t),
-    )
+    toks = F.transform(tokens("text"), lambda t: F.lower(t))
     t = docs.select(F.posexplode(toks).alias("i0", "center"), F.col("doc_id")).select(
         "doc_id", (F.col("i0") + 1).alias("i"), "center"
     )
@@ -232,8 +230,7 @@ def length_bucketed_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a |buckets|-row rollup — all integers, map-side combined.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
-    n = docs.select("doc_id", F.size(toks).alias("n_toks"))
+    n = docs.select("doc_id", F.size(tokens("text")).alias("n_toks"))
     g = n.agg(F.max("n_toks").alias("max_len"))
     b = n.where(F.col("n_toks") > 0).select(
         "doc_id",

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table, scaled_broadcast
 
@@ -184,12 +185,7 @@ def prefix_filter_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     space. Pure integers end to end.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.array_distinct(
-        F.transform(
-            F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit("")),
-            lambda t: F.lower(t),
-        )
-    )
+    toks = F.array_distinct(F.transform(tokens("text"), lambda t: F.lower(t)))
     s = docs.select("doc_id", toks.alias("toks"))
     # global document frequency -> total order (freq asc, token asc)
     df_tok = (

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -131,8 +132,7 @@ def span_corruption_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-span production variant changes the expression, not the plan.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
-    t = docs.select("doc_id", toks.alias("toks")).where(
+    t = docs.select("doc_id", tokens("text").alias("toks")).where(
         F.size("toks") >= _SC_SPAN + 1
     )
     s = t.select(

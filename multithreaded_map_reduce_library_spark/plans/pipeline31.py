@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.pipeline import _TOKS
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
@@ -202,10 +203,9 @@ def cluster_topic_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = assign_ivf_cells(emb, stride=_CT_STRIDE).select(
         F.col("id").alias("vec_id"), "cell"
     )
-    toks_arr = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
     toks = (
         docs.join(cells, docs["doc_id"] == cells["vec_id"])
-        .select("cell", F.explode(toks_arr).alias("tok0"))
+        .select("cell", F.explode(tokens("text")).alias("tok0"))
         .select("cell", F.lower("tok0").alias("tok"))
     )
     tf = toks.groupBy("cell", "tok").agg(F.count("*").alias("f"))

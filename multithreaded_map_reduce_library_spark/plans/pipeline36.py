@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from multithreaded_map_reduce_library_spark.functions.grid import grid, int_ratio
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -192,8 +193,7 @@ def quality_signal_rank_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     and an integer sum — no floats anywhere.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
-    t = docs.select("doc_id", toks.alias("toks")).where(F.size("toks") > 0)
+    t = docs.select("doc_id", tokens("text").alias("toks")).where(F.size("toks") > 0)
     s = t.select(
         "doc_id",
         F.size("toks").alias("n_toks"),

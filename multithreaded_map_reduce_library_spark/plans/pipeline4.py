@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from multithreaded_map_reduce_library_spark.functions.grid import int_ratio
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -32,9 +33,7 @@ _CMS_WIDTH = 1024
 
 def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
-    ).filter(F.col("tok") != "")
+    return docs.select("doc_id", F.explode(tokens("text", " ")).alias("tok"))
 
 
 @register(

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from multithreaded_map_reduce_library_spark.functions.grid import grid
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.functions.vectors import l2_norm
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
@@ -153,9 +154,8 @@ def zipf_alpha_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab; the fit reads 30 rows. Nothing here ever grows past |vocab|.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
     f = (
-        docs.select(F.explode(toks).alias("t0"))
+        docs.select(F.explode(tokens("text")).alias("t0"))
         .select(F.lower("t0").alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("freq"))

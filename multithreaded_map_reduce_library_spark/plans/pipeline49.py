@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.pipeline import _TOKS
 from multithreaded_map_reduce_library_spark.functions.grid import grid
 from multithreaded_map_reduce_library_spark.plans.registry import register
@@ -90,9 +91,8 @@ def naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic "NB is one big join-aggregate" layout that scales linearly.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
     t = docs.select(
-        "doc_id", F.col("lang"), F.explode(toks).alias("t0")
+        "doc_id", F.col("lang"), F.explode(tokens("text")).alias("t0")
     ).select("doc_id", "lang", F.lower("t0").alias("tok"))
     v = t.agg(F.countDistinct("tok").alias("vsize"))
     cl = t.groupBy("lang", "tok").agg(F.count("*").alias("c"))

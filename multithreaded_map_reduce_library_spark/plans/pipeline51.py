@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.pipeline import _TOKS
 from multithreaded_map_reduce_library_spark.functions.grid import grid
 from multithreaded_map_reduce_library_spark.plans.registry import register
@@ -78,8 +79,7 @@ def tfidf_cosine_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate relation.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
-    t = docs.select("doc_id", F.explode(toks).alias("t0")).select(
+    t = docs.select("doc_id", F.explode(tokens("text")).alias("t0")).select(
         "doc_id", F.lower("t0").alias("tok")
     )
     tf = t.groupBy("doc_id", "tok").agg(F.count("*").alias("f"))

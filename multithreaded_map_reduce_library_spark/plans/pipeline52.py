@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.pipeline import _TOKS
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
@@ -60,8 +61,7 @@ def max_token_run_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combine.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
-    t = docs.select("doc_id", F.posexplode(toks).alias("i0", "tok")).select(
+    t = docs.select("doc_id", F.posexplode(tokens("text")).alias("i0", "tok")).select(
         "doc_id", (F.col("i0") + 1).alias("i"), "tok"
     )
     isl = t.select(

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.pipeline import _TOKS
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
@@ -81,9 +82,8 @@ def fighting_words_en_vs_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB is exactly this shape.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
     t = docs.select(
-        F.explode(toks).alias("t0"),
+        F.explode(tokens("text")).alias("t0"),
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("is_en"),
     ).select(F.lower("t0").alias("tok"), "is_en")
     c = t.groupBy("tok").agg(

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.pipeline import _TOKS
 from multithreaded_map_reduce_library_spark.functions.grid import grid
 from multithreaded_map_reduce_library_spark.plans.registry import register
@@ -81,8 +82,7 @@ def dunning_llr_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     is TakeOrdered.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
-    tk = docs.select(toks.alias("tk"))
+    tk = docs.select(tokens("text").alias("tk"))
     narr = F.size("tk")
     bg = tk.select(
         F.explode(

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.operators import textstats as T
 from multithreaded_map_reduce_library_spark.plans.pipeline import (
     _TOKS,
@@ -140,8 +141,7 @@ def burrows_delta_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-30 cut lives on a |sources| x 30 relation.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
-    t = docs.select("source", F.explode(toks).alias("t0")).select(
+    t = docs.select("source", F.explode(tokens("text")).alias("t0")).select(
         "source", F.lower("t0").alias("tok")
     )
     ns = t.groupBy("source").agg(F.count("*").alias("n"))

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.pipeline import _TOKS
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
@@ -135,9 +136,8 @@ def negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vocab-sized relation.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
     c = (
-        docs.select(F.explode(toks).alias("t0"))
+        docs.select(F.explode(tokens("text")).alias("t0"))
         .select(F.lower("t0").alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("n"))

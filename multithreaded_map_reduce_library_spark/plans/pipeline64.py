@@ -20,6 +20,7 @@ from multithreaded_map_reduce_library_spark.functions.grid import (
     duck_int_ratio,
     int_ratio,
 )
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.pipeline22 import (
     _bpe_chain_sql,
     _bpe_learn,
@@ -109,9 +110,8 @@ def unimax_corpus_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions over the |languages|-row relation — no collect, no
     driver-side loop, and the same plan at 100 TB."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
     lt = docs.groupBy("lang").agg(
-        F.sum(F.size(toks)).cast("bigint").alias("n_tokens")
+        F.sum(F.size(tokens("text"))).cast("bigint").alias("n_tokens")
     )
     div = lambda a, b: F.call_function("div", a, b)  # noqa: E731
     w_all = Window.partitionBy()
@@ -217,8 +217,7 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     language costs nothing beyond the tokenization pass itself."""
     vocab, _ = _bpe_learn(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
-    dw = docs.select("lang", F.explode(toks).alias("w")).select(
+    dw = docs.select("lang", F.explode(tokens("text")).alias("w")).select(
         "lang", F.lower("w").alias("word")
     )
     rep = vocab.select(

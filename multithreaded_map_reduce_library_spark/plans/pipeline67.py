@@ -29,6 +29,7 @@ from multithreaded_map_reduce_library_spark.functions.grid import (
     duck_int_ratio,
     int_ratio,
 )
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.pipeline import (
     _duck_h32,
     _duck_shingles,
@@ -82,8 +83,7 @@ def bpe_oov_rate_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast side, one |langs|-row aggregate finishes."""
     vocab, _ = _bpe_learn(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
-    dw = docs.select("lang", F.explode(toks).alias("w")).select(
+    dw = docs.select("lang", F.explode(tokens("text")).alias("w")).select(
         "lang", F.lower("w").alias("word")
     )
     vw = vocab.select("word", F.lit(1).alias("_in_vocab"))

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -82,8 +83,7 @@ def fim_training_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles, streams any corpus size through whole-stage codegen;
     the pipeline30 span-corruption twin with a second cut channel."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", "[ \t\r\n]"), lambda t: t != F.lit(""))
-    t = docs.select("doc_id", toks.alias("toks")).where(F.size("toks") >= 3)
+    t = docs.select("doc_id", tokens("text").alias("toks")).where(F.size("toks") >= 3)
 
     def cut(chan: str):
         return F.lit(1) + F.conv(

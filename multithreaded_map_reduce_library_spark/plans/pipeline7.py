@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -217,9 +218,7 @@ def doc_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tasks); the per-doc reduction then groups on doc_id alone. A pure
     two-level aggregation tree, no joins."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.col("w") != "")
+    tok = docs.select("doc_id", F.explode(tokens("text", " ")).alias("w"))
     c = tok.groupBy("doc_id", "w").agg(F.count("*").alias("n"))
     d = c.groupBy("doc_id").agg(
         F.sum("n").alias("n_tokens"),

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -105,9 +106,7 @@ def heaps_law_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.lower(F.col("text")), _TOK_RE), lambda x: x != "")
-        ).alias("tok"),
+        F.explode(tokens(F.lower(F.col("text")), _TOK_RE)).alias("tok"),
     )
     per_doc = t.groupBy("doc_id").agg(F.count("*").alias("n_toks"))
     first_doc = t.groupBy("tok").agg(F.min("doc_id").alias("d0"))

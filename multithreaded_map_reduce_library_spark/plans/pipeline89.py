@@ -29,6 +29,7 @@ from multithreaded_map_reduce_library_spark.functions.grid import (
     duck_int_ratio,
     int_ratio,
 )
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -207,14 +208,9 @@ def postings_varint_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame
     the size rollup rides the same partitioning — two exchanges total,
     both on the token key."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = (
-        docs.select(
-            "doc_id",
-            F.explode(F.split(F.lower(F.col("text")), "[ \\t\\r\\n]+")).alias("tok"),
-        )
-        .where(F.col("tok") != "")
-        .distinct()
-    )
+    toks = docs.select(
+        "doc_id", F.explode(tokens(F.lower("text"))).alias("tok")
+    ).distinct()
     from pyspark.sql import Window
 
     w = Window.partitionBy("tok").orderBy("doc_id")

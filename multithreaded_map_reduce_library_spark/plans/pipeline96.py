@@ -236,12 +236,14 @@ def build_piece_graph(spark: SparkSession, sf_dir: str):
         .cast("bigint")
         .alias("cost_e6"),
     )
-    wrn = F.row_number().over(Window.orderBy(F.desc("freq"), F.asc("word")))
+    # long words rank last and are cut after the window: a cut below it is
+    # pushed under the rollup, which then no longer reuses the gram count's
+    too_long = F.length("word") > _MAX_WLEN
+    wrn = F.row_number().over(Window.orderBy(too_long, F.desc("freq"), F.asc("word")))
     words = (
-        wf.where(F.length("tok") <= _MAX_WLEN)
-        .select(F.col("tok").alias("word"), "freq")
+        wf.select(F.col("tok").alias("word"), "freq")
         .withColumn("rn", wrn)
-        .where(F.col("rn") <= _TOP_WORDS)
+        .where((F.col("rn") <= _TOP_WORDS) & ~too_long)
         .select("word", "freq")
     )
     span = words.select(

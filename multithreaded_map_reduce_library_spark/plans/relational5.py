@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from multithreaded_map_reduce_library_spark.functions.grid import gavg, int_ratio_big
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -182,9 +183,7 @@ def bigram_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     count aggregation partial-combines map-side so only distinct
     bigrams cross the shuffle."""
     d = load_table(spark, sf_dir, "documents")
-    ts = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda x: x != F.lit("")
-    )
+    ts = tokens(F.lower(F.col("text")), "[^a-z0-9]+")
     bigrams = F.when(
         F.size(ts) >= 2,
         F.zip_with(

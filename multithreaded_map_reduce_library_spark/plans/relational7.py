@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from multithreaded_map_reduce_library_spark.functions.grid import grid, int_ratio
+from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table, scaled_broadcast
 
@@ -341,9 +342,9 @@ def approx_topk_tokens_exact_capacity(spark: SparkSession, sf_dir: str) -> DataF
     vocabulary exceeds capacity the same plan degrades gracefully to
     approximate counts; re-rank below stays deterministic."""
     docs = load_table(spark, sf_dir, "documents")
-    docs.select(
-        F.explode(F.split("text", " ")).alias("token")
-    ).filter(F.col("token") != "").createOrReplaceTempView("tok_v")
+    docs.select(F.explode(tokens("text", " ")).alias("token")).createOrReplaceTempView(
+        "tok_v"
+    )
     # k=100 >= vocabulary, so the sketch returns every token with its exact
     # count; the deterministic re-rank below (not the sketch's internal,
     # engine-arbitrary tie order) picks the final 10.

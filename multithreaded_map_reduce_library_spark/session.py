@@ -1,7 +1,8 @@
 """SparkSession factory with scale-oriented defaults.
 
-Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (default 32), but every
-config here is chosen for the 1000-executor / 100 TB deployment:
+Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (default: the machine's
+core count), but every config here is chosen for the 1000-executor /
+100 TB deployment:
 
 - AQE on: runtime partition coalescing, skew-join splitting, and plan
   re-optimization replace any hand-tuned partition counts (the reference
@@ -10,6 +11,11 @@ config here is chosen for the 1000-executor / 100 TB deployment:
   in columnar batches, not pickled rows.
 - UTC session timezone: deterministic timestamp semantics matching the
   DuckDB oracle's naive timestamps.
+- File scans split into at least 3 x cores pieces: Spark charges each file a
+  4 MB open cost, so a text corpus of small files otherwise packs into one
+  split per core and the largest split holds up the stage. Once splits
+  reach the 128 MB ``maxPartitionBytes`` cap, as at 100 TB, the floor does
+  nothing.
 """
 
 from __future__ import annotations
@@ -182,7 +188,11 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
 
 
 def _cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def _min_scan_splits() -> str:
+    return str(3 * _cpus())
 
 
 _DIR_BYTES: dict[str, int] = {}
@@ -247,6 +257,7 @@ def get_spark(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", str(cpus)),
         )
+        .config("spark.sql.files.minPartitionNum", _min_scan_splits())
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -326,6 +337,7 @@ def tune_existing(spark: SparkSession) -> SparkSession:
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", str(_cpus())),
     )
+    set_conf_cached(spark, "spark.sql.files.minPartitionNum", _min_scan_splits())
     set_conf_cached(spark, "spark.sql.execution.arrow.pyspark.enabled", "true")
     # Arrow batch size is pinned PER QUERY by the registry wrapper (2048
     # for image/video payloads, 10000 default) — see registry.py and the

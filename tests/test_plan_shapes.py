@@ -436,9 +436,18 @@ def test_plan_build_launches_no_job(spark, queries, name):
 def test_unigram_piece_graph_one_gram_shuffle(spark, queries):
     """The piece graph counts all three gram orders in one aggregate and
     cuts both top-k lists in one window partitioned by order: exactly one
-    exchange keyed on the gram, and no checkpointed relation in the plan."""
-    plan = plan_str(_df(queries, spark, "unigram_lm_segmentation"))
+    exchange keyed on the gram, and no checkpointed relation in the plan.
+    The gram count and the top-word window read the same word-frequency
+    rollup, so once run, the final plan scans ``documents`` once and
+    reuses that exchange."""
+    df = _df(queries, spark, "unigram_lm_segmentation")
+    plan = plan_str(df)
     assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
     args = [ln for ln in plan.splitlines() if ln.startswith("Arguments: hashpartitioning(")]
     assert sum("gram#" in ln for ln in args) == 1, plan
     assert "windowspecdefinition(n#" in plan, plan
+    df.collect()
+    final = plan_str(df, "simple").split("== Final Plan ==")[1]
+    final = final.split("== Initial Plan ==")[0]
+    scans = [ln for ln in final.splitlines() if "FileScan parquet" in ln]
+    assert sum("documents" in ln for ln in scans) == 1, final
