@@ -5,11 +5,14 @@
 byte-exact output-shard parity (SURVEY.md Q3 / risk #1). It exists in two
 forms: a plain Python function (parity layer / tests) and a pure Column
 expression built from ``aggregate`` over the key's bytes — JVM-side, no
-Python UDF, so the parity sink stays inside whole-stage codegen. Both
-forms hash the key's UTF-8 bytes as UNSIGNED values 0-255, so they agree
-on every string key. The C reference adds each byte as a ``char``, whose
-signedness the platform decides: where ``char`` is signed (x86-64), a
-non-ASCII byte adds a negative value, so its shards match ours only on
+Python UDF, so the parity sink stays inside whole-stage codegen. It is one
+parsed SQL string (functions/vectors.py says why): 3 py4j commands
+(0.20 ms) a call, against 70 (5.3 ms) spelled with ``F.aggregate`` and a
+lambda.
+Both forms hash the key's UTF-8 bytes as UNSIGNED values 0-255, so they
+agree on every string key. The C reference adds each byte as a ``char``,
+whose signedness the platform decides: where ``char`` is signed (x86-64),
+a non-ASCII byte adds a negative value, so its shards match ours only on
 ASCII keys (all of the reference's fixtures).
 
 Everything else in the engine uses Spark's built-in Murmur3
@@ -20,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from multithreaded_map_reduce_library_spark.functions.vectors import quote
 
 _U32 = 1 << 32
 
@@ -32,24 +37,21 @@ def djb2(key: str, num_partitions: int | None = None) -> int:
     return h % num_partitions if num_partitions else h
 
 
-def djb2_expr(col: Column | str, num_partitions: int | None = None) -> Column:
+def djb2_expr(col: str, num_partitions: int | None = None) -> Column:
     """djb2 as a JVM-side Column expression (no Python UDF), equal to
     :func:`djb2` on every key.
 
     Decoding the key's UTF-8 bytes as ISO-8859-1 maps each byte to the
     character of the same code point, so ``ascii()`` of each character is
-    the unsigned byte: ``aggregate(array_remove(split(latin1, ''), ''),
-    5381, (acc,c) -> (acc*33 + ascii(c)) % 2^32)``. ``split`` gives the
-    empty key one empty piece, which ``array_remove`` drops.
+    the unsigned byte. ``split`` gives the empty key one empty piece,
+    which ``array_remove`` drops.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    latin1 = F.decode(F.encode(c, "UTF-8"), "ISO-8859-1")
-    h = F.aggregate(
-        F.array_remove(F.split(latin1, ""), ""),
-        F.lit(5381).cast("long"),
-        lambda acc, ch: (acc * F.lit(33) + F.ascii(ch)) % F.lit(_U32),
+    latin1 = f"decode(encode({quote(col)}, 'UTF-8'), 'ISO-8859-1')"
+    h = (
+        f"aggregate(array_remove(split({latin1}, ''), ''), CAST(5381 AS BIGINT),"
+        f" (acc, ch) -> (acc * 33 + ascii(ch)) % {_U32})"
     )
-    return (h % F.lit(num_partitions)).cast("int") if num_partitions else h
+    return F.expr(f"CAST({h} % {num_partitions} AS INT)" if num_partitions else h)
 
 
 def md5_salted(col: Column | str, salt: int | str) -> Column:

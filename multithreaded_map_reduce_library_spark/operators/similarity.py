@@ -14,7 +14,7 @@ Two paths per the driver contract:
   you'd add multi-probe / repetitions for recall; the plan shape is the
   scale path.
 
-Every dot product, norm and cosine here is :func:`functions.vectors.dot`.
+Every dot product, norm and cosine here is :func:`functions.vectors.dot_sql`.
 """
 
 from __future__ import annotations
@@ -24,10 +24,10 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from multithreaded_map_reduce_library_spark.functions.vectors import dot, l2_norm
+from multithreaded_map_reduce_library_spark.functions.vectors import dot_sql, l2_norm, quote
 
 
-def _cos_pre(va, vb, na, nb) -> Column:
+def _cos_pre(va: str, vb: str, na: str, nb: str) -> Column:
     """Cosine from a fresh dot product and per-side PRE-COMPUTED norms.
 
     Norms must be materialized in a projection *below* the join that forms
@@ -36,7 +36,7 @@ def _cos_pre(va, vb, na, nb) -> Column:
     bit-identical to cosine() — the same chains over the same arrays,
     just evaluated once per row.
     """
-    return dot(va, vb) / (F.col(na) * F.col(nb))
+    return F.expr(f"{dot_sql(quote(va), quote(vb))} / ({quote(na)} * {quote(nb)})")
 
 
 def _top_k(sims: DataFrame, k: int) -> DataFrame:
@@ -56,13 +56,13 @@ def hyperplane_signs(plane: int, dim: int) -> list[int]:
     ]
 
 
-def random_hyperplane_bucket(vec: Column | str, dim: int, num_planes: int = 8) -> Column:
+def random_hyperplane_bucket(vec: str, dim: int, num_planes: int = 8) -> Column:
     """Bucket id: concatenated signs of <vec, plane_p> for p in 0..P-1."""
     bits = []
     for p in range(num_planes):
-        signs = F.array(*[F.lit(float(s)) for s in hyperplane_signs(p, dim)])
-        bits.append(F.when(dot(vec, signs) >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
+        signs = "array(" + ", ".join(f"{s}.0D" for s in hyperplane_signs(p, dim)) + ")"
+        bits.append(f"CASE WHEN {dot_sql(quote(vec), signs)} >= 0 THEN '1' ELSE '0' END")
+    return F.expr(f"concat({', '.join(bits)})")
 
 
 def _lsh_bucketed(

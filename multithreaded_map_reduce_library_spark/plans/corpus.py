@@ -18,7 +18,7 @@ final averaged metrics, rounded once.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from multithreaded_map_reduce_library_spark.functions.grid import (
@@ -174,19 +174,15 @@ def sequence_pack_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, instead of a single-partition global prefix sum. Reported
     per bin: document count, token mass (straddlers counted at their
     start bin, so interior bins can exceed the budget), first document."""
-    d = load_table(spark, sf_dir, "documents").select(
-        "lang", "doc_id", F.expr("n_chars DIV 4").alias("toks")
+    d = load_table(spark, sf_dir, "documents").selectExpr(
+        "lang", "doc_id", "n_chars DIV 4 AS toks"
     )
-    w = (
-        Window.partitionBy("lang")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    c = d.select(
+    c = d.selectExpr(
         "lang",
         "doc_id",
         "toks",
-        (F.sum("toks").over(w) - F.col("toks")).alias("start_off"),
+        "sum(toks) OVER (PARTITION BY lang ORDER BY doc_id ROWS UNBOUNDED PRECEDING)"
+        " - toks AS start_off",
     )
     return (
         c.groupBy(

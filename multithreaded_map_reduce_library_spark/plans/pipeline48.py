@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from multithreaded_map_reduce_library_spark.functions.grid import grid
-from multithreaded_map_reduce_library_spark.functions.vectors import dot
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -78,6 +77,7 @@ def mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Nothing all-pairs, nothing corpus-shuffled beyond the cell join.
     """
     from multithreaded_map_reduce_library_spark.operators.similarity import (
+        _cos_pre,
         assign_ivf_cells,
     )
 
@@ -94,9 +94,7 @@ def mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sims = (
         a.join(b, "cell")
         .where(F.col("src") != F.col("dst"))
-        .select(
-            "src", "dst", (dot("va", "vb") / (F.col("na") * F.col("nb"))).alias("sim")
-        )
+        .select("src", "dst", _cos_pre("va", "vb", "na", "nb").alias("sim"))
     )
     w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))
     best = (

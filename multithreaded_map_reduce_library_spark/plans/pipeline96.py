@@ -13,7 +13,7 @@ shortest path over the word's character positions (Viterbi).
    integer-grid form of the unigram LM negative log-likelihood.
 3. For the top-40 most frequent words (length ≤ 16) run the exact DP:
    dist(pos) = min over pieces ending at pos of dist(start) + cost,
-   one left-to-right ``F.aggregate`` fold over each word's positions;
+   one left-to-right ``aggregate`` fold over each word's positions;
    costs are packed as cost_e6*32 + n_pieces, so the argmin also
    tie-breaks deterministically toward fewer pieces.
 
@@ -288,30 +288,21 @@ def run_optimal_dp(words: DataFrame, eg: DataFrame) -> DataFrame:
     still replays that unrolled form and the results are identical
     because extra relaxation rounds past the topological pass are
     no-ops). Here the per-word edge list folds to an array and the DP is
-    a single F.aggregate expression: dist[p] = min over edges ending at
-    p of dist[pos_from] + w32, all in exact BIGINTs — zero joins, zero
-    extra jobs. Every position is reachable (every character is in the
-    piece vocabulary), so the running min never sees an empty set."""
+    one SQL ``aggregate`` (functions/vectors.py says why SQL): dist[p] =
+    min over edges ending at p of dist[pos_from] + w32, all in exact
+    BIGINTs — zero joins, zero extra jobs. Every position is reachable
+    (every character is in the piece vocabulary), so the running min never
+    sees an empty set."""
     ea = word_edge_arrays(eg)
     # acc = dist array for positions 0..p-1 (1-indexed: element i+1 = pos i)
-    dist = F.aggregate(
-        F.sequence(F.lit(1), F.length("word").cast("bigint")),
-        F.array(F.lit(0).cast("bigint")),
-        lambda acc, p: F.concat(
-            acc,
-            F.array(
-                F.array_min(
-                    F.transform(
-                        F.filter("edges", lambda e: e["pos_to"] == p),
-                        lambda e: F.element_at(acc, (e["pos_from"] + 1).cast("int"))
-                        + e["w32"],
-                    )
-                )
-            ),
-        ),
+    dist = (
+        "aggregate(sequence(1, CAST(length(`word`) AS BIGINT)), array(CAST(0 AS BIGINT)),"
+        " (acc, p) -> concat(acc, array(array_min(transform("
+        "filter(`edges`, e -> e.pos_to = p),"
+        " e -> element_at(acc, CAST(e.pos_from + 1 AS INT)) + e.w32)))))"
     )
     return words.join(ea, "word").select(
         "word",
         F.length("word").cast("bigint").alias("pos"),
-        F.element_at(dist, (F.length("word") + 1).cast("int")).alias("v"),
+        F.expr(f"element_at({dist}, CAST(length(`word`) + 1 AS INT)) AS v"),
     )
