@@ -14,6 +14,9 @@ Layers tested:
 * the `_decode_image_bytes` routing (JPEG no longer PIL-gated);
 * a decoded-bytes pin: sha256 of the output of 98 streams, recorded with
   the per-block decoder the one-walk decoder replaced;
+* an encoder-bytes pin: sha256 of 264 streams from all five public
+  encoders (gray and RGB; baseline, multi-scan and progressive) × size ×
+  subsampling × qscale × DRI, recorded with one encoder body per mode;
 * oracle parity for all 13 registered JPEG queries at sf0.001 (sf0.01 is
   covered by tools/drive_contract.py).
 """
@@ -1109,53 +1112,121 @@ def test_second_frame_header_raises():
 
 
 # --------------------------------------------------------------------------
-# progressive-encoder bytes pin
+# encoder bytes pin
 # --------------------------------------------------------------------------
 
-#: sha256 of ``encode_jpeg_rgb_progressive`` output per (subsampling,
-#: size), each over qscale {1, 2} × DRI {0, 1, 4} in that order; recorded
-#: before the encoder took its colour transform and chroma downsample
-#: from ``_rgb_planes``.
-_PROGRESSIVE_ENCODE_DIGESTS = {
-    "rgb444-64x64": "c6578635d6a1e53965e5fd8006e787e971070052ed7a4b972e27981efbad3dbf",
-    "rgb422-64x64": "94331a072053bcf25ee10eaa8c14eafbb1730792a3d4264ba653b137f3f71689",
-    "rgb420-64x64": "db94ef5e86686f2fa085ec674896ae70ff59e86b1c766bb86f16b1e091a40d04",
-    "rgb444-17x33": "2c57ae4c6eb96998532c5a321146946824f7d57d2dafb224ab68145f88340818",
-    "rgb422-17x33": "e3c105e525efd721329e6c86bb8ef99aa8082c6e3f737b63d625dcd1aa7c3477",
-    "rgb420-17x33": "97e8447871861d80155c607b3a1f99cdcfc56ce75e1faa86a21f4374e2d3f008",
-    "rgb444-1x1": "47092bdf0cf123eb1030144d61fbcfff9ed99c797c77c22cdd3025194e8d14a6",
-    "rgb422-1x1": "045fc58d41f20669f85610a3aaf86c9bc119cf3f5de2f521c85c6c8c6b92e677",
-    "rgb420-1x1": "53b91c43dca3750b0c869dcd8418a980b6953850ea3e6e879f7e3a58370d2aea",
+#: sha256 of each public encoder's output per (mode, subsampling, size),
+#: each over qscale {1, 2} × the mode's DRI set, in that order. The
+#: ``progressive-*`` rows hash DRI {0, 1, 4} and were recorded before the
+#: progressive encoder took its colour transform and chroma downsample
+#: from ``_rgb_planes``; ``progressive-dri3-*`` adds DRI 3. The gray,
+#: baseline and multi-scan rows hash DRI {0, 1, 3, 4} and were recorded
+#: while baseline, multi-scan and progressive had one encoder body each,
+#: before they became one ``_encode``. DRI 3 puts a
+#: restart mid-MCU-row for 4:2:0 (6 blocks per MCU) and for the 2-block
+#: chroma MCU of the multi-scan stream.
+_ENCODE_DIGESTS = {
+    "progressive-444-64x64": "c6578635d6a1e53965e5fd8006e787e971070052ed7a4b972e27981efbad3dbf",
+    "progressive-422-64x64": "94331a072053bcf25ee10eaa8c14eafbb1730792a3d4264ba653b137f3f71689",
+    "progressive-420-64x64": "db94ef5e86686f2fa085ec674896ae70ff59e86b1c766bb86f16b1e091a40d04",
+    "progressive-444-17x33": "2c57ae4c6eb96998532c5a321146946824f7d57d2dafb224ab68145f88340818",
+    "progressive-422-17x33": "e3c105e525efd721329e6c86bb8ef99aa8082c6e3f737b63d625dcd1aa7c3477",
+    "progressive-420-17x33": "97e8447871861d80155c607b3a1f99cdcfc56ce75e1faa86a21f4374e2d3f008",
+    "progressive-444-1x1": "47092bdf0cf123eb1030144d61fbcfff9ed99c797c77c22cdd3025194e8d14a6",
+    "progressive-422-1x1": "045fc58d41f20669f85610a3aaf86c9bc119cf3f5de2f521c85c6c8c6b92e677",
+    "progressive-420-1x1": "53b91c43dca3750b0c869dcd8418a980b6953850ea3e6e879f7e3a58370d2aea",
+    "progressive-dri3-444-64x64": "148221268943d6187f72c181ebfba683b9106ebecf56ad0f58cc151036190566",
+    "progressive-dri3-422-64x64": "a24857b460cabc39e5ef18bd824d7ad1363b2d0e7dc3b9ba402a7ab723ebe1a3",
+    "progressive-dri3-420-64x64": "40d348e7d3087d2a930743da445f6cbda5a233fc4531f879c9fac3f6d2d99384",
+    "progressive-dri3-444-17x33": "7ae4aed022ff99135f38052761612f8e2979a747780c9d033625e1776a3c950a",
+    "progressive-dri3-422-17x33": "7fc48d05ec04f85258e053475686b58509e535f5225bdab32a5282aac3a21989",
+    "progressive-dri3-420-17x33": "e42a2f5c946193e66828314eff771fdc900bc057711a52d659dfe57db9a235b2",
+    "progressive-dri3-444-1x1": "3f2514ce8493f5a536591b1144c44b101b961669edd3fc7c658ffa49705d27bd",
+    "progressive-dri3-422-1x1": "4ea2f0ec823c3eb66563f4d1a8beb89378b9461b44d9822279ad3a61c0906512",
+    "progressive-dri3-420-1x1": "f25c668820b55eec5ebbf5ece38f4c80ce8644f62d7e1264c2b27aba4ebd6a2f",
+    "gray-64x64": "16dc401539d56901db3bb481eaea63427e1d8f53e7a0f6fb78f20b0b5479e824",
+    "gray-17x33": "06c54d752025430ca9e204061bc24548bfc48046562c6163b3abf66f37961603",
+    "gray-1x1": "b855d93b2e813630c6a520a80b9a4e9b4e3a327d42b26014732229502fa420c0",
+    "gray-progressive-64x64": "c34d438b99a0ecaf8e3ac10aac4dfcb6baca617ab61aedb299df46a16e8f8ed1",
+    "gray-progressive-17x33": "5c3e5b1f3c7bbb34d8e3216340822c1ffa5bd44a61200838b60093a950d99c23",
+    "gray-progressive-1x1": "ef162b5dc035374d58754e3e00d90b253cc1baa7eee1f7fc3c327c91fa435006",
+    "baseline-444-64x64": "a227a07c89f5604e8baf44f0d0b8c4c5afd47f36d702372364e551ddda9232d0",
+    "baseline-422-64x64": "fb99f84672881420d2c8dd814bcb80e8bdaa7b49b3fce248a7c786f6d95df1e7",
+    "baseline-420-64x64": "de32c7385b0a02492e59b269a0a40cef45b2015ef62ade58fa6669c012b7368e",
+    "baseline-444-17x33": "c1c324761f9863bf9436bd8b44d095c858abf65c9e1cd787e37e7e3a368bf8c3",
+    "baseline-422-17x33": "de509784f860aa379d42863bc3d2ba81421e1b5faf96e04f77bde3d96d71e931",
+    "baseline-420-17x33": "ba2812b74639a675a58e32210c8b3873e011909ba2741cbe51a3a111158f115c",
+    "baseline-444-1x1": "83191d76d43db7f3e95fbccb2bac887a766167d6d97d9f8db46de6fed484b3f5",
+    "baseline-422-1x1": "f9475dc03dbb091db9a691d03d5edfcbacb760979037cdb1bec20333cc0bf9ff",
+    "baseline-420-1x1": "398df5f7061afbac7bead20ce03669de0509aaf742adbe59deaf6d7ebb0741dd",
+    "multiscan-444-64x64": "4933d0a5b3c0bc30800550749a1eb5dc2cb20967c6bdef9ab9bf69d160fe465c",
+    "multiscan-422-64x64": "383a70453d138fa88f5883783aa10f7bb028dc16788e8bd54f1a9fcb45e9fd62",
+    "multiscan-420-64x64": "fa45cb4a092df87e7f0524219874df3b9551488811f0ca96f737dfcc5c3b67d8",
+    "multiscan-444-17x33": "c47792f1969970585678829fd11811066f0e2e9585c3463aaca75c761509d90a",
+    "multiscan-422-17x33": "52091142d5b60d50a6e3acd9b5e4c23575e4ae2b25ea2f577c015d9441806c80",
+    "multiscan-420-17x33": "72176cbc95a8c67e211d0fd09fb53a7a3cf87e61ce78245a9dc8c5ecfcf2d201",
+    "multiscan-444-1x1": "50a054f17c617eb6c7c5ba26744042ff220b4e854b5b4b7700cd07490060bb04",
+    "multiscan-422-1x1": "297ff00cbcd37748b460a36f05d73de5e192d712784d860d8c83d18fd78e3312",
+    "multiscan-420-1x1": "5b328d5c6ab3b4777da44bf1a6efb56f4e768d5925534fd2c48d52fdb29dd045",
 }
 
 
-def test_progressive_encoder_bytes_match_recorded_digests():
-    """The progressive RGB encoder's output bytes are pinned over
-    4:4:4 / 4:2:2 / 4:2:0 × three sizes × qscale {1, 2} × DRI {0, 1, 4}
-    (54 streams): sharing or rewriting an encoder stage must not move a
-    single byte."""
-    import hashlib
-
+def _encode_pin_modes():
+    """(mode, subsamplings, DRI set, encoder(img, qscale, sub, ri)) for
+    every public encoder; gray modes encode the image's red channel."""
     from multithreaded_map_reduce_library_spark.functions.jpeg import (
+        encode_jpeg_gray_progressive,
+        encode_jpeg_rgb_multiscan,
         encode_jpeg_rgb_progressive,
     )
 
+    subs = ("444", "422", "420")
+    dri = (0, 1, 3, 4)
+
+    def gray(enc):
+        return lambda img, qs, _sub, ri: enc(
+            img[..., 0], qscale=qs, restart_interval=ri
+        )
+
+    def rgb(enc):
+        return lambda img, qs, sub, ri: enc(
+            img, qscale=qs, subsampling=sub, restart_interval=ri
+        )
+
+    return [
+        ("progressive", subs, (0, 1, 4), rgb(encode_jpeg_rgb_progressive)),
+        ("progressive-dri3", subs, (3,), rgb(encode_jpeg_rgb_progressive)),
+        ("gray", ("",), dri, gray(encode_jpeg_gray)),
+        ("gray-progressive", ("",), dri, gray(encode_jpeg_gray_progressive)),
+        ("baseline", subs, dri, rgb(encode_jpeg_rgb)),
+        ("multiscan", subs, dri, rgb(encode_jpeg_rgb_multiscan)),
+    ]
+
+
+def test_progressive_encoder_bytes_match_recorded_digests():
+    """Every public encoder's output bytes are pinned over three sizes ×
+    qscale {1, 2} × DRI (and × 4:4:4 / 4:2:2 / 4:2:0 for RGB): 264
+    streams, progressive, baseline and multi-scan alike. Sharing or
+    rewriting an encoder stage must not move a single byte."""
+    import hashlib
+
     rng = np.random.default_rng(20261018)
     got = {}
+    n = 0
+    modes = _encode_pin_modes()
     for h, w in [(64, 64), (17, 33), (1, 1)]:
         img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
         img[: h // 2, : w // 2] = 77
-        for sub in ("444", "422", "420"):
-            d = hashlib.sha256()
-            for qs in (1, 2):
-                for ri in (0, 1, 4):
-                    d.update(
-                        encode_jpeg_rgb_progressive(
-                            img, qscale=qs, subsampling=sub, restart_interval=ri
-                        )
-                    )
-            got[f"rgb{sub}-{h}x{w}"] = d.hexdigest()
-    assert got == _PROGRESSIVE_ENCODE_DIGESTS
+        for mode, subs, dris, enc in modes:
+            for sub in subs:
+                d = hashlib.sha256()
+                for qs in (1, 2):
+                    for ri in dris:
+                        d.update(enc(img, qs, sub, ri))
+                        n += 1
+                got["-".join(filter(None, (mode, sub, f"{h}x{w}")))] = d.hexdigest()
+    assert n == 264
+    assert got == _ENCODE_DIGESTS
 
 
 def test_split_restart_segments_one_component_sampled_2x2():
