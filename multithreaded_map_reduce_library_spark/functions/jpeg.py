@@ -45,6 +45,16 @@ same coefficients decodes identically. The restart-segment APIs run the
 same walk stopped at the first SOS, and decode a segment with the same
 scan decoder and IDCT tail.
 
+Encode path: ONE encoder (``_encode``) serves all five public encoders,
+which differ only in their planes and scan script. A baseline stream is
+one ``"seq"`` scan over every component, a multi-scan stream a ``"seq"``
+scan of Y then one of Cb + Cr, and a progressive stream the DC / AC
+scans of ``_prog_script``. ``_encode`` writes the frame header once and
+reads its frame state back through the decoder's ``_parse_sof``,
+quantizes every block once into zigzag grids shaped like the decoder's,
+and walks each scan in the decoder's ``_scan_order`` with ``_walk``'s
+restart cadence, so encoder and decoder share one §A.2 block order.
+
 Determinism contract (what makes oracle replay possible):
 
 * the encoder quantizes the DC coefficient from the INTEGER block sum
@@ -424,6 +434,13 @@ def _magnitude(v: int) -> int:
 # Encoder
 # --------------------------------------------------------------------------
 
+#: Annex K.3 DC / AC Huffman specs and codes, indexed by table id (0 luma,
+#: 1 chroma); a component's Huffman tables share its quantization id.
+_DC_SPECS = [(_DC_LUMA_BITS, _DC_LUMA_VALS), (_DC_CHROMA_BITS, _DC_CHROMA_VALS)]
+_AC_SPECS = [(_AC_LUMA_BITS, _AC_LUMA_VALS), (_AC_CHROMA_BITS, _AC_CHROMA_VALS)]
+_DC_CODES = [_build_codes(*spec) for spec in _DC_SPECS]
+_AC_CODES = [_build_codes(*spec) for spec in _AC_SPECS]
+
 
 def _quantize_block(block: np.ndarray, q: np.ndarray) -> np.ndarray:
     """Quantize one 8×8 block of uint8 samples. DC comes from the exact
@@ -475,25 +492,31 @@ def _quantize_plane(plane: np.ndarray, q: np.ndarray) -> np.ndarray:
     return out.reshape(nby, nbx, 8, 8)
 
 
-def _encode_block(
-    bw: _BitWriter,
-    qblock: np.ndarray,
-    prev_dc: int,
-    dc_codes: dict[int, tuple[int, int]],
-    ac_codes: dict[int, tuple[int, int]],
-) -> int:
-    zz = qblock[_ZZ_ROWS, _ZZ_COLS]
-    dc = int(zz[0])
-    diff = dc - prev_dc
+def _put_dc(bw: _BitWriter, diff: int, dc_codes: dict[int, tuple[int, int]]) -> None:
+    """One DC difference (§F.1.2.1): magnitude category symbol, then the
+    low bits. Huffman code and magnitude bits fuse into ONE put (the bit
+    stream is the concatenation either way; put masks the value): the
+    encode profile showed BitWriter.put call count as a top cost."""
     s = _magnitude(diff)
     code, length = dc_codes[s]
-    # Huffman code and magnitude bits fuse into ONE put each (the bit
-    # stream is the concatenation either way; put masks the value): the
-    # encode profile showed BitWriter.put call count as a top cost.
     if s:
         bw.put((code << s) | ((diff if diff >= 0 else diff + (1 << s) - 1) & ((1 << s) - 1)), length + s)
     else:
         bw.put(code, length)
+
+
+def _encode_block(
+    bw: _BitWriter,
+    zz: np.ndarray,
+    prev_dc: int,
+    dc_codes: dict[int, tuple[int, int]],
+    ac_codes: dict[int, tuple[int, int]],
+) -> int:
+    """One full-precision sequential block from its 64 zigzag-ordered
+    quantized coefficients: the DC difference, then AC run-lengths with
+    ZRL and EOB (§F.1.2.2). Returns the block's DC, the next predictor."""
+    dc = int(zz[0])
+    _put_dc(bw, dc - prev_dc, dc_codes)
     run = 0
     nz = np.nonzero(zz[1:])[0]
     last_nz = (nz[-1] + 1) if nz.size else 0
@@ -524,133 +547,141 @@ def _dht_payload(tclass: int, tid: int, bits: list[int], vals: list[int]) -> byt
     return bytes([tclass << 4 | tid]) + bytes(bits) + bytes(vals)
 
 
-def _encode_jpeg(
+def _seq_script(*scans: list[int]) -> list[tuple]:
+    """A sequential scan script: one full-precision scan per component
+    list. One list over every component is a baseline stream."""
+    return [("seq", cis, 0, 63, 0, 0) for cis in scans]
+
+
+def _encode(
     planes: list[np.ndarray],
+    samp: list[tuple[int, int]],
+    size: tuple[int, int],
     qscale: int,
-    color: bool,
-    restart_interval: int = 0,
-    samp: list[tuple[int, int]] | None = None,
-    size: tuple[int, int] | None = None,
+    script: list[tuple],
+    restart_interval: int,
 ) -> bytes:
-    """Shared encoder body: ``planes[c]`` is component c at its OWN
-    (possibly subsampled) resolution; ``samp[c]`` its (hs, vs) sampling
-    factors (default all (1, 1) = 4:4:4); ``size`` the full-resolution
-    (h, w) recorded in SOF (defaults to planes[0]'s shape — correct
-    whenever component 0 samples at (hmax, vmax), as Y does).
-    ``restart_interval`` > 0 emits a DRI segment and an RSTm marker
-    (byte-aligned, DC predictors reset) every that-many MCUs."""
-    samp = samp or [(1, 1)] * len(planes)
-    h, w = size or planes[0].shape
-    q_luma = quant_table(QUANT_LUMA, qscale)
-    q_chroma = quant_table(QUANT_CHROMA, qscale)
+    """The codec's one encoder. ``planes[c]`` is component c at its OWN
+    (possibly subsampled) resolution, ``samp[c]`` its (hs, vs) sampling
+    factors and ``size`` the full-resolution (h, w) recorded in SOF.
+    ``script`` lists the scans as ``(kind, component indices, Ss, Se, Ah,
+    Al)``: ``"seq"`` scans make a sequential (SOF0) frame, the
+    ``"dc_first"``/``"dc_refine"``/``"ac_first"``/``"ac_refine"`` scans of
+    ``_prog_script`` a progressive (SOF2) one.
+
+    The frame state comes from ``_parse_sof`` of the SOF payload written
+    here, every block is quantized once into zigzag grids shaped like the
+    decoder's, and each scan walks ``_scan_order`` — the decoder's §A.2
+    block order. ``restart_interval`` > 0 emits a DRI segment and an RSTm
+    marker every Ri MCUs within EACH scan (§E.2.4: byte-align, marker
+    number cycling 0..7 and restarting at every SOS, DC predictors reset,
+    and in AC scans any pending EOB run flushed first, since an EOBn run
+    may not cross a restart segment): every Ri × blocks-per-MCU blocks,
+    the same rule as ``_walk``."""
+    h, w = size
+    if not (0 < h <= 0xFFFF and 0 < w <= 0xFFFF):
+        raise ValueError(f"JPEG sides must be 1..65535 pixels, got {h}x{w}")
+    if not 0 <= restart_interval <= 0xFFFF:
+        raise ValueError(f"restart_interval must be 0..65535, got {restart_interval}")
+    progressive = script[0][0] != "seq"
+    ntab = min(len(planes), 2)
+    qtabs = [quant_table(QUANT_LUMA, qscale), quant_table(QUANT_CHROMA, qscale)]
+    sof = struct.pack(">BHHB", 8, h, w, len(planes)) + b"".join(
+        bytes([ci + 1, hs << 4 | vs, min(ci, 1)]) for ci, (hs, vs) in enumerate(samp)
+    )
+    frame = _parse_sof(sof, progressive)
+    comps = frame["comps"]
     out = bytearray(b"\xff\xd8")  # SOI
-    # JFIF APP0
-    out += _segment(
+    out += _segment(  # JFIF APP0
         b"\xff\xe0", b"JFIF\x00" + bytes([1, 1, 0]) + struct.pack(">HH", 1, 1) + b"\x00\x00"
     )
-    # DQT
-    out += _segment(
-        b"\xff\xdb", bytes([0x00]) + q_luma[_ZZ_ROWS, _ZZ_COLS].astype(np.uint8).tobytes()
-    )
-    if color:
+    for t in range(ntab):
         out += _segment(
-            b"\xff\xdb",
-            bytes([0x01]) + q_chroma[_ZZ_ROWS, _ZZ_COLS].astype(np.uint8).tobytes(),
+            b"\xff\xdb", bytes([t]) + qtabs[t][_ZZ_ROWS, _ZZ_COLS].astype(np.uint8).tobytes()
         )
-    # SOF0
-    ncomp = 3 if color else 1
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for cid in range(1, ncomp + 1):
-        tq = 0 if cid == 1 else 1
-        hs, vs = samp[cid - 1]
-        sof += bytes([cid, hs << 4 | vs, tq])
-    out += _segment(b"\xff\xc0", sof)
-    # DHT
-    out += _segment(b"\xff\xc4", _dht_payload(0, 0, _DC_LUMA_BITS, _DC_LUMA_VALS))
-    out += _segment(b"\xff\xc4", _dht_payload(1, 0, _AC_LUMA_BITS, _AC_LUMA_VALS))
-    if color:
-        out += _segment(
-            b"\xff\xc4", _dht_payload(0, 1, _DC_CHROMA_BITS, _DC_CHROMA_VALS)
-        )
-        out += _segment(
-            b"\xff\xc4", _dht_payload(1, 1, _AC_CHROMA_BITS, _AC_CHROMA_VALS)
-        )
-    # DRI
-    if restart_interval:
-        out += _segment(b"\xff\xdd", struct.pack(">H", restart_interval))
-    # SOS
-    sos = bytes([ncomp])
-    for cid in range(1, ncomp + 1):
-        tbl = 0 if cid == 1 else 1
-        sos += bytes([cid, tbl << 4 | tbl])
-    sos += bytes([0, 63, 0])
-    out += _segment(b"\xff\xda", sos)
+    out += _segment(b"\xff\xc2" if progressive else b"\xff\xc0", sof)
+    dri = _segment(b"\xff\xdd", struct.pack(">H", restart_interval)) if restart_interval else b""
+    if progressive:
+        # DRI before the DC tables; each AC scan carries its own table
+        out += dri
+        for t in range(ntab):
+            out += _segment(b"\xff\xc4", _dht_payload(0, t, *_DC_SPECS[t]))
+    else:
+        for t in range(ntab):
+            out += _segment(b"\xff\xc4", _dht_payload(0, t, *_DC_SPECS[t]))
+            out += _segment(b"\xff\xc4", _dht_payload(1, t, *_AC_SPECS[t]))
+        out += dri
 
-    dc_luma = _build_codes(_DC_LUMA_BITS, _DC_LUMA_VALS)
-    ac_luma = _build_codes(_AC_LUMA_BITS, _AC_LUMA_VALS)
-    dc_chroma = _build_codes(_DC_CHROMA_BITS, _DC_CHROMA_VALS)
-    ac_chroma = _build_codes(_AC_CHROMA_BITS, _AC_CHROMA_VALS)
+    # pad each plane to full MCU coverage and quantize every block once
+    zz = []
+    for p, (_, hs, vs, tq) in zip(planes, comps):
+        th, tw = frame["mcus_y"] * 8 * vs, frame["mcus_x"] * 8 * hs
+        padded = np.pad(p, ((0, th - p.shape[0]), (0, tw - p.shape[1])), mode="edge")
+        zz.append(_quantize_plane(padded, qtabs[tq])[:, :, _ZZ_ROWS, _ZZ_COLS])
 
-    hmax = max(hs for hs, _ in samp)
-    vmax = max(vs for _, vs in samp)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    # pad each component plane (at its own resolution) to full MCU coverage
-    padded = []
-    for p, (hs, vs) in zip(planes, samp):
-        th, tw = mcus_y * 8 * vs, mcus_x * 8 * hs
-        ph_, pw_ = p.shape
-        padded.append(np.pad(p, ((0, th - ph_), (0, tw - pw_)), mode="edge"))
-    # quantize every component's blocks in one batched pass (bit-identical
-    # to the old per-block calls — _quantize_plane docstring)
-    qplanes = [
-        _quantize_plane(p, q_luma if ci == 0 else q_chroma)
-        for ci, p in enumerate(padded)
-    ]
-    bw = _BitWriter()
-    prev_dc = [0] * ncomp
-    mcu = 0
-    rst = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                bw.put_marker(0xD0 + rst)
+    cid_to_ci = {c[0]: ci for ci, c in enumerate(comps)}
+    for kind, cis, ss, se, ah, al in script:
+        ac = kind in ("ac_first", "ac_refine")
+        per_rst = restart_interval * _blocks_per_mcu(comps, cis)
+        bw = _BitWriter()
+        rec = _OpRecorder()
+        state = {"eobrun": 0, "bits": []}
+        prev = [0] * len(comps)
+        rst = 0
+        order = _scan_order(frame, [comps[ci][0] for ci in cis], cid_to_ci)
+        for i, (ci, _, by, bx) in enumerate(order):
+            if per_rst and i and i % per_rst == 0:
+                if ac:
+                    _flush_eobrun(rec, state)
+                    rec.rst(rst)
+                else:
+                    bw.put_marker(0xD0 + rst)
                 rst = (rst + 1) % 8
-                prev_dc = [0] * ncomp
-            for ci in range(ncomp):
-                hs, vs = samp[ci]
-                dc_codes = dc_luma if ci == 0 else dc_chroma
-                ac_codes = ac_luma if ci == 0 else ac_chroma
-                for byi in range(vs):
-                    for bxi in range(hs):
-                        qb = qplanes[ci][my * vs + byi, mx * hs + bxi]
-                        prev_dc[ci] = _encode_block(
-                            bw, qb, prev_dc[ci], dc_codes, ac_codes
-                        )
-            mcu += 1
-    bw.flush()
-    out += bw.out
+                prev = [0] * len(comps)
+            blk = zz[ci][by, bx]
+            tab = comps[ci][3]
+            if kind == "seq":
+                prev[ci] = _encode_block(bw, blk, prev[ci], _DC_CODES[tab], _AC_CODES[tab])
+            elif kind == "dc_first":
+                v = int(blk[0]) >> al  # arithmetic shift (G.1.2.1)
+                _put_dc(bw, v - prev[ci], _DC_CODES[tab])
+                prev[ci] = v
+            elif kind == "dc_refine":
+                bw.put((int(blk[0]) >> al) & 1, 1)
+            elif kind == "ac_first":
+                band = blk[ss : se + 1]
+                _enc_ac_first(rec, np.sign(band) * (np.abs(band) >> al), state)
+            else:
+                _enc_ac_refine(rec, blk[ss : se + 1], al, state)
+        if ac:
+            _flush_eobrun(rec, state)
+            bits, vals = _equal_length_table(rec.syms)
+            out += _segment(b"\xff\xc4", _dht_payload(1, 0, bits, vals))
+            rec.replay(bw, _build_codes(bits, vals))
+        bw.flush()
+        # progressive scans select AC table 0: only the scan's own DHT
+        sos = bytes([len(cis)])
+        for ci in cis:
+            tab = comps[ci][3]
+            sos += bytes([comps[ci][0], tab << 4 | (0 if progressive else tab)])
+        out += _segment(b"\xff\xda", sos + bytes([ss, se, ah << 4 | al])) + bw.out
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 
 
-def encode_jpeg_gray(
-    img: np.ndarray, qscale: int = 1, restart_interval: int = 0
-) -> bytes:
-    """Encode an (h, w) uint8 array as a baseline grayscale JPEG."""
+def _gray_plane(img: np.ndarray, name: str) -> np.ndarray:
     a = np.asarray(img, dtype=np.uint8)
     if a.ndim != 2:
-        raise ValueError("encode_jpeg_gray expects an (h, w) array")
-    return _encode_jpeg([a], qscale, color=False, restart_interval=restart_interval)
+        raise ValueError(f"{name} expects an (h, w) array")
+    return a
 
 
 def _rgb_planes(
     img: np.ndarray, subsampling: str
 ) -> tuple[list[np.ndarray], list[tuple[int, int]], tuple[int, int]]:
     """BT.601 forward transform (rounded half up) + chroma box-mean
-    downsample; returns (planes, samp, size) in the `_encode_jpeg`
-    contract. Shared by the baseline, progressive, and multi-scan
-    sequential RGB encoders so all three carry identical coefficients."""
+    downsample; returns (planes, samp, size) in the ``_encode`` contract,
+    so every RGB encoder carries identical coefficients."""
     a = np.asarray(img, dtype=np.float64)
     if a.ndim != 3 or a.shape[2] != 3:
         raise ValueError("expected an (h, w, 3) RGB array")
@@ -680,6 +711,14 @@ def _rgb_planes(
     return sub, [(2, fy), (1, 1), (1, 1)], (h, w)
 
 
+def encode_jpeg_gray(
+    img: np.ndarray, qscale: int = 1, restart_interval: int = 0
+) -> bytes:
+    """Encode an (h, w) uint8 array as a baseline grayscale JPEG."""
+    a = _gray_plane(img, "encode_jpeg_gray")
+    return _encode([a], [(1, 1)], a.shape, qscale, _seq_script([0]), restart_interval)
+
+
 def encode_jpeg_rgb(
     img: np.ndarray,
     qscale: int = 1,
@@ -692,14 +731,7 @@ def encode_jpeg_rgb(
     box-mean), or '420' (chroma 2×2 box-mean downsampled, half-up —
     the web's default storage format)."""
     planes, samp, size = _rgb_planes(img, subsampling)
-    return _encode_jpeg(
-        planes,
-        qscale,
-        color=True,
-        restart_interval=restart_interval,
-        samp=samp,
-        size=size,
-    )
+    return _encode(planes, samp, size, qscale, _seq_script([0, 1, 2]), restart_interval)
 
 
 def encode_jpeg_rgb_multiscan(
@@ -713,113 +745,38 @@ def encode_jpeg_rgb_multiscan(
     (including ours) produces identical pixels to the single-scan
     encoding — the parity invariant the registry oracle hashes.
 
-    ``restart_interval`` > 0 emits a DRI segment and RSTm markers every
-    Ri MCUs within EACH scan (§E.2.4: byte-align, marker number cycles
-    0..7 restarting at every SOS, DC predictors reset). In a
-    non-interleaved scan one MCU is one data unit (§B.2.3), so scan 1
+    ``restart_interval`` > 0 restarts every Ri MCUs within EACH scan. In
+    a non-interleaved scan one MCU is one data unit (§B.2.3), so scan 1
     restarts every Ri Y blocks while scan 2 restarts every Ri chroma
     MCU positions — VERDICT r7 item 4 (DRI is legal in §B.2.3 streams
     and common in crawl data)."""
     planes, samp, size = _rgb_planes(img, subsampling)
-    h, w = size
-    q_luma = quant_table(QUANT_LUMA, qscale)
-    q_chroma = quant_table(QUANT_CHROMA, qscale)
-    hmax = max(hs for hs, _ in samp)
-    vmax = max(vs for _, vs in samp)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
+    return _encode(planes, samp, size, qscale, _seq_script([0], [1, 2]), restart_interval)
 
-    out = bytearray(b"\xff\xd8")
-    out += _segment(
-        b"\xff\xe0", b"JFIF\x00" + bytes([1, 1, 0]) + struct.pack(">HH", 1, 1) + b"\x00\x00"
-    )
-    out += _segment(
-        b"\xff\xdb", bytes([0x00]) + q_luma[_ZZ_ROWS, _ZZ_COLS].astype(np.uint8).tobytes()
-    )
-    out += _segment(
-        b"\xff\xdb",
-        bytes([0x01]) + q_chroma[_ZZ_ROWS, _ZZ_COLS].astype(np.uint8).tobytes(),
-    )
-    sof = struct.pack(">BHHB", 8, h, w, 3)
-    for cid in range(1, 4):
-        hs, vs = samp[cid - 1]
-        sof += bytes([cid, hs << 4 | vs, 0 if cid == 1 else 1])
-    out += _segment(b"\xff\xc0", sof)
-    out += _segment(b"\xff\xc4", _dht_payload(0, 0, _DC_LUMA_BITS, _DC_LUMA_VALS))
-    out += _segment(b"\xff\xc4", _dht_payload(1, 0, _AC_LUMA_BITS, _AC_LUMA_VALS))
-    out += _segment(b"\xff\xc4", _dht_payload(0, 1, _DC_CHROMA_BITS, _DC_CHROMA_VALS))
-    out += _segment(b"\xff\xc4", _dht_payload(1, 1, _AC_CHROMA_BITS, _AC_CHROMA_VALS))
-    if restart_interval:
-        out += _segment(b"\xff\xdd", struct.pack(">H", restart_interval))
 
-    dc_codes = [
-        _build_codes(_DC_LUMA_BITS, _DC_LUMA_VALS),
-        _build_codes(_DC_CHROMA_BITS, _DC_CHROMA_VALS),
-    ]
-    ac_codes = [
-        _build_codes(_AC_LUMA_BITS, _AC_LUMA_VALS),
-        _build_codes(_AC_CHROMA_BITS, _AC_CHROMA_VALS),
-    ]
-    padded = []
-    for p, (hs, vs) in zip(planes, samp):
-        th, tw = mcus_y * 8 * vs, mcus_x * 8 * hs
-        ph_, pw_ = p.shape
-        padded.append(np.pad(p, ((0, th - ph_), (0, tw - pw_)), mode="edge"))
+def encode_jpeg_gray_progressive(
+    img: np.ndarray, qscale: int = 1, restart_interval: int = 0
+) -> bytes:
+    """Encode an (h, w) uint8 array as a progressive (SOF2) grayscale
+    JPEG. Decodes (here or in any conformant decoder) to exactly the
+    same pixels as ``encode_jpeg_gray`` of the same image.
+    ``restart_interval`` > 0 emits DRI + per-scan RSTm markers
+    (VERDICT r8 item 3)."""
+    a = _gray_plane(img, "encode_jpeg_gray_progressive")
+    return _encode([a], [(1, 1)], a.shape, qscale, _prog_script(1), restart_interval)
 
-    # one batched quantize pass per component (bit-identical to the old
-    # per-block _quantize_block calls — _quantize_plane docstring)
-    qplanes = [
-        _quantize_plane(p, q_luma if ci == 0 else q_chroma)
-        for ci, p in enumerate(padded)
-    ]
 
-    def block_at(ci: int, by: int, bx: int) -> np.ndarray:
-        return qplanes[ci][by, bx]
-
-    # Scan 1: Y, non-interleaved — the component's own ceil-over-sample
-    # block grid (§A.2.2), NOT the MCU-padded grid. One data unit per
-    # MCU (§B.2.3), so the restart cadence counts single blocks.
-    nby, nbx = _comp_grid(h, w, samp[0][0], samp[0][1], hmax, vmax)
-    bw = _BitWriter()
-    prev = 0
-    rst = 0
-    for i, (by, bx) in enumerate((by, bx) for by in range(nby) for bx in range(nbx)):
-        if restart_interval and i and i % restart_interval == 0:
-            bw.put_marker(0xD0 + rst)
-            rst = (rst + 1) % 8
-            prev = 0
-        prev = _encode_block(bw, block_at(0, by, bx), prev, dc_codes[0], ac_codes[0])
-    bw.flush()
-    sos = bytes([1, 1, 0x00, 0, 63, 0])
-    out += _segment(b"\xff\xda", sos) + bw.out
-    # Scan 2: Cb + Cr interleaved in MCU order (restart number resets
-    # to 0 at each SOS per §E.2.4).
-    bw = _BitWriter()
-    prev_dc = [0, 0]
-    rst = 0
-    for mi, (my, mx) in enumerate(
-        (my, mx) for my in range(mcus_y) for mx in range(mcus_x)
-    ):
-        if restart_interval and mi and mi % restart_interval == 0:
-            bw.put_marker(0xD0 + rst)
-            rst = (rst + 1) % 8
-            prev_dc = [0, 0]
-        for ci in (1, 2):
-            hs, vs = samp[ci]
-            for byi in range(vs):
-                for bxi in range(hs):
-                    prev_dc[ci - 1] = _encode_block(
-                        bw,
-                        block_at(ci, my * vs + byi, mx * hs + bxi),
-                        prev_dc[ci - 1],
-                        dc_codes[1],
-                        ac_codes[1],
-                    )
-    bw.flush()
-    sos = bytes([2, 2, 0x11, 3, 0x11, 0, 63, 0])
-    out += _segment(b"\xff\xda", sos) + bw.out
-    out += b"\xff\xd9"
-    return bytes(out)
+def encode_jpeg_rgb_progressive(
+    img: np.ndarray,
+    qscale: int = 1,
+    subsampling: str = "444",
+    restart_interval: int = 0,
+) -> bytes:
+    """Encode an (h, w, 3) uint8 RGB array as a progressive (SOF2) YCbCr
+    JPEG (same color transform and chroma downsampling as the baseline
+    ``encode_jpeg_rgb``, both from ``_rgb_planes``)."""
+    planes, samp, size = _rgb_planes(img, subsampling)
+    return _encode(planes, samp, size, qscale, _prog_script(3), restart_interval)
 
 
 # --------------------------------------------------------------------------
@@ -937,7 +894,8 @@ def _scan_order(
     the scan's components otherwise. The frame-global MCU grid is
     correct for ANY component subset: ceil(ceil(w*hs/hmax)/(8*hs)) ==
     ceil(w/(8*hmax)) identically. Returns (ci, cid, by, bx) indexing
-    the padded per-component coefficient grids."""
+    the padded per-component coefficient grids; ``_encode`` writes every
+    scan in this order too."""
     comps = frame["comps"]
     if len(scan_cids) == 1:
         cid = scan_cids[0]
@@ -957,6 +915,13 @@ def _scan_order(
                     for bxi in range(hs):
                         order.append((ci, cid, my * vs + byi, mx * hs + bxi))
     return order
+
+
+def _blocks_per_mcu(comps: list[tuple], cis: list[int]) -> int:
+    """Blocks per MCU of a scan over components ``cis``, the unit Ri
+    counts in: one data unit when the scan is non-interleaved, sum(hs*vs)
+    over the scan's components when interleaved (§B.2.3 / §E.2.4)."""
+    return 1 if len(cis) == 1 else sum(comps[ci][1] * comps[ci][2] for ci in cis)
 
 
 def _dec_seq_scan(
@@ -1094,6 +1059,12 @@ def _parse_sof(seg: bytes, progressive: bool) -> dict:
     if prec != 8:
         raise NotImplementedError(f"{prec}-bit JPEG not supported")
     h, w = struct.unpack(">HH", seg[1:5])
+    if h == 0:
+        raise NotImplementedError(
+            "JPEG height 0 (number of lines defined by a DNL marker) not supported"
+        )
+    if w == 0:
+        raise ValueError("JPEG frame width 0 (T.81 §B.2.2 requires X >= 1)")
     ncomp = seg[5]
     comps = []
     for i in range(ncomp):
@@ -1253,12 +1224,7 @@ def _walk(data: bytes, stop_at_sos: bool = False) -> dict:
                     "entropy_start": pos + seglen,
                 }
             order = _scan_order(frame, scan_cids, cid_to_ci)
-            # Ri counts MCUs: one data unit per MCU when the scan is
-            # non-interleaved (ns == 1), sum(hs*vs) blocks per MCU when
-            # interleaved (§B.2.3 / §E.2.4)
-            bpm = 1 if ns == 1 else sum(
-                comps[cid_to_ci[c]][1] * comps[cid_to_ci[c]][2] for c in scan_cids
-            )
+            bpm = _blocks_per_mcu(comps, [cid_to_ci[c] for c in scan_cids])
             br = _BitReader(data, pos + seglen)
             if not frame["progressive"]:
                 _dec_seq_scan(br, order, scan_tbl, huff, coefs, restart_interval, bpm)
@@ -1420,20 +1386,19 @@ def decode_segment_pixel_sum(
 _EOBRUN_MAX = 0x7FFF
 
 #: Scan script (per T.81 G.1.1.1.1; band/approximation split modeled on
-#: the common libjpeg progression): DC first at Al=1, AC bands 1-5 and
-#: 6-63 at Al=2, one AC refinement to Al=1, the DC refinement bit, and
-#: the final AC refinement to Al=0.
+#: the common libjpeg progression): DC first at Al=1 over every
+#: component, AC bands 1-5 and 6-63 at Al=2 per component, one AC
+#: refinement to Al=1, the DC refinement bit, and the final AC refinement
+#: to Al=0. Entries are ``_encode`` scans: (kind, component indices, Ss,
+#: Se, Ah, Al).
 def _prog_script(ncomp: int) -> list[tuple]:
-    script: list[tuple] = [("dc_first", None, 0, 0, 0, 1)]
-    for c in range(ncomp):
-        script.append(("ac_first", c, 1, 5, 0, 2))
-    for c in range(ncomp):
-        script.append(("ac_first", c, 6, 63, 0, 2))
-    for c in range(ncomp):
-        script.append(("ac_refine", c, 1, 63, 2, 1))
-    script.append(("dc_refine", None, 0, 0, 1, 0))
-    for c in range(ncomp):
-        script.append(("ac_refine", c, 1, 63, 1, 0))
+    every = list(range(ncomp))
+    script: list[tuple] = [("dc_first", every, 0, 0, 0, 1)]
+    script += [("ac_first", [c], 1, 5, 0, 2) for c in every]
+    script += [("ac_first", [c], 6, 63, 0, 2) for c in every]
+    script += [("ac_refine", [c], 1, 63, 2, 1) for c in every]
+    script.append(("dc_refine", every, 0, 0, 1, 0))
+    script += [("ac_refine", [c], 1, 63, 1, 0) for c in every]
     return script
 
 
@@ -1566,202 +1531,6 @@ def _enc_ac_refine(rec: _OpRecorder, band: np.ndarray, al: int, state: dict) -> 
         state["bits"].extend(br)
         if state["eobrun"] == _EOBRUN_MAX or len(state["bits"]) > 930:
             _flush_eobrun(rec, state)
-
-
-def _encode_progressive(
-    planes: list[np.ndarray],
-    qscale: int,
-    color: bool,
-    samp: list[tuple[int, int]] | None = None,
-    size: tuple[int, int] | None = None,
-    restart_interval: int = 0,
-) -> bytes:
-    """Shared progressive encoder body (same plane/samp/size contract as
-    the baseline ``_encode_jpeg``). Quantizes every block once, then
-    walks the scan script; DC scans use the Annex K DC tables, each AC
-    scan carries its own minimal canonical table in a DHT right before
-    its SOS.
-
-    ``restart_interval`` > 0 emits a DRI segment and RSTm markers every
-    Ri MCUs within EACH scan (VERDICT r8 item 3 — §E.2.4 restart
-    markers are legal in every scan type): byte-align, marker number
-    cycling 0..7 and restarting at every SOS, DC predictors reset in DC
-    scans, and — the progressive-specific bit — any pending EOB run
-    (plus its buffered refinement correction bits) FLUSHED before each
-    boundary, since an EOBn run may not cross a restart segment."""
-    samp = samp or [(1, 1)] * len(planes)
-    h, w = size or planes[0].shape
-    ncomp = 3 if color else 1
-    q_luma = quant_table(QUANT_LUMA, qscale)
-    q_chroma = quant_table(QUANT_CHROMA, qscale)
-    hmax = max(hs for hs, _ in samp)
-    vmax = max(vs for _, vs in samp)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-
-    # quantize every padded block to zigzag coefficient arrays, once
-    zz: list[np.ndarray] = []
-    for p, (hs, vs) in zip(planes, samp):
-        th, tw = mcus_y * 8 * vs, mcus_x * 8 * hs
-        ph_, pw_ = p.shape
-        padded = np.pad(p, ((0, th - ph_), (0, tw - pw_)), mode="edge")
-        q = q_luma if len(zz) == 0 else q_chroma
-        # batched quantize (bit-identical per block — _quantize_plane)
-        zz.append(_quantize_plane(padded, q)[:, :, _ZZ_ROWS, _ZZ_COLS])
-
-    out = bytearray(b"\xff\xd8")
-    out += _segment(
-        b"\xff\xe0", b"JFIF\x00" + bytes([1, 1, 0]) + struct.pack(">HH", 1, 1) + b"\x00\x00"
-    )
-    out += _segment(
-        b"\xff\xdb", bytes([0x00]) + q_luma[_ZZ_ROWS, _ZZ_COLS].astype(np.uint8).tobytes()
-    )
-    if color:
-        out += _segment(
-            b"\xff\xdb",
-            bytes([0x01]) + q_chroma[_ZZ_ROWS, _ZZ_COLS].astype(np.uint8).tobytes(),
-        )
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for cid in range(1, ncomp + 1):
-        hs, vs = samp[cid - 1]
-        sof += bytes([cid, hs << 4 | vs, 0 if cid == 1 else 1])
-    out += _segment(b"\xff\xc2", sof)  # SOF2: progressive DCT, Huffman
-    if restart_interval:
-        out += _segment(b"\xff\xdd", struct.pack(">H", restart_interval))
-    out += _segment(b"\xff\xc4", _dht_payload(0, 0, _DC_LUMA_BITS, _DC_LUMA_VALS))
-    if color:
-        out += _segment(b"\xff\xc4", _dht_payload(0, 1, _DC_CHROMA_BITS, _DC_CHROMA_VALS))
-    dc_codes = [
-        _build_codes(_DC_LUMA_BITS, _DC_LUMA_VALS),
-        _build_codes(_DC_CHROMA_BITS, _DC_CHROMA_VALS),
-    ]
-
-    def dc_order() -> list[tuple[int, int, int]]:
-        """(comp, by, bx) in scan order: interleaved MCU order when the
-        DC scan carries several components, the component's own raster
-        for a single-component frame (§A.2)."""
-        if ncomp == 1:
-            nby, nbx = _comp_grid(h, w, *samp[0], hmax, vmax)
-            return [(0, by, bx) for by in range(nby) for bx in range(nbx)]
-        order = []
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                for ci in range(ncomp):
-                    hs, vs = samp[ci]
-                    for byi in range(vs):
-                        for bxi in range(hs):
-                            order.append((ci, my * vs + byi, mx * hs + bxi))
-        return order
-
-    def sos_header(comps_sel: list[int], ss: int, se: int, ah: int, al: int) -> bytes:
-        sos = bytes([len(comps_sel)])
-        for ci in comps_sel:
-            td = 0 if ci == 0 else 1
-            sos += bytes([ci + 1, (td << 4) | 0])
-        sos += bytes([ss, se, (ah << 4) | al])
-        return _segment(b"\xff\xda", sos)
-
-    # restart cadence: Ri counts MCUs per scan — sum(hs*vs) blocks per
-    # MCU in the interleaved DC scans, one data unit per MCU in the
-    # non-interleaved AC scans (§B.2.3 / §E.2.4)
-    dc_bpm = 1 if ncomp == 1 else sum(hs * vs for hs, vs in samp)
-    dc_per_rst = restart_interval * dc_bpm
-
-    for kind, comp, ss, se, ah, al in _prog_script(ncomp):
-        if kind == "dc_first":
-            bw = _BitWriter()
-            prev = [0] * ncomp
-            rstn = 0
-            for i, (ci, by, bx) in enumerate(dc_order()):
-                if dc_per_rst and i and i % dc_per_rst == 0:
-                    bw.put_marker(0xD0 + rstn)
-                    rstn = (rstn + 1) % 8
-                    prev = [0] * ncomp
-                v = int(zz[ci][by, bx, 0]) >> al  # arithmetic shift (G.1.2.1)
-                diff = v - prev[ci]
-                prev[ci] = v
-                s = _magnitude(diff)
-                code, length = dc_codes[0 if ci == 0 else 1][s]
-                bw.put(code, length)
-                if s:
-                    bw.put(diff if diff >= 0 else diff + (1 << s) - 1, s)
-            bw.flush()
-            out += sos_header(list(range(ncomp)), 0, 0, 0, al) + bw.out
-        elif kind == "dc_refine":
-            bw = _BitWriter()
-            rstn = 0
-            for i, (ci, by, bx) in enumerate(dc_order()):
-                if dc_per_rst and i and i % dc_per_rst == 0:
-                    bw.put_marker(0xD0 + rstn)
-                    rstn = (rstn + 1) % 8
-                bw.put((int(zz[ci][by, bx, 0]) >> al) & 1, 1)
-            bw.flush()
-            out += sos_header(list(range(ncomp)), 0, 0, ah, al) + bw.out
-        else:
-            nby, nbx = _comp_grid(h, w, *samp[comp], hmax, vmax)
-            rec = _OpRecorder()
-            state = {"eobrun": 0, "bits": []}
-            rstn = 0
-            for i in range(nby * nbx):
-                by, bx = divmod(i, nbx)
-                if restart_interval and i and i % restart_interval == 0:
-                    # an EOB run may not cross a restart segment: flush
-                    # the pending EOBn (and its buffered correction
-                    # bits) BEFORE the boundary, then byte-align + RSTm
-                    _flush_eobrun(rec, state)
-                    rec.rst(rstn)
-                    rstn = (rstn + 1) % 8
-                band = zz[comp][by, bx, ss : se + 1]
-                if kind == "ac_first":
-                    pt = np.sign(band) * (np.abs(band) >> al)
-                    _enc_ac_first(rec, pt.astype(np.int64), state)
-                else:
-                    _enc_ac_refine(rec, band, al, state)
-            _flush_eobrun(rec, state)
-            bits, vals = _equal_length_table(rec.syms)
-            out += _segment(b"\xff\xc4", _dht_payload(1, 0, bits, vals))
-            bw = _BitWriter()
-            rec.replay(bw, _build_codes(bits, vals))
-            bw.flush()
-            out += sos_header([comp], ss, se, ah, al) + bw.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_gray_progressive(
-    img: np.ndarray, qscale: int = 1, restart_interval: int = 0
-) -> bytes:
-    """Encode an (h, w) uint8 array as a progressive (SOF2) grayscale
-    JPEG. Decodes (here or in any conformant decoder) to exactly the
-    same pixels as ``encode_jpeg_gray`` of the same image.
-    ``restart_interval`` > 0 emits DRI + per-scan RSTm markers
-    (VERDICT r8 item 3)."""
-    a = np.asarray(img, dtype=np.uint8)
-    if a.ndim != 2:
-        raise ValueError("encode_jpeg_gray_progressive expects an (h, w) array")
-    return _encode_progressive(
-        [a], qscale, color=False, restart_interval=restart_interval
-    )
-
-
-def encode_jpeg_rgb_progressive(
-    img: np.ndarray,
-    qscale: int = 1,
-    subsampling: str = "444",
-    restart_interval: int = 0,
-) -> bytes:
-    """Encode an (h, w, 3) uint8 RGB array as a progressive (SOF2) YCbCr
-    JPEG (same color transform and chroma downsampling as the baseline
-    ``encode_jpeg_rgb``, both from ``_rgb_planes``)."""
-    planes, samp, size = _rgb_planes(img, subsampling)
-    return _encode_progressive(
-        planes,
-        qscale,
-        color=True,
-        samp=samp,
-        size=size,
-        restart_interval=restart_interval,
-    )
 
 
 def _dec_dc_scan(

@@ -34,12 +34,12 @@ from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 @register(
     "multimodal_jpeg_multiscan_color420",
     # The multi-scan sequential stream carries EXACTLY the baseline
-    # encoder's quantized coefficients (same _rgb_planes + same
-    # _quantize_block, just re-ordered across two SOS segments), so the
-    # same closed-form color-chain oracle as the baseline and
-    # progressive 4:2:0 roundtrips applies verbatim — any cross-scan DC
-    # predictor, scan-order, component-subset MCU geometry, or
-    # quant-latch bug breaks the hash.
+    # encoder's quantized coefficients (same _rgb_planes + the same one
+    # quantize pass in _encode, just re-ordered across two SOS
+    # segments), so the same closed-form color-chain oracle as the
+    # baseline and progressive 4:2:0 roundtrips applies verbatim — any
+    # cross-scan DC predictor, scan-order, component-subset MCU
+    # geometry, or quant-latch bug breaks the hash.
     oracle=COLOR420_ORACLE,
     tags=(
         "multimodal",

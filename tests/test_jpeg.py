@@ -146,6 +146,38 @@ def test_envelope_raises_never_wrong_pixels():
     assert not is_jpeg(b"\x89PNG")
     with pytest.raises(ValueError):
         decode_jpeg(b"\x89PNG\r\n")
+    # SOF height 0 means a DNL marker defines it (§B.2.2), which this codec
+    # never reads; width 0 is illegal. Neither decodes to an empty array.
+    j = bytes(data).index(b"\xff\xc0") + 5  # SOF payload: P, then Y, X
+    for off, err in ((0, NotImplementedError), (2, ValueError)):
+        bad = data.copy()
+        bad[j + off : j + off + 2] = b"\x00\x00"
+        with pytest.raises(err, match="DNL" if off == 0 else "width 0"):
+            decode_jpeg(bytes(bad))
+    # the encoder's limits, checked once for all five encoders: sides in
+    # 1..65535 (SOF's 16-bit fields, Y=0 reserved for DNL) and a DRI
+    # interval in 0..65535
+    from multithreaded_map_reduce_library_spark.functions.jpeg import (
+        encode_jpeg_gray_progressive,
+        encode_jpeg_rgb_multiscan,
+        encode_jpeg_rgb_progressive,
+    )
+
+    for enc, chans in (
+        (encode_jpeg_gray, ()),
+        (encode_jpeg_gray_progressive, ()),
+        (encode_jpeg_rgb, (3,)),
+        (encode_jpeg_rgb_multiscan, (3,)),
+        (encode_jpeg_rgb_progressive, (3,)),
+    ):
+        for shape in ((0, 5), (5, 0), (65536, 1), (1, 65536)):
+            with pytest.raises(ValueError, match="1..65535 pixels"):
+                enc(np.zeros(shape + chans, dtype=np.uint8))
+        for ri in (-1, 65536):
+            with pytest.raises(ValueError, match="restart_interval must be 0..65535"):
+                enc(np.zeros((8, 8) + chans, dtype=np.uint8), restart_interval=ri)
+        top = enc(np.zeros((8, 8) + chans, dtype=np.uint8), restart_interval=65535)
+        assert decode_jpeg(top)[3].shape[:2] == (8, 8)
 
 
 def test_restart_intervals_transparent_and_checked():
