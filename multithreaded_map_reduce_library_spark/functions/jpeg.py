@@ -849,7 +849,9 @@ def _latch_scan_qtables(
 def _parse_dht_seg(
     seg: bytes, huff: dict[tuple[int, int], dict[tuple[int, int], int]]
 ) -> None:
-    """One DHT segment — may hold several tables (§B.2.4.2)."""
+    """One DHT segment — may hold several tables (§B.2.4.2). A table whose
+    16 BITS counts or HUFFVAL list run past the segment, or whose counts
+    sum past 256 codes, raises ValueError."""
     p = 0
     while p < len(seg):
         tclass, tid = seg[p] >> 4, seg[p] & 0x0F
@@ -857,6 +859,8 @@ def _parse_dht_seg(
         bits = list(seg[p : p + 16])
         p += 16
         nvals = sum(bits)
+        if len(bits) < 16 or nvals > 256 or p + nvals > len(seg):
+            raise ValueError("DHT table runs past its segment or codes over 256 values")
         vals = list(seg[p : p + nvals])
         p += nvals
         key = (bytes(bits), bytes(vals))
@@ -1054,7 +1058,10 @@ def _scan_end(data: bytes, pos: int) -> int:
 def _parse_sof(seg: bytes, progressive: bool) -> dict:
     """SOF0/SOF1/SOF2 payload -> the frame state: size, components
     ``(cid, hs, vs, tq)``, max sampling factors and the interleaved MCU
-    grid (§A.2.3 — sized by the MAX sampling factors)."""
+    grid (§A.2.3 — sized by the MAX sampling factors). A payload shorter
+    than its fields raises ValueError."""
+    if len(seg) < 6 or len(seg) < 6 + 3 * seg[5]:
+        raise ValueError("SOF segment shorter than its fields")
     prec = seg[0]
     if prec != 8:
         raise NotImplementedError(f"{prec}-bit JPEG not supported")
@@ -1175,6 +1182,8 @@ def _walk(data: bytes, stop_at_sos: bool = False) -> dict:
                 "(SOF0/SOF1/SOF2) is supported"
             )
         elif marker == 0xDD:  # DRI
+            if len(seg) < 2:
+                raise ValueError("DRI segment without its 2-byte interval")
             restart_interval = struct.unpack(">H", seg[:2])[0]
         elif marker == 0xDA:  # SOS — entropy data follows
             if frame is None:

@@ -20,6 +20,7 @@ import pandas as pd  # module-level so pandas-UDF type hints resolve
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.utils import get_lit_sql_str
 
 #: The reference's delimiter set, as a regex character class (distwc.c:16).
 DELIMS_RE = "[ \t\r\n]"
@@ -35,6 +36,13 @@ def tokens(col: Column | str, pattern: str = DELIMS_RE, keep_empty: bool = False
     c = F.col(col) if isinstance(col, str) else col
     arr = F.split(c, pattern)
     return arr if keep_empty else F.array_remove(arr, "")
+
+
+def tokens_sql(col: str, pattern: str = DELIMS_RE) -> str:
+    """:func:`tokens` as SQL text over the SQL expression ``col``, for plans
+    written as one ``spark.sql`` statement: the same ``split`` and
+    ``array_remove``, so the same arrays."""
+    return f"array_remove(split({col}, {get_lit_sql_str(pattern)}), '')"
 
 
 def split_tokens(text: str | None) -> list[str]:

@@ -28,8 +28,7 @@ tokenizer tier; this extends the driver-mandated superset.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
@@ -159,150 +158,116 @@ def unigram_lm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     e6-quantized -ln(count/total_chars), and per word the exact minimal
     total cost over all segmentations plus the piece count of that
     optimum (fewest-pieces tie-break via cost*32+pieces packing) — one
-    left-to-right fold over the word's positions (:func:`run_optimal_dp`).
+    left-to-right fold over the word's positions (:func:`optimal_dp_sql`).
 
-    Scale design: the corpus-sized work is the word frequency rollup and
-    one gram-count shuffle over all three orders (map-side combined, the
-    wordcount shape); both top-k cuts are one window partitioned by gram
-    order, one task per order; the DP itself runs on a 40-word × 17-position
-    relation — metadata, regardless of corpus size. This is the plan
-    shape a real tokenizer trainer uses at 100 TB: corpus passes for
-    counts, DP on the (bounded) vocabulary. Building the plan runs no
-    Spark job."""
-    words, eg = build_piece_graph(spark, sf_dir)
-    dp = run_optimal_dp(words, eg)
-    pk = F.lit(_PACK).cast("bigint")
-    # run_optimal_dp returns ONE row per word, already at the final
-    # position (ADVICE r9: the old pos == length(word) filter became a
-    # tautological no-op when the round-9 fold narrowed the contract).
-    return (
-        words.join(dp, "word")
-        .select(
-            "word",
-            "freq",
-            F.length("word").cast("bigint").alias("word_len"),
-            F.call_function("div", F.col("v"), pk).alias("seg_cost_e6"),
-            (F.col("v") % pk).cast("bigint").alias("n_pieces"),
+    Scale design: see :func:`piece_graph`. The corpus-sized work is the
+    word frequency rollup and one gram-count shuffle; the DP runs on 40
+    words against one broadcast piece→cost map, whatever the corpus size.
+    Building the plan runs no Spark job."""
+    return piece_graph(
+        spark,
+        sf_dir,
+        f"""word, freq, CAST(length(word) AS BIGINT) AS word_len,
+            {optimal_dp_sql("word", "w32")} AS v""",
+        f"""word, freq, word_len, v div {_PACK} AS seg_cost_e6,
+            CAST(v % {_PACK} AS BIGINT) AS n_pieces""",
+    )
+
+
+def piece_graph(spark: SparkSession, sf_dir: str, per_word: str, final: str) -> DataFrame:
+    """The unigram-LM piece graph as ONE SQL statement, shared with the
+    WordPiece-greedy regret query (pipeline97): ``per_word`` is a select
+    list over each top-40 word's (``word``, ``freq``, ``w32``), where
+    ``w32`` maps every piece to cost_e6*32 + 1, and ``final`` a select
+    list over ``per_word``'s columns.
+
+    One statement is analysed once; the DataFrame-step form re-analysed
+    the growing plan after every step, which was most of its build time.
+    The documents table enters as a temp view that ``spark.sql`` drops again
+    before it returns.
+
+    Plan at any scale: two corpus-sized shuffles (the word-frequency
+    rollup and one gram count over all three orders), one window
+    partitioned by gram order for both top cuts, one global window for
+    the top words. The pieces then fold to one row (their struct list and
+    the character total in one aggregate), which becomes the cost map and
+    broadcasts onto the 40 words: at most (distinct characters + 96)
+    entries, so no shuffle past the window. Building it launches no Spark
+    job."""
+    from multithreaded_map_reduce_library_spark.functions.text import tokens_sql
+
+    # Gram counting runs over the word-frequency rollup weighted by freq,
+    # the token-stream counts at a fraction of the explode volume. Every
+    # gram order is one explode and one aggregate: grams of different
+    # orders differ in length, so (n, gram) keys never collide. Long words
+    # rank last in the top-words window and are cut after it: a cut below
+    # it is pushed under the rollup, which then no longer reuses the gram
+    # count's. The n = 1 counts sum to the corpus's character count.
+    return spark.sql(
+        f"""
+        WITH wf AS (
+            SELECT tok, CAST(count(*) AS BIGINT) AS freq
+            FROM (SELECT explode({tokens_sql("text")}) AS tok FROM {{docs}})
+            GROUP BY tok
+        ),
+        grams AS (
+            SELECT n, gram, CAST(sum(freq) AS BIGINT) AS cnt FROM (
+                SELECT n, substring(tok, p, n) AS gram, freq FROM (
+                    SELECT tok, freq, n, explode(sequence(1, length(tok) - n + 1)) AS p
+                    FROM (SELECT tok, freq, explode(array(1, 2, 3)) AS n FROM wf)
+                    WHERE length(tok) >= n
+                )
+            ) GROUP BY n, gram
+        ),
+        pieces AS (
+            SELECT n, gram, cnt FROM (
+                SELECT n, gram, cnt,
+                       row_number() OVER (PARTITION BY n ORDER BY cnt DESC, gram) AS rn
+                FROM grams
+            ) WHERE n = 1 OR rn <= IF(n = 2, {_TOP_BIGRAMS}, {_TOP_TRIGRAMS})
+        ),
+        cost_map AS (
+            SELECT map_from_entries(transform(ps, x -> struct(x.gram,
+                       CAST(floor(ln(CAST(total AS DOUBLE) / CAST(x.cnt AS DOUBLE))
+                                  * 1000000.0D + 0.5D) AS BIGINT) * {_PACK} + 1))) AS w32
+            FROM (
+                SELECT collect_list(struct(gram, cnt)) AS ps,
+                       CAST(sum(IF(n = 1, cnt, 0)) AS BIGINT) AS total
+                FROM pieces
+            )
+        ),
+        words AS (
+            SELECT word, freq FROM (
+                SELECT tok AS word, freq,
+                       row_number() OVER (ORDER BY length(tok) > {_MAX_WLEN}, freq DESC, tok) AS rn
+                FROM wf
+            ) WHERE rn <= {_TOP_WORDS} AND length(word) <= {_MAX_WLEN}
         )
+        SELECT {final} FROM (
+            SELECT /*+ BROADCAST(cost_map) */ {per_word} FROM words CROSS JOIN cost_map
+        )""",
+        docs=load_table(spark, sf_dir, "documents"),
     )
 
 
-def build_piece_graph(spark: SparkSession, sf_dir: str):
-    """(words, eg): the top-40 word set with frequencies, and the piece
-    edge list (word, pos_from, pos_to, w32 = cost_e6*32 + 1). Shared with
-    the WordPiece-greedy regret query (pipeline97).
-
-    Building it launches no Spark job: the plan has two corpus-sized
-    shuffles (the word-frequency rollup and one gram count over all three
-    orders), one window partitioned by gram order for both top cuts, and
-    one global window for the top words; everything else is
-    vocabulary-sized."""
-    from multithreaded_map_reduce_library_spark.functions.text import tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    # one corpus-sized shuffle (the wordcount shape); all gram counting
-    # then runs over this vocabulary-sized rollup, weighted by freq —
-    # identical counts to a token-stream pass at a fraction of the volume
-    wf = (
-        docs.select(F.explode(tokens("text")).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count("*").cast("bigint").alias("freq"))
-    )
-    # every gram order n in one explode and one aggregate; grams of
-    # different orders differ in length, so (n, gram) keys never collide
-    pos = F.explode(F.sequence(F.lit(1), F.length("tok") - F.col("n") + 1)).alias("p")
-    grams = (
-        wf.select("tok", "freq", F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("n"))
-        .where(F.length("tok") >= F.col("n"))
-        .select("tok", "freq", "n", pos)
-        .select("n", F.expr("substring(tok, p, n)").alias("gram"), "freq")
-        .groupBy("n", "gram")
-        .agg(F.sum("freq").cast("bigint").alias("cnt"))
-    )
-    # every character, the top-64 bigrams and the top-32 trigrams, each cut
-    # (cnt DESC, gram ASC) inside its own order
-    rn = F.row_number().over(Window.partitionBy("n").orderBy(F.desc("cnt"), F.asc("gram")))
-    cut = F.when(F.col("n") == 2, _TOP_BIGRAMS).otherwise(_TOP_TRIGRAMS)
-    pieces = grams.withColumn("rn", rn).where((F.col("n") == 1) | (F.col("rn") <= cut))
-    # Σ freq·length(tok) counts every character occurrence: Σ of the n=1 counts
-    tot = wf.agg(F.sum(F.col("freq") * F.length("tok")).cast("bigint").alias("total"))
-    costs = pieces.crossJoin(F.broadcast(tot)).select(
-        "gram",
-        F.floor(
-            F.log(F.col("total").cast("double") / F.col("cnt").cast("double"))
-            * 1000000.0
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("cost_e6"),
-    )
-    # long words rank last and are cut after the window: a cut below it is
-    # pushed under the rollup, which then no longer reuses the gram count's
-    too_long = F.length("word") > _MAX_WLEN
-    wrn = F.row_number().over(Window.orderBy(too_long, F.desc("freq"), F.asc("word")))
-    words = (
-        wf.select(F.col("tok").alias("word"), "freq")
-        .withColumn("rn", wrn)
-        .where((F.col("rn") <= _TOP_WORDS) & ~too_long)
-        .select("word", "freq")
-    )
-    span = words.select(
-        "word",
-        F.explode(F.sequence(F.lit(1), F.length("word"))).alias("pos_to"),
-    ).select("word", "pos_to", F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("l"))
-    eg = (
-        span.where(F.col("l") <= F.col("pos_to"))
-        .select(
-            "word",
-            (F.col("pos_to") - F.col("l")).cast("bigint").alias("pos_from"),
-            F.col("pos_to").cast("bigint").alias("pos_to"),
-            F.expr("substring(word, pos_to - l + 1, l)").alias("piece"),
-        )
-        .join(costs.withColumnRenamed("gram", "piece"), "piece")
-        .select(
-            "word", "pos_from", "pos_to", (F.col("cost_e6") * _PACK + 1).alias("w32")
-        )
-    )
-    return words, eg
-
-
-def word_edge_arrays(eg: DataFrame) -> DataFrame:
-    """(word, edges): the piece graph folded to one array row per word —
-    edges is array<struct<pos_from,pos_to,w32>>. One tiny shuffle (the
-    relation is |words|·|positions|·3 rows); element order is irrelevant
-    to every consumer (they filter/min over it), so no sort is needed."""
-    return eg.groupBy("word").agg(
-        F.collect_list(F.struct("pos_from", "pos_to", "w32")).alias("edges")
-    )
-
-
-def run_optimal_dp(words: DataFrame, eg: DataFrame) -> DataFrame:
-    """Optimal-segmentation cost per word: (word, pos, v) at the word's
-    FINAL position (pos = len(word)), v = packed min cost from 0.
+def optimal_dp_sql(word: str, w32: str) -> str:
+    """The optimal-segmentation DP over one word as a SQL fold: the packed
+    minimal cost (cost_e6*32 + n_pieces) of segmenting ``word`` into
+    pieces of the ``w32`` map.
 
     The piece graph is a DAG whose positions 0..len are already in
     topological order, so one left-to-right pass computes the exact
     minimum — the round-3 form ran the same recurrence as a 16-round
-    unrolled Bellman-Ford (16 join+groupBy Spark jobs plus checkpoint
-    jobs over a ≤680-row relation, pure scheduling overhead; the oracle
-    still replays that unrolled form and the results are identical
-    because extra relaxation rounds past the topological pass are
-    no-ops). Here the per-word edge list folds to an array and the DP is
-    one SQL ``aggregate`` (functions/vectors.py says why SQL): dist[p] =
-    min over edges ending at p of dist[pos_from] + w32, all in exact
-    BIGINTs — zero joins, zero extra jobs. Every position is reachable
-    (every character is in the piece vocabulary), so the running min never
-    sees an empty set."""
-    ea = word_edge_arrays(eg)
-    # acc = dist array for positions 0..p-1 (1-indexed: element i+1 = pos i)
-    dist = (
-        "aggregate(sequence(1, CAST(length(`word`) AS BIGINT)), array(CAST(0 AS BIGINT)),"
-        " (acc, p) -> concat(acc, array(array_min(transform("
-        "filter(`edges`, e -> e.pos_to = p),"
-        " e -> element_at(acc, CAST(e.pos_from + 1 AS INT)) + e.w32)))))"
-    )
-    return words.join(ea, "word").select(
-        "word",
-        F.length("word").cast("bigint").alias("pos"),
-        F.expr(f"element_at({dist}, CAST(length(`word`) + 1 AS INT)) AS v"),
+    unrolled Bellman-Ford (the oracle still replays that unrolled form;
+    extra relaxation rounds past the topological pass are no-ops, so the
+    results are identical). acc holds dist for positions 0..p-1, and
+    dist[p] = min over l in 1..min(3, p) of dist[p-l] + w32[piece], all
+    exact BIGINTs; ``try_element_at`` is NULL for a substring that is no
+    piece, and ``array_min`` skips it. Every character is a piece, so
+    the min never sees an empty set."""
+    return (
+        f"element_at(aggregate(sequence(1, length({word})), array(CAST(0 AS BIGINT)),"
+        f" (acc, p) -> concat(acc, array(array_min(transform(sequence(1, least(3, p)),"
+        f" l -> acc[p - l] + try_element_at({w32}, substring({word}, p - l + 1, l))))))),"
+        f" -1)"
     )

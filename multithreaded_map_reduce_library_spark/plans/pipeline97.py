@@ -33,11 +33,10 @@ from multithreaded_map_reduce_library_spark.functions.hashing import djb2_expr
 from multithreaded_map_reduce_library_spark.plans.pipeline96 import (
     _MAX_WLEN,
     _PACK,
-    build_piece_graph,
     duck_dp_ctes,
     duck_vocab_ctes,
-    run_optimal_dp,
-    word_edge_arrays,
+    optimal_dp_sql,
+    piece_graph,
 )
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
@@ -101,60 +100,37 @@ def wordpiece_greedy_regret(spark: SparkSession, sf_dir: str) -> DataFrame:
     impossible: one candidate per length); regret = greedy − optimal is
     ≥ 0 by construction and 0 exactly where greedy finds an optimum.
 
-    Scale design: shares the piece-graph build with pipeline96 (the word
-    rollup and one gram-count shuffle; building it runs no Spark job);
-    both the greedy walk and the DP are one fold per word on
-    metadata-sized relations."""
-    words, eg = build_piece_graph(spark, sf_dir)
-    dp = run_optimal_dp(words, eg)
-    # Greedy longest-match as ONE fold expression over the per-word edge
-    # array (same restructure as run_optimal_dp — the round-4 form ran 16
-    # join+window Spark jobs over a ≤40-row relation): _MAX_WLEN steps of
-    # "advance by the longest piece at the current position", terminal
-    # states persisting, exactly the unrolled-CTE semantics the oracle
-    # replays. Candidate sets are never empty before the end (every
-    # character is a piece) and one-candidate-per-length makes the
-    # longest edge unique, so the walk is fully deterministic.
-    wlen = F.length("word").cast("bigint")
-
-    def _advance(acc, _step):
-        cand = F.filter("edges", lambda e: e["pos_from"] == acc["pos"])
-        best_to = F.array_max(F.transform(cand, lambda e: e["pos_to"]))
-        best_w = F.element_at(
-            F.filter(cand, lambda e: e["pos_to"] == best_to), 1
-        )["w32"]
-        return F.when(acc["pos"] == wlen, acc).otherwise(
-            F.struct(best_to.alias("pos"), (acc["v"] + best_w).alias("v"))
-        )
-
-    walk = F.aggregate(
-        F.sequence(F.lit(1), F.lit(_MAX_WLEN)),
-        F.struct(
-            F.lit(0).cast("bigint").alias("pos"), F.lit(0).cast("bigint").alias("v")
-        ),
-        _advance,
+    Scale design: shares the piece-graph statement with pipeline96 (the
+    word rollup and one gram-count shuffle; building it runs no Spark
+    job); the greedy walk and the DP are two folds per word against the
+    broadcast piece→cost map."""
+    return piece_graph(
+        spark,
+        sf_dir,
+        f"""word, freq, {greedy_walk_sql("word", "w32")} AS gv,
+            {optimal_dp_sql("word", "w32")} AS v""",
+        f"""word, freq, gv div {_PACK} AS greedy_cost_e6,
+            CAST(gv % {_PACK} AS BIGINT) AS greedy_pieces,
+            v div {_PACK} AS opt_cost_e6, CAST(v % {_PACK} AS BIGINT) AS opt_pieces,
+            CAST(gv div {_PACK} - v div {_PACK} AS BIGINT) AS regret_e6""",
     )
-    greedy = words.join(word_edge_arrays(eg), "word").select(
-        "word", walk["v"].alias("gv")
+
+
+def greedy_walk_sql(word: str, w32: str) -> str:
+    """The greedy longest-match walk over one word as a SQL fold: the
+    packed cost (cost_e6*32 + n_pieces) of cutting ``word``, left to
+    right, at the longest piece of the ``w32`` map that starts at the
+    current position. A word of length n needs at most n steps; a walk
+    that reached the end keeps its state, the unrolled-CTE semantics the
+    oracle replays. Every character is a piece, so each step advances."""
+    step = (
+        f"array_max(filter(sequence(1, least(3, length({word}) - s.pos)),"
+        f" l -> map_contains_key({w32}, substring({word}, s.pos + 1, l))))"
     )
-    pk = F.lit(_PACK).cast("bigint")
-    idiv = lambda a, b: F.call_function("div", a, b)  # noqa: E731
     return (
-        words.join(greedy, "word")
-        # run_optimal_dp emits one final-position row per word (ADVICE
-        # r9: the old pos filter was a tautological no-op)
-        .join(dp.select("word", "v"), "word")
-        .select(
-            "word",
-            "freq",
-            idiv(F.col("gv"), pk).alias("greedy_cost_e6"),
-            (F.col("gv") % pk).cast("bigint").alias("greedy_pieces"),
-            idiv(F.col("v"), pk).alias("opt_cost_e6"),
-            (F.col("v") % pk).cast("bigint").alias("opt_pieces"),
-            (idiv(F.col("gv"), pk) - idiv(F.col("v"), pk))
-            .cast("bigint")
-            .alias("regret_e6"),
-        )
+        f"aggregate(sequence(1, length({word})), named_struct('pos', 0, 'v', CAST(0 AS BIGINT)),"
+        f" (s, i) -> IF(s.pos = length({word}), s, named_struct('pos', s.pos + {step},"
+        f" 'v', s.v + {w32}[substring({word}, s.pos + 1, {step})]))).v"
     )
 
 

@@ -1132,6 +1132,44 @@ def test_every_truncation_raises_value_error():
                 decode_jpeg(data[:n])
 
 
+def _with_segment(data: bytes, marker: int, payload: bytes) -> bytes:
+    """``data`` with one marker segment put just before its first SOS."""
+    sos = data.index(b"\xff\xda")
+    seg = bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") + payload
+    return data[:sos] + seg + data[sos:]
+
+
+@pytest.mark.parametrize(
+    "marker, payload, match",
+    [
+        (0xDD, b"", "DRI segment"),  # no interval
+        (0xC4, bytes([0x00, 200] + [0] * 15), "DHT table"),  # 200 codes, no values
+        (0xC4, bytes([0x00] + [0] * 14 + [150, 150]) + bytes(300), "DHT table"),  # 300 > 256
+    ],
+    ids=["dri-empty", "dht-past-end", "dht-over-256"],
+)
+def test_malformed_segment_raises_value_error(marker, payload, match):
+    """A complete stream with one malformed marker segment raises
+    ValueError, not a struct error or IndexError from reading past the
+    segment's payload."""
+    data = encode_jpeg_gray(np.full((8, 8), 90, dtype=np.uint8))
+    decode_jpeg(data)
+    with pytest.raises(ValueError, match=match):
+        decode_jpeg(_with_segment(data, marker, payload))
+
+
+def test_short_sof_payload_raises_value_error():
+    """An SOF segment whose payload stops before its fields (4 bytes here:
+    precision, height and one byte of the width) raises ValueError."""
+    data = encode_jpeg_gray(np.full((8, 8), 90, dtype=np.uint8))
+    i = data.index(b"\xff\xc0")
+    end = i + 2 + int.from_bytes(data[i + 2 : i + 4], "big")
+    for payload in (b"\x08\x00\x08\x00", data[i + 4 : end - 1]):
+        short = data[:i] + b"\xff\xc0" + (len(payload) + 2).to_bytes(2, "big") + payload
+        with pytest.raises(ValueError, match="SOF segment shorter"):
+            decode_jpeg(short + data[end:])
+
+
 def test_second_frame_header_raises():
     """One stream carries one frame: a second SOF after the scan raises
     rather than restarting the coefficient grids or being ignored."""

@@ -396,13 +396,13 @@ def test_prefix_sum_fact_window_is_partitioned(spark, queries):
     assert "BroadcastHashJoin" in plan
 
 
-def _build_jobs(spark, fn) -> int:
-    """Spark jobs launched while ``fn`` builds its plan at sf0.001."""
+def _jobs(spark, action) -> int:
+    """Spark jobs launched while ``action()`` runs."""
     sc = spark.sparkContext
-    group = f"build-{fn.__name__}-{time.monotonic_ns()}"
+    group = f"jobs-{time.monotonic_ns()}"
     sc.setJobGroup(group, group)
     try:
-        fn(spark, SF_SMALL)
+        action()
         # the status store fills from the listener bus in order: once a
         # job run after the build shows, every build job shows too
         sc.setJobGroup(group + "-fence", group)
@@ -414,6 +414,11 @@ def _build_jobs(spark, fn) -> int:
         assert time.monotonic() < deadline, "fence job never reached the status store"
         time.sleep(0.05)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _build_jobs(spark, fn) -> int:
+    """Spark jobs launched while ``fn`` builds its plan at sf0.001."""
+    return _jobs(spark, lambda: fn(spark, SF_SMALL))
 
 
 @pytest.mark.parametrize(
@@ -451,3 +456,39 @@ def test_unigram_piece_graph_one_gram_shuffle(spark, queries):
     final = final.split("== Initial Plan ==")[0]
     scans = [ln for ln in final.splitlines() if "FileScan parquet" in ln]
     assert sum("documents" in ln for ln in scans) == 1, final
+
+
+def test_unigram_segmentation_runs_at_most_6_jobs(spark, queries):
+    """The piece graph folds to one broadcast piece→cost map and each word's
+    DP reads it directly: the word rollup, the gram count, the window by
+    gram order, the cost-map row and the top words, with no edge-list
+    relation, groupBy or join after them (10 jobs in the edge-list form)."""
+    df = _df(queries, spark, "unigram_lm_segmentation")
+    n = _jobs(spark, df.collect)
+    assert n <= 6, n
+
+
+def test_piece_graph_builds_leave_no_session_state(spark, queries):
+    """The piece graph is one ``spark.sql`` statement reading ``documents``
+    through a temp view; building either query leaves the session's tables
+    and views, and every pinned conf, as they were."""
+    from multithreaded_map_reduce_library_spark.session import _conf_cache
+
+    names = ("unigram_lm_segmentation", "wordpiece_greedy_regret")
+
+    def tables():
+        return sorted((t.name, t.tableType, t.isTemporary) for t in spark.catalog.listTables())
+
+    def confs():
+        return {k: spark.conf.get(k, None) for k in sorted(_conf_cache(spark))}
+
+    before = tables()
+    for name in names:
+        _df(queries, spark, name)
+    assert tables() == before
+    pinned = confs()
+    assert pinned
+    for name in names:
+        _df(queries, spark, name)
+    assert tables() == before
+    assert confs() == pinned
