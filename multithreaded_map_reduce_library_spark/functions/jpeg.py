@@ -1188,6 +1188,8 @@ def _walk(data: bytes, stop_at_sos: bool = False) -> dict:
         elif marker == 0xDA:  # SOS — entropy data follows
             if frame is None:
                 raise ValueError("SOS before SOF")
+            if not seg or len(seg) < 4 + 2 * seg[0]:
+                raise ValueError("SOS segment shorter than its fields")
             comps = frame["comps"]
             cid_to_ci = {c[0]: i for i, c in enumerate(comps)}
             ns = seg[0]

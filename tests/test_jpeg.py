@@ -1145,8 +1145,10 @@ def _with_segment(data: bytes, marker: int, payload: bytes) -> bytes:
         (0xDD, b"", "DRI segment"),  # no interval
         (0xC4, bytes([0x00, 200] + [0] * 15), "DHT table"),  # 200 codes, no values
         (0xC4, bytes([0x00] + [0] * 14 + [150, 150]) + bytes(300), "DHT table"),  # 300 > 256
+        (0xDA, b"", "SOS segment"),  # no component count
+        (0xDA, b"\x01\x01", "SOS segment"),  # one component, no selectors
     ],
-    ids=["dri-empty", "dht-past-end", "dht-over-256"],
+    ids=["dri-empty", "dht-past-end", "dht-over-256", "sos-empty", "sos-short"],
 )
 def test_malformed_segment_raises_value_error(marker, payload, match):
     """A complete stream with one malformed marker segment raises

