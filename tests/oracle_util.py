@@ -5,6 +5,7 @@ query and the oracle SQL on the same parquet tables, canonicalize rows
 from __future__ import annotations
 
 import datetime
+import hashlib
 import math
 from collections import Counter
 
@@ -36,6 +37,17 @@ def _cell(v) -> str:
 def _canon(rows, cols) -> Counter:
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     return Counter(tuple(_cell(r[i]) for i in order) for r in rows)
+
+
+def canon_digest(rows, cols) -> str:
+    """sha256 of the canonical multiset ``_canon`` builds: the sorted
+    column names, then one tab-joined line per canonical row (repeated
+    by its count) in sorted order. Equal digests mean equal multisets,
+    so a committed oracle digest stands in for replaying a slow oracle."""
+    h = hashlib.sha256("\t".join(sorted(c.lower() for c in cols)).encode("utf-8"))
+    for row, n in sorted(_canon(rows, cols).items()):
+        h.update(("\n" + "\t".join(row)).encode("utf-8") * n)
+    return h.hexdigest()
 
 
 def run_oracle(sql: str, sf_dir: str):
