@@ -790,7 +790,10 @@ def is_jpeg(data: bytes) -> bool:
 
 
 def _parse_dqt_seg(seg: bytes, qtables: dict[int, np.ndarray]) -> None:
-    """One DQT segment — may hold several tables (§B.2.4.1)."""
+    """One DQT segment — may hold several tables (§B.2.4.1). A segment
+    with no table raises ValueError."""
+    if not seg:
+        raise ValueError("DQT segment holds no table")
     p = 0
     while p < len(seg):
         prec, tid = seg[p] >> 4, seg[p] & 0x0F
@@ -850,11 +853,14 @@ def _parse_dht_seg(
     seg: bytes, huff: dict[tuple[int, int], dict[tuple[int, int], int]]
 ) -> None:
     """One DHT segment — may hold several tables (§B.2.4.2). A table whose
-    16 BITS counts or HUFFVAL list run past the segment, or whose counts
-    sum past 256 codes, raises ValueError."""
+    16 BITS counts or HUFFVAL list run past the segment, whose counts sum
+    past 256 codes, or whose class byte is outside Tc 0..1 / Th 0..3
+    raises ValueError."""
     p = 0
     while p < len(seg):
         tclass, tid = seg[p] >> 4, seg[p] & 0x0F
+        if tclass > 1 or tid > 3:
+            raise ValueError(f"DHT table class byte 0x{seg[p]:02x} is outside Tc 0..1 / Th 0..3")
         p += 1
         bits = list(seg[p : p + 16])
         p += 16

@@ -5,10 +5,9 @@ classic peak-to-trough series statistic:
 * ``graph_diameter_double_sweep`` — the standard double-BFS diameter
   lower bound (run BFS from an arbitrary node, then BFS again from the
   farthest node found; the second eccentricity is a lower bound on the
-  true diameter and exact on trees): both sweeps reuse
-  `bfs_copurchase_layers`'s co-purchase edge construction
-  (pipeline34), run a fixed 8 rounds of distributed frontier
-  expansion, and tie-break the far node deterministically (min
+  true diameter and exact on trees): both sweeps run
+  operators/graph.py::bfs_layers for a fixed 8 rounds over the
+  co-purchase graph, and tie-break the far node deterministically (min
   user_id among max-layer nodes). The DuckDB oracle replays BOTH
   sweeps as chained recursive CTEs.
 * ``max_drawdown_daily`` — maximum peak-to-trough drawdown of the
@@ -28,6 +27,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multithreaded_map_reduce_library_spark.operators.graph import (
+    bfs_layers,
+    both_directions,
+    copurchase_pairs,
+)
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -91,69 +95,28 @@ _DUCK_EDGES = f"""
 )
 def graph_diameter_double_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diameter lower bound by double BFS sweep over the co-purchase
-    graph (same slot-sharing edge rule as `bfs_copurchase_layers`,
-    pipeline34:22): sweep 1 from the min-id node finds its eccentricity
+    graph (same slot-sharing edge rule as `bfs_copurchase_layers`):
+    sweep 1 from the min-id node finds its eccentricity
     and the farthest node (min-id tie-break); sweep 2 from that node
     reports its eccentricity — the double-sweep bound, exact on trees
     and near-tight on real sparse graphs (the standard trick from the
     iFUB/BFS-diameter literature). Both sweeps are the registry's
-    distributed frontier loop: per round one frontier×edges equi-join,
-    an anti-join against visited, localCheckpoint to keep lineage flat.
+    distributed frontier loop, operators/graph.py::bfs_layers.
 
     Scale design: rounds are fixed (8); per round the shuffle carries
     node-sized frontiers, never edge-sized relations; edges bucketable
     by src at rest. Empty frontiers make late rounds no-ops, so the
     fixed ladder costs nothing once the component is exhausted."""
-    ev = load_table(spark, sf_dir, "events")
-    s = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id", F.to_date("ts").alias("d"), F.hour("ts").alias("h"))
-        .distinct()
-    )
-    a = s.select(F.col("user_id").alias("ua"), "d", "h")
-    b = s.select(F.col("user_id").alias("ub"), "d", "h")
-    p = (
-        a.join(b, ["d", "h"])
-        .where(F.col("ua") < F.col("ub"))
-        .groupBy("ua", "ub")
-        .agg(F.count("*").alias("c"))
-        .where(F.col("c") >= _MIN_SHARED)
-    )
-    edges = (
-        p.select(F.col("ua").alias("src"), F.col("ub").alias("dst"))
-        .unionAll(p.select(F.col("ub").alias("src"), F.col("ua").alias("dst")))
-        .localCheckpoint()
-    )
-
-    def bfs_from(seed_df: DataFrame) -> DataFrame:
-        """seed_df: single row (user_id) -> (user_id, layer) min-layer map."""
-        visited = seed_df.select(
-            "user_id", F.lit(0).cast("int").alias("layer")
-        ).localCheckpoint()
-        frontier = visited
-        for k in range(1, _DEPTH + 1):
-            nxt = (
-                frontier.select(F.col("user_id").alias("src"))
-                .join(edges, "src")
-                .select(F.col("dst").alias("user_id"))
-                .distinct()
-                .join(visited, "user_id", "left_anti")
-                .select("user_id", F.lit(k).cast("int").alias("layer"))
-                .localCheckpoint()
-            )
-            visited = visited.unionAll(nxt).localCheckpoint()
-            frontier = nxt
-        return visited
-
+    edges = both_directions(copurchase_pairs(spark, sf_dir, _MIN_SHARED)).localCheckpoint()
     seed = edges.agg(F.min("src").alias("user_id"))
-    d1 = bfs_from(seed)
+    d1 = bfs_layers(edges, seed, _DEPTH)
     ecc1 = d1.agg(F.max("layer").alias("ecc"))
     far = (
         d1.crossJoin(F.broadcast(ecc1))
         .where(F.col("layer") == F.col("ecc"))
         .agg(F.min("user_id").alias("user_id"))
     )
-    d2 = bfs_from(far)
+    d2 = bfs_layers(edges, far, _DEPTH)
     summary2 = d2.agg(
         F.max("layer").cast("bigint").alias("diameter_lb"),
         F.count("*").cast("bigint").alias("n_reached"),

@@ -24,6 +24,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multithreaded_map_reduce_library_spark.operators.graph import (
+    both_directions,
+    copurchase_pairs,
+)
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -90,29 +94,10 @@ def weighted_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketable) edge list and a map-side-combined MIN — distance maps
     are node-sized; survivor lineage is checkpointed every 3rd round
     (the k-core cadence, measured cheaper than per-round)."""
-    ev = load_table(spark, sf_dir, "events")
-    s = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id", F.to_date("ts").alias("d"), F.hour("ts").alias("h"))
-        .distinct()
+    p = copurchase_pairs(spark, sf_dir, _MIN_SHARED).select(
+        "ua", "ub", (11 - F.least(F.col("c"), F.lit(10))).cast("bigint").alias("w")
     )
-    a = s.select(F.col("user_id").alias("ua"), "d", "h")
-    b = s.select(F.col("user_id").alias("ub"), "d", "h")
-    p = (
-        a.join(b, ["d", "h"])
-        .where(F.col("ua") < F.col("ub"))
-        .groupBy("ua", "ub")
-        .agg(F.count("*").alias("c"))
-        .where(F.col("c") >= _MIN_SHARED)
-        .select(
-            "ua", "ub", (11 - F.least(F.col("c"), F.lit(10))).cast("bigint").alias("w")
-        )
-    )
-    edges = (
-        p.select(F.col("ua").alias("src"), F.col("ub").alias("dst"), "w")
-        .unionAll(p.select(F.col("ub").alias("src"), F.col("ua").alias("dst"), "w"))
-        .localCheckpoint()
-    )
+    edges = both_directions(p, "w").localCheckpoint()
     dist = (
         edges.agg(F.min("src").alias("node"))
         .select("node", F.lit(0).cast("bigint").alias("d"))

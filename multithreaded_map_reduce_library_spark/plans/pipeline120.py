@@ -28,8 +28,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from multithreaded_map_reduce_library_spark.functions.grid import grid
+from multithreaded_map_reduce_library_spark.operators.graph import (
+    both_directions,
+    copurchase_pairs,
+)
 from multithreaded_map_reduce_library_spark.plans.registry import register
-from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
 _MIN_SHARED = 2
 _TOP_REMOVE = 5
@@ -130,26 +133,7 @@ def graph_resilience_topk_removal(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale design: label maps are node-sized; each round is one
     edges×labels equi-join + min-combine (edges bucketable by src),
     localCheckpoint every 3rd round — the registry's CC discipline."""
-    ev = load_table(spark, sf_dir, "events")
-    s = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id", F.to_date("ts").alias("d"), F.hour("ts").alias("h"))
-        .distinct()
-    )
-    a = s.select(F.col("user_id").alias("ua"), "d", "h")
-    b = s.select(F.col("user_id").alias("ub"), "d", "h")
-    p = (
-        a.join(b, ["d", "h"])
-        .where(F.col("ua") < F.col("ub"))
-        .groupBy("ua", "ub")
-        .agg(F.count("*").alias("c"))
-        .where(F.col("c") >= _MIN_SHARED)
-    )
-    edges = (
-        p.select(F.col("ua").alias("src"), F.col("ub").alias("dst"))
-        .unionAll(p.select(F.col("ub").alias("src"), F.col("ua").alias("dst")))
-        .localCheckpoint()
-    )
+    edges = both_directions(copurchase_pairs(spark, sf_dir, _MIN_SHARED)).localCheckpoint()
     deg = edges.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("d"))
     removed = deg.orderBy(F.desc("d"), F.asc("node")).limit(_TOP_REMOVE).select("node")
     e2 = (
@@ -247,24 +231,7 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: degrees are one map-side-combined rollup; the edge-
     degree join shuffles edge-keyed skinny rows; moments partial-
     aggregate."""
-    ev = load_table(spark, sf_dir, "events")
-    s = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id", F.to_date("ts").alias("d"), F.hour("ts").alias("h"))
-        .distinct()
-    )
-    a = s.select(F.col("user_id").alias("ua"), "d", "h")
-    b = s.select(F.col("user_id").alias("ub"), "d", "h")
-    p = (
-        a.join(b, ["d", "h"])
-        .where(F.col("ua") < F.col("ub"))
-        .groupBy("ua", "ub")
-        .agg(F.count("*").alias("c"))
-        .where(F.col("c") >= _MIN_SHARED)
-    )
-    edges = p.select(F.col("ua").alias("src"), F.col("ub").alias("dst")).unionAll(
-        p.select(F.col("ub").alias("src"), F.col("ua").alias("dst"))
-    )
+    edges = both_directions(copurchase_pairs(spark, sf_dir, _MIN_SHARED))
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count("*").cast("bigint").alias("d")
     )

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from multithreaded_map_reduce_library_spark.functions.grid import duck_int_ratio, int_ratio
+from multithreaded_map_reduce_library_spark.operators.graph import copurchase_pairs
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -77,23 +78,7 @@ def agm_bound_triangle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: the wedge join shuffles ordered edges only (skew
     bounded by the slot-sharing rule); the bound needs one count. At
     100 TB the same two-join plan holds with edges bucketed by ua."""
-    ev = load_table(spark, sf_dir, "events")
-    s = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id", F.to_date("ts").alias("d"), F.hour("ts").alias("h"))
-        .distinct()
-    )
-    a = s.select(F.col("user_id").alias("ua"), "d", "h")
-    b = s.select(F.col("user_id").alias("ub"), "d", "h")
-    p = (
-        a.join(b, ["d", "h"])
-        .where(F.col("ua") < F.col("ub"))
-        .groupBy("ua", "ub")
-        .agg(F.count("*").alias("c"))
-        .where(F.col("c") >= _MIN_SHARED)
-        .select("ua", "ub")
-        .localCheckpoint()
-    )
+    p = copurchase_pairs(spark, sf_dir, _MIN_SHARED).select("ua", "ub").localCheckpoint()
     m = p.agg(F.count("*").cast("bigint").alias("m_edges"))
     e1 = p.select(F.col("ua").alias("x"), F.col("ub").alias("y"))
     e2 = p.select(F.col("ua").alias("y"), F.col("ub").alias("z"))

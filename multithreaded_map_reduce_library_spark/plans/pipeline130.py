@@ -21,11 +21,12 @@ graph tier; this extends the driver-mandated superset.
 
 Scale design: rank window per cell (one shuffle on (d, h)), a constant
 W-way explode of skinny (cell, rank) keys, an equi-join on (d, h, rank)
-— all linear in |s|·W. The peel loop is kcore_decomposition's
-(edge-vs-survivor semijoins, node-sized survivor sets, localCheckpoint
-cadence). At 10x entities on a fixed calendar the edge count grows
-~10x (each user keeps W neighbors per cell), not ~100x — the measured
-fix for the one semantic super-linearity the 10x sweep left open.
+— all linear in |s|·W. The peel loop is kcore_decomposition's,
+operators/graph.py::kcore_peel (edge-vs-survivor semijoins, node-sized
+survivor sets, fixpoint exit). At 10x entities on a fixed calendar the
+edge count grows ~10x (each user keeps W neighbors per cell), not ~100x
+— the measured fix for the one semantic super-linearity the 10x sweep
+left open.
 """
 
 from __future__ import annotations
@@ -34,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multithreaded_map_reduce_library_spark.operators.graph import kcore_peel
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -134,15 +136,14 @@ def kcore_bounded_copresence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("c") >= _MIN_SHARED)
     )
     # Both edge directions come from ONE explode over the undirected pair
-    # aggregate — the round-6 unionAll form ran the ≥2-cells HAVING
-    # aggregate once per branch (guide §1.2: don't compute things twice).
+    # aggregate. operators/graph.py::both_directions spells the same
+    # multiset as a unionAll; at sf0.1 on a 4-core VM (warm local[4]) the
+    # two measured alike (0.69-0.76 s vs 0.73 s): neither is kept for speed.
     # A round-9 attempt to ALSO pre-partition the checkpoint by src
     # measured 1.34x SLOWER isolated: localCheckpoint freezes the
     # pre-AQE partition count, so the explicit repartition pinned this
     # small edge list to 32 near-empty partitions and every peel round
-    # paid 32-task stages where AQE-coalesced rounds ran ~1 — reverted;
-    # the dst-before-src join order is kept (free, and at SMJ scale the
-    # last join re-establishes src partitioning for the degree count).
+    # paid 32-task stages where AQE-coalesced rounds ran ~1 — reverted.
     edges = (
         p.select(
             F.explode(
@@ -155,40 +156,4 @@ def kcore_bounded_copresence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("e.src", "e.dst")
         .localCheckpoint()
     )
-    surv = edges.select(F.col("src").alias("u")).distinct().localCheckpoint()
-    # Fixpoint early-exit (round 10, VERDICT r9 item 7). Equivalence with
-    # the oracle's fixed 6-round replay:
-    #   (1) each round's survivors come from edges semijoined on
-    #       src IN surv, so surv_{t+1} SUBSETOF surv_t (monotone);
-    #   (2) the peel is a deterministic function f of the survivor SET:
-    #       surv_{t+1} = f(surv_t);
-    #   (3) by (1), |surv_{t+1}| == |surv_t| forces surv_{t+1} == surv_t,
-    #       and then by (2) every later round is the identity — so
-    #       breaking at the first repeated COUNT yields exactly the
-    #       round-6 set; and f(EMPTY) == EMPTY, so count 0 exits too.
-    # Each round checkpoints (the set is node-sized and the next round +
-    # the count reuse it), making the per-round count a scheduling-floor
-    # job, not a recompute. Measured at sf0.1 the graph fixpoints at
-    # round 2: rounds 3-6 (12 semijoins + 4 aggregates of lineage) drop
-    # from the plan; at 100 TB the same check bounds peel work by the
-    # graph's true core depth instead of the worst-case constant.
-    prev_cnt = surv.count()
-    for _ in range(_ROUNDS):
-        surv = (
-            edges.join(surv.select(F.col("u").alias("dst")), "dst", "left_semi")
-            .join(surv.select(F.col("u").alias("src")), "src", "left_semi")
-            .groupBy("src")
-            .agg(F.count("*").alias("deg"))
-            .where(F.col("deg") >= _K)
-            .select(F.col("src").alias("u"))
-        ).localCheckpoint()
-        cnt = surv.count()
-        if cnt == 0 or cnt == prev_cnt:
-            break
-        prev_cnt = cnt
-    return (
-        edges.join(surv.select(F.col("u").alias("dst")), "dst", "left_semi")
-        .join(surv.select(F.col("u").alias("src")), "src", "left_semi")
-        .groupBy(F.col("src").alias("user_id"))
-        .agg(F.count("*").alias("core_degree"))
-    )
+    return kcore_peel(edges, _K, _ROUNDS)

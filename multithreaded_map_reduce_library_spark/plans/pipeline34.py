@@ -11,8 +11,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multithreaded_map_reduce_library_spark.operators.graph import (
+    bfs_layers,
+    both_directions,
+    copurchase_pairs,
+)
 from multithreaded_map_reduce_library_spark.plans.registry import register
-from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
 _BFS_MIN_SHARED = 2
 _BFS_DEPTH = 3
@@ -59,48 +63,10 @@ def bfs_copurchase_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeping the graph sparse (the same trick as LSH banding: key by a
     bounded slot, never all-pairs).
 
-    Scale design: the frontier loop is the standard distributed BFS —
-    per round one equi-join frontier x edges (edges bucketable by src),
-    an anti-join against the visited set, and a localCheckpoint to keep
-    lineage flat (the kmeans/CC/k-center precedent). Visited and
-    frontier are node-sized, never edge-sized. The oracle replays the
-    identical traversal as a recursive CTE with min-layer dedup.
+    Scale design: the frontier loop is operators/graph.py::bfs_layers,
+    the standard distributed BFS (edges bucketable by src; visited and
+    frontier node-sized). The oracle replays the identical traversal as
+    a recursive CTE with min-layer dedup.
     """
-    ev = load_table(spark, sf_dir, "events")
-    s = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id", F.to_date("ts").alias("d"), F.hour("ts").alias("h"))
-        .distinct()
-    )
-    a = s.select(F.col("user_id").alias("ua"), "d", "h")
-    b = s.select(F.col("user_id").alias("ub"), "d", "h")
-    p = (
-        a.join(b, ["d", "h"])
-        .where(F.col("ua") < F.col("ub"))
-        .groupBy("ua", "ub")
-        .agg(F.count("*").alias("c"))
-        .where(F.col("c") >= _BFS_MIN_SHARED)
-    )
-    edges = (
-        p.select(F.col("ua").alias("src"), F.col("ub").alias("dst"))
-        .unionAll(p.select(F.col("ub").alias("src"), F.col("ua").alias("dst")))
-        .localCheckpoint()
-    )
-    seed = edges.agg(F.min("src").alias("user_id"))
-    visited = seed.select(
-        "user_id", F.lit(0).cast("int").alias("layer")
-    ).localCheckpoint()
-    frontier = visited
-    for k in range(1, _BFS_DEPTH + 1):
-        nxt = (
-            frontier.select(F.col("user_id").alias("src"))
-            .join(edges, "src")
-            .select(F.col("dst").alias("user_id"))
-            .distinct()
-            .join(visited, "user_id", "left_anti")
-            .select("user_id", F.lit(k).cast("int").alias("layer"))
-            .localCheckpoint()
-        )
-        visited = visited.unionAll(nxt).localCheckpoint()
-        frontier = nxt
-    return visited
+    edges = both_directions(copurchase_pairs(spark, sf_dir, _BFS_MIN_SHARED)).localCheckpoint()
+    return bfs_layers(edges, edges.agg(F.min("src").alias("user_id")), _BFS_DEPTH)

@@ -15,6 +15,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from multithreaded_map_reduce_library_spark.functions.grid import grid
+from multithreaded_map_reduce_library_spark.operators.graph import (
+    both_directions,
+    copurchase_pairs,
+)
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -174,26 +178,7 @@ def wl_graph_refinement(spark: SparkSession, sf_dir: str) -> DataFrame:
     node/edge-sized with no global order. The canonical distributed WL
     layout (edges bucketed by src re-used every round).
     """
-    ev = load_table(spark, sf_dir, "events")
-    s = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id", F.to_date("ts").alias("d"), F.hour("ts").alias("h"))
-        .distinct()
-    )
-    a = s.select(F.col("user_id").alias("ua"), "d", "h")
-    b = s.select(F.col("user_id").alias("ub"), "d", "h")
-    p = (
-        a.join(b, ["d", "h"])
-        .where(F.col("ua") < F.col("ub"))
-        .groupBy("ua", "ub")
-        .agg(F.count("*").alias("c"))
-        .where(F.col("c") >= _WL_MIN_SHARED)
-    )
-    e = (
-        p.select(F.col("ua").alias("src"), F.col("ub").alias("dst"))
-        .unionAll(p.select(F.col("ub").alias("src"), F.col("ua").alias("dst")))
-        .localCheckpoint()
-    )
+    e = both_directions(copurchase_pairs(spark, sf_dir, _WL_MIN_SHARED)).localCheckpoint()
     l = e.groupBy(F.col("src").alias("node")).agg(
         F.count("*").cast("bigint").alias("label")
     )

@@ -29,6 +29,11 @@ from multithreaded_map_reduce_library_spark.functions.grid import (
     duck_int_ratio,
     int_ratio,
 )
+from multithreaded_map_reduce_library_spark.operators.graph import (
+    both_directions,
+    copurchase_pairs,
+    kcore_peel,
+)
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -205,63 +210,13 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     are repeatedly dropped while their degree among survivors is < k;
     the output is each surviving node with its within-core degree. The
     dense-cohesion primitive used for community cores, spam-ring
-    detection, and graph sparsification. Six rounds is past fixpoint on
-    this graph; because a converged round is a no-op, the fixed-R oracle
-    (same unrolled peeling in SQL) is exact regardless.
+    detection, and graph sparsification. The peel is
+    operators/graph.py::kcore_peel, which stops at the fixpoint (round 1
+    on this graph at sf0.01/sf0.1); a converged round is a no-op, so the
+    fixed-R oracle (same unrolled peeling in SQL) is exact regardless.
 
     Scale design: per round one edge-vs-survivor semijoin pair + a
     degree aggregate — edges shuffle on src (bucketable), survivor sets
-    are node-sized; localCheckpoint flattens lineage exactly like the
-    CC / BFS / k-means precedents. No collect, no all-pairs."""
-    ev = load_table(spark, sf_dir, "events")
-    s = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id", F.to_date("ts").alias("d"), F.hour("ts").alias("h"))
-        .distinct()
-    )
-    a = s.select(F.col("user_id").alias("ua"), "d", "h")
-    b = s.select(F.col("user_id").alias("ub"), "d", "h")
-    p = (
-        a.join(b, ["d", "h"])
-        .where(F.col("ua") < F.col("ub"))
-        .groupBy("ua", "ub")
-        .agg(F.count("*").alias("c"))
-        .where(F.col("c") >= _MIN_SHARED)
-    )
-    edges = (
-        p.select(F.col("ua").alias("src"), F.col("ub").alias("dst"))
-        .unionAll(p.select(F.col("ub").alias("src"), F.col("ua").alias("dst")))
-        .localCheckpoint()
-    )
-    surv = edges.select(F.col("src").alias("u")).distinct().localCheckpoint()
-    # Fixpoint early-exit (round 10, VERDICT r9 item 7), same equivalence
-    # argument as kcore_bounded_copresence (pipeline130): the peel is
-    # monotone (src-semijoin => surv_{t+1} SUBSETOF surv_t) and a pure
-    # function of the survivor set, so a repeated count proves a repeated
-    # SET and every later round is the identity; f(EMPTY) == EMPTY. The
-    # co-purchase graph fixpoints at round 1 at sf0.01/sf0.1 (measured),
-    # so rounds 2-6 drop from the plan entirely. This supersedes the
-    # round-4 every-3rd-round checkpoint cadence (3.1 s -> 2.3 s then):
-    # the cadence amortized materialization across rounds that the
-    # early-exit now removes outright, and the per-round count runs on
-    # the checkpointed set at the scheduling floor.
-    prev_cnt = surv.count()
-    for _ in range(_KCORE_ROUNDS):
-        surv = (
-            edges.join(surv.select(F.col("u").alias("src")), "src", "left_semi")
-            .join(surv.select(F.col("u").alias("dst")), "dst", "left_semi")
-            .groupBy("src")
-            .agg(F.count("*").alias("deg"))
-            .where(F.col("deg") >= _KCORE_K)
-            .select(F.col("src").alias("u"))
-        ).localCheckpoint()
-        cnt = surv.count()
-        if cnt == 0 or cnt == prev_cnt:
-            break
-        prev_cnt = cnt
-    return (
-        edges.join(surv.select(F.col("u").alias("src")), "src", "left_semi")
-        .join(surv.select(F.col("u").alias("dst")), "dst", "left_semi")
-        .groupBy(F.col("src").alias("user_id"))
-        .agg(F.count("*").alias("core_degree"))
-    )
+    are node-sized. No collect, no all-pairs."""
+    edges = both_directions(copurchase_pairs(spark, sf_dir, _MIN_SHARED)).localCheckpoint()
+    return kcore_peel(edges, _KCORE_K, _KCORE_ROUNDS)

@@ -23,8 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from multithreaded_map_reduce_library_spark.operators.graph import (
+    both_directions,
+    copurchase_pairs,
+)
 from multithreaded_map_reduce_library_spark.plans.registry import register
-from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
 _LPA_ROUNDS = 3
 
@@ -90,25 +93,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     localCheckpoint flattens lineage exactly like the CC / BFS / k-core
     precedents. No collect, no global window (the final size count is
     partitioned by community)."""
-    ev = load_table(spark, sf_dir, "events")
-    s = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id", F.to_date("ts").alias("d"), F.hour("ts").alias("h"))
-        .distinct()
-    )
-    a = s.select(F.col("user_id").alias("ua"), "d", "h")
-    b = s.select(F.col("user_id").alias("ub"), "d", "h")
-    p = (
-        a.join(b, ["d", "h"])
-        .where(F.col("ua") < F.col("ub"))
-        .select("ua", "ub")
-        .distinct()
-    )
-    edges = (
-        p.select(F.col("ua").alias("src"), F.col("ub").alias("dst"))
-        .unionAll(p.select(F.col("ub").alias("src"), F.col("ua").alias("dst")))
-        .localCheckpoint()
-    )
+    edges = both_directions(copurchase_pairs(spark, sf_dir, 1)).localCheckpoint()
     labels = edges.select(F.col("src").alias("u"), F.col("src").alias("lbl")).distinct()
     top1 = Window.partitionBy("u").orderBy(F.desc("c"), F.asc("lbl"))
     for _ in range(_LPA_ROUNDS):

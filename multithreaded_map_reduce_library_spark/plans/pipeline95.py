@@ -25,6 +25,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from multithreaded_map_reduce_library_spark.functions.grid import duck_int_ratio, int_ratio
+from multithreaded_map_reduce_library_spark.operators.graph import (
+    both_directions,
+    copurchase_pairs,
+)
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -236,25 +240,7 @@ def harmonic_centrality_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     what makes centrality tractable at 100 TB (exact closeness needs
     full APSP; 3-hop harmonic is the standard approximation), and the
     1/d weights mean the truncation error is at most n/4 per node."""
-    ev = load_table(spark, sf_dir, "events")
-    s = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id", F.to_date("ts").alias("d"), F.hour("ts").alias("h"))
-        .distinct()
-    )
-    a = s.select(F.col("user_id").alias("ua"), "d", "h")
-    b = s.select(F.col("user_id").alias("ub"), "d", "h")
-    p = (
-        a.join(b, ["d", "h"])
-        .where(F.col("ua") < F.col("ub"))
-        .select("ua", "ub")
-        .distinct()
-    )
-    e = (
-        p.select(F.col("ua").alias("src"), F.col("ub").alias("dst"))
-        .unionAll(p.select(F.col("ub").alias("src"), F.col("ua").alias("dst")))
-        .localCheckpoint()
-    )
+    e = both_directions(copurchase_pairs(spark, sf_dir, 1)).localCheckpoint()
     d1 = e.distinct()
     step = lambda front: (  # noqa: E731
         front.select("src", F.col("dst").alias("mid"))

@@ -15,6 +15,7 @@ import os
 
 import pytest
 
+from multithreaded_map_reduce_library_spark.operators.graph import both_directions, kcore_peel
 from multithreaded_map_reduce_library_spark.plans.registry import all_queries
 
 from .conftest import SF_SMALL
@@ -62,3 +63,17 @@ def test_graph_query_matches_oracle_digest(spark, name):
     rows = [tuple(r) for r in df.collect()]
     assert (len(rows), canon_digest(rows, df.columns)) == ORACLE_DIGESTS[name]
 
+
+def test_kcore_peel_keeps_the_clique_and_drops_the_tail(spark):
+    """A 4-clique with a tail: the 3-core is the clique, each node with
+    within-core degree 3. Nodes 5 and 7 have degree 3 until the first
+    peel drops 6 and 8, so they survive one peel and fall in the second.
+    The 4-core is empty: only node 4 survives the first 4-peel."""
+    clique = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    pairs = clique + [(4, 5), (5, 6), (5, 7), (6, 7), (7, 8)]
+    edges = both_directions(spark.createDataFrame(pairs, "ua long, ub long"))
+    core = sorted(tuple(r) for r in kcore_peel(edges, 3, 6).collect())
+    assert core == [(1, 3), (2, 3), (3, 3), (4, 3)]
+    one = sorted(tuple(r) for r in kcore_peel(edges, 3, 1).collect())
+    assert one == [(1, 3), (2, 3), (3, 3), (4, 4), (5, 2), (7, 1)]
+    assert kcore_peel(edges, 4, 6).count() == 0

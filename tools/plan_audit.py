@@ -64,6 +64,7 @@ ALLOW_PYTHON = {
     "contrastive_training_pairs": "minhash band-keys pandas UDF (positive-pair source)",
     "minhash_lsh_candidates": "minhash band-keys pandas UDF",
     "minhash_lsh_candidates_capped": "minhash band-keys pandas UDF",
+    "minhash_signatures": "minhash signature pandas UDF (the signatures are the output)",
     "bbit_minhash_agreement": "minhash band-keys pandas UDF (candidate source)",
     "winnowing_fingerprints": "winnowing stats pandas UDF (md5 + sliding minima)",
     "incremental_dedup_new_docs": "minhash band-keys pandas UDF (index + batch sketch)",
