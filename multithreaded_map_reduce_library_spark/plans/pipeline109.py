@@ -105,8 +105,9 @@ def graph_diameter_double_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale design: rounds are fixed (8); per round the shuffle carries
     node-sized frontiers, never edge-sized relations; edges bucketable
-    by src at rest. Empty frontiers make late rounds no-ops, so the
-    fixed ladder costs nothing once the component is exhausted."""
+    by src at rest. All 8 rounds run; once the frontier is empty a round
+    computes nothing but still launches its two checkpoint jobs
+    (see bfs_layers)."""
     edges = both_directions(copurchase_pairs(spark, sf_dir, _MIN_SHARED)).localCheckpoint()
     seed = edges.agg(F.min("src").alias("user_id"))
     d1 = bfs_layers(edges, seed, _DEPTH)

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from multithreaded_map_reduce_library_spark.operators.graph import kcore_peel
+from multithreaded_map_reduce_library_spark.operators.graph import both_directions, kcore_peel
 from multithreaded_map_reduce_library_spark.plans.registry import register
 from multithreaded_map_reduce_library_spark.sources.catalog import load_table
 
@@ -135,25 +135,10 @@ def kcore_bounded_copresence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("c"))
         .where(F.col("c") >= _MIN_SHARED)
     )
-    # Both edge directions come from ONE explode over the undirected pair
-    # aggregate. operators/graph.py::both_directions spells the same
-    # multiset as a unionAll; at sf0.1 on a 4-core VM (warm local[4]) the
-    # two measured alike (0.69-0.76 s vs 0.73 s): neither is kept for speed.
-    # A round-9 attempt to ALSO pre-partition the checkpoint by src
-    # measured 1.34x SLOWER isolated: localCheckpoint freezes the
-    # pre-AQE partition count, so the explicit repartition pinned this
-    # small edge list to 32 near-empty partitions and every peel round
-    # paid 32-task stages where AQE-coalesced rounds ran ~1 — reverted.
-    edges = (
-        p.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("ua").alias("src"), F.col("ub").alias("dst")),
-                    F.struct(F.col("ub").alias("src"), F.col("ua").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .localCheckpoint()
-    )
+    # A round-9 attempt to pre-partition the checkpoint by src measured
+    # 1.34x SLOWER isolated: localCheckpoint freezes the pre-AQE partition
+    # count, so the explicit repartition pinned this small edge list to 32
+    # near-empty partitions and every peel round paid 32-task stages where
+    # AQE-coalesced rounds ran ~1 — reverted.
+    edges = both_directions(p).localCheckpoint()
     return kcore_peel(edges, _K, _ROUNDS)
