@@ -872,15 +872,8 @@ def _parse_dht_seg(
         key = (bytes(bits), bytes(vals))
         fast = _HUFF_FAST_CACHE.get(key)
         if fast is None:
-            table: dict[tuple[int, int], int] = {}
-            code = 0
-            k = 0
-            for length in range(1, 17):
-                for _ in range(bits[length - 1]):
-                    table[(length, code)] = vals[k]
-                    code += 1
-                    k += 1
-                code <<= 1
+            codes = _build_codes(bits, vals)
+            table = {(length, code): sym for sym, (code, length) in codes.items()}
             if len(_HUFF_FAST_CACHE) >= _HUFF_FAST_CACHE_CAP:
                 _HUFF_FAST_CACHE.clear()
             fast = _HUFF_FAST_CACHE[key] = _HuffTable(table)
@@ -1306,17 +1299,12 @@ def split_restart_segments(data: bytes) -> tuple[bytes, int, list[tuple[int, byt
     ri = hdr["restart_interval"]
     if ri <= 0:
         raise ValueError("split_restart_segments requires a restart interval")
-    # An interleaved scan's MCU grid is sized by the MAX sampling factors
-    # (§A.2.3) — ceil(h/8)*ceil(w/8) is only right for 1x1 sampling and
-    # silently miscounted per-segment MCUs for subsampled color streams
-    # (ADVICE r5). A one-component scan is non-interleaved (§A.2) whatever
-    # sampling it declares: one block per MCU on its own grid.
-    if len(hdr["comps"]) == 1:
-        _, hs, vs, _ = hdr["comps"][0]
-        nby, nbx = _comp_grid(hdr["h"], hdr["w"], hs, vs, hdr["hmax"], hdr["vmax"])
-        n_mcus = nby * nbx
-    else:
-        n_mcus = hdr["mcus_y"] * hdr["mcus_x"]
+    # The scan's MCUs, in the unit Ri counts: its block order over the
+    # blocks one MCU holds, as the whole-file decoder walks it.
+    scan_cids = list(hdr["scan_tbl"])
+    cid_to_ci = {c[0]: i for i, c in enumerate(hdr["comps"])}
+    order = _scan_order(hdr, scan_cids, cid_to_ci)
+    n_mcus = len(order) // _blocks_per_mcu(hdr["comps"], [cid_to_ci[c] for c in scan_cids])
     start = hdr["entropy_start"]
     header = data[:start]
     # scan entropy data for unstuffed markers

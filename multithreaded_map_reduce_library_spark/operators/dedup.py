@@ -39,6 +39,7 @@ from multithreaded_map_reduce_library_spark.functions.text import (
     shingle_h32,
     split_tokens,
 )
+from multithreaded_map_reduce_library_spark.sources.catalog import spread
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -123,9 +124,11 @@ def minhash_banded(
     """(doc, band_key) rows: one row per document per LSH band — the
     :func:`minhash_signature` UDF, then the JVM :func:`lsh_band_keys`, then
     explode. The signature goes through its own projection so the four band
-    slices read one materialized array."""
+    slices read one materialized array, over a scan dealt across the cores
+    when the table has fewer row groups than cores
+    (:func:`~multithreaded_map_reduce_library_spark.sources.catalog.spread`)."""
     sig = minhash_signature(shingle_n, num_hashes)
-    signed = df.select(F.col(id_col).alias("doc"), sig(text_col).alias("_sig"))
+    signed = spread(df).select(F.col(id_col).alias("doc"), sig(text_col).alias("_sig"))
     return signed.select(
         "doc", F.explode(lsh_band_keys(F.col("_sig"), bands, num_hashes // bands)).alias("band_key")
     ).distinct()

@@ -5,7 +5,8 @@ Two paths per the driver contract:
 - **Brute-force top-k** (:func:`knn_bruteforce`): broadcast the query set,
   JVM-side cosine (functions/vectors.py — no Python), per-query ROW_NUMBER
   top-k. Exact; scales as |Q| x |corpus| with the corpus never shuffled
-  (query side broadcast), so it's the right baseline whenever |Q| is small.
+  by key (query side broadcast), so it's the right baseline whenever |Q|
+  is small.
 - **LSH-bucketed ANN** (:func:`random_hyperplane_bucket`,
   :func:`knn_lsh`): sign-random-projection (SimHash-for-vectors) buckets
   with *deterministic* md5-derived hyperplanes, so the bucketing is
@@ -25,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from multithreaded_map_reduce_library_spark.functions.vectors import dot_sql, l2_norm, quote
+from multithreaded_map_reduce_library_spark.sources.catalog import spread
 
 
 def _cos_pre(va: str, vb: str, na: str, nb: str) -> Column:
@@ -37,6 +39,25 @@ def _cos_pre(va: str, vb: str, na: str, nb: str) -> Column:
     just evaluated once per row.
     """
     return F.expr(f"{dot_sql(quote(va), quote(vb))} / ({quote(na)} * {quote(nb)})")
+
+
+def _nonzero_norm(df: DataFrame, id_name: str, norm_name: str, label: str) -> DataFrame:
+    """``df`` whose ``norm_name`` column raises ``zero-norm embedding
+    <label>=<id>`` on a zero norm, instead of letting the cosine division
+    above it abort with an ANSI divide-by-zero that names no row.
+
+    The guard reads the norm column of the projection below it: Catalyst
+    does not collapse a projection into one that would evaluate its fold
+    twice, so the norm is still computed once per row, and a nonzero norm
+    passes through bit-identical."""
+    n, i = quote(norm_name), quote(id_name)
+    return df.withColumn(
+        norm_name,
+        F.expr(
+            f"CASE WHEN {n} = 0D THEN raise_error("
+            f"concat('zero-norm embedding {label}=', CAST({i} AS STRING))) ELSE {n} END"
+        ),
+    )
 
 
 def _top_k(sims: DataFrame, k: int) -> DataFrame:
@@ -69,12 +90,13 @@ def _lsh_bucketed(
     emb: DataFrame, dim: int, num_planes: int, id_col: str, vec_col: str
 ) -> DataFrame:
     """(id, vec, norm, bucket): the projection every LSH operator joins on."""
-    return emb.select(
+    bucketed = emb.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
         l2_norm(vec_col).alias("norm"),
         random_hyperplane_bucket(vec_col, dim, num_planes).alias("bucket"),
     )
+    return _nonzero_norm(bucketed, "id", "norm", id_col)
 
 
 def _same_bucket_pairs(bucketed: DataFrame, threshold: float) -> DataFrame:
@@ -106,9 +128,11 @@ def knn_bruteforce(
     """Exact top-k cosine neighbors for each query vector.
 
     ``query_ids`` defaults to the whole table (all-pairs kNN — use only at
-    small scale); pass a small query set for the broadcast plan.
+    small scale); pass a small query set for the broadcast plan. The
+    corpus side is :func:`~multithreaded_map_reduce_library_spark.sources.catalog.spread`
+    before the fold, so a one-row-group table folds on every core.
     """
-    corpus = emb.select(
+    corpus = spread(emb).select(
         F.col(id_col).alias("n_id"),
         F.col(vec_col).alias("n_vec"),
         l2_norm(vec_col).alias("n_norm"),
@@ -118,6 +142,8 @@ def knn_bruteforce(
         F.col(vec_col).alias("q_vec"),
         l2_norm(vec_col).alias("q_norm"),
     )
+    corpus = _nonzero_norm(corpus, "n_id", "n_norm", id_col)
+    queries = _nonzero_norm(queries, "q_id", "q_norm", id_col)
     pairs = corpus.crossJoin(F.broadcast(queries)).filter(F.col("q_id") != F.col("n_id"))
     sims = pairs.select(
         "q_id", "n_id", _cos_pre("q_vec", "n_vec", "q_norm", "n_norm").alias("sim")
@@ -159,11 +185,12 @@ def _ivf_centroids(
     centroids = emb.filter((F.col(id_col) % stride) == 0)
     if max_centroids is not None:
         centroids = centroids.orderBy(id_col).limit(max_centroids)
-    return centroids.select(
+    centroids = centroids.select(
         F.col(id_col).alias("c_id"),
         F.col(vec_col).alias("c_vec"),
         l2_norm(vec_col).alias("c_norm"),
     )
+    return _nonzero_norm(centroids, "c_id", "c_norm", id_col)
 
 
 def assign_ivf_cells(
@@ -177,7 +204,9 @@ def assign_ivf_cells(
     ``stride``-th vector by id — reproducible without a trained codebook):
     each vector is assigned to its nearest centroid by cosine (ties to the
     lowest centroid id). Centroids are broadcast; the corpus is scanned
-    once and never shuffled for assignment.
+    once and never shuffled by key for assignment (a one-row-group corpus
+    is only dealt over the cores by
+    :func:`~multithreaded_map_reduce_library_spark.sources.catalog.spread`).
 
     Returns (id, vec, cell) where cell is the centroid's id.
 
@@ -197,11 +226,12 @@ def assign_ivf_cells(
     ``stride_for_corpus`` instead.
     """
     centroids = _ivf_centroids(emb, stride, max_centroids, id_col, vec_col)
-    scored = emb.select(
+    corpus = spread(emb).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
         l2_norm(vec_col).alias("v_norm"),
-    ).crossJoin(F.broadcast(centroids))
+    )
+    scored = _nonzero_norm(corpus, "id", "v_norm", id_col).crossJoin(F.broadcast(centroids))
     negsim = -_cos_pre("vec", "c_vec", "v_norm", "c_norm")
     return (
         scored.groupBy("id")
@@ -279,14 +309,13 @@ def knn_ivf_multiprobe(
     at rest and a probe touches nprobe buckets."""
     cells = assign_ivf_cells(emb, stride, id_col, vec_col, max_centroids)
     centroids = _ivf_centroids(emb, stride, max_centroids, id_col, vec_col)
-    q_scored = (
-        emb.filter(F.col(id_col) < num_queries)
-        .select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            l2_norm(vec_col).alias("q_norm"),
-        )
-        .crossJoin(F.broadcast(centroids))
+    queries = emb.filter(F.col(id_col) < num_queries).select(
+        F.col(id_col).alias("q_id"),
+        F.col(vec_col).alias("q_vec"),
+        l2_norm(vec_col).alias("q_norm"),
+    )
+    q_scored = _nonzero_norm(queries, "q_id", "q_norm", id_col).crossJoin(
+        F.broadcast(centroids)
     )
     wq = Window.partitionBy("q_id").orderBy(
         F.desc(_cos_pre("q_vec", "c_vec", "q_norm", "c_norm")), F.asc("c_id")
@@ -382,6 +411,7 @@ def adaptive_hyperplane_buckets(
         random_hyperplane_bucket(vec_col, dim, base_planes).alias("b0"),
         random_hyperplane_bucket(vec_col, dim, ext_planes).alias("b1"),
     )
+    b = _nonzero_norm(b, "id", "norm", id_col)
     hist = b.groupBy("b0").agg(F.count("*").alias("_n"))
     return (
         b.join(F.broadcast(hist), "b0")

@@ -23,7 +23,7 @@ from multithreaded_map_reduce_library_spark.operators.multimodal import (
 from multithreaded_map_reduce_library_spark.functions.grid import grid, gsum, int_ratio
 from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.registry import register
-from multithreaded_map_reduce_library_spark.sources.catalog import load_table
+from multithreaded_map_reduce_library_spark.sources.catalog import load_table, spread
 
 # --- DuckDB dialect fragments (mirror functions/text.py exactly) -----------
 
@@ -468,7 +468,7 @@ def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashlib.md5 — integer math) measured 2.6x faster than an explode and
     64 SUM aggregates at sf0.1; token counting stays JVM-side. Docs with no
     tokens are excluded, matching the oracle's unnest."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = spread(load_table(spark, sf_dir, "documents"))
     udf = D.simhash_pandas_udf(64)
     n_distinct = F.size(F.array_distinct(tokens("text"))).cast("bigint")
     return (

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from multithreaded_map_reduce_library_spark.functions.grid import int_ratio
 from multithreaded_map_reduce_library_spark.plans.registry import register
-from multithreaded_map_reduce_library_spark.sources.catalog import load_table
+from multithreaded_map_reduce_library_spark.sources.catalog import load_table, spread
 
 #: decontamination n-gram width — 8 contiguous tokens, the width used by
 #: GPT-3/PaLM-style training-set decontamination.
@@ -84,7 +84,7 @@ def decontamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame
     eval n-grams when even the exact set outgrows the broadcast limit.
     """
     docs = load_table(spark, sf_dir, "documents")
-    g = _token_ngrams(docs)
+    g = _token_ngrams(spread(docs))
     ev = g.filter(F.col("doc_id") % 10 == 0).distinct()
     tr = g.filter(F.col("doc_id") % 10 != 0).distinct()
     hits = (

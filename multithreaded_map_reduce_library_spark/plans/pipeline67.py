@@ -39,7 +39,7 @@ from multithreaded_map_reduce_library_spark.plans.pipeline22 import (
     _bpe_learn,
 )
 from multithreaded_map_reduce_library_spark.plans.registry import register
-from multithreaded_map_reduce_library_spark.sources.catalog import load_table
+from multithreaded_map_reduce_library_spark.sources.catalog import load_table, spread
 
 _W = 4  # winnowing window (in shingle positions)
 _N = 3  # shingle width (words)
@@ -147,8 +147,9 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: the ENTIRE computation is per-document — one
     Arrow-batched kernel (operators/dedup.py::winnowing_stats_pandas_udf:
     the shared functions/text.py::shingle_h32 hashes plus vectorized
-    sliding minima) — so the operator is pure map-side with ZERO
-    shuffles. Measured at sf0.1: the first explode+window+countDistinct
+    sliding minima) — so the operator is pure map-side with no keyed
+    shuffle (a one-row-group table is dealt over the cores first,
+    sources/catalog.py::spread). Measured at sf0.1: the first explode+window+countDistinct
     version took 15.9 s (three shuffles), a higher-order expression form
     8-9 s (interpreted md5 transform), this kernel ~1 s. The fingerprint
     index it feeds joins documents by fp like the LSH band-key join,
@@ -157,7 +158,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         winnowing_stats_pandas_udf,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = spread(load_table(spark, sf_dir, "documents"))
     stats = winnowing_stats_pandas_udf(_N, _W)
     f = docs.select("doc_id", stats("text").alias("s")).select(
         "doc_id",

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from multithreaded_map_reduce_library_spark.functions.grid import gavg, int_ratio_big
 from multithreaded_map_reduce_library_spark.functions.text import tokens
 from multithreaded_map_reduce_library_spark.plans.registry import register
-from multithreaded_map_reduce_library_spark.sources.catalog import load_table
+from multithreaded_map_reduce_library_spark.sources.catalog import load_table, spread
 
 
 def _e4(c):
@@ -182,7 +182,7 @@ def bigram_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the explode output is bounded by total token count; the
     count aggregation partial-combines map-side so only distinct
     bigrams cross the shuffle."""
-    d = load_table(spark, sf_dir, "documents")
+    d = spread(load_table(spark, sf_dir, "documents"))
     ts = tokens(F.lower(F.col("text")), "[^a-z0-9]+")
     bigrams = F.when(
         F.size(ts) >= 2,

@@ -59,7 +59,8 @@ def _knn_oracle() -> str:
 )
 def knn_bruteforce_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 for a 10-vector query set: broadcast the queries,
-    JVM-side zip_with/aggregate cosine over the corpus (never shuffled),
+    JVM-side zip_with/aggregate cosine over the corpus (never shuffled by
+    key; a one-row-group corpus is dealt over the cores first),
     ROW_NUMBER cut per query."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < _KNN_QUERIES)

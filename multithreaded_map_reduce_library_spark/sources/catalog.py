@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from multithreaded_map_reduce_library_spark.session import _cpus
+
 #: Tables the driver generates under /root/testdata/sf*/ (TESTDATA.md).
 TABLES: tuple[str, ...] = (
     "region",
@@ -61,9 +63,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-#: Inferred parquet schemas: (path, nanosAsLong) -> (file stamp, schema),
-#: the stamp being (name, size, mtime_ns) of every file.
-_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+#: Inferred parquet schemas: (path, nanosAsLong) -> (file stamp, schema,
+#: row groups), the stamp being (name, size, mtime_ns) of every file; the
+#: row-group count is None when it was not read (see :func:`_row_groups`).
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType, int | None]] = {}
 
 
 def _raise(exc: OSError) -> None:
@@ -88,6 +91,34 @@ def _file_stamp(path: str) -> tuple | None:
         return None
 
 
+def _data_files(path: str, stamp: tuple) -> list[tuple[str, int]]:
+    """(name, size) of the table's data files in a stamp: ``path`` itself,
+    or the ``*.parquet``/``part-*`` files under it."""
+    return [
+        (name, size)
+        for name, size, _mtime in stamp
+        if name == path
+        or os.path.basename(name).endswith(".parquet")
+        or os.path.basename(name).startswith("part-")
+    ]
+
+
+def _row_groups(path: str, stamp: tuple) -> int | None:
+    """Row groups summed over the table's parquet footers, or None when the
+    table has at least one data file per core (a file holds at least one
+    row group, so the count cannot fall below the cores and no footer is
+    read) or a footer cannot be read."""
+    files = _data_files(path, stamp)
+    if len(files) >= _cpus():
+        return None
+    import pyarrow.parquet as pq
+
+    try:
+        return sum(pq.read_metadata(name).num_row_groups for name, _size in files)
+    except (OSError, ValueError):
+        return None
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` that infers the schema once per file
     state: the package's only parquet schema inference.
@@ -98,16 +129,43 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     the inferred type of ``events.ts``; a changed file stamp replaces the
     entry. A path that cannot be stat'ed (missing, or not on the local
     file system) is never memoized: it is inferred on every call, as a
-    plain read would be."""
+    plain read would be.
+
+    The entry also holds the table's row-group count (:func:`_row_groups`,
+    read on a miss only), and the returned DataFrame carries it for
+    :func:`spread`; a warm read pays no footer read and no py4j call."""
     stamp = _file_stamp(path)
     if stamp is None:
         return spark.read.parquet(path)
     key = (path, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
     hit = _SCHEMAS.get(key)
     if hit is not None and hit[0] == stamp:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMAS[key] = (stamp, df.schema)
+        df = spark.read.schema(hit[1]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        hit = _SCHEMAS[key] = (stamp, df.schema, _row_groups(path, stamp))
+    df._mtmrl_row_groups = hit[2]
+    return df
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """``df`` dealt round-robin over one partition per core when it comes
+    straight from :func:`read_parquet` and the table has fewer row groups
+    than cores; otherwise ``df`` unchanged.
+
+    Spark never splits a row group, so such a scan reads all its rows in
+    as many tasks as there are row groups: one, for a single-row-group
+    table, whatever the core count. Call this on the big side right
+    before a consumer whose per-row work outweighs one exchange (a vector
+    fold, a Python sketch UDF, a tokenizer explode), never before a join
+    or a cheap aggregate. Only the scan's own DataFrame carries a count,
+    so a derived DataFrame (after a filter, a projection or a shuffle)
+    comes back unchanged, and a table with a row group per core, as every
+    table at scale has, is never repartitioned."""
+    groups = getattr(df, "_mtmrl_row_groups", None)
+    cores = _cpus()
+    if groups is not None and groups < cores:
+        return df.repartition(cores)
     return df
 
 
@@ -141,13 +199,7 @@ def _parquet_bytes(path: str) -> int:
                 file=sys.stderr,
             )
         return 1 << 62  # unmeasurable -> over any cap -> no hint
-    return sum(
-        size
-        for name, size, _mtime in stamp
-        if name == path
-        or os.path.basename(name).endswith(".parquet")
-        or os.path.basename(name).startswith("part-")
-    )
+    return sum(size for _name, size in _data_files(path, stamp))
 
 
 def scaled_broadcast(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
