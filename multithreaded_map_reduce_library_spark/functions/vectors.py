@@ -27,9 +27,12 @@ def quote(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def dot_sql(a: str, b: str) -> str:
-    """The dot-product fold over two SQL array expressions."""
+def dot_sql(a: str, b: str, finish: str = "") -> str:
+    """The dot-product fold over two SQL array expressions. ``finish``, an
+    expression over the sum ``acc``, is applied to the fold's result."""
     prods = f"zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE))"
+    if finish:
+        return f"aggregate({prods}, 0D, (acc, v) -> acc + v, acc -> {finish})"
     return f"aggregate({prods}, 0D, (acc, v) -> acc + v)"
 
 

@@ -16,6 +16,8 @@ Two paths per the driver contract:
   scale path.
 
 Every dot product, norm and cosine here is :func:`functions.vectors.dot_sql`.
+Every norm is :func:`_checked_norm`, so an all-zero vector fails naming its
+id instead of aborting the cosine division with an ANSI divide-by-zero.
 """
 
 from __future__ import annotations
@@ -25,7 +27,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from multithreaded_map_reduce_library_spark.functions.vectors import dot_sql, l2_norm, quote
+from multithreaded_map_reduce_library_spark.functions.vectors import dot_sql, quote
 from multithreaded_map_reduce_library_spark.sources.catalog import spread
 
 
@@ -41,23 +43,15 @@ def _cos_pre(va: str, vb: str, na: str, nb: str) -> Column:
     return F.expr(f"{dot_sql(quote(va), quote(vb))} / ({quote(na)} * {quote(nb)})")
 
 
-def _nonzero_norm(df: DataFrame, id_name: str, norm_name: str, label: str) -> DataFrame:
-    """``df`` whose ``norm_name`` column raises ``zero-norm embedding
-    <label>=<id>`` on a zero norm, instead of letting the cosine division
-    above it abort with an ANSI divide-by-zero that names no row.
-
-    The guard reads the norm column of the projection below it: Catalyst
-    does not collapse a projection into one that would evaluate its fold
-    twice, so the norm is still computed once per row, and a nonzero norm
-    passes through bit-identical."""
-    n, i = quote(norm_name), quote(id_name)
-    return df.withColumn(
-        norm_name,
-        F.expr(
-            f"CASE WHEN {n} = 0D THEN raise_error("
-            f"concat('zero-norm embedding {label}=', CAST({i} AS STRING))) ELSE {n} END"
-        ),
-    )
+def _checked_norm(vec_col: str, id_col: str) -> Column:
+    """The L2 norm of ``vec_col``, raising ``zero-norm embedding
+    <id_col>=<id>`` when it is 0. The test sits in the fold's finish step,
+    on the sum of squares, which is 0 exactly when its square root is: the
+    fold runs once per row, and a nonzero norm is bit-identical to
+    :func:`functions.vectors.l2_norm`."""
+    v, i = quote(vec_col), quote(id_col)
+    err = f"raise_error(concat('zero-norm embedding {id_col}=', CAST({i} AS STRING)))"
+    return F.expr(dot_sql(v, v, finish=f"CASE WHEN acc = 0D THEN {err} ELSE sqrt(acc) END"))
 
 
 def _top_k(sims: DataFrame, k: int) -> DataFrame:
@@ -90,13 +84,12 @@ def _lsh_bucketed(
     emb: DataFrame, dim: int, num_planes: int, id_col: str, vec_col: str
 ) -> DataFrame:
     """(id, vec, norm, bucket): the projection every LSH operator joins on."""
-    bucketed = emb.select(
+    return emb.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
-        l2_norm(vec_col).alias("norm"),
+        _checked_norm(vec_col, id_col).alias("norm"),
         random_hyperplane_bucket(vec_col, dim, num_planes).alias("bucket"),
     )
-    return _nonzero_norm(bucketed, "id", "norm", id_col)
 
 
 def _same_bucket_pairs(bucketed: DataFrame, threshold: float) -> DataFrame:
@@ -135,15 +128,13 @@ def knn_bruteforce(
     corpus = spread(emb).select(
         F.col(id_col).alias("n_id"),
         F.col(vec_col).alias("n_vec"),
-        l2_norm(vec_col).alias("n_norm"),
+        _checked_norm(vec_col, id_col).alias("n_norm"),
     )
     queries = (query_ids or emb).select(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("q_vec"),
-        l2_norm(vec_col).alias("q_norm"),
+        _checked_norm(vec_col, id_col).alias("q_norm"),
     )
-    corpus = _nonzero_norm(corpus, "n_id", "n_norm", id_col)
-    queries = _nonzero_norm(queries, "q_id", "q_norm", id_col)
     pairs = corpus.crossJoin(F.broadcast(queries)).filter(F.col("q_id") != F.col("n_id"))
     sims = pairs.select(
         "q_id", "n_id", _cos_pre("q_vec", "n_vec", "q_norm", "n_norm").alias("sim")
@@ -185,12 +176,11 @@ def _ivf_centroids(
     centroids = emb.filter((F.col(id_col) % stride) == 0)
     if max_centroids is not None:
         centroids = centroids.orderBy(id_col).limit(max_centroids)
-    centroids = centroids.select(
+    return centroids.select(
         F.col(id_col).alias("c_id"),
         F.col(vec_col).alias("c_vec"),
-        l2_norm(vec_col).alias("c_norm"),
+        _checked_norm(vec_col, id_col).alias("c_norm"),
     )
-    return _nonzero_norm(centroids, "c_id", "c_norm", id_col)
 
 
 def assign_ivf_cells(
@@ -226,12 +216,11 @@ def assign_ivf_cells(
     ``stride_for_corpus`` instead.
     """
     centroids = _ivf_centroids(emb, stride, max_centroids, id_col, vec_col)
-    corpus = spread(emb).select(
+    scored = spread(emb).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
-        l2_norm(vec_col).alias("v_norm"),
-    )
-    scored = _nonzero_norm(corpus, "id", "v_norm", id_col).crossJoin(F.broadcast(centroids))
+        _checked_norm(vec_col, id_col).alias("v_norm"),
+    ).crossJoin(F.broadcast(centroids))
     negsim = -_cos_pre("vec", "c_vec", "v_norm", "c_norm")
     return (
         scored.groupBy("id")
@@ -309,13 +298,14 @@ def knn_ivf_multiprobe(
     at rest and a probe touches nprobe buckets."""
     cells = assign_ivf_cells(emb, stride, id_col, vec_col, max_centroids)
     centroids = _ivf_centroids(emb, stride, max_centroids, id_col, vec_col)
-    queries = emb.filter(F.col(id_col) < num_queries).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm(vec_col).alias("q_norm"),
-    )
-    q_scored = _nonzero_norm(queries, "q_id", "q_norm", id_col).crossJoin(
-        F.broadcast(centroids)
+    q_scored = (
+        emb.filter(F.col(id_col) < num_queries)
+        .select(
+            F.col(id_col).alias("q_id"),
+            F.col(vec_col).alias("q_vec"),
+            _checked_norm(vec_col, id_col).alias("q_norm"),
+        )
+        .crossJoin(F.broadcast(centroids))
     )
     wq = Window.partitionBy("q_id").orderBy(
         F.desc(_cos_pre("q_vec", "c_vec", "q_norm", "c_norm")), F.asc("c_id")
@@ -407,11 +397,10 @@ def adaptive_hyperplane_buckets(
     b = emb.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
-        l2_norm(vec_col).alias("norm"),
+        _checked_norm(vec_col, id_col).alias("norm"),
         random_hyperplane_bucket(vec_col, dim, base_planes).alias("b0"),
         random_hyperplane_bucket(vec_col, dim, ext_planes).alias("b1"),
     )
-    b = _nonzero_norm(b, "id", "norm", id_col)
     hist = b.groupBy("b0").agg(F.count("*").alias("_n"))
     return (
         b.join(F.broadcast(hist), "b0")

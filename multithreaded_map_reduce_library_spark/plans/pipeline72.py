@@ -15,9 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from multithreaded_map_reduce_library_spark.functions.grid import grid
+from multithreaded_map_reduce_library_spark.functions.vectors import l2_norm
 from multithreaded_map_reduce_library_spark.operators.similarity import (
     _cos_pre,
-    l2_norm,
     random_hyperplane_bucket,
 )
 from multithreaded_map_reduce_library_spark.plans.registry import register
