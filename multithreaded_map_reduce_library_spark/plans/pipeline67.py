@@ -149,11 +149,11 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared functions/text.py::shingle_h32 hashes plus vectorized
     sliding minima) — so the operator is pure map-side with no keyed
     shuffle (a one-row-group table is dealt over the cores first,
-    sources/catalog.py::spread). Measured at sf0.1: the first explode+window+countDistinct
-    version took 15.9 s (three shuffles), a higher-order expression form
-    8-9 s (interpreted md5 transform), this kernel ~1 s. The fingerprint
-    index it feeds joins documents by fp like the LSH band-key join,
-    never all-pairs."""
+    sources/catalog.py::spread). Measured at sf0.1: the first
+    explode+window+countDistinct version took 15.9 s (three shuffles),
+    a higher-order expression form 8-9 s (interpreted md5 transform),
+    this kernel ~1 s. The fingerprint index it feeds joins documents by
+    fp like the LSH band-key join, never all-pairs."""
     from multithreaded_map_reduce_library_spark.operators.dedup import (
         winnowing_stats_pandas_udf,
     )
