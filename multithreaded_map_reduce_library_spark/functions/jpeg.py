@@ -73,6 +73,7 @@ Determinism contract (what makes oracle replay possible):
 from __future__ import annotations
 
 import struct
+from collections.abc import Iterator
 
 import numpy as np
 
@@ -228,18 +229,22 @@ def _round_half_away(x: np.ndarray) -> np.ndarray:
 # --------------------------------------------------------------------------
 
 
-def _build_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
-    """symbol -> (code, length) via the canonical assignment."""
-    codes: dict[int, tuple[int, int]] = {}
+def _canonical_codes(bits: list[int], vals: list[int]) -> Iterator[tuple[int, int, int]]:
+    """(symbol, code, length) of every HUFFVAL entry, in order: the
+    canonical assignment."""
     code = 0
     k = 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
-            codes[vals[k]] = (code, length)
+            yield vals[k], code, length
             code += 1
             k += 1
         code <<= 1
-    return codes
+
+
+def _build_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
+    """symbol -> (code, length), the encoder's view of the canonical codes."""
+    return {sym: (code, length) for sym, code, length in _canonical_codes(bits, vals)}
 
 
 class _BitWriter:
@@ -872,8 +877,7 @@ def _parse_dht_seg(
         key = (bytes(bits), bytes(vals))
         fast = _HUFF_FAST_CACHE.get(key)
         if fast is None:
-            codes = _build_codes(bits, vals)
-            table = {(length, code): sym for sym, (code, length) in codes.items()}
+            table = {(length, code): sym for sym, code, length in _canonical_codes(bits, vals)}
             if len(_HUFF_FAST_CACHE) >= _HUFF_FAST_CACHE_CAP:
                 _HUFF_FAST_CACHE.clear()
             fast = _HUFF_FAST_CACHE[key] = _HuffTable(table)

@@ -31,8 +31,8 @@ from pyspark.sql.window import Window
 
 from multithreaded_map_reduce_library_spark.functions.grid import grid
 from multithreaded_map_reduce_library_spark.functions.text import tokens
-from multithreaded_map_reduce_library_spark.functions.vectors import l2_norm
 from multithreaded_map_reduce_library_spark.operators.similarity import (
+    _checked_norm,
     _cos_pre,
     assign_ivf_cells,
 )
@@ -165,7 +165,7 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     bmr = bm.select("doc_id", w_bm.cast("bigint").alias("bm25_rank"))
 
     emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", "embedding", l2_norm("embedding").alias("nrm"))
+    e = emb.select("vec_id", "embedding", _checked_norm("embedding", "vec_id").alias("nrm"))
     q = e.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv"), F.col("nrm").alias("qn")
     )

@@ -15,8 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from multithreaded_map_reduce_library_spark.functions.grid import grid
-from multithreaded_map_reduce_library_spark.functions.vectors import l2_norm
 from multithreaded_map_reduce_library_spark.operators.similarity import (
+    _checked_norm,
     _cos_pre,
     random_hyperplane_bucket,
 )
@@ -82,7 +82,7 @@ def semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = emb.select(
         "vec_id",
         F.col("embedding").alias("vec"),
-        l2_norm("embedding").alias("norm"),
+        _checked_norm("embedding", "vec_id").alias("norm"),
         random_hyperplane_bucket("embedding", _DIM, _PLANES).alias("bucket"),
         is_eval.alias("is_eval"),
     )

@@ -82,21 +82,16 @@ def test_one_row_group_per_core_is_not_spread(spark, tmp_path):
     assert "RoundRobinPartitioning" not in plan, plan
 
 
-def test_one_row_group_table_is_spread_once(spark, tmp_path):
-    sf = _write_embeddings(tmp_path, [(i, [float(i + 1), 1.0]) for i in range(8)])
-    emb = load_table(spark, sf, "embeddings")
-    spread_emb = spread(emb)
-    assert f"RoundRobinPartitioning({_cpus()})" in _plan(spread_emb)
-    # the spread DataFrame is derived, so a second call adds nothing
-    assert spread(spread_emb) is spread_emb
-
-
 def test_a_derived_dataframe_is_not_spread(spark):
     emb = load_table(spark, SF_SMALL, "embeddings")
     grouped = emb.groupBy((F.col("vec_id") % 3).alias("k")).agg(F.count("*").alias("n"))
     assert spread(grouped) is grouped
     projected = emb.select("vec_id")
     assert spread(projected) is projected
+    # a spread scan is derived too, so a second call adds nothing
+    spread_emb = spread(emb)
+    assert spread_emb is not emb
+    assert spread(spread_emb) is spread_emb
 
 
 #: Operator trees of the queries that are not spread, recorded before the
@@ -204,3 +199,10 @@ def test_zero_norm_embedding_fails_naming_its_id(spark, tmp_path):
     ok = emb.filter(F.col("vec_id") != 3)
     assert knn_bruteforce(ok, query_ids=queries, k=2).count() == 4
     assert assign_ivf_cells(ok, stride=2).count() == 4
+
+
+def test_zero_norm_fails_in_a_plan_norm_projection(spark, tmp_path):
+    rows = [(i, [0.0 if i == 3 else float(i + 1)] * 64) for i in range(10)]
+    sf = _write_embeddings(tmp_path, rows)
+    with pytest.raises(Exception, match="zero-norm embedding vec_id=3"):
+        all_queries()["semantic_decontamination"].fn(spark, sf).collect()
